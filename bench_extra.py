@@ -120,47 +120,23 @@ def cmd_plans(outdir):
     # the ungrouped/grouped scan paths now driver-fold: their final DF is a
     # LocalRelation, so ALSO dump the distributed partials-stage plan the
     # fold consumes (this is where pruning/exchange claims are checkable)
-    from exaloglog_paper_spark.ops.agg import (
-        ExaLogLogSpec,
-        _build_partials_batches,
-        _by_schema_from_fields,
-        token_array_values,
-    )
-    from exaloglog_paper_spark.ops.source import batch_iterator, splits_df
+    from exaloglog_paper_spark.ops.agg import CompositeSpec, ExaLogLogSpec, token_array_values, tree_merge
+    from exaloglog_paper_spark.ops.source import scan_partials, sketch_builder
 
     spec = ExaLogLogSpec(2, 20, 10)
     ex = token_array_values("tokens")
     for label, by in (("ell_global_build_partials", []), ("ell_by_source_partials", ["source"])):
-        sdf = splits_df(spark, tp)
-        num_p = sdf.rdd.getNumPartitions()
         cols = list(dict.fromkeys(by + list(ex.input_cols)))
+        partials, _ = scan_partials(spark, tp, by, cols, sketch_builder(spec, ex, by))
+        write(label, _explain(partials))
 
-        def run(batches, _c=tuple(cols), _n=num_p):
-            rows = []
-            for b in batches:
-                for p, g in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
-                    rows.append((p, [g]))
-            yield from _build_partials_batches(
-                batch_iterator(rows, list(_c)), spec, ex, by, num_partitions=_n
-            )
-
-        import pyarrow.parquet as pq
-        from exaloglog_paper_spark.ops.source import list_row_group_splits
-
-        fs = pq.ParquetFile(list_row_group_splits(tp)[0][0]).schema_arrow
-        schema = _by_schema_from_fields([fs.field(c) for c in by])
-        write(label, _explain(sdf.mapInArrow(run, schema=schema)))
-
-    # profiler: partials + distributed fold plan
-    from exaloglog_paper_spark.ops.profile import (
-        fold_partials_df,
-        profile_partials_df,
-    )
+    # profiler: composite partials + the tree_merge fold plan
+    from exaloglog_paper_spark.ops.profile import profile_partials_df
     from exaloglog_paper_spark.ops.specs import CountSketchSpec, KLLSpec, MisraGriesSpec
 
     specs = (ExaLogLogSpec(2, 20, 10), CountSketchSpec(8192, 5), MisraGriesSpec(256), KLLSpec(200))
     partials = profile_partials_df(spark.read.parquet(tp), specs)
-    write("token_profile_fold", _explain(fold_partials_df(partials, specs)))
+    write("token_profile_fold", _explain(tree_merge(partials, CompositeSpec(specs), by=["source"])))
     spark.stop()
 
 
@@ -227,25 +203,13 @@ def cmd_stages():
     def profile_partials():
         from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
         from exaloglog_paper_spark.ops.profile import _make_builder
-        from exaloglog_paper_spark.ops.source import batch_iterator, splits_df
+        from exaloglog_paper_spark.ops.source import scan_partials
         from exaloglog_paper_spark.ops.specs import CountSketchSpec, KLLSpec, MisraGriesSpec
 
         specs = (ExaLogLogSpec(2, 20, 10), CountSketchSpec(8192, 5), MisraGriesSpec(256), KLLSpec(200))
         builder = _make_builder(specs, "source", "tokens", "n_tok")
-        sdf = splits_df(spark, tp)
-
-        def run(batches):
-            split_rows = []
-            for bt in batches:
-                for prow, grow in zip(bt.column("path").to_pylist(), bt.column("row_group").to_pylist()):
-                    split_rows.append((prow, [grow]))
-            yield from builder(batch_iterator(split_rows, ["source", "tokens", "n_tok"]))
-
-        rows = sdf.mapInArrow(
-            run,
-            schema="g string, ell binary, cs binary, mg binary, kll binary, n_docs long, n_tokens long",
-        ).collect()
-        return len(rows)
+        partials, _ = scan_partials(spark, tp, ["source"], ["source", "tokens", "n_tok"], builder)
+        return len(partials.collect())
 
     stage("profile_partials_collect", profile_partials)
     print(res)

@@ -28,6 +28,7 @@ merge.
 from __future__ import annotations
 
 import abc
+import struct
 import time
 from typing import Sequence
 
@@ -297,6 +298,54 @@ class HyperLogLogSpec(ExaLogLogSpec):
         self.name = f"hll_p{p}"
 
 
+class CompositeSpec(SketchSpec):
+    """A tuple of sketches riding the pipeline as ONE state: the profiler's
+    (ELL, count-sketch, Misra-Gries, KLL) builds, merges and checkpoints
+    through the same ``tree_merge`` as a single sketch.
+
+    ``add`` takes one value array per part. Serialized form: a little-
+    endian uint32 length table (one entry per part) followed by the parts'
+    own serialized states. ``finalize`` reports the leading part's result.
+    """
+
+    def __init__(self, specs):
+        self.specs = tuple(specs)
+        self.name = "composite_" + "_".join(s.name for s in self.specs)
+        self._head = f"<{len(self.specs)}I"
+
+    def empty(self):
+        return tuple(s.empty() for s in self.specs)
+
+    def add(self, state, values):
+        return tuple(s.add(st, v) for s, st, v in zip(self.specs, state, values))
+
+    def merge(self, a, b):
+        return tuple(s.merge(x, y) for s, x, y in zip(self.specs, a, b))
+
+    def merge_many(self, states):
+        states = list(states)
+        if not states:
+            return self.empty()
+        return tuple(
+            s.merge_many([st[i] for st in states]) for i, s in enumerate(self.specs)
+        )
+
+    def serialize(self, state) -> bytes:
+        parts = [s.serialize(st) for s, st in zip(self.specs, state)]
+        return struct.pack(self._head, *map(len, parts)) + b"".join(parts)
+
+    def deserialize(self, data: bytes):
+        data = bytes(data)
+        out, off = [], struct.calcsize(self._head)
+        for s, n in zip(self.specs, struct.unpack_from(self._head, data)):
+            out.append(s.deserialize(data[off : off + n]))
+            off += n
+        return tuple(out)
+
+    def finalize(self, state) -> float:
+        return self.specs[0].finalize(state[0])
+
+
 # ---------------------------------------------------------------------------
 # value extractors: Arrow RecordBatch -> (flat values, per-row lengths)
 #
@@ -496,6 +545,23 @@ def _by_schema_from_fields(fields) -> str:
     return "".join(parts) + PARTIAL_COLS
 
 
+def partial_batch(key_arrays: dict, sketches, counts, pid: int, secs: float):
+    """One Arrow batch of partial rows (``by..., PARTIAL_COLS``) — the
+    output format of every stage-A builder."""
+    import pyarrow as pa
+
+    n = len(sketches)
+    return pa.record_batch(
+        {
+            **key_arrays,
+            "sketch": pa.array(sketches, pa.binary()),
+            "n_values": pa.array(counts, pa.int64()),
+            "partition_id": pa.array([pid] * n, pa.int64()),
+            "build_secs": pa.array([secs] * n, pa.float64()),
+        }
+    )
+
+
 def _build_partials_batches(
     batches,
     spec: "SketchSpec",
@@ -542,29 +608,19 @@ def _build_partials_batches(
         n_emits += 1
         secs = time.monotonic() - t0
         keys = list(states)
-        data = {}
-        fields = []
-        for i, c in enumerate(by):
-            f = key_fields[i]
-            data[c] = pa.array([k[i] for k in keys], type=f.type)
-            fields.append(pa.field(c, f.type))
-        data["sketch"] = pa.array(
-            spec.serialize_batch([states[k] for k in keys]), type=pa.binary()
+        out = partial_batch(
+            {
+                c: pa.array([k[i] for k in keys], type=key_fields[i].type)
+                for i, c in enumerate(by)
+            },
+            spec.serialize_batch([states[k] for k in keys]),
+            [counts[k] for k in keys],
+            pid,
+            secs,
         )
-        data["n_values"] = pa.array([counts[k] for k in keys], type=pa.int64())
-        data["partition_id"] = pa.array([pid] * len(keys), type=pa.int64())
-        data["build_secs"] = pa.array([secs] * len(keys), type=pa.float64())
-        fields += [
-            pa.field("sketch", pa.binary()),
-            pa.field("n_values", pa.int64()),
-            pa.field("partition_id", pa.int64()),
-            pa.field("build_secs", pa.float64()),
-        ]
         states, counts = {}, {}
         t0 = time.monotonic()
-        return pa.RecordBatch.from_arrays(
-            [data[f.name] for f in fields], schema=pa.schema(fields)
-        )
+        return out
 
     for batch in batches:
         if key_fields is None and by:
@@ -661,6 +717,15 @@ def sketch_partials(
     return df.mapInArrow(build, schema=schema)
 
 
+def _merge_sorted(spec: SketchSpec, blobs):
+    """Merge serialized states in their BYTE order — the one merge-order
+    rule of every tree level and the driver fold. Specs whose merge depends
+    on input order (Misra-Gries, KLL) thereby give the same state however
+    Spark delivers the rows (reruns, resumes, collect order); register and
+    linear states are order-free anyway."""
+    return spec.merge_many(spec.deserialize(b) for b in sorted(map(bytes, blobs)))
+
+
 def _merge_level(
     partials: DataFrame, spec: SketchSpec, by: Sequence[str], bucket_expr
 ) -> DataFrame:
@@ -668,13 +733,10 @@ def _merge_level(
     by = list(by)
     gcols = by + ["__bucket"]
     lvl = partials.withColumn("__bucket", bucket_expr)
-    schema = (
-        _by_schema(partials, by)
-        + "sketch binary, n_values long, partition_id long, build_secs double"
-    )
+    schema = _by_schema(partials, by) + PARTIAL_COLS
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = spec.merge_many(spec.deserialize(bytes(d)) for d in pdf["sketch"])
+        st = _merge_sorted(spec, pdf["sketch"])
         out = {c: [pdf[c].iloc[0]] for c in by}
         out["sketch"] = [spec.serialize(st)]
         out["n_values"] = [int(pdf["n_values"].sum())]
@@ -726,7 +788,7 @@ def tree_merge(
     if not by:
         if num_partials is not None and num_partials <= driver_fold_max_partials:
             rows = partials.collect()
-            st = spec.merge_many(spec.deserialize(bytes(r.sketch)) for r in rows)
+            st = _merge_sorted(spec, (r.sketch for r in rows))
             n = sum(int(r.n_values) for r in rows)
             secs = float(sum(float(r.build_secs) for r in rows))
             return local_df(
@@ -740,7 +802,7 @@ def tree_merge(
         seed = local_df(
             partials.sparkSession,
             [(spec.serialize(spec.empty()), 0, 0, 0.0)],
-            "sketch binary, n_values long, partition_id long, build_secs double",
+            PARTIAL_COLS,
         )
         partials = partials.unionByName(seed)
     remaining = num_partials if num_partials is not None else fanin

@@ -15,17 +15,26 @@ resumable with per-partition lineage + metrics. Design:
   all bucket partials. Because sketch states are exact functions of their
   input sets (merge algebra tests), a resumed run is byte-identical to an
   uninterrupted one — asserted in tests.
+- The first run records the bucket count and the split list in
+  ``<ckpt_dir>/_manifest.json``; a resume under a different bucket count
+  or input file set raises ``ValueError`` instead of double counting or
+  skipping splits.
+- Every checkpointed build (single sketch or profile) runs the one loop in
+  :func:`checkpointed_partials` with its own stage-A builder.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import _build_partials_batches, _by_schema_from_fields, tree_merge
-from .source import batch_iterator, list_row_group_splits
+from .agg import tree_merge
+from .source import list_row_group_splits, scan_partials, sketch_builder
+
+_MANIFEST = "_manifest.json"
 
 
 def _bucket_dir(ckpt_dir: str, bucket: int) -> str:
@@ -38,6 +47,73 @@ def completed_buckets(ckpt_dir: str, num_buckets: int) -> list[int]:
         for b in range(num_buckets)
         if os.path.exists(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"))
     ]
+
+
+def _check_manifest(ckpt_dir: str, num_buckets: int, splits) -> None:
+    """Pin the bucket layout on the first run; refuse a resume under a
+    different one. Buckets are ``split_index % num_buckets``, so another
+    bucket count or split list would re-read splits an existing bucket
+    already holds (double counting) or skip splits none holds."""
+    want = {
+        "num_buckets": num_buckets,
+        "splits": [[os.path.abspath(f), rg] for f, rg in splits],
+    }
+    path = os.path.join(ckpt_dir, _MANIFEST)
+    if os.path.exists(path):
+        with open(path) as f:
+            have = json.load(f)
+        changed = [k for k in want if have.get(k) != want[k]]
+        if changed:
+            raise ValueError(
+                f"checkpoint {ckpt_dir} was built with another "
+                f"{' and '.join(changed)}; resume with the original layout "
+                "or use a fresh checkpoint dir"
+            )
+        return
+    os.makedirs(ckpt_dir, exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        json.dump(want, f)
+    os.replace(path + ".tmp", path)
+
+
+def checkpointed_partials(
+    spark: SparkSession,
+    path: str,
+    ckpt_dir: str,
+    by: Sequence[str],
+    cols: Sequence[str],
+    builder,
+    num_buckets: int,
+) -> tuple[DataFrame, int]:
+    """THE bucket-checkpoint loop: stage A of :func:`ops.source.scan_partials`
+    bucket by bucket, skipping buckets already checkpointed. Each written
+    bucket carries a ``state_sha256`` digest per partial row. Returns
+    ``(all bucket partials, number of splits)`` for the caller's tree
+    merge."""
+    splits = list_row_group_splits(path)
+    if not splits:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    _check_manifest(ckpt_dir, num_buckets, splits)
+    done = set(completed_buckets(ckpt_dir, num_buckets))
+    for b in range(num_buckets):
+        if b in done:
+            continue
+        bucket_splits = splits[b::num_buckets]
+        if not bucket_splits:
+            os.makedirs(_bucket_dir(ckpt_dir, b), exist_ok=True)
+            open(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"), "w").close()
+            continue
+        partials, _ = scan_partials(
+            spark, path, by, cols, builder, splits=bucket_splits
+        )
+        partials.withColumn(
+            "state_sha256", F.sha2(F.col("sketch"), 256)
+        ).write.mode("overwrite").parquet(_bucket_dir(ckpt_dir, b))
+
+    all_partials = spark.read.parquet(
+        *[_bucket_dir(ckpt_dir, b) for b in range(num_buckets)]
+    ).drop("state_sha256")
+    return all_partials, len(splits)
 
 
 def checkpointed_sketch_agg(
@@ -56,54 +132,13 @@ def checkpointed_sketch_agg(
     checkpointed), then tree-merges all bucket partials. Returns the same
     (byte-identical) result as :func:`ops.source.scan_sketch_agg`.
     """
-    import pyarrow.parquet as pq
-
-    splits = list_row_group_splits(path)
     by = list(by)
     cols = list(dict.fromkeys(by + list(extractor.input_cols)))
-    file_schema = pq.ParquetFile(splits[0][0]).schema_arrow
-    schema = _by_schema_from_fields([file_schema.field(c) for c in by])
-
-    done = set(completed_buckets(ckpt_dir, num_buckets))
-    for b in range(num_buckets):
-        if b in done:
-            continue
-        bucket_splits = [s for i, s in enumerate(splits) if i % num_buckets == b]
-        if not bucket_splits:
-            os.makedirs(_bucket_dir(ckpt_dir, b), exist_ok=True)
-            open(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"), "w").close()
-            continue
-        par = min(len(bucket_splits), spark.sparkContext.defaultParallelism * 2)
-        sdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(bucket_splits, par),
-            "path string, row_group int",
-        )
-
-        def run(batches, _cols=tuple(cols), _num_p=par):
-            split_rows = []
-            for bt in batches:
-                for prow, grow in zip(
-                    bt.column("path").to_pylist(), bt.column("row_group").to_pylist()
-                ):
-                    split_rows.append((prow, [grow]))
-            yield from _build_partials_batches(
-                batch_iterator(split_rows, list(_cols)),
-                spec,
-                extractor,
-                by,
-                num_partitions=_num_p,
-            )
-
-        partials = sdf.mapInArrow(run, schema=schema).withColumn(
-            "state_sha256", F.sha2(F.col("sketch"), 256)
-        )
-        partials.write.mode("overwrite").parquet(_bucket_dir(ckpt_dir, b))
-
-    all_partials = spark.read.parquet(
-        *[_bucket_dir(ckpt_dir, b) for b in range(num_buckets)]
-    ).drop("state_sha256")
-    total_parts = max(len(splits), 1)
-    return tree_merge(all_partials, spec, by=by, num_partials=total_parts, fanin=fanin)
+    partials, num_splits = checkpointed_partials(
+        spark, path, ckpt_dir, by, cols, sketch_builder(spec, extractor, by),
+        num_buckets,
+    )
+    return tree_merge(partials, spec, by=by, num_partials=num_splits, fanin=fanin)
 
 
 def lineage_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:

@@ -9,41 +9,41 @@ every optimizer statistic the engine's sketches can answer:
 - Misra-Gries → deterministic heavy-hitter bracket
 - KLL → n_tok quantiles (rank error ≤ eps)
 
-The classical engine shape is one ANALYZE pass per statistic family; here
-a single ``mapInArrow`` partial per partition maintains all four states
-per group simultaneously over the same decoded Arrow batch (tokens are
-flattened and splitmix-hashed once, shared by the ELL and count-sketch
-updates), and the per-partition states are folded DISTRIBUTEDLY
-(``fold_partials_df``: one executor task per group, deterministic merge
-order) so only one KB-state row per group ever reaches the driver.
-
-Scale shape: at 10^12 rows the pass is map-only + one grouped fold
-shuffle of KB states (groups × partitions ≤ ~10^5 states of KB size per
-group-task — the profile's cardinality contract); for larger layouts
-run the individual sketch_agg queries, which tree-merge with bounded
-fan-in.
+where classical ANALYZE runs one pass per statistic family. This module
+owns only the stage-A builder — all four states per group over the same
+decoded Arrow batch, tokens splitmix-hashed once for ELL and count-sketch
+— and the ``TokenProfile`` view. The four states travel as ONE
+``CompositeSpec`` state in standard partial rows, so the scan
+(``ops.source.scan_partials``), the bucket checkpoints
+(``ops.checkpoints.checkpointed_partials``) and the merge
+(``ops.agg.tree_merge``, whose byte-order rule makes the order-dependent
+MG/KLL merges deterministic) are the code every single-sketch build runs.
+Only the merged per-group rows (KB each) reach the driver.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..sketchlib.bitops import splitmix64
 from ..sketchlib.countsketch import CountSketch
 from ..sketchlib.exaloglog import ExaLogLog
 from ..sketchlib.freqitems import MisraGries
 from ..sketchlib.kll import KLL
-from .agg import ExaLogLogSpec
-from .specs import CountSketchSpec, KLLSpec, MisraGriesSpec
-
-_PROFILE_SCHEMA = (
-    "g string, ell binary, cs binary, mg binary, kll binary, "
-    "n_docs long, n_tokens long"
+from .agg import (
+    PARTIAL_COLS,
+    CompositeSpec,
+    ExaLogLogSpec,
+    _by_schema,
+    partial_batch,
+    tree_merge,
 )
+from .agg import flat_list_values as _flat_tokens  # single definition in agg
+from .specs import CountSketchSpec, KLLSpec, MisraGriesSpec
 
 
 @dataclass
@@ -59,7 +59,28 @@ class TokenProfile:
     kll: KLL
 
 
-from .agg import flat_list_values as _flat_tokens  # single definition in agg
+def _specs(t=2, d=20, p=10, cs_width=8192, cs_depth=5, mg_k=256, kll_k=200):
+    """The profile's four specs; every entry point forwards its sketch
+    keyword arguments here."""
+    return (
+        ExaLogLogSpec(t, d, p),
+        CountSketchSpec(cs_width, cs_depth),
+        MisraGriesSpec(mg_k),
+        KLLSpec(kll_k),
+    )
+
+
+def _merge_profiles(partials, by: str, specs, num_partials=None) -> dict[str, TokenProfile]:
+    """tree_merge the composite partials, then view each merged group row
+    as a TokenProfile. ``n_tokens`` is the Misra-Gries stream weight
+    (exact; KLL skips NaN ``n_tok`` rows)."""
+    composite = CompositeSpec(specs)
+    out: dict[str, TokenProfile] = {}
+    for r in tree_merge(partials, composite, by=[by], num_partials=num_partials).collect():
+        ell, cs, mg, kll = composite.deserialize(r.sketch)
+        g = str(r[by])
+        out[g] = TokenProfile(g, int(r.n_values), int(mg.n), ell, cs, mg, kll)
+    return out
 
 
 def profile_partials_df(
@@ -70,148 +91,82 @@ def profile_partials_df(
     tokens_col: str = "tokens",
     ntok_col: str = "n_tok",
 ) -> DataFrame:
-    """The profiler's distributed stage as a DataFrame (one row per
-    (partition, group) with all four serialized states) — exposed so plan
+    """The profiler's distributed stage as a DataFrame: standard partial
+    rows (``by, PARTIAL_COLS``), one per (partition, group), whose
+    ``sketch`` is the ``CompositeSpec(specs)`` state — exposed so plan
     properties (column pruning) are pinnable on the REAL plan and so
     callers can sink partials instead of folding them."""
     build = _make_builder(specs, by, tokens_col, ntok_col)
-    from pyspark.sql import functions as F
-
-    return (
+    df = (
         df.select(by, tokens_col, ntok_col)
         # NULL group keys would poison np.unique's object-array sort; a
         # profile of the NULL group is meaningless anyway — drop explicitly
         # (the builder also drops them, for the pyarrow-scan path)
         .filter(F.col(by).isNotNull())
-        .mapInArrow(build, schema=_PROFILE_SCHEMA)
     )
+    return df.mapInArrow(build, schema=_by_schema(df, [by]) + PARTIAL_COLS)
 
 
 def _make_builder(specs, by: str, tokens_col: str, ntok_col: str):
-    """The profiler's per-task generator: an iterator of Arrow record
-    batches in, ONE summary batch of per-group serialized states out.
-    Shared by the Spark mapInArrow path and the pyarrow row-group-scan
-    path (checkpointed_profile)."""
-    ell_spec, cs_spec, mg_spec, kll_spec = specs
+    """The profiler's stage-A builder: an iterator of Arrow record batches
+    in, ONE batch of per-group composite partial rows out. It is the only
+    builder that sees row-level ``n_tok`` beside token-level values, and it
+    hashes each token once for both ELL and count-sketch. Fits the
+    ``builder(batches, num_partitions=...)`` contract of
+    ``ops.source.scan_partials``; it emits once per task, so the task's
+    partition id is already unique."""
+    composite = CompositeSpec(specs)
 
-    def build(batches):
+    def build(batches, num_partitions=None):
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark import TaskContext
 
-        states: dict[str, list] = {}  # g -> [ell, cs, mg, kll, docs, toks]
+        t0 = time.monotonic()
+        states: dict = {}  # g -> composite state
+        docs: dict = {}
         for b in batches:
+            key_type = b.schema.field(by).type
             if b.column(by).null_count:
                 b = b.filter(pc.is_valid(b.column(by)))
             if b.num_rows == 0:
                 continue
+            codes, inv = np.unique(
+                b.column(by).to_numpy(zero_copy_only=False), return_inverse=True
+            )
+            # group dispatch by one STABLE row sort, not per-group masks
+            # (O(groups * n) per batch): each group's rows — hence its
+            # tokens — become one contiguous segment in input order, so
+            # every state (incl. the order-dependent MG/KLL) sees its
+            # stream exactly as the unsorted batch holds it
+            b = b.take(np.argsort(inv, kind="stable"))
             flat, lengths = _flat_tokens(b, tokens_col)
-            src = b.column(by).to_numpy(zero_copy_only=False)
-            ntok = b.column(ntok_col).to_numpy(zero_copy_only=False)
-            # group membership of every flattened token in one repeat
-            codes, inv = np.unique(src, return_inverse=True)
-            flat_inv = np.repeat(inv, lengths)
             hashed = splitmix64(flat.view(np.uint64))
-            # group dispatch by STABLE sort, not per-group masks: masks are
-            # O(groups * n) per batch — quadratic-ish for high-cardinality
-            # ``by`` — while two sorts give contiguous per-group segments
-            # in O(n log n). Stable sort preserves each group's original
-            # token order, so every state (incl. the order-dependent
-            # MG/KLL) is byte-identical to the mask formulation.
-            row_order = np.argsort(inv, kind="stable")
-            tok_order = np.argsort(flat_inv, kind="stable")
+            ntok = b.column(ntok_col).to_numpy(zero_copy_only=False).astype(np.float64)
             row_ends = np.cumsum(np.bincount(inv, minlength=len(codes)))
-            tok_ends = np.cumsum(np.bincount(flat_inv, minlength=len(codes)))
-            ntok_sorted = ntok[row_order].astype(np.float64)
-            flat_sorted = flat[tok_order]
-            hashed_sorted = hashed[tok_order]
+            tok_ends = np.concatenate(([0], np.cumsum(lengths)))[row_ends]
             r_lo = t_lo = 0
-            for gi, g in enumerate(codes):
-                r_hi, t_hi = int(row_ends[gi]), int(tok_ends[gi])
-                st = states.get(g)
-                if st is None:
-                    st = states[g] = [
-                        ell_spec.empty(), cs_spec.empty(),
-                        mg_spec.empty(), kll_spec.empty(), 0, 0,
-                    ]
-                h = hashed_sorted[t_lo:t_hi]
+            for g, r_hi, t_hi in zip(codes, row_ends.tolist(), tok_ends.tolist()):
+                h = hashed[t_lo:t_hi]
                 # hash once, share: ELL and count-sketch both take the
                 # splitmix64 stream; MG wants raw ids for identifiability
-                st[0] = ell_spec.add(st[0], h)
-                st[1] = cs_spec.add(st[1], h)
-                st[2] = mg_spec.add(st[2], flat_sorted[t_lo:t_hi])
-                st[3] = kll_spec.add(st[3], ntok_sorted[r_lo:r_hi])
-                st[4] += r_hi - r_lo
-                st[5] += t_hi - t_lo
+                states[g] = composite.add(
+                    states.get(g) or composite.empty(),
+                    (h, h, flat[t_lo:t_hi], ntok[r_lo:r_hi]),
+                )
+                docs[g] = docs.get(g, 0) + r_hi - r_lo
                 r_lo, t_lo = r_hi, t_hi
-        cols = {
-            "g": pa.array([str(g) for g in states], pa.string()),
-            "ell": pa.array(
-                [ell_spec.serialize(s[0]) for s in states.values()], pa.binary()
-            ),
-            "cs": pa.array(
-                [cs_spec.serialize(s[1]) for s in states.values()], pa.binary()
-            ),
-            "mg": pa.array(
-                [mg_spec.serialize(s[2]) for s in states.values()], pa.binary()
-            ),
-            "kll": pa.array(
-                [kll_spec.serialize(s[3]) for s in states.values()], pa.binary()
-            ),
-            "n_docs": pa.array([s[4] for s in states.values()], pa.int64()),
-            "n_tokens": pa.array([s[5] for s in states.values()], pa.int64()),
-        }
-        yield pa.record_batch(cols)
+        if states:
+            tc = TaskContext.get()
+            yield partial_batch(
+                {by: pa.array(list(states), key_type)},
+                composite.serialize_batch(states.values()),
+                list(docs.values()),
+                tc.partitionId() if tc is not None else 0,
+                time.monotonic() - t0,
+            )
 
     return build
-
-
-def fold_partials_df(partials: DataFrame, specs) -> DataFrame:
-    """DISTRIBUTED fold of profile partial rows: one executor task per
-    group merges that group's (partition × group) states, so only the
-    folded per-group rows (KB each) ever reach the driver — the former
-    collect shipped every partial (tasks × groups × ~320 KB of
-    count-sketch state ≈ 100 MB at sf0.1) through the driver and folded
-    it there sequentially, the engine's only non-distributed merge.
-
-    Byte-identical to the driver fold: each task sorts its group's rows
-    on the same full deterministic state key `_fold_profiles` uses, so
-    the merge-order-dependent MG/KLL summaries come out exactly the
-    same; ELL/CS merges are order-free by algebra. Groups fold in
-    parallel; the per-task input is that group's partial set (the
-    profile's documented ≤ ~10^5 KB-state contract, now per executor
-    task instead of on the driver)."""
-    ell_spec, cs_spec, mg_spec, kll_spec = specs
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {c: [bytes(v) for v in pdf[c]] for c in ("ell", "cs", "mg", "kll")}
-        order = sorted(
-            range(len(pdf)),
-            key=lambda i: (
-                cols["ell"][i], cols["cs"][i], cols["mg"][i], cols["kll"][i]
-            ),
-        )
-        merged = {
-            c: spec.serialize(
-                spec.merge_many(spec.deserialize(cols[c][i]) for i in order)
-            )
-            for c, spec in (
-                ("ell", ell_spec), ("cs", cs_spec),
-                ("mg", mg_spec), ("kll", kll_spec),
-            )
-        }
-        return pd.DataFrame(
-            {
-                "g": [pdf["g"].iloc[0]],
-                "ell": [merged["ell"]],
-                "cs": [merged["cs"]],
-                "mg": [merged["mg"]],
-                "kll": [merged["kll"]],
-                "n_docs": [int(pdf["n_docs"].sum())],
-                "n_tokens": [int(pdf["n_tokens"].sum())],
-            }
-        )
-
-    return partials.groupBy("g").applyInPandas(fold, schema=_PROFILE_SCHEMA)
 
 
 def profile_token_table(
@@ -220,61 +175,15 @@ def profile_token_table(
     by: str = "source",
     tokens_col: str = "tokens",
     ntok_col: str = "n_tok",
-    t: int = 2,
-    d: int = 20,
-    p: int = 10,
-    cs_width: int = 8192,
-    cs_depth: int = 5,
-    mg_k: int = 256,
-    kll_k: int = 200,
+    **sketch_params,
 ) -> dict[str, TokenProfile]:
-    """One scan of ``df`` → per-``by``-group TokenProfile."""
-    ell_spec = ExaLogLogSpec(t, d, p)
-    cs_spec = CountSketchSpec(cs_width, cs_depth)
-    mg_spec = MisraGriesSpec(mg_k)
-    kll_spec = KLLSpec(kll_k)
-    specs = (ell_spec, cs_spec, mg_spec, kll_spec)
-    rows = fold_partials_df(
-        profile_partials_df(
-            df, specs, by=by, tokens_col=tokens_col, ntok_col=ntok_col
-        ),
-        specs,
-    ).collect()
-
-    return _fold_profiles(rows, specs)
-
-
-def _fold_profiles(rows, specs) -> dict[str, TokenProfile]:
-    """Driver fold of partial rows into per-group TokenProfiles.
-
-    Rows are sorted on a full deterministic key before folding so the
-    merged MG/KLL states (whose retained SETS depend on merge order) are
-    identical across reruns, resumes, and collect orderings; the
-    register/linear states are order-free anyway."""
-    ell_spec, cs_spec, mg_spec, kll_spec = specs
-    rows = sorted(
-        rows,
-        key=lambda r: (r.g, bytes(r.ell), bytes(r.cs), bytes(r.mg), bytes(r.kll)),
+    """One scan of ``df`` → per-``by``-group TokenProfile. ``sketch_params``
+    are the sketch sizes of :func:`_specs`."""
+    specs = _specs(**sketch_params)
+    partials = profile_partials_df(
+        df, specs, by=by, tokens_col=tokens_col, ntok_col=ntok_col
     )
-    out: dict[str, TokenProfile] = {}
-    grouped: dict[str, list] = {}
-    for r in rows:
-        grouped.setdefault(r.g, []).append(r)
-    for g, rs in grouped.items():
-        out[g] = TokenProfile(
-            group=g,
-            n_docs=sum(r.n_docs for r in rs),
-            n_tokens=sum(r.n_tokens for r in rs),
-            ell=ell_spec.merge_many(
-                [ell_spec.deserialize(bytes(r.ell)) for r in rs]
-            ),
-            cs=cs_spec.merge_many([cs_spec.deserialize(bytes(r.cs)) for r in rs]),
-            mg=mg_spec.merge_many([mg_spec.deserialize(bytes(r.mg)) for r in rs]),
-            kll=kll_spec.merge_many(
-                [kll_spec.deserialize(bytes(r.kll)) for r in rs]
-            ),
-        )
-    return out
+    return _merge_profiles(partials, by, specs)
 
 
 def checkpointed_profile(
@@ -285,89 +194,22 @@ def checkpointed_profile(
     by: str = "source",
     tokens_col: str = "tokens",
     ntok_col: str = "n_tok",
-    t: int = 2,
-    d: int = 20,
-    p: int = 10,
-    cs_width: int = 8192,
-    cs_depth: int = 5,
-    mg_k: int = 256,
-    kll_k: int = 200,
     num_buckets: int = 8,
+    **sketch_params,
 ) -> dict[str, TokenProfile]:
-    """Resumable one-pass ANALYZE over a parquet token table, riding the
-    same bucket-granular checkpoint design as
-    ``ops.checkpoints.checkpointed_sketch_agg``: row-group splits are
-    bucketed deterministically (``split_index % num_buckets``), each
-    completed bucket writes its per-(task, group) profile partials —
-    all four serialized states + sha256 digests per state — to
-    ``<ckpt_dir>/bucket=<i>/`` under a ``_SUCCESS`` marker, and a rerun
-    recomputes ONLY missing buckets. The final driver fold sorts partials
-    on a full deterministic key, so the resumed result is byte-identical
-    to an uninterrupted run for every state, including the merge-order-
-    dependent MG/KLL summaries. ``ops.checkpoints.lineage_metrics`` reads
-    the bucket dirs directly as the lineage/metrics table."""
-    import os
+    """Resumable one-pass ANALYZE over a parquet token table: the profile
+    builder in ``ops.checkpoints.checkpointed_partials``, the bucket loop
+    ``checkpointed_sketch_agg`` uses (``lineage_metrics`` reads its bucket
+    dirs). A resumed result is byte-identical to an uninterrupted run for
+    every state, MG/KLL included, by the tree merge's byte-order rule."""
+    from .checkpoints import checkpointed_partials
 
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    from .checkpoints import _bucket_dir, completed_buckets
-    from .source import batch_iterator, list_row_group_splits
-
-    specs = (
-        ExaLogLogSpec(t, d, p),
-        CountSketchSpec(cs_width, cs_depth),
-        MisraGriesSpec(mg_k),
-        KLLSpec(kll_k),
+    specs = _specs(**sketch_params)
+    partials, num_splits = checkpointed_partials(
+        spark, path, ckpt_dir, [by], [by, tokens_col, ntok_col],
+        _make_builder(specs, by, tokens_col, ntok_col), num_buckets,
     )
-    builder = _make_builder(specs, by, tokens_col, ntok_col)
-    splits = list_row_group_splits(path)
-    if not splits:
-        # match scan_profile/splits_df's contract: the engine-standard
-        # informative error, not a downstream 'Unable to infer schema'
-        # from reading 8 marker-only bucket dirs
-        raise FileNotFoundError(f"no parquet files under {path}")
-    cols = [by, tokens_col, ntok_col]
-
-    done = set(completed_buckets(ckpt_dir, num_buckets))
-    for b in range(num_buckets):
-        if b in done:
-            continue
-        bucket_splits = [s for i, s in enumerate(splits) if i % num_buckets == b]
-        if not bucket_splits:
-            os.makedirs(_bucket_dir(ckpt_dir, b), exist_ok=True)
-            open(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"), "w").close()
-            continue
-        par = min(len(bucket_splits), spark.sparkContext.defaultParallelism * 2)
-        sdf = spark.createDataFrame(
-            pd.DataFrame(bucket_splits, columns=["path", "row_group"]),
-            "path string, row_group int",
-        ).repartition(par)
-
-        def run(batches, _cols=tuple(cols)):
-            split_rows = []
-            for bt in batches:
-                for prow, grow in zip(
-                    bt.column("path").to_pylist(),
-                    bt.column("row_group").to_pylist(),
-                ):
-                    split_rows.append((prow, [grow]))
-            yield from builder(batch_iterator(split_rows, list(_cols)))
-
-        partials = sdf.mapInArrow(run, schema=_PROFILE_SCHEMA)
-        for col in ("ell", "cs", "mg", "kll"):
-            partials = partials.withColumn(
-                f"{col}_sha256", F.sha2(F.col(col), 256)
-            )
-        partials.write.mode("overwrite").parquet(_bucket_dir(ckpt_dir, b))
-
-    rows = fold_partials_df(
-        spark.read.option("basePath", ckpt_dir)
-        .parquet(ckpt_dir + "/bucket=*")
-        .select("g", "ell", "cs", "mg", "kll", "n_docs", "n_tokens"),
-        specs,
-    ).collect()
-    return _fold_profiles(rows, specs)
+    return _merge_profiles(partials, by, specs, num_splits)
 
 
 def scan_profile(
@@ -377,43 +219,18 @@ def scan_profile(
     by: str = "source",
     tokens_col: str = "tokens",
     ntok_col: str = "n_tok",
-    t: int = 2,
-    d: int = 20,
-    p: int = 10,
-    cs_width: int = 8192,
-    cs_depth: int = 5,
-    mg_k: int = 256,
-    kll_k: int = 200,
+    **sketch_params,
 ) -> dict[str, TokenProfile]:
     """``profile_token_table`` over the pyarrow-native row-group scan
-    (ops/source.splits_df + batch_iterator) — bypasses the JVM→Arrow
-    bridge for the ``array<int32>`` column exactly like
-    ``scan_sketch_agg`` does for single-sketch builds. Same result
-    contract: register/linear states byte-identical to the Spark-scan
-    build; MG/KLL guarantee-level (their retained sets are
-    partitioning-dependent)."""
-    from .source import batch_iterator, splits_df
+    (``ops.source.scan_partials``), bypassing the JVM→Arrow bridge for the
+    ``array<int32>`` column. ELL/count-sketch states and the exact counts
+    equal the Spark-scan build byte for byte; MG/KLL retained sets depend
+    on partitioning, so they match at guarantee level."""
+    from .source import scan_partials
 
-    specs = (
-        ExaLogLogSpec(t, d, p),
-        CountSketchSpec(cs_width, cs_depth),
-        MisraGriesSpec(mg_k),
-        KLLSpec(kll_k),
+    specs = _specs(**sketch_params)
+    partials, num_p = scan_partials(
+        spark, path, [by], [by, tokens_col, ntok_col],
+        _make_builder(specs, by, tokens_col, ntok_col),
     )
-    builder = _make_builder(specs, by, tokens_col, ntok_col)
-    cols = [by, tokens_col, ntok_col]
-    sdf = splits_df(spark, path)
-
-    def run(batches):
-        split_rows = []
-        for bt in batches:
-            for prow, grow in zip(
-                bt.column("path").to_pylist(), bt.column("row_group").to_pylist()
-            ):
-                split_rows.append((prow, [grow]))
-        yield from builder(batch_iterator(split_rows, cols))
-
-    rows = fold_partials_df(
-        sdf.mapInArrow(run, schema=_PROFILE_SCHEMA), specs
-    ).collect()
-    return _fold_profiles(rows, specs)
+    return _merge_profiles(partials, by, specs, num_p)

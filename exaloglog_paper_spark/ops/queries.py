@@ -2209,8 +2209,8 @@ def token_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside BOTH the MG bracket and the count-sketch two-sided bound
     (fully sketch-derived), median within 5% rank tolerance.
 
-    Scale shape: map-only pass + KB states per (partition, group) to the
-    driver fold (same contract as tree_merge's driver fold); every exact
+    Scale shape: map-only pass + KB composite states per (partition,
+    group) merged by tree_merge, one row per group; every exact
     quantity here is verification-only — the profile itself never
     shuffles a data-sized relation.
     """

@@ -14,55 +14,49 @@ similarity shrinks; documented, tested).
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .agg import SketchSpec, _by_schema
+from .agg import SketchSpec, tree_merge
 
 
 def rollup_level(
     fine: DataFrame, spec: SketchSpec, keep: Sequence[str]
 ) -> DataFrame:
     """Merge finer-level sketch rows up to the ``keep`` grouping columns
-    (pass () for the grand total). Input must have `sketch` + `n_values`."""
+    (pass () for the grand total) — the rows ride ``tree_merge`` as
+    partials. Input must have `sketch` + `n_values`."""
     keep = list(keep)
-    schema = _by_schema(fine, keep) + "sketch binary, n_values long"
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = None
-        for data in pdf["sketch"]:
-            s = spec.deserialize(bytes(data))
-            st = s if st is None else spec.merge(st, s)
-        out = {c: [pdf[c].iloc[0]] for c in keep}
-        out["sketch"] = [spec.serialize(st)]
-        out["n_values"] = [int(pdf["n_values"].sum())]
-        return pd.DataFrame(out)
-
-    if keep:
-        return fine.groupBy(*keep).applyInPandas(merge_group, schema=schema)
-
-    def merge_all(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = merge_group(pdf)
-        out.insert(0, "__g", [0])
-        return out
-
-    return (
-        fine.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(merge_all, schema="__g int, " + schema)
-        .drop("__g")
+    partials = fine.select(
+        *keep, "sketch", "n_values",
+        F.lit(0).cast("long").alias("partition_id"),
+        F.lit(0.0).alias("build_secs"),
     )
+    return tree_merge(partials, spec, by=keep).drop("build_secs")
 
 
-def _key_types(fine: DataFrame, all_keys: Sequence[str]) -> dict:
-    """Null literals for missing grouping keys must carry the key column's
-    ACTUAL type — a hard-coded string cast would coerce non-string key
-    columns to string across the unionByName, silently changing the output
-    schema and breaking typed joins against exact oracles."""
-    by_name = {f.name: f.dataType for f in fine.schema.fields}
-    return {k: by_name[k] for k in all_keys}
+def _pad_union(fine: DataFrame, all_keys: Sequence[str], levels, tag: str) -> DataFrame:
+    """Union ``(keys, level_df, tag_value)`` levels over ``all_keys``, the
+    missing keys as nulls. The nulls carry the key column's ACTUAL type — a
+    hard-coded string cast would coerce non-string key columns to string
+    across the unionByName, silently changing the output schema and
+    breaking typed joins against exact oracles."""
+    key_types = {f.name: f.dataType for f in fine.schema.fields}
+    outs = [
+        lvl.select(
+            *[
+                (F.col(k) if k in keys else F.lit(None).cast(key_types[k])).alias(k)
+                for k in all_keys
+            ],
+            "sketch",
+            "n_values",
+            F.lit(v).alias(tag),
+        )
+        for keys, lvl, v in levels
+    ]
+    return functools.reduce(DataFrame.unionByName, outs)
 
 
 def sketch_rollup(
@@ -74,27 +68,10 @@ def sketch_rollup(
     ``[("source", "lang"), ("source",), ()]``. Output rows carry the level's
     keys (missing keys as null) + sketch + n_values + ``level``.
     """
-    all_keys = list(hierarchy[0])
-    key_types = _key_types(fine, all_keys)
-    outs = []
-    level_df = fine
-    for i, keys in enumerate(hierarchy):
-        if i > 0:
-            level_df = rollup_level(level_df, spec, keys)
-        out = level_df.select(
-            *[
-                (F.col(k) if k in keys else F.lit(None).cast(key_types[k])).alias(k)
-                for k in all_keys
-            ],
-            "sketch",
-            "n_values",
-            F.lit(i).alias("level"),
-        )
-        outs.append(out)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+    levels = [(hierarchy[0], fine, 0)]
+    for i, keys in enumerate(hierarchy[1:], start=1):
+        levels.append((keys, rollup_level(levels[-1][1], spec, keys), i))
+    return _pad_union(fine, list(hierarchy[0]), levels, "level")
 
 
 def sketch_grouping_sets(
@@ -109,27 +86,15 @@ def sketch_grouping_sets(
     results join directly against an exact CUBE oracle.
     """
     all_keys = list(all_keys)
-    key_types = _key_types(fine, all_keys)
-    outs = []
-    for keys in sets:
-        keys = list(keys)
-        lvl = fine if keys == all_keys else rollup_level(fine, spec, keys)
-        gid = sum(1 << (len(all_keys) - 1 - i) for i, k in enumerate(all_keys) if k not in keys)
-        outs.append(
-            lvl.select(
-                *[
-                    (F.col(k) if k in keys else F.lit(None).cast(key_types[k])).alias(k)
-                    for k in all_keys
-                ],
-                "sketch",
-                "n_values",
-                F.lit(gid).alias("gid"),
-            )
+    levels = [
+        (
+            keys,
+            fine if list(keys) == all_keys else rollup_level(fine, spec, keys),
+            sum(1 << (len(all_keys) - 1 - i) for i, k in enumerate(all_keys) if k not in keys),
         )
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+        for keys in sets
+    ]
+    return _pad_union(fine, all_keys, levels, "gid")
 
 
 def sketch_cube(fine: DataFrame, spec: SketchSpec, all_keys: Sequence[str]) -> DataFrame:

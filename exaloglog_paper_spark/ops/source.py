@@ -17,6 +17,7 @@ are outputs of arbitrary Spark plans (joins, filters).
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 from typing import Sequence
@@ -49,44 +50,6 @@ _TARGET_SPLIT_BYTES = int(
 )
 
 
-def splits_df(spark: SparkSession, path: str, parallelism: int | None = None) -> DataFrame:
-    """One row per row-group split, spread deterministically (round-robin
-    slicing, no shuffle) so every task gets ≥1 split when possible.
-
-    Task count is SCALE-ADAPTIVE (guide §2/§6): enough tasks that each
-    reads ~256 MB of parquet (finer granularity as the table grows — at
-    100 TB that is ~4·10^5 tasks, many waves per core, good straggler
-    balance), floored at one wave over the cluster's cores so small
-    inputs still use every core. The former fixed 2× defaultParallelism
-    put exactly two waves of sub-second tasks on small inputs — pure
-    scheduling overhead (~0.6 s per scan at sf0.1, measured)."""
-    splits = list_row_group_splits(path)
-    if not splits:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    if parallelism is None:
-        total_bytes = sum(os.path.getsize(f) for f in {f for f, _ in splits})
-        parallelism = min(
-            len(splits),
-            max(
-                spark.sparkContext.defaultParallelism,
-                -(-total_bytes // _TARGET_SPLIT_BYTES),
-            ),
-        )
-    # Arrow-backed LocalRelation + round-robin repartition instead of
-    # sc.parallelize: the parallelize RDD carries pickled Python rows whose
-    # scan re-runs a Python deserialization step chained in front of every
-    # downstream mapInArrow task; the LocalRelation ships the split list
-    # (KB) JVM-side once. Round-robin assignment is deterministic
-    # (sortBeforeRepartition) and split->task placement is free to differ:
-    # every consumer is partitioning-invariant by the merge algebra.
-    import pandas as pd
-
-    pdf = pd.DataFrame(splits, columns=["path", "row_group"])
-    return spark.createDataFrame(pdf, "path string, row_group int").repartition(
-        parallelism
-    )
-
-
 def batch_iterator(split_rows, columns: Sequence[str], batch_rows: int = 65536):
     """Yield Arrow record batches for the given (path, row_group) rows."""
     import pyarrow.parquet as pq
@@ -96,6 +59,88 @@ def batch_iterator(split_rows, columns: Sequence[str], batch_rows: int = 65536):
         yield from pf.iter_batches(
             batch_size=batch_rows, row_groups=groups, columns=list(columns)
         )
+
+
+def scan_partials(
+    spark: SparkSession,
+    path: str,
+    by: Sequence[str],
+    cols: Sequence[str],
+    builder,
+    splits: list | None = None,
+    batch_rows: int = 65536,
+) -> tuple[DataFrame, int]:
+    """Stage A over parquet: THE pyarrow-native scan every parquet build
+    rides (``scan_sketch_agg``, ``scan_profile`` and the bucket loop of
+    ``ops.checkpoints``). Returns ``(partials, num_partitions)``.
+
+    ``splits`` is the full split list of ``path`` (listed here when None)
+    or a checkpoint bucket's subset. Each task reads its splits' ``cols``
+    with pyarrow and hands the batches to
+    ``builder(batches, num_partitions=...)``, which yields partial rows in
+    the ``by..., PARTIAL_COLS`` schema (``by`` types from the parquet
+    footer).
+
+    Task count is SCALE-ADAPTIVE (guide §2/§6): enough tasks that each
+    reads ~256 MB of parquet (finer granularity as the table grows — at
+    100 TB that is ~4·10^5 tasks, many waves per core, good straggler
+    balance), floored at one wave over the cluster's cores so small
+    inputs still use every core without extra waves of sub-second tasks.
+    """
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from .agg import _by_schema_from_fields
+
+    if splits is None:
+        splits = list_row_group_splits(path)
+    if not splits:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    file_schema = pq.read_schema(splits[0][0])
+    schema = _by_schema_from_fields([file_schema.field(c) for c in by])
+    total_bytes = sum(os.path.getsize(f) for f in {f for f, _ in splits})
+    num_p = min(
+        len(splits),
+        max(
+            spark.sparkContext.defaultParallelism,
+            -(-total_bytes // _TARGET_SPLIT_BYTES),
+        ),
+    )
+    # The split list ships as an Arrow-backed LocalRelation (KB, JVM-side
+    # once) with a round-robin repartition: a Python-RDD source would
+    # chain a pickled-row deserialization step in front of every
+    # mapInArrow task. Round-robin assignment is deterministic
+    # (sortBeforeRepartition); split->task placement is free to differ,
+    # as every consumer is partitioning-invariant by the merge algebra.
+    sdf = spark.createDataFrame(
+        pd.DataFrame(splits, columns=["path", "row_group"]),
+        "path string, row_group int",
+    ).repartition(num_p)
+    cols = list(cols)
+
+    def run(batches):
+        # gather this task's splits (tiny), then stream its row groups
+        split_rows = [
+            (p, [g])
+            for b in batches
+            for p, g in zip(
+                b.column("path").to_pylist(), b.column("row_group").to_pylist()
+            )
+        ]
+        yield from builder(
+            batch_iterator(split_rows, cols, batch_rows), num_partitions=num_p
+        )
+
+    return sdf.mapInArrow(run, schema=schema), num_p
+
+
+def sketch_builder(spec, extractor, by: Sequence[str]):
+    """The single-sketch stage-A builder for :func:`scan_partials`."""
+    from .agg import _build_partials_batches
+
+    return functools.partial(
+        _build_partials_batches, spec=spec, extractor=extractor, by=list(by)
+    )
 
 
 def scan_sketch_agg(
@@ -113,43 +158,16 @@ def scan_sketch_agg(
     ``sketch_agg(spark.read.parquet(path), ...)`` — asserted in tests — at a
     fraction of the transfer cost for array columns.
     """
-    import pyarrow as pa
+    from .agg import tree_merge
 
-    from .agg import _build_partials_batches, _by_schema_from_fields, tree_merge
-
-    sdf = splits_df(spark, path)
-    num_p = sdf.rdd.getNumPartitions()
     by = list(by)
     cols = list(dict.fromkeys(by + list(extractor.input_cols)))
-
-    def run(batches):
-        # gather this task's splits (tiny), then stream its row groups
-        split_rows: list[tuple[str, list[int]]] = []
-        for b in batches:
-            for prow, grow in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
-                split_rows.append((prow, [grow]))
-        yield from _build_partials_batches(
-            batch_iterator(split_rows, cols, batch_rows),
-            spec,
-            extractor,
-            by,
-            num_partitions=num_p,
-        )
-
-    # derive the by-columns' Spark types from the parquet schema
-    import pyarrow.parquet as pq
-
-    first = list_row_group_splits(path)[0][0]
-    file_schema = pq.ParquetFile(first).schema_arrow
-    schema = _by_schema_from_fields([file_schema.field(c) for c in by])
-    partials = sdf.mapInArrow(run, schema=schema)
+    partials, num_p = scan_partials(
+        spark, path, by, cols, sketch_builder(spec, extractor, by),
+        batch_rows=batch_rows,
+    )
     # Grouped aggregations keep the distributed tree unconditionally: a
-    # grouped driver-fold fast path (JVM approx_count_distinct probe +
-    # collect + numpy fold) was tried in r6 and measured NO faster than
-    # the tree at sf0.1 (interleaved A/B: 1.18 vs 1.12 s min) — the
-    # applyInPandas merge pipeline overlaps with the partials stage, so
-    # the probe's extra jobs bought nothing. Rejected; see
-    # OPTIMIZATION_r06.md.
+    # grouped driver-fold fast path measured no faster (OPTIMIZATION_r06.md).
     return tree_merge(partials, spec, by=by, num_partials=num_p, fanin=fanin)
 
 

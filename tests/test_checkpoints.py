@@ -59,3 +59,44 @@ def test_resume_skips_completed_buckets(spark, tokens_path, tmp_path):
     a = {r.source: bytes(r.sketch) for r in full}
     b = {r.source: bytes(r.sketch) for r in resumed}
     assert a == b
+
+
+def test_resume_with_other_bucket_count_raises(spark, tokens_path, tmp_path):
+    """Buckets are split_index % num_buckets: resuming under another count
+    would double count (4 -> 8) or skip (8 -> 4) splits, so it is refused."""
+    spec = ExaLogLogSpec(2, 20, 8)
+    ckpt = str(tmp_path / "ck3")
+    checkpointed_sketch_agg(
+        spark, tokens_path, spec, token_array_values("tokens"),
+        ckpt_dir=ckpt, num_buckets=4,
+    ).collect()
+    with pytest.raises(ValueError, match="num_buckets"):
+        checkpointed_sketch_agg(
+            spark, tokens_path, spec, token_array_values("tokens"),
+            ckpt_dir=ckpt, num_buckets=8,
+        )
+
+
+def test_resume_with_changed_file_set_raises(spark, tmp_path):
+    spec = ExaLogLogSpec(2, 20, 8)
+    src = str(tmp_path / "src")
+    tok.token_table(spark, 60, num_partitions=3).write.parquet(src)
+    ckpt = str(tmp_path / "ck4")
+    checkpointed_sketch_agg(
+        spark, src, spec, token_array_values("tokens"), ckpt_dir=ckpt, num_buckets=2
+    ).collect()
+    tok.token_table(spark, 20, seed=5, num_partitions=1).write.mode("append").parquet(src)
+    with pytest.raises(ValueError, match="splits"):
+        checkpointed_sketch_agg(
+            spark, src, spec, token_array_values("tokens"), ckpt_dir=ckpt, num_buckets=2
+        )
+
+
+def test_checkpointed_without_input_files_raises(spark, tmp_path):
+    empty = tmp_path / "no_files"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError):
+        checkpointed_sketch_agg(
+            spark, str(empty), ExaLogLogSpec(2, 20, 8), token_array_values("tokens"),
+            ckpt_dir=str(tmp_path / "ck5"),
+        )

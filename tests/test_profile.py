@@ -57,9 +57,9 @@ def test_profile_matches_independent_builds(spark):
 def test_checkpointed_profile_resumes_byte_identically(spark, tmp_path):
     """checkpointed_profile: uninterrupted vs crash-and-resume (one bucket
     dir deleted) produce byte-identical states for ALL four sketches —
-    including the merge-order-dependent MG/KLL, thanks to the
-    deterministic sorted driver fold — and the register/linear states
-    match the direct one-pass build exactly."""
+    including the merge-order-dependent MG/KLL, thanks to tree_merge's
+    byte-order merge rule — and the register/linear states match the
+    direct one-pass build exactly."""
     import shutil
 
     from exaloglog_paper_spark.ops import tokens as tok
@@ -72,10 +72,13 @@ def test_checkpointed_profile_resumes_byte_identically(spark, tmp_path):
     ck2 = str(tmp_path / "ck2")
 
     full = checkpointed_profile(spark, src, ck1, num_buckets=4)
-    # lineage/metrics table is readable and carries the state digests
+    # lineage/metrics table is readable and carries one digest per
+    # composite partial row
+    from pyspark.sql import functions as F
+
     lm = lineage_metrics(spark, ck1)
     assert lm.count() > 0
-    assert {"ell_sha256", "cs_sha256", "mg_sha256", "kll_sha256"} <= set(lm.columns)
+    assert lm.filter(F.length("state_sha256") != 64).count() == 0
 
     # crash simulation: run, destroy one bucket, resume
     checkpointed_profile(spark, src, ck2, num_buckets=4)
@@ -164,15 +167,16 @@ def test_profile_empty_and_all_null_group_inputs(spark, tmp_path):
 
 
 def test_profile_fold_is_distributed(spark):
-    """r6 plan pin: the profiler's fold runs as a grouped executor-side
-    stage (FlatMapGroupsInPandas over the partials), and the fold output
-    is ONE row per group — only KB-per-group rows ever reach the driver,
-    never the raw (task x group) partial states (VERDICT r5 item 1)."""
-    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
-    from exaloglog_paper_spark.ops.profile import (
-        fold_partials_df,
-        profile_partials_df,
+    """r6 plan pin: the profiler's fold is tree_merge over composite
+    partials — a grouped executor-side stage (FlatMapGroupsInPandas), ONE
+    row per group, so only KB-per-group rows ever reach the driver, never
+    the raw (task x group) partial states (VERDICT r5 item 1)."""
+    from exaloglog_paper_spark.ops.agg import (
+        CompositeSpec,
+        ExaLogLogSpec,
+        tree_merge,
     )
+    from exaloglog_paper_spark.ops.profile import profile_partials_df
     from exaloglog_paper_spark.ops.specs import (
         CountSketchSpec,
         KLLSpec,
@@ -186,22 +190,22 @@ def test_profile_fold_is_distributed(spark):
         MisraGriesSpec(32),
         KLLSpec(64),
     )
+    composite = CompositeSpec(specs)
     partials = profile_partials_df(df, specs)
-    folded = fold_partials_df(partials, specs)
+    folded = tree_merge(partials, composite, by=["source"])
     plan = folded._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # the fold is a grouped stage
     rows = folded.collect()
-    assert len(rows) == len({r.g for r in rows})  # one row per group
-    # and it matches the driver-side fold of the raw partials exactly
-    from exaloglog_paper_spark.ops.profile import _fold_profiles
-
-    direct = _fold_profiles(partials.collect(), specs)
-    via_fold = _fold_profiles(rows, specs)
-    assert set(direct) == set(via_fold)
-    for g in direct:
-        assert direct[g].ell.serialize() == via_fold[g].ell.serialize()
-        assert direct[g].cs.serialize() == via_fold[g].cs.serialize()
-        assert direct[g].mg.serialize() == via_fold[g].mg.serialize()
-        assert direct[g].kll.serialize() == via_fold[g].kll.serialize()
-        assert direct[g].n_docs == via_fold[g].n_docs
-        assert direct[g].n_tokens == via_fold[g].n_tokens
+    assert len(rows) == len({r.source for r in rows})  # one row per group
+    # and it equals a driver merge_many of the collected partials
+    grouped: dict[str, list] = {}
+    for r in partials.collect():
+        grouped.setdefault(r.source, []).append(r)
+    assert set(grouped) == {r.source for r in rows}
+    for r in rows:
+        ps = grouped[r.source]
+        direct = composite.merge_many(
+            composite.deserialize(b) for b in sorted(bytes(p.sketch) for p in ps)
+        )
+        assert bytes(r.sketch) == composite.serialize(direct)
+        assert r.n_values == sum(p.n_values for p in ps)
