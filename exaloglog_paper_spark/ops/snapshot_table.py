@@ -21,6 +21,9 @@ while staying runnable on a plain filesystem:
   resume/audit trail the north rule asks for.
 - **Time travel**: ``read_snapshot_table(..., snapshot_id=k)`` reads the
   table exactly as of commit ``k``.
+- **No jobs beyond the write**: each snapshot records its files' schema
+  (as a parquet read infers it, every field nullable), so reads skip
+  inference; older snapshots without one still read through inference.
 
 The sketch-state table is KB-per-group (MBs total even when the SOURCE
 data is 10^12 rows), so copy-on-write per commit — rewrite the merged
@@ -50,7 +53,10 @@ import shutil
 import time
 from typing import Mapping, Sequence
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 from .sketch_table import merge_state_tables
 
@@ -84,7 +90,7 @@ def current_metadata(table_dir: str) -> dict | None:
 
 def snapshot_history(table_dir: str) -> list[dict]:
     """All committed snapshots, oldest first (id, parent_id, timestamp_ms,
-    operation, manifest, summary, lineage)."""
+    operation, manifest, summary, lineage, schema)."""
     meta = current_metadata(table_dir)
     return list(meta["snapshots"]) if meta else []
 
@@ -112,9 +118,10 @@ def read_snapshot_table(
     if meta is None:
         raise FileNotFoundError(f"no committed snapshot under {table_dir}")
     snap = _resolve_snapshot(meta, snapshot_id)
-    return spark.read.parquet(
-        *[os.path.join(table_dir, rel) for rel in snap["manifest"]]
-    )
+    reader = spark.read
+    if "schema" in snap:  # recorded at commit: no schema-inference job
+        reader = reader.schema(StructType.fromJson(snap["schema"]))
+    return reader.parquet(*[os.path.join(table_dir, rel) for rel in snap["manifest"]])
 
 
 def update_snapshot_table(
@@ -153,10 +160,14 @@ def update_snapshot_table(
 
     snap_id = snaps[-1]["id"] + 1 if snaps else 1
     rel_data = os.path.join("data", f"snap-{snap_id:06d}")
-    merged.write.mode("overwrite").parquet(os.path.join(table_dir, rel_data))
+    data_dir = os.path.join(table_dir, rel_data)
+    merged.write.mode("overwrite").parquet(data_dir)
 
-    out = spark.read.parquet(os.path.join(table_dir, rel_data))
-    agg = out.groupBy().sum("n_values").collect()  # KB-scale state table
+    # recorded schema and driver-side summary: no Spark job after the write
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in merged.schema]
+    )
+    n_values = pq.read_table(data_dir, columns=["n_values"]).column("n_values")
     snaps.append(
         {
             "id": snap_id,
@@ -165,11 +176,12 @@ def update_snapshot_table(
             "operation": operation,
             "manifest": [rel_data],
             "summary": {
-                "n_groups": out.count(),
-                "total_values": int(agg[0][0] or 0),
+                "n_groups": len(n_values),
+                "total_values": int(pc.sum(n_values).as_py() or 0),
                 "commit_secs": round(time.monotonic() - t0, 3),
             },
             "lineage": dict(lineage or {}),
+            "schema": schema.jsonValue(),
         }
     )
 
@@ -181,7 +193,7 @@ def update_snapshot_table(
     with open(tmp, "w") as f:
         f.write(str(next_v))
     os.replace(tmp, _hint_path(table_dir))  # THE commit point (atomic)
-    return out
+    return spark.read.schema(schema).parquet(data_dir)
 
 
 def expire_snapshots(table_dir: str, keep: int = 2) -> list[int]:

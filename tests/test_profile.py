@@ -5,6 +5,8 @@ algebras), guarantee-level for the partitioning-dependent summaries
 (Misra-Gries bracket, KLL rank tolerance) — and the exact counters must
 be exact."""
 
+import re
+
 import numpy as np
 
 from exaloglog_paper_spark.ops import tokens as tok
@@ -168,9 +170,10 @@ def test_profile_empty_and_all_null_group_inputs(spark, tmp_path):
 
 def test_profile_fold_is_distributed(spark):
     """r6 plan pin: the profiler's fold is tree_merge over composite
-    partials — a grouped executor-side stage (FlatMapGroupsInPandas), ONE
-    row per group, so only KB-per-group rows ever reach the driver, never
-    the raw (task x group) partial states (VERDICT r5 item 1)."""
+    partials — an executor-side merge level (MapInArrow over a hash
+    shuffle on the group key), ONE row per group, so only KB-per-group rows
+    ever reach the driver, never the raw (task x group) partial states
+    (VERDICT r5 item 1)."""
     from exaloglog_paper_spark.ops.agg import (
         CompositeSpec,
         ExaLogLogSpec,
@@ -194,7 +197,13 @@ def test_profile_fold_is_distributed(spark):
     partials = profile_partials_df(df, specs)
     folded = tree_merge(partials, composite, by=["source"])
     plan = folded._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan  # the fold is a grouped stage
+    # the fold is a merge level reading the shuffle on the group key
+    assert re.search(
+        r"MapInArrow merge_runs[^\n]*\n\s*\+- Sort \[source[^\n]*\n"
+        r"\s*\+- Exchange hashpartitioning\(source",
+        plan,
+    ), plan
+    assert "FlatMapGroupsInPandas" not in plan
     rows = folded.collect()
     assert len(rows) == len({r.source for r in rows})  # one row per group
     # and it equals a driver merge_many of the collected partials

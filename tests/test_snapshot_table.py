@@ -129,3 +129,56 @@ def test_empty_table_reads_raise(spark, tmp_path):
         read_snapshot_table(spark, str(tmp_path / "nope"))
     assert current_metadata(str(tmp_path / "nope")) is None
     assert snapshot_history(str(tmp_path / "nope")) == []
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_records_schema_and_exact_summary(spark, tdf, tmp_path):
+    """A commit records its files' schema (reads then infer nothing: zero
+    jobs, before and after expiry) and an exact summary."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    for p in parts:
+        _commit(spark, tdir, p)
+    want = _states(_build(tdf))
+
+    table, jobs = _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))
+    assert jobs == 0
+    manifest = os.path.join(tdir, *snapshot_history(tdir)[-1]["manifest"])
+    assert table.schema == spark.read.parquet(manifest).schema
+    assert _states(table) == want
+    summary = snapshot_history(tdir)[-1]["summary"]
+    assert summary["n_groups"] == len(want)
+    assert summary["total_values"] == sum(n for _, n in want.values())
+
+    expire_snapshots(tdir, keep=1)
+    assert _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))[1] == 0
+
+
+def test_snapshot_without_recorded_schema_still_reads(spark, tdf, tmp_path):
+    """Metadata written before schemas were recorded reads through
+    inference (which runs a job) to the same rows and schema."""
+    tdir = str(tmp_path / "snap")
+    _commit(spark, tdir, tdf)
+    recorded = read_snapshot_table(spark, tdir)
+    meta = current_metadata(tdir)
+    path = os.path.join(tdir, "metadata", f"v{meta.pop('version')}.metadata.json")
+    for s in meta["snapshots"]:
+        del s["schema"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+
+    table, jobs = _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))
+    assert jobs >= 1
+    assert table.schema == recorded.schema
+    assert _states(table) == _states(recorded)

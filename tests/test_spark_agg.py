@@ -624,3 +624,84 @@ def test_composite_spec_round_trip_and_partwise_merge():
     for i, spec in enumerate(parts):
         direct = spec.merge_many(comp.deserialize(b)[i] for b in blobs)
         assert spec.serialize(merged[i]) == spec.serialize(direct)
+
+
+@pytest.fixture
+def two_row_batches(spark):
+    """Arrow batches of two rows, so a merge level's key runs span batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    yield
+    spark.conf.set(key, old)
+
+
+def test_merge_level_runs_span_arrow_batches(spark, two_row_batches):
+    """Each group's partials arrive over several Arrow batches; the level
+    still gives one row per group, byte-equal to a driver merge of the
+    group's partials in byte order (KLL: a wrong run split changes bytes)."""
+    from exaloglog_paper_spark.ops.agg import _merge_sorted, local_df, tree_merge
+    from exaloglog_paper_spark.ops.specs import KLLSpec
+
+    spec = KLLSpec(16)
+    rng = np.random.default_rng(11)
+    rows = [
+        (g, spec.serialize(spec.add(spec.empty(), rng.normal(size=40 + i))), 40 + i, i, 0.0)
+        for i in range(9)
+        for g in ("a", "b", "c")
+    ]
+    schema = "g string, sketch binary, n_values long, partition_id long, build_secs double"
+    out = tree_merge(local_df(spark, rows, schema), spec, by=["g"], num_partials=9).collect()
+    assert sorted(r.g for r in out) == ["a", "b", "c"]
+    for r in out:
+        mine = [row for row in rows if row[0] == r.g]
+        assert bytes(r.sketch) == spec.serialize(_merge_sorted(spec, [m[1] for m in mine]))
+        assert r.n_values == sum(m[2] for m in mine)
+
+
+def test_merge_level_null_and_two_column_keys(spark, two_row_batches):
+    """Null keys form one group and two-column keys group as in Spark's
+    groupBy, through an intermediate level (fanin=2) and batch-spanning runs."""
+    rows = [
+        ("a" if i % 3 else None, None if i % 4 == 0 else i % 2, i) for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "k1 string, k2 int, v long").repartition(6)
+    out = sketch_agg(
+        df, ExaLogLogSpec(2, 8, 8), hash64_values("v"), by=["k1", "k2"], fanin=2
+    ).collect()
+    want = {(r.k1, r.k2): r["count"] for r in df.groupBy("k1", "k2").count().collect()}
+    assert {(r.k1, r.k2): r.n_values for r in out} == want
+    assert len(out) == len(want) == 6
+
+
+def test_merge_runs_emits_bounded_chunks():
+    """The level's task body flushes every flush_groups groups; the chunks
+    concatenate to the unchunked output."""
+    import pyarrow as pa
+
+    from exaloglog_paper_spark.ops.agg import _merge_runs
+
+    spec = ExaLogLogSpec(2, 8, 6)
+    rng = np.random.default_rng(5)
+    keys = sorted([("x", 0), ("x", 0), ("y", 1), ("z", 0), ("z", 0), ("z", 0), (None, 2)],
+                  key=lambda k: (k[0] is not None, k))
+    sketches = [
+        spec.serialize(spec.add(spec.empty(), splitmix64(rng.integers(0, 1 << 40, 30).astype(np.uint64))))
+        for _ in keys
+    ]
+    table = pa.table({
+        "g": [k[0] for k in keys],
+        "sketch": pa.array(sketches, pa.binary()),
+        "n_values": pa.array([30] * len(keys), pa.int64()),
+        "build_secs": [0.5] * len(keys),
+        "__bucket": pa.array([k[1] for k in keys], pa.int32()),
+    })
+    batches = table.to_batches(max_chunksize=2)
+    chunks = list(_merge_runs(iter(batches), spec, ["g"], flush_groups=2))
+    assert [c.num_rows for c in chunks] == [2, 2]
+    whole = list(_merge_runs(iter(batches), spec, ["g"]))
+    assert len(whole) == 1
+    assert pa.Table.from_batches(chunks).equals(pa.Table.from_batches(whole))
+    assert whole[0].column("g").to_pylist() == [None, "x", "y", "z"]
+    assert whole[0].column("n_values").to_pylist() == [30, 60, 30, 90]
+    assert whole[0].column("partition_id").to_pylist() == [2, 0, 1, 0]
