@@ -40,7 +40,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType
 
-from ..sketchlib.bitops import as_u64, splitmix64
+from ..sketchlib.bitops import splitmix64
 from ..sketchlib.exaloglog import ExaLogLog, ExaLogLogConfig
 
 # ---------------------------------------------------------------------------
@@ -176,114 +176,6 @@ class ExaLogLogSpec(SketchSpec):
 
     def theoretical_rse(self) -> float:
         return self.cfg.theoretical_rse_ml()
-
-
-class SparseExaLogLogSpec(ExaLogLogSpec):
-    """Hybrid sparse/dense ExaLogLog (the reference's sparse-mode design,
-    ExaLogLog.java:236-253 javadoc): states stay a deduplicated sorted
-    uint32 token array while small (near-exact estimates via the
-    sketch-free token estimator, DistinctCountUtil.java:215-264), and
-    densify to registers once the token set would outgrow the register
-    state. Merge handles all sparse/dense combinations; dense(tokens(X))
-    == dense-built(X) exactly, so mixed pipelines stay byte-consistent.
-
-    Serialized form: 1-byte tag (0=sparse, 1=dense) + payload.
-    """
-
-    # sparse states are variable-length (tag + token array): no fixed-width
-    # batch path — fall back to the per-row finalize
-    finalize_batch = None
-
-    def __init__(self, t: int = 2, d: int = 20, p: int = 10, max_sparse: int | None = None):
-        super().__init__(t, d, p)
-        # default: switch when the token array would exceed the dense state
-        self.max_sparse = max_sparse or max(self.cfg.state_num_bytes // 4, 64)
-        self.name = f"sparse_exaloglog_t{t}_d{d}_p{p}"
-
-    def empty(self):
-        return np.empty(0, dtype=np.uint32)  # sparse
-
-    def _densify(self, tokens: np.ndarray) -> ExaLogLog:
-        sk = ExaLogLog.from_config(self.cfg)
-        sk.add_tokens(tokens.astype(np.uint64))
-        return sk
-
-    def add(self, state, values: np.ndarray):
-        from ..sketchlib.exaloglog import compute_token
-
-        tokens = compute_token(as_u64(values)).astype(np.uint32)
-        if isinstance(state, ExaLogLog):
-            state.add_tokens(tokens.astype(np.uint64))
-            return state
-        merged = np.union1d(state, tokens)
-        if len(merged) > self.max_sparse:
-            return self._densify(merged)
-        return merged
-
-    def merge(self, a, b):
-        if isinstance(a, ExaLogLog):
-            if isinstance(b, ExaLogLog):
-                return a.merge_(b)
-            a.add_tokens(b.astype(np.uint64))
-            return a
-        if isinstance(b, ExaLogLog):
-            b.add_tokens(a.astype(np.uint64))
-            return b
-        merged = np.union1d(a, b)
-        if len(merged) > self.max_sparse:
-            return self._densify(merged)
-        return merged
-
-    def merge_many(self, states):
-        """K-way merge across sparse/dense mixtures: one union over all
-        sparse token arrays + one stacked register reduce over the dense
-        states. Byte-identical to the sequential fold — the union is
-        order-free and dense(tokens(X)) == dense-built(X) exactly, so the
-        densify point doesn't affect the final state."""
-        from ..sketchlib.exaloglog import merge_registers_many
-
-        states = list(states)
-        if not states:
-            return self.empty()
-        sparse = [s for s in states if not isinstance(s, ExaLogLog)]
-        dense = [s for s in states if isinstance(s, ExaLogLog)]
-        tokens = (
-            np.unique(np.concatenate(sparse)) if sparse else np.empty(0, np.uint32)
-        )
-        if not dense:
-            if len(tokens) > self.max_sparse:
-                return self._densify(tokens)
-            return tokens
-        out = dense[0]
-        if len(dense) > 1:
-            out.regs = merge_registers_many(
-                np.stack([s.regs for s in dense]), self.cfg.d
-            )
-        if tokens.size:
-            out.add_tokens(tokens.astype(np.uint64))
-        return out
-
-    def serialize(self, state) -> bytes:
-        if isinstance(state, ExaLogLog):
-            return b"\x01" + state.serialize()
-        return b"\x00" + state.astype("<u4").tobytes()
-
-    def serialize_batch(self, states) -> list:
-        # sparse states carry a mode prefix byte — the inherited
-        # register-pack fast path would drop it; per-state is correct here
-        return [self.serialize(s) for s in states]
-
-    def deserialize(self, data: bytes):
-        if data[:1] == b"\x01":
-            return ExaLogLog.wrap(self.cfg.t, self.cfg.d, data[1:])
-        return np.frombuffer(data, dtype="<u4", offset=1).copy()
-
-    def finalize(self, state) -> float:
-        if isinstance(state, ExaLogLog):
-            return state.estimate()
-        from ..sketchlib.exaloglog import estimate_distinct_from_tokens
-
-        return estimate_distinct_from_tokens(state.astype(np.uint64))
 
 
 class HyperLogLogSpec(ExaLogLogSpec):

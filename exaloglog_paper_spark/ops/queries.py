@@ -981,16 +981,17 @@ def lsh_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def incremental_update_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sketch-table maintenance is byte-exact: two increments
-    (a deterministic hash-split of the token table) folded into a
-    versioned sketch table must equal a one-shot build over the full
-    table, state-byte-for-state-byte per source — the daily-pipeline
-    pattern where history is never rescanned. The oracle recomputes
-    per-source token volumes from the parquet twin and asserts the flag."""
+    (a deterministic hash-split of the token table) committed as two
+    snapshots of a snapshot sketch table must equal a one-shot build over
+    the full table, state-byte-for-state-byte per source — the
+    daily-pipeline pattern where history is never rescanned. The oracle
+    recomputes per-source token volumes from the parquet twin and asserts
+    the flag."""
     import shutil
     import tempfile
 
     from .agg import sketch_agg, token_array_values
-    from .sketch_table import read_sketch_table, update_sketch_table
+    from .snapshot_table import read_snapshot_table, update_snapshot_table
 
     spec = ExaLogLogSpec(2, 20, 8)
     path = tok.materialize_token_table(_sf_name(sf_dir))
@@ -1001,7 +1002,7 @@ def incremental_update_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdir = tempfile.mkdtemp(prefix="ellinc_")
     try:
         for h in halves:
-            update_sketch_table(
+            update_snapshot_table(
                 spark,
                 tdir,
                 sketch_agg(h, spec, token_array_values("tokens"), by=["source"]),
@@ -1010,7 +1011,7 @@ def incremental_update_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         incr = {
             r.source: (bytes(r.sketch), int(r.n_values))
-            for r in read_sketch_table(spark, tdir).collect()
+            for r in read_snapshot_table(spark, tdir).collect()
         }
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
@@ -1280,8 +1281,8 @@ def sketch_rollup_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sparse_distinct_tokens_per_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse-mode hybrid sketch on a small sample: per-row sketch-free
-    token estimates vs exact per-row distinct counts (all within 2%)."""
+    """Sparse mode on a small sample: per-row sketch-free token-stream
+    estimates vs exact per-row distinct counts (all within 2%)."""
     from .functions import token_stream_estimate
 
     tok.materialize_token_table(_sf_name(sf_dir))

@@ -1,10 +1,11 @@
 """Snapshot-committed sketch tables (Iceberg-style semantics, no jars).
 
-``ops/sketch_table.py`` versions the persistent sketch table as ``v=N``
-parquet dirs gated on ``_SUCCESS``. This module upgrades that layout to
-the semantics a production deployment gets from an Iceberg table —
-matching the north rule's "incremental updates ride snapshots" framing —
-while staying runnable on a plain filesystem:
+The production pattern for 10^12-row distinct counting: keep one row of
+serialized sketch state per group in a persistent table, and fold each new
+data increment (today's partition) into it with ONE pass over the
+increment only — never rescanning history. The table is committed with
+the semantics a production deployment gets from an Iceberg table, while
+staying runnable on a plain filesystem:
 
 - **Immutable data files**: every commit writes a brand-new parquet dir
   under ``data/``; nothing is ever rewritten in place.
@@ -31,13 +32,8 @@ state table, cost proportional to #groups — is the right trade; the
 expensive pass is only ever over the new increment, and mergeability
 (``state(A ∪ B) == merge(state(A), state(B))``, byte-for-byte) makes the
 snapshot chain byte-identical to a from-scratch rebuild (asserted by the
-``snapshot_time_travel_invariant`` oracle and tests/test_snapshot_table.py).
-
-On a cluster with ``iceberg-spark-runtime`` on the classpath, use
-``update_sketch_table_iceberg`` to ride real Iceberg snapshots instead
-(same COW merge, committed through the catalog); this sandbox has no
-Iceberg jars, so that path raises with a pointed message, exactly like
-``ops/source.read_table``'s Iceberg branch.
+``incremental_update_invariant`` and ``snapshot_time_travel_invariant``
+oracles and tests/test_snapshot_table.py).
 
 Reference behavior-parity note: the reference persists nothing between
 runs (in-memory Java sketches); persistent snapshot tables are this
@@ -49,16 +45,17 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from typing import Mapping, Sequence
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .sketch_table import merge_state_tables
+from .agg import tree_merge
 
 _STATE_COLS = ["sketch", "n_values", "build_secs"]
 
@@ -122,6 +119,24 @@ def read_snapshot_table(
     if "schema" in snap:  # recorded at commit: no schema-inference job
         reader = reader.schema(StructType.fromJson(snap["schema"]))
     return reader.parquet(*[os.path.join(table_dir, rel) for rel in snap["manifest"]])
+
+
+def merge_state_tables(
+    states: Sequence[DataFrame], spec, by: Sequence[str] = (), fanin: int = 64
+) -> DataFrame:
+    """Merge several (by..., sketch, n_values, build_secs) state tables into
+    one row per group. Inputs are state rows (KB each), so this is a
+    shuffle of sketch states on the group key — never of raw data."""
+    by = list(by)
+    # tree_merge wants a DISTINCT partition stamp per planned partial: stamp
+    # each input table with its ordinal so the pmod bucketing spreads states
+    # across first-level reducers even for > fanin input tables (multi-day
+    # backfills) — a constant stamp would funnel every state into one bucket
+    cols = states[0].columns
+    stamped = states[0].withColumn("partition_id", F.lit(0))
+    for i, s in enumerate(states[1:], start=1):
+        stamped = stamped.unionByName(s.select(cols).withColumn("partition_id", F.lit(i)))
+    return tree_merge(stamped, spec, by=by, num_partials=len(states), fanin=fanin)
 
 
 def update_snapshot_table(
@@ -200,7 +215,10 @@ def expire_snapshots(table_dir: str, keep: int = 2) -> list[int]:
     """Drop all but the newest ``keep`` snapshots: rewrite metadata without
     them (committed via the same atomic hint swap), then delete their
     now-unreferenced data dirs and any orphans from crashed commits.
-    Never touches the current snapshot. Returns expired snapshot ids."""
+    Never touches the current snapshot, nor a ``snap-N`` dir with N above
+    it: that is a pending commit whose hint swap has not happened yet (a
+    retry of a crashed one computes the same id and overwrites it).
+    Returns expired snapshot ids."""
     meta = current_metadata(table_dir)
     if meta is None:
         return []
@@ -221,50 +239,12 @@ def expire_snapshots(table_dir: str, keep: int = 2) -> list[int]:
     data_dir = os.path.join(table_dir, "data")
     if os.path.isdir(data_dir):
         for name in os.listdir(data_dir):
-            if os.path.join("data", name) not in live:
+            m = re.fullmatch(r"snap-(\d+)", name)
+            if (
+                m
+                and int(m.group(1)) <= kept[-1]["id"]
+                and os.path.join("data", name) not in live
+            ):
                 shutil.rmtree(os.path.join(data_dir, name), ignore_errors=True)
     return [s["id"] for s in doomed]
 
-
-def update_sketch_table_iceberg(
-    spark: SparkSession,
-    table_ident: str,
-    increment_states: DataFrame,
-    spec,
-    by: Sequence[str] = (),
-) -> DataFrame:
-    """True-Iceberg twin of ``update_snapshot_table`` for clusters with
-    ``iceberg-spark-runtime`` on the classpath: the same COW state merge,
-    committed through the catalog with ``DataFrameWriterV2`` so
-    incremental updates ride real Iceberg snapshots (time travel via
-    ``VERSION AS OF``, expiry via ``expire_snapshots`` procedures).
-
-    This sandbox ships no Iceberg jars, so table resolution fails here by
-    design — same contract as ``ops/source.read_table``'s iceberg branch.
-    """
-    by = list(by)
-    inc = increment_states.select(*by, *_STATE_COLS)
-    try:
-        exists = spark.catalog.tableExists(table_ident)
-    except Exception as e:  # no catalog / no runtime on the classpath
-        raise RuntimeError(
-            f"cannot resolve Iceberg table {table_ident!r}: is "
-            "iceberg-spark-runtime on the classpath and the catalog "
-            "configured? For filesystem deployments use "
-            "update_snapshot_table instead"
-        ) from e
-    if not exists:
-        inc.writeTo(table_ident).using("iceberg").create()
-    else:
-        merged = merge_state_tables(
-            [spark.read.table(table_ident), inc], spec, by=by
-        )
-        # Materialize BEFORE the write: the merged plan reads the very
-        # table it is about to replace, and Iceberg (correctly) rejects
-        # an overwrite whose scan is still wired to the target. The state
-        # table is KB-per-group, so an eager localCheckpoint is ~free and
-        # severs the self-reference.
-        merged = merged.localCheckpoint(eager=True)
-        # one atomic Iceberg snapshot replacing the state rows (COW)
-        merged.writeTo(table_ident).overwritePartitions()
-    return spark.read.table(table_ident)

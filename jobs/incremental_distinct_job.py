@@ -1,10 +1,12 @@
 """spark-submit entry point: incrementally-maintained distinct-token counts.
 
-Maintains a versioned sketch table (one ExaLogLog state row per group) and
-folds each new data increment into it with one pass over the increment —
-history is never rescanned. Because the merge algebra is exact, the
-maintained table is byte-identical to a from-scratch rebuild over all
-increments (the oracle-checked resume/merge invariants).
+Maintains a snapshot sketch table (one ExaLogLog state row per group,
+ops/snapshot_table.py) and folds each new data increment into it with one
+pass over the increment — history is never rescanned. Because the merge
+algebra is exact, the maintained table is byte-identical to a
+from-scratch rebuild over all increments (the oracle-checked
+resume/merge invariants). Each update is one atomic snapshot commit with
+per-commit lineage metrics.
 
 Usage (daily pipeline shape):
 
@@ -18,13 +20,9 @@ Usage (daily pipeline shape):
     spark-submit ... --add /data/tokens_2026_08_17.parquet --by source
 
 Each run prints the post-update per-group estimates. ``--estimate-only``
-reads the latest version without updating.
-
-``--layout snapshot`` stores the table with Iceberg-style snapshot commits
-instead of ``v=N`` dirs (ops/snapshot_table.py): atomic version-hint swap,
-per-commit lineage metrics, time travel via ``--snapshot-id K``, and
-expiry via ``--expire-keep N``. Same merge algebra, same byte-identity
-guarantees.
+reads the latest snapshot without updating; add ``--snapshot-id K`` to
+time-travel to snapshot K. ``--prune-keep N`` expires all but the newest
+N snapshots after an update.
 """
 
 from __future__ import annotations
@@ -45,31 +43,23 @@ def main() -> None:
     ap.add_argument("--p", type=int, default=10)
     ap.add_argument("--estimate-only", action="store_true")
     ap.add_argument(
-        "--layout",
-        default="versioned",
-        choices=["versioned", "snapshot"],
-        help="versioned: v=N dirs (ops/sketch_table); snapshot: Iceberg-style "
-        "atomic snapshot commits with lineage + time travel (ops/snapshot_table)",
-    )
-    ap.add_argument(
         "--snapshot-id",
         type=int,
         default=None,
-        help="with --layout snapshot --estimate-only: time-travel read of "
-        "this snapshot",
+        help="with --estimate-only: time-travel read of this snapshot",
     )
     ap.add_argument(
         "--lineage",
         default="",
-        help="with --layout snapshot: free-form increment label recorded in "
-        "the snapshot history (e.g. the batch date)",
+        help="free-form increment label recorded in the snapshot history "
+        "(e.g. the batch date)",
     )
     ap.add_argument(
         "--prune-keep",
         type=int,
         default=0,
-        help="after a successful update, keep only the newest N versions/"
-        "snapshots (0 = never prune)",
+        help="after a successful update, keep only the newest N snapshots "
+        "(0 = never prune)",
     )
     args = ap.parse_args()
     by = [c for c in args.by.split(",") if c]
@@ -80,20 +70,18 @@ def main() -> None:
         token_array_values,
         with_estimate,
     )
+    from exaloglog_paper_spark.ops.snapshot_table import (
+        expire_snapshots,
+        read_snapshot_table,
+        snapshot_history,
+        update_snapshot_table,
+    )
     from exaloglog_paper_spark.ops.source import read_tokens
 
     spark = SparkSession.builder.appName("incremental-distinct").getOrCreate()
     spec = ExaLogLogSpec(args.t, args.d, args.p)
-    snapshot = args.layout == "snapshot"
     if args.estimate_only:
-        if snapshot:
-            from exaloglog_paper_spark.ops.snapshot_table import read_snapshot_table
-
-            table = read_snapshot_table(spark, args.table, snapshot_id=args.snapshot_id)
-        else:
-            from exaloglog_paper_spark.ops.sketch_table import read_sketch_table
-
-            table = read_sketch_table(spark, args.table)
+        table = read_snapshot_table(spark, args.table, snapshot_id=args.snapshot_id)
     else:
         if not args.add:
             raise SystemExit("--add is required unless --estimate-only")
@@ -103,36 +91,17 @@ def main() -> None:
             token_array_values("tokens"),
             by=by,
         )
-        if snapshot:
-            from exaloglog_paper_spark.ops.snapshot_table import (
-                expire_snapshots,
-                snapshot_history,
-                update_snapshot_table,
-            )
-
-            lineage = {"increment": args.lineage or args.add}
-            table = update_snapshot_table(
-                spark, args.table, inc, spec, by=by, lineage=lineage
-            )
-            s = snapshot_history(args.table)[-1]
-            print(
-                f"committed snapshot {s['id']} (parent {s['parent_id']}): "
-                f"{s['summary']} lineage={s['lineage']}"
-            )
-            if args.prune_keep > 0:
-                expired = expire_snapshots(args.table, keep=args.prune_keep)
-                if expired:
-                    print(f"expired snapshots: {expired}")
-        else:
-            from exaloglog_paper_spark.ops.sketch_table import update_sketch_table
-
-            table = update_sketch_table(spark, args.table, inc, spec, by=by)
-            if args.prune_keep > 0:
-                from exaloglog_paper_spark.ops.sketch_table import prune_versions
-
-                pruned = prune_versions(args.table, keep=args.prune_keep)
-                if pruned:
-                    print(f"pruned versions: {pruned}")
+        lineage = {"increment": args.lineage or args.add}
+        table = update_snapshot_table(spark, args.table, inc, spec, by=by, lineage=lineage)
+        s = snapshot_history(args.table)[-1]
+        print(
+            f"committed snapshot {s['id']} (parent {s['parent_id']}): "
+            f"{s['summary']} lineage={s['lineage']}"
+        )
+        if args.prune_keep > 0:
+            expired = expire_snapshots(args.table, keep=args.prune_keep)
+            if expired:
+                print(f"expired snapshots: {expired}")
     # group columns come from the table itself, so --estimate-only needs no --by
     out_cols = [c for c in table.columns if c not in ("sketch", "build_secs")]
     with_estimate(table, spec).select(*out_cols, "estimate").show(50, truncate=False)

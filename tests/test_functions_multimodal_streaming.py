@@ -57,6 +57,35 @@ def test_token_stream_estimate_column(spark):
     assert abs(est / n - 1) < 0.02
 
 
+def test_token_stream_estimate_distributed_matches_driver(spark):
+    """Sparse mode across partitions: per-row token-stream estimates
+    computed in Spark equal the driver's ``estimate_distinct_from_tokens``
+    on the same tokens, and are near-exact at per-document cardinality."""
+    from exaloglog_paper_spark.sketchlib.exaloglog import (
+        compute_token,
+        estimate_distinct_from_tokens,
+    )
+
+    rows = tok.token_table(spark, 60, num_partitions=4).select("doc_id", "tokens").collect()
+    toks = {}
+    for r in rows:
+        h = splitmix64(np.asarray(r.tokens, dtype=np.int64).astype(np.uint64))
+        toks[r.doc_id] = compute_token(h)
+    df = spark.createDataFrame(
+        [(d, t.astype(np.uint32).view(np.int32).tolist()) for d, t in toks.items()],
+        "doc_id string, tokens array<int>",
+    ).repartition(4)
+    got = {
+        r.doc_id: r.e
+        for r in df.select("doc_id", fx.token_stream_estimate(F.col("tokens")).alias("e"))
+        .collect()
+    }
+    assert got == {d: estimate_distinct_from_tokens(t) for d, t in toks.items()}
+    for r in rows:
+        exact = len(set(r.tokens))
+        assert got[r.doc_id] == pytest.approx(exact, rel=0.02)
+
+
 def test_sql_registered_functions(spark):
     from exaloglog_paper_spark.ops.functions import register_sql_functions
     from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, sketch_agg

@@ -272,9 +272,8 @@ def test_merge_associative_commutative_tree_vs_sequential():
 def test_merge_many_equals_sequential_fold(k):
     """The batched k-way merge (stacked registers, log2 tree of vectorized
     calls) must be byte-identical to the sequential pairwise fold for any
-    k — incl. the empty (identity) and singleton cases — for both the
-    dense spec and sparse/dense mixtures of the hybrid spec."""
-    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, SparseExaLogLogSpec
+    k — incl. the empty (identity) and singleton cases."""
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
 
     spec = ExaLogLogSpec(2, 20, 8)
     hashes = splitmix64_stream(19, max(1, 150 * k))
@@ -285,29 +284,6 @@ def test_merge_many_equals_sequential_fold(k):
         seq = spec.merge(seq, s.copy())
     got = spec.merge_many([s.copy() for s in states])
     assert np.array_equal(got.regs, seq.regs)
-
-    if k >= 2:
-        # hybrid spec: mixtures of sparse token arrays and dense states,
-        # batched union+stack vs sequential union1d/densify fold
-        sp = SparseExaLogLogSpec(2, 20, 8, max_sparse=100)
-        members = [
-            sp.add(sp.empty(), p[: 40 + 30 * (i % 3)]) for i, p in enumerate(parts)
-        ]
-        members[0] = sp.add(sp.empty(), splitmix64_stream(23, 500))  # dense
-        assert isinstance(members[0], ExaLogLog)
-        blobs = [sp.serialize(s) for s in members]  # immutable snapshots
-        seq2 = sp.deserialize(blobs[0])
-        for b in blobs[1:]:
-            seq2 = sp.merge(seq2, sp.deserialize(b))
-        got2 = sp.merge_many(sp.deserialize(b) for b in blobs)
-        assert sp.serialize(got2) == sp.serialize(seq2)
-        # all-sparse: stays sparse below the cap, identical union
-        small = [sp.serialize(sp.add(sp.empty(), p[:20])) for p in parts]
-        seq3 = sp.deserialize(small[0])
-        for b in small[1:]:
-            seq3 = sp.merge(seq3, sp.deserialize(b))
-        got3 = sp.merge_many(sp.deserialize(b) for b in small)
-        assert sp.serialize(got3) == sp.serialize(seq3)
 
 
 def test_merge_heterogeneous_params_equals_downsized_union():
@@ -483,10 +459,10 @@ def test_pack_registers_batch_matches_scalar():
 
 def test_exaloglog_spec_serialize_batch_matches_per_state():
     """ExaLogLogSpec.serialize_batch == per-state serialize on real built
-    states; SparseExaLogLogSpec keeps its prefix-byte encoding."""
+    states."""
     import numpy as np
 
-    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, SparseExaLogLogSpec
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
     from exaloglog_paper_spark.sketchlib.bitops import splitmix64
 
     spec = ExaLogLogSpec(2, 20, 8)
@@ -496,16 +472,6 @@ def test_exaloglog_spec_serialize_batch_matches_per_state():
         spec.add(st, splitmix64(np.arange(50 * (i + 1), dtype=np.uint64) + i))
         states.append(st)
     assert spec.serialize_batch(states) == [spec.serialize(s) for s in states]
-
-    sp = SparseExaLogLogSpec(2, 20, 8, max_sparse=16)
-    sp_states = []
-    for i in range(6):
-        st = sp.empty()
-        st = sp.add(st, splitmix64(np.arange(8 + 20 * i, dtype=np.uint64) + i))
-        sp_states.append(st)
-    out = sp.serialize_batch(sp_states)
-    assert out == [sp.serialize(s) for s in sp_states]
-    assert {o[:1] for o in out} == {b"\x00", b"\x01"}  # both modes exercised
 
 
 def test_constants_full_table_scatter_parity():

@@ -17,6 +17,7 @@ from exaloglog_paper_spark.ops.agg import (
 from exaloglog_paper_spark.ops.snapshot_table import (
     current_metadata,
     expire_snapshots,
+    merge_state_tables,
     read_snapshot_table,
     snapshot_history,
     update_snapshot_table,
@@ -30,17 +31,20 @@ def tdf(spark):
     return tok.token_table(spark, 4_000, seed=7, num_partitions=5).cache()
 
 
-def _states(df):
-    return {r.source: (bytes(r.sketch), int(r.n_values)) for r in df.collect()}
+def _states(df, by=("source",)):
+    return {
+        tuple(r[c] for c in by): (bytes(r.sketch), int(r.n_values))
+        for r in df.collect()
+    }
 
 
-def _build(df):
-    return sketch_agg(df, SPEC, token_array_values("tokens"), by=["source"])
+def _build(df, by=("source",)):
+    return sketch_agg(df, SPEC, token_array_values("tokens"), by=list(by))
 
 
-def _commit(spark, tdir, part, lineage=None):
+def _commit(spark, tdir, part, lineage=None, by=("source",)):
     return update_snapshot_table(
-        spark, tdir, _build(part), SPEC, by=["source"], lineage=lineage
+        spark, tdir, _build(part, by), SPEC, by=list(by), lineage=lineage
     )
 
 
@@ -50,21 +54,22 @@ def _thirds(tdf):
     ]
 
 
-def test_snapshot_commits_equal_full_rebuild_and_time_travel(spark, tdf, tmp_path):
+@pytest.mark.parametrize("by", [(), ("source",)], ids=["global", "by_source"])
+def test_snapshot_commits_equal_full_rebuild_and_time_travel(spark, tdf, tmp_path, by):
     tdir = str(tmp_path / "snap")
     parts = _thirds(tdf)
     for i, p in enumerate(parts):
-        _commit(spark, tdir, p, lineage={"increment": f"day-{i}"})
+        _commit(spark, tdir, p, lineage={"increment": f"day-{i}"}, by=by)
 
     # final state: byte-identical to a one-shot build over the union
-    assert _states(read_snapshot_table(spark, tdir)) == _states(_build(tdf))
+    assert _states(read_snapshot_table(spark, tdir), by) == _states(_build(tdf, by), by)
 
     # time travel: snapshot k == one-shot build over the first k increments
-    assert _states(read_snapshot_table(spark, tdir, snapshot_id=1)) == _states(
-        _build(parts[0])
+    assert _states(read_snapshot_table(spark, tdir, snapshot_id=1), by) == _states(
+        _build(parts[0], by), by
     )
-    assert _states(read_snapshot_table(spark, tdir, snapshot_id=2)) == _states(
-        _build(parts[0].unionByName(parts[1]))
+    assert _states(read_snapshot_table(spark, tdir, snapshot_id=2), by) == _states(
+        _build(parts[0].unionByName(parts[1]), by), by
     )
 
     # history: parent chain, operations, lineage, and honest volume metrics
@@ -74,7 +79,7 @@ def test_snapshot_commits_equal_full_rebuild_and_time_travel(spark, tdf, tmp_pat
     assert [s["operation"] for s in hist] == ["append", "overwrite", "overwrite"]
     assert [s["lineage"]["increment"] for s in hist] == ["day-0", "day-1", "day-2"]
     vols = [
-        sum(n for _, n in _states(_build(d)).values())
+        sum(n for _, n in _states(_build(d, by), by).values())
         for d in (parts[0], parts[0].unionByName(parts[1]), tdf)
     ]
     assert [s["summary"]["total_values"] for s in hist] == vols
@@ -122,6 +127,116 @@ def test_expire_snapshots_prunes_history_and_data(spark, tdf, tmp_path):
     assert sorted(os.listdir(os.path.join(tdir, "data"))) == ["snap-000003"]
     # expiring again is a no-op
     assert expire_snapshots(tdir, keep=1) == []
+
+
+def test_expire_snapshots_keeps_pending_commit_dir(spark, tdf, tmp_path):
+    """A data dir above the current snapshot id belongs to a commit that has
+    written its files but not yet swapped the hint: expiry must leave it
+    alone (else that commit would point at a missing dir) while still
+    deleting the expired snapshots' dirs."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    for p in parts[:2]:
+        _commit(spark, tdir, p)
+    data = os.path.join(tdir, "data")
+    pending = os.path.join(data, "snap-000003")
+    os.makedirs(pending)
+
+    assert expire_snapshots(tdir, keep=1) == [1]
+    assert sorted(os.listdir(data)) == ["snap-000002", "snap-000003"]
+
+    # the pending writer's retry computes the same id and overwrites it
+    _commit(spark, tdir, parts[2])
+    assert snapshot_history(tdir)[-1]["manifest"] == ["data/snap-000003"]
+    assert _states(read_snapshot_table(spark, tdir)) == _states(_build(tdf))
+
+
+def test_expire_snapshots_deletes_stale_orphans_only(spark, tdf, tmp_path):
+    """A ``snap-N`` dir at or below the current id that no kept snapshot
+    names is a crash leftover no retry will overwrite: expiry deletes it
+    even when no snapshot expires. Dirs not shaped ``snap-N`` are not the
+    table's and are left alone."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    for p in parts[:2]:
+        _commit(spark, tdir, p)
+    assert expire_snapshots(tdir, keep=1) == [1]
+    current = _states(read_snapshot_table(spark, tdir))
+
+    data = os.path.join(tdir, "data")
+    for name in ("snap-000001", "snap-000002.bak", "notes"):
+        os.makedirs(os.path.join(data, name))
+    assert expire_snapshots(tdir, keep=1) == []
+    assert sorted(os.listdir(data)) == ["notes", "snap-000002", "snap-000002.bak"]
+    assert _states(read_snapshot_table(spark, tdir)) == current
+
+
+def test_expire_snapshots_keep_bounds(spark, tdf, tmp_path):
+    """``keep`` at or above the history length expires nothing and deletes
+    no data dir; ``keep`` below 1 still keeps the current snapshot."""
+    tdir = str(tmp_path / "snap")
+    for p in _thirds(tdf):
+        _commit(spark, tdir, p)
+    data = os.path.join(tdir, "data")
+    current = _states(read_snapshot_table(spark, tdir))
+
+    assert expire_snapshots(tdir, keep=3) == []
+    assert [s["id"] for s in snapshot_history(tdir)] == [1, 2, 3]
+    assert len(os.listdir(data)) == 3
+
+    assert expire_snapshots(tdir, keep=0) == [1, 2]
+    assert [s["id"] for s in snapshot_history(tdir)] == [3]
+    assert sorted(os.listdir(data)) == ["snap-000003"]
+    assert _states(read_snapshot_table(spark, tdir)) == current
+    assert expire_snapshots(str(tmp_path / "nope")) == []
+
+
+def test_commit_of_empty_increment_keeps_states(spark, tdf, tmp_path):
+    """An increment with no rows still commits a snapshot, and its state
+    rows are the parent's, byte for byte, with the same summary volumes."""
+    tdir = str(tmp_path / "snap")
+    _commit(spark, tdir, tdf)
+    before = _states(read_snapshot_table(spark, tdir))
+
+    _commit(spark, tdir, tdf.filter(F.lit(False)), lineage={"increment": "empty"})
+    hist = snapshot_history(tdir)
+    assert [s["id"] for s in hist] == [1, 2]
+    assert hist[-1]["lineage"] == {"increment": "empty"}
+    assert _states(read_snapshot_table(spark, tdir)) == before
+    assert hist[-1]["summary"]["n_groups"] == hist[0]["summary"]["n_groups"]
+    assert hist[-1]["summary"]["total_values"] == hist[0]["summary"]["total_values"]
+
+
+def test_merge_state_tables_global_beyond_fanin(spark, tdf):
+    """Global (``by=()``) state tables fold like grouped ones: more tables
+    than the fanin merge to the one-shot build's single row, and a single
+    table comes back unchanged."""
+    parts = [
+        _build(tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(5)) == i), ())
+        for i in range(5)
+    ]
+    want = _states(_build(tdf, ()), ())
+    assert len(want) == 1
+    assert _states(merge_state_tables(parts, SPEC, by=(), fanin=2), ()) == want
+    assert _states(merge_state_tables(parts[:1], SPEC, by=()), ()) == _states(
+        parts[0], ()
+    )
+
+
+def test_incremental_update_invariant_query(spark):
+    """The registered query commits two increments as snapshots and flags
+    every source byte-identical to a one-shot build; its volumes are the
+    per-source token counts of the materialized table."""
+    import pyarrow.parquet as pq
+
+    from exaloglog_paper_spark.ops import queries as Q
+
+    rows = Q.incremental_update_invariant(spark, "/sf/sf0.001").collect()
+    table = pq.read_table(tok.materialize_token_table("sf0.001"))
+    want = table.group_by("source").aggregate([("n_tok", "sum")])
+    want = dict(zip(want["source"].to_pylist(), want["n_tok_sum"].to_pylist()))
+    assert {r.source: r.total_tokens for r in rows} == want
+    assert all(r.incremental_byte_identical for r in rows)
 
 
 def test_empty_table_reads_raise(spark, tmp_path):

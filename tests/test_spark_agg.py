@@ -332,69 +332,13 @@ def test_partial_flush_is_byte_identical(spark, tdf):
     assert run(2) == run(65536)
 
 
-def test_incremental_sketch_table_equals_full_rebuild(spark, tdf, tmp_path):
-    """The versioned sketch table maintained by two incremental updates is
-    byte-identical to a one-shot build over the union — per group and
-    globally. This is the daily-increment production pattern: history is
-    never rescanned (each update's input is only the increment's states)."""
-    from exaloglog_paper_spark.ops.sketch_table import (
-        latest_version,
-        read_sketch_table,
-        update_sketch_table,
-    )
-
-    spec = ExaLogLogSpec(2, 20, 8)
-    day1 = tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
-    day2 = tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
-    for by in ([], ["source"]):
-        tdir = str(tmp_path / f"sketches_{len(by)}")
-        inc1 = sketch_agg(day1, spec, token_array_values("tokens"), by=by)
-        update_sketch_table(spark, tdir, inc1, spec, by=by)
-        inc2 = sketch_agg(day2, spec, token_array_values("tokens"), by=by)
-        update_sketch_table(spark, tdir, inc2, spec, by=by)
-        assert latest_version(tdir) == 2
-        got = {
-            tuple(r[c] for c in by): bytes(r.sketch)
-            for r in read_sketch_table(spark, tdir).collect()
-        }
-        want = {
-            tuple(r[c] for c in by): bytes(r.sketch)
-            for r in sketch_agg(tdf, spec, token_array_values("tokens"), by=by).collect()
-        }
-        assert got == want, by
-
-
-def test_sketch_table_prune_versions(spark, tdf, tmp_path):
-    from exaloglog_paper_spark.ops.sketch_table import (
-        latest_version,
-        prune_versions,
-        read_sketch_table,
-        update_sketch_table,
-    )
-
-    spec = ExaLogLogSpec(2, 20, 8)
-    tdir = str(tmp_path / "sk")
-    for i in range(3):
-        inc = sketch_agg(
-            tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == i),
-            spec, token_array_values("tokens"), by=["source"],
-        )
-        update_sketch_table(spark, tdir, inc, spec, by=["source"])
-    assert latest_version(tdir) == 3
-    before = {r.source: bytes(r.sketch) for r in read_sketch_table(spark, tdir).collect()}
-    assert prune_versions(tdir, keep=1) == [1, 2]
-    assert latest_version(tdir) == 3
-    after = {r.source: bytes(r.sketch) for r in read_sketch_table(spark, tdir).collect()}
-    assert before == after
-
-
 def test_merge_state_tables_beyond_fanin_byte_identical(spark, tdf):
     """Folding MORE state tables than the tree fanin (the multi-day
     backfill shape) must stay byte-identical to a one-shot build — and the
     per-table partition stamps must spread first-level buckets (a constant
     stamp would funnel every state through one reducer). fanin=2 with 6
     tables exercises 3 tree levels cheaply."""
-    from exaloglog_paper_spark.ops.sketch_table import merge_state_tables
+    from exaloglog_paper_spark.ops.snapshot_table import merge_state_tables
 
     spec = ExaLogLogSpec(2, 20, 8)
     parts = [
@@ -413,42 +357,6 @@ def test_merge_state_tables_beyond_fanin_byte_identical(spark, tdf):
         for r in sketch_agg(tdf, spec, token_array_values("tokens"), by=["source"]).collect()
     }
     assert got == want
-
-
-def test_prune_versions_cleans_stale_scratch_dirs(spark, tdf, tmp_path):
-    """A crashed partial write (v=N dir without _SUCCESS) below the newest
-    complete version is a leftover no retry will overwrite — prune_versions
-    must delete it, while an in-flight scratch dir NEWER than the latest
-    complete version is left alone."""
-    import os
-
-    from exaloglog_paper_spark.ops.sketch_table import (
-        latest_version,
-        prune_versions,
-        update_sketch_table,
-    )
-
-    spec = ExaLogLogSpec(2, 20, 8)
-    tdir = str(tmp_path / "sk")
-    for i in range(2):
-        inc = sketch_agg(
-            tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == i),
-            spec, token_array_values("tokens"), by=["source"],
-        )
-        update_sketch_table(spark, tdir, inc, spec, by=["source"])
-    assert latest_version(tdir) == 2
-    os.makedirs(os.path.join(tdir, "v=1.5crash", ), exist_ok=True)  # not vN-shaped: ignored
-    os.rmdir(os.path.join(tdir, "v=1.5crash"))
-    stale = os.path.join(tdir, "v=1")  # complete; will be pruned by keep=1
-    crashed_old = os.path.join(tdir, "v=0")
-    os.makedirs(crashed_old, exist_ok=True)  # incomplete below newest
-    inflight = os.path.join(tdir, "v=3")
-    os.makedirs(inflight, exist_ok=True)  # incomplete ABOVE newest: keep
-    prune_versions(tdir, keep=1)
-    assert not os.path.exists(stale)
-    assert not os.path.exists(crashed_old)
-    assert os.path.exists(inflight)
-    assert latest_version(tdir) == 2
 
 
 def test_sliding_window_state_fanout_equals_direct_window_build(spark):
