@@ -120,23 +120,20 @@ def cmd_plans(outdir):
     # the ungrouped/grouped scan paths now driver-fold: their final DF is a
     # LocalRelation, so ALSO dump the distributed partials-stage plan the
     # fold consumes (this is where pruning/exchange claims are checkable)
-    from exaloglog_paper_spark.ops.agg import CompositeSpec, ExaLogLogSpec, token_array_values, tree_merge
-    from exaloglog_paper_spark.ops.source import scan_partials, sketch_builder
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, sketch_partials, token_array_values, tree_merge
+    from exaloglog_paper_spark.ops.profile import _profile_spec, profile_values
+    from exaloglog_paper_spark.ops.source import scan_partials
 
     spec = ExaLogLogSpec(2, 20, 10)
     ex = token_array_values("tokens")
     for label, by in (("ell_global_build_partials", []), ("ell_by_source_partials", ["source"])):
-        cols = list(dict.fromkeys(by + list(ex.input_cols)))
-        partials, _ = scan_partials(spark, tp, by, cols, sketch_builder(spec, ex, by))
+        partials, _ = scan_partials(spark, tp, spec, ex, by)
         write(label, _explain(partials))
 
     # profiler: composite partials + the tree_merge fold plan
-    from exaloglog_paper_spark.ops.profile import profile_partials_df
-    from exaloglog_paper_spark.ops.specs import CountSketchSpec, KLLSpec, MisraGriesSpec
-
-    specs = (ExaLogLogSpec(2, 20, 10), CountSketchSpec(8192, 5), MisraGriesSpec(256), KLLSpec(200))
-    partials = profile_partials_df(spark.read.parquet(tp), specs)
-    write("token_profile_fold", _explain(tree_merge(partials, CompositeSpec(specs), by=["source"])))
+    composite = _profile_spec()
+    partials = sketch_partials(spark.read.parquet(tp), composite, profile_values(), by=["source"])
+    write("token_profile_fold", _explain(tree_merge(partials, composite, by=["source"])))
     spark.stop()
 
 
@@ -201,14 +198,10 @@ def cmd_stages():
 
     # profiler split: partials only (collect) vs full fold
     def profile_partials():
-        from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
-        from exaloglog_paper_spark.ops.profile import _make_builder
+        from exaloglog_paper_spark.ops.profile import _profile_spec, profile_values
         from exaloglog_paper_spark.ops.source import scan_partials
-        from exaloglog_paper_spark.ops.specs import CountSketchSpec, KLLSpec, MisraGriesSpec
 
-        specs = (ExaLogLogSpec(2, 20, 10), CountSketchSpec(8192, 5), MisraGriesSpec(256), KLLSpec(200))
-        builder = _make_builder(specs, "source", "tokens", "n_tok")
-        partials, _ = scan_partials(spark, tp, ["source"], ["source", "tokens", "n_tok"], builder)
+        partials, _ = scan_partials(spark, tp, _profile_spec(), profile_values(), ["source"])
         return len(partials.collect())
 
     stage("profile_partials_collect", profile_partials)

@@ -251,15 +251,20 @@ class CompositeSpec(SketchSpec):
 
 
 class Extractor:
-    """Turns a RecordBatch into a flat value array for SketchSpec.add.
+    """Turns a RecordBatch into the values ``SketchSpec.add`` takes.
 
-    ``lengths`` is per-row value multiplicity (None = one value per row) —
-    used to align values with group keys when aggregating with ``by``.
+    Returns ``(values, lengths)``: ``lengths`` is per-row value multiplicity
+    (None = one value per row), used to cut each group's values out of the
+    batch when aggregating with ``by``. An extractor for a ``CompositeSpec``
+    returns PARTS instead: ``(tuple of arrays, tuple of lengths)``, one
+    entry per member, each cut by its own lengths, so token-level and
+    row-level arrays ride one batch. A group's ``n_values`` counts values
+    for a single array and ROWS for parts.
     """
 
     input_cols: tuple[str, ...] = ()
 
-    def __call__(self, batch) -> tuple[np.ndarray, np.ndarray | None]:
+    def __call__(self, batch) -> tuple:
         raise NotImplementedError
 
 
@@ -271,8 +276,8 @@ def flat_list_values(batch, col: str) -> tuple[np.ndarray, np.ndarray]:
     child array through a pathological conversion (~58 ms per batch
     measured for 1.5k offsets!) and is kept only as the fallback for
     exotic layouts. Single definition: token_array_values,
-    token_trigram_values, and ops.profile all call this so the fallback
-    and slicing logic cannot drift."""
+    token_trigram_values, specs.token_array_ids and the profile extractor
+    all call this so the fallback and slicing logic cannot drift."""
     arr = batch.column(col)
     if hasattr(arr, "combine_chunks"):
         arr = arr.combine_chunks()
@@ -457,8 +462,55 @@ def partial_batch(key_arrays: dict, sketches, counts, pid, secs):
     )
 
 
-# groups held per task before a builder or merge level emits a batch
+# groups held per task before a builder or merge level emits a batch, and
+# the serialized bytes of those states: ELL(2,20,10) states (3584 B) keep
+# the whole group bound, larger states a proportionally smaller one
 _FLUSH_GROUPS = 16384
+_FLUSH_BYTES = _FLUSH_GROUPS * 3584
+
+
+def _flush_bound(spec: "SketchSpec") -> int:
+    """Groups a builder or merge task holds before it emits: about
+    ``_FLUSH_BYTES`` of ``spec``'s serialized empty states, at most
+    ``_FLUSH_GROUPS``. A profile composite (~331 KB of count-sketch per
+    state) thereby flushes at 177 groups instead of ~5 GB per task. Specs
+    whose empty state serializes to no bytes (theta, samples) keep
+    ``_FLUSH_GROUPS``."""
+    size = max(1, len(spec.serialize(spec.empty())))
+    return max(1, min(_FLUSH_GROUPS, _FLUSH_BYTES // size))
+
+
+def _group_codes(batch, by):
+    """(int64 group code per row, code -> key tuple) of ``batch`` on
+    ``by``; null keys form a group, as in Spark/SQL ``groupBy``."""
+    import pyarrow as pa
+
+    if len(by) == 1:
+        col = batch.column(by[0])
+        if hasattr(col, "combine_chunks"):
+            col = col.combine_chunks()
+        enc = col.dictionary_encode()
+        idx = enc.indices
+        uniques = enc.dictionary.to_pylist()
+        if idx.null_count:
+            # null key rows get null dictionary indices (NaN -> INT64_MIN
+            # under astype); group them under an explicit None key
+            idx = idx.fill_null(len(uniques))
+            uniques = uniques + [None]
+        try:
+            # null-free -> zero-copy; zero_copy_only=False on this child
+            # array is a ~40 ms/batch pathological conversion
+            codes = idx.to_numpy().astype(np.int64, copy=False)
+        except Exception:
+            codes = idx.to_numpy(zero_copy_only=False).astype(np.int64)
+        return codes, lambda c: (uniques[c],)
+    pdf = pa.Table.from_batches([batch]).select(by).to_pandas()
+    # normalize NaN -> None so null keys group together (NaN != NaN
+    # would otherwise split a null group per row)
+    key_cols = [pdf[c].astype(object).where(pd.notna(pdf[c]), None) for c in by]
+    codes, uniq = pd.factorize(pd.Series(list(zip(*key_cols))), sort=False)
+    uniques = list(uniq)
+    return codes, lambda c: tuple(uniques[c])
 
 
 def _build_partials_batches(
@@ -466,22 +518,33 @@ def _build_partials_batches(
     spec: "SketchSpec",
     extractor: "Extractor",
     by,
-    flush_groups: int = _FLUSH_GROUPS,
+    flush_groups: int | None = None,
     num_partitions: int | None = None,
 ):
-    """Shared stage-A builder: consume Arrow record batches, emit one partial
-    sketch row per group seen in this task (vectorized grouping).
+    """THE stage-A builder: consume Arrow record batches, emit one partial
+    sketch row per group seen in this task (vectorized grouping). Every
+    build runs it: single sketches and the profiler's composite, over the
+    Spark scan (:func:`sketch_partials`) and the pyarrow scan
+    (``ops.source.scan_partials``).
+
+    Group dispatch is ONE stable sort of each batch's rows on their group
+    code; the extractor then runs on the sorted batch and each group's
+    values (each part's, for a parts extractor) are one contiguous segment
+    cut at the group's row boundaries. A group's values keep their input
+    order, so order-dependent states (Misra-Gries, KLL) see exactly the
+    stream the unsorted batch holds.
 
     Map-side memory is BOUNDED regardless of group cardinality: once the
-    partial-state dict reaches ``flush_groups`` entries it is emitted and
+    partial-state dict reaches ``flush_groups`` entries (default
+    :func:`_flush_bound`, ~59 MB of serialized states) it is emitted and
     reset (the downstream tree merge groups by key, so multiple partials
     for the same group from one task merge exactly like partials from
-    different tasks — byte-identical results, pinned in tests with forced
-    mid-task flushes). In-memory states are UNPACKED register vectors
-    (2^p x 8 B + dict overhead — ~8 KB at p=10, not the ~3.5 KB serialized
-    form), and the threshold is checked per input batch, so the true bound
-    is ~2 x flush_groups x unpacked_state_bytes: ~256 MB at the 16384
-    default and p=10.
+    different tasks — byte-identical results for order-free states such as
+    ELL and count-sketch, pinned in tests with forced mid-task flushes;
+    Misra-Gries/KLL summarize the stream as cut at the flush points,
+    deterministically). In-memory states may be larger than their
+    serialized form (unpacked ELL registers are ~2.3x), and the threshold
+    is checked per input batch.
 
     Each flush is stamped with a DISTINCT partition_id
     (``pid + num_partitions * emit_index``) so the tree merge's
@@ -492,6 +555,8 @@ def _build_partials_batches(
     import pyarrow as pa
 
     by = list(by)
+    if flush_groups is None and by:
+        flush_groups = _flush_bound(spec)
     states: dict = {}
     counts: dict = {}
     key_fields = None
@@ -522,59 +587,40 @@ def _build_partials_batches(
         return out
 
     for batch in batches:
-        if key_fields is None and by:
-            key_fields = [batch.schema.field(c) for c in by]
-        values, lengths = extractor(batch)
         if not by:
+            values, _ = extractor(batch)
             st = states.get(())
             states[()] = spec.add(st if st is not None else spec.empty(), values)
-            counts[()] = counts.get((), 0) + len(values)
+            n = batch.num_rows if isinstance(values, tuple) else len(values)
+            counts[()] = counts.get((), 0) + n
             continue
-        if len(by) == 1:
-            col = batch.column(by[0])
-            if hasattr(col, "combine_chunks"):
-                col = col.combine_chunks()
-            enc = col.dictionary_encode()
-            idx = enc.indices
-            uniques = enc.dictionary.to_pylist()
-            if idx.null_count:
-                # null key rows get null dictionary indices (NaN -> INT64_MIN
-                # under astype); group them under an explicit None key to
-                # match Spark/SQL groupBy semantics (null is a group)
-                idx = idx.fill_null(len(uniques))
-                uniques = uniques + [None]
-            try:
-                # null-free -> zero-copy; zero_copy_only=False on this child
-                # array is a ~40 ms/batch pathological conversion
-                codes = idx.to_numpy().astype(np.int64, copy=False)
-            except Exception:
-                codes = idx.to_numpy(zero_copy_only=False).astype(np.int64)
-            key_of = lambda c: (uniques[c],)  # noqa: E731
-        else:
-            pdf = pa.Table.from_batches([batch]).select(by).to_pandas()
-            # normalize NaN -> None so null keys group together (NaN != NaN
-            # would otherwise split a null group per row)
-            key_cols = [
-                pdf[c].astype(object).where(pd.notna(pdf[c]), None) for c in by
-            ]
-            codes, uniq = pd.factorize(
-                pd.Series(list(zip(*key_cols))), sort=False
-            )
-            uniques = list(uniq)
-            key_of = lambda c: tuple(uniques[c])  # noqa: E731
-        rep = np.repeat(codes, lengths) if lengths is not None else codes
-        order = np.argsort(rep, kind="stable")
-        sv = values[order]
-        rs = rep[order]
-        starts = np.flatnonzero(np.concatenate(([True], rs[1:] != rs[:-1])))
-        ends = np.concatenate((starts[1:], [len(rs)]))
-        for s_i, e_i in zip(starts.tolist(), ends.tolist()):
-            key = key_of(rs[s_i])
-            seg = sv[s_i:e_i]
+        if batch.num_rows == 0:
+            continue
+        if key_fields is None:
+            key_fields = [batch.schema.field(c) for c in by]
+        codes, key_of = _group_codes(batch, by)
+        order = np.argsort(codes, kind="stable")
+        codes = codes[order]
+        values, lengths = extractor(batch.take(order))
+        single = not isinstance(values, tuple)
+        if single:
+            values, lengths = (values,), (lengths,)
+        starts = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
+        rows = np.append(starts, len(codes))
+        cuts = [
+            (rows if n is None else np.concatenate(([0], np.cumsum(n)))[rows]).tolist()
+            for n in lengths
+        ]
+        ends = cuts[0] if single else rows.tolist()
+        for i, s in enumerate(starts.tolist()):
+            key = key_of(codes[s])
+            seg = tuple(v[c[i] : c[i + 1]] for v, c in zip(values, cuts))
             st = states.get(key)
-            states[key] = spec.add(st if st is not None else spec.empty(), seg)
-            counts[key] = counts.get(key, 0) + (e_i - s_i)
-        if by and len(states) >= flush_groups:
+            states[key] = spec.add(
+                st if st is not None else spec.empty(), seg[0] if single else seg
+            )
+            counts[key] = counts.get(key, 0) + ends[i + 1] - ends[i]
+        if len(states) >= flush_groups:
             yield emit()
     if not states:
         if by:
@@ -595,7 +641,8 @@ def sketch_partials(
     Implemented with ``mapInArrow`` so list columns are consumed from the
     flattened Arrow values buffer (zero-copy) — never converted to pandas
     object arrays. Within a batch, rows are grouped by dictionary-encoding
-    the key column and segment-sorting the repeated codes (all vectorized).
+    the key column and one stable row sort (all vectorized; see
+    :func:`_build_partials_batches`).
 
     Output schema: ``by..., sketch binary, n_values long, partition_id long,
     build_secs double`` — the metrics columns double as per-partition lineage
@@ -630,13 +677,17 @@ def _merge_sorted(spec: SketchSpec, blobs):
 _NAN = float("nan")
 
 
-def _merge_runs(batches, spec: SketchSpec, by, flush_groups: int = _FLUSH_GROUPS):
+def _merge_runs(batches, spec: SketchSpec, by, flush_groups: int | None = None):
     """Merge-level task body: ``batches`` arrive sorted on (by, __bucket)
     and each run of equal keys (runs may span batches) becomes one partial
     row — states merged in byte order, ``n_values``/``build_secs`` summed,
     ``partition_id = __bucket``. Emitting every ``flush_groups`` groups
-    bounds memory to one run's blobs plus one output chunk."""
+    (default :func:`_flush_bound`, as in stage A) bounds memory to one
+    run's blobs plus one output chunk."""
     import pyarrow as pa
+
+    if flush_groups is None:
+        flush_groups = _flush_bound(spec)
 
     gcols = [*by, "__bucket"]
     names = (*gcols, "sketch", "n_values", "build_secs")
@@ -687,13 +738,16 @@ def _merge_level(
     )
 
 
+# planned partials up to which an ungrouped tree_merge folds on the driver
+_DRIVER_FOLD_MAX_PARTIALS = 4096
+
+
 def tree_merge(
     partials: DataFrame,
     spec: SketchSpec,
     by: Sequence[str] = (),
     num_partials: int | None = None,
     fanin: int = 64,
-    driver_fold_max_partials: int = 4096,
 ) -> DataFrame:
     """Stages B+C: iterative tree merge so no reducer sees > fanin states.
 
@@ -701,7 +755,7 @@ def tree_merge(
     time); with P partials we add ⌈log_fanin(P)⌉ - 1 intermediate levels.
 
     GLOBAL small-P fast path: an ungrouped aggregation with at most
-    ``driver_fold_max_partials`` planned partials (KB-sized states, so a
+    ``_DRIVER_FOLD_MAX_PARTIALS`` planned partials (KB-sized states, so a
     few MB total) collects the partial rows and folds them in numpy on
     the driver — the blessed collect-tiny-states pattern — skipping the
     shuffle + merge-level stages that otherwise dominate small-job
@@ -717,8 +771,9 @@ def tree_merge(
     bucket then sees ~E×fanin states, not fanin. The flush stamps spread
     those states ACROSS buckets (pmod of distinct ids), so the overload is
     even, and each extra state costs one O(m) register-fold merge (~25 µs)
-    — flushing only triggers at >=16384 live groups per task, where the
-    per-group state count per task is near 1 and E stays small. Callers
+    — flushing only triggers at ``_flush_bound(spec)`` live groups per
+    task, where the per-group state count per task is near 1 and E stays
+    small. Callers
     expecting pathological flushing (huge group cardinality × huge tasks)
     can lower ``fanin`` to restore headroom; the merge algebra keeps the
     result byte-identical regardless (pinned by the multi-batch flush
@@ -726,7 +781,7 @@ def tree_merge(
     """
     by = list(by)
     if not by:
-        if num_partials is not None and num_partials <= driver_fold_max_partials:
+        if num_partials is not None and num_partials <= _DRIVER_FOLD_MAX_PARTIALS:
             rows = partials.collect()
             st = _merge_sorted(spec, (r.sketch for r in rows))
             n = sum(int(r.n_values) for r in rows)

@@ -20,7 +20,8 @@ resumable with per-partition lineage + metrics. Design:
   or input file set raises ``ValueError`` instead of double counting or
   skipping splits.
 - Every checkpointed build (single sketch or profile) runs the one loop in
-  :func:`checkpointed_partials` with its own stage-A builder.
+  :func:`checkpointed_partials`, which takes the build's (spec, extractor)
+  and runs the one stage-A builder through ``ops.source.scan_partials``.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .agg import tree_merge
-from .source import list_row_group_splits, scan_partials, sketch_builder
+from .source import list_row_group_splits, scan_partials
 
 _MANIFEST = "_manifest.json"
 
@@ -80,9 +81,9 @@ def checkpointed_partials(
     spark: SparkSession,
     path: str,
     ckpt_dir: str,
+    spec,
+    extractor,
     by: Sequence[str],
-    cols: Sequence[str],
-    builder,
     num_buckets: int,
 ) -> tuple[DataFrame, int]:
     """THE bucket-checkpoint loop: stage A of :func:`ops.source.scan_partials`
@@ -104,7 +105,7 @@ def checkpointed_partials(
             open(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"), "w").close()
             continue
         partials, _ = scan_partials(
-            spark, path, by, cols, builder, splits=bucket_splits
+            spark, path, spec, extractor, by, splits=bucket_splits
         )
         partials.withColumn(
             "state_sha256", F.sha2(F.col("sketch"), 256)
@@ -132,11 +133,8 @@ def checkpointed_sketch_agg(
     checkpointed), then tree-merges all bucket partials. Returns the same
     (byte-identical) result as :func:`ops.source.scan_sketch_agg`.
     """
-    by = list(by)
-    cols = list(dict.fromkeys(by + list(extractor.input_cols)))
     partials, num_splits = checkpointed_partials(
-        spark, path, ckpt_dir, by, cols, sketch_builder(spec, extractor, by),
-        num_buckets,
+        spark, path, ckpt_dir, spec, extractor, by, num_buckets
     )
     return tree_merge(partials, spec, by=by, num_partials=num_splits, fanin=fanin)
 

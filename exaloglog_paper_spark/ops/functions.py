@@ -22,55 +22,92 @@ from pyspark.sql.types import BooleanType, DoubleType, IntegerType, LongType, Bi
 from ..sketchlib import exaloglog as ell
 
 
-def token_of(col, v: int = ell.V_MAX):
-    """64-bit hash column -> 32-bit token column."""
+# One pandas UDF factory per function: the column functions below and
+# register_sql_functions build their UDFs here, so both surfaces share one
+# body.
 
+
+def _tokens(s: pd.Series) -> np.ndarray:
+    """int32 token column -> uint64 tokens."""
+    return s.to_numpy(np.int32).view(np.uint32).astype(np.uint64)
+
+
+def _token_udf(v: int):
     @F.pandas_udf(IntegerType())
-    def f(s: pd.Series) -> pd.Series:
+    def token_of(s: pd.Series) -> pd.Series:
         h = s.to_numpy(np.int64).view(np.uint64)
         return pd.Series(ell.compute_token(h, v).astype(np.uint32).view(np.int32))
 
-    return f(col)
+    return token_of
 
 
-def hash_of_token(col, v: int = ell.V_MAX):
-    """Token column -> reconstructed canonical 64-bit hash column."""
-
+def _hash_udf(v: int):
     @F.pandas_udf(LongType())
-    def f(s: pd.Series) -> pd.Series:
-        t = s.to_numpy(np.int32).view(np.uint32).astype(np.uint64)
-        return pd.Series(ell.reconstruct_hash(t, v).view(np.int64))
+    def hash_of_token(s: pd.Series) -> pd.Series:
+        return pd.Series(ell.reconstruct_hash(_tokens(s), v).view(np.int64))
 
-    return f(col)
+    return hash_of_token
 
 
-def token_is_valid(col, v: int = ell.V_MAX):
+def _valid_udf(v: int):
     @F.pandas_udf(BooleanType())
-    def f(s: pd.Series) -> pd.Series:
-        t = s.to_numpy(np.int32).view(np.uint32).astype(np.uint64)
-        return pd.Series(ell.is_valid_token(t, v))
+    def token_is_valid(s: pd.Series) -> pd.Series:
+        return pd.Series(ell.is_valid_token(_tokens(s), v))
 
-    return f(col)
+    return token_is_valid
 
 
-def ell_estimate(col, t: int = 2, d: int = 20):
-    """Serialized ExaLogLog state column -> ML distinct-count estimate."""
-
+def _estimate_udf(t: int, d: int):
     @F.pandas_udf(DoubleType())
-    def f(s: pd.Series) -> pd.Series:
+    def ell_estimate(s: pd.Series) -> pd.Series:
         return s.map(lambda b: ell.ExaLogLog.wrap(t, d, bytes(b)).estimate())
 
-    return f(col)
+    return ell_estimate
 
 
-def ell_state_change_probability(col, t: int = 2, d: int = 20):
+def _change_probability_udf(t: int, d: int):
     @F.pandas_udf(DoubleType())
-    def f(s: pd.Series) -> pd.Series:
+    def ell_change_probability(s: pd.Series) -> pd.Series:
         return s.map(
             lambda b: ell.ExaLogLog.wrap(t, d, bytes(b)).state_change_probability()
         )
 
-    return f(col)
+    return ell_change_probability
+
+
+def _stream_estimate_udf(v: int):
+    @F.pandas_udf(DoubleType())
+    def token_stream_estimate(s: pd.Series) -> pd.Series:
+        return s.map(
+            lambda arr: ell.estimate_distinct_from_tokens(
+                np.asarray(arr, dtype=np.int32).view(np.uint32).astype(np.uint64), v
+            )
+        )
+
+    return token_stream_estimate
+
+
+def token_of(col, v: int = ell.V_MAX):
+    """64-bit hash column -> 32-bit token column."""
+    return _token_udf(v)(col)
+
+
+def hash_of_token(col, v: int = ell.V_MAX):
+    """Token column -> reconstructed canonical 64-bit hash column."""
+    return _hash_udf(v)(col)
+
+
+def token_is_valid(col, v: int = ell.V_MAX):
+    return _valid_udf(v)(col)
+
+
+def ell_estimate(col, t: int = 2, d: int = 20):
+    """Serialized ExaLogLog state column -> ML distinct-count estimate."""
+    return _estimate_udf(t, d)(col)
+
+
+def ell_state_change_probability(col, t: int = 2, d: int = 20):
+    return _change_probability_udf(t, d)(col)
 
 
 def ell_downsize(col, t: int = 2, d: int = 20, to_d: int = 20, to_p: int = 8):
@@ -93,44 +130,15 @@ def register_sql_functions(spark, t: int = 2, d: int = 20, v: int = ell.V_MAX) -
       given (t, d)
     - ``ell_token_stream_estimate(tokens)``
     """
-
-    @F.pandas_udf(IntegerType())
-    def _tok(s: pd.Series) -> pd.Series:
-        h = s.to_numpy(np.int64).view(np.uint64)
-        return pd.Series(ell.compute_token(h, v).astype(np.uint32).view(np.int32))
-
-    @F.pandas_udf(LongType())
-    def _hash(s: pd.Series) -> pd.Series:
-        tk = s.to_numpy(np.int32).view(np.uint32).astype(np.uint64)
-        return pd.Series(ell.reconstruct_hash(tk, v).view(np.int64))
-
-    @F.pandas_udf(BooleanType())
-    def _valid(s: pd.Series) -> pd.Series:
-        tk = s.to_numpy(np.int32).view(np.uint32).astype(np.uint64)
-        return pd.Series(ell.is_valid_token(tk, v))
-
-    @F.pandas_udf(DoubleType())
-    def _est(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: ell.ExaLogLog.wrap(t, d, bytes(b)).estimate())
-
-    @F.pandas_udf(DoubleType())
-    def _prob(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: ell.ExaLogLog.wrap(t, d, bytes(b)).state_change_probability())
-
-    @F.pandas_udf(DoubleType())
-    def _tse(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda arr: ell.estimate_distinct_from_tokens(
-                np.asarray(arr, dtype=np.int32).view(np.uint32).astype(np.uint64), v
-            )
-        )
-
-    spark.udf.register("ell_token", _tok)
-    spark.udf.register("ell_hash_of_token", _hash)
-    spark.udf.register("ell_token_valid", _valid)
-    spark.udf.register("ell_estimate", _est)
-    spark.udf.register("ell_change_probability", _prob)
-    spark.udf.register("ell_token_stream_estimate", _tse)
+    for name, udf in (
+        ("ell_token", _token_udf(v)),
+        ("ell_hash_of_token", _hash_udf(v)),
+        ("ell_token_valid", _valid_udf(v)),
+        ("ell_estimate", _estimate_udf(t, d)),
+        ("ell_change_probability", _change_probability_udf(t, d)),
+        ("ell_token_stream_estimate", _stream_estimate_udf(v)),
+    ):
+        spark.udf.register(name, udf)
 
 
 def martingale_partition_estimates(df, extractor, t: int = 2, d: int = 20, p: int = 10):
@@ -178,13 +186,4 @@ def martingale_partition_estimates(df, extractor, t: int = 2, d: int = 20, p: in
 
 def token_stream_estimate(col, v: int = ell.V_MAX):
     """array<int32> of *tokens* -> sketch-free distinct estimate per row."""
-
-    @F.pandas_udf(DoubleType())
-    def f(s: pd.Series) -> pd.Series:
-        def est(arr):
-            t = np.asarray(arr, dtype=np.int32).view(np.uint32).astype(np.uint64)
-            return ell.estimate_distinct_from_tokens(t, v)
-
-        return s.map(est)
-
-    return f(col)
+    return _stream_estimate_udf(v)(col)

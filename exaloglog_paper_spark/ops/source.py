@@ -17,7 +17,6 @@ are outputs of arbitrary Spark plans (joins, filters).
 
 from __future__ import annotations
 
-import functools
 import glob
 import os
 from typing import Sequence
@@ -45,41 +44,40 @@ def list_row_group_splits(path: str) -> list[tuple[str, int]]:
     return splits
 
 
-_TARGET_SPLIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_TARGET_SPLIT_BYTES", str(256 * 1024**2))
-)
+# parquet bytes per scan task, and rows per decoded Arrow batch
+_TARGET_SPLIT_BYTES = 256 * 1024**2
+_BATCH_ROWS = 65536
 
 
-def batch_iterator(split_rows, columns: Sequence[str], batch_rows: int = 65536):
+def batch_iterator(split_rows, columns: Sequence[str]):
     """Yield Arrow record batches for the given (path, row_group) rows."""
     import pyarrow.parquet as pq
 
     for path, groups in split_rows:
         pf = pq.ParquetFile(path)
         yield from pf.iter_batches(
-            batch_size=batch_rows, row_groups=groups, columns=list(columns)
+            batch_size=_BATCH_ROWS, row_groups=groups, columns=list(columns)
         )
 
 
 def scan_partials(
     spark: SparkSession,
     path: str,
+    spec,
+    extractor,
     by: Sequence[str],
-    cols: Sequence[str],
-    builder,
     splits: list | None = None,
-    batch_rows: int = 65536,
 ) -> tuple[DataFrame, int]:
     """Stage A over parquet: THE pyarrow-native scan every parquet build
     rides (``scan_sketch_agg``, ``scan_profile`` and the bucket loop of
     ``ops.checkpoints``). Returns ``(partials, num_partitions)``.
 
     ``splits`` is the full split list of ``path`` (listed here when None)
-    or a checkpoint bucket's subset. Each task reads its splits' ``cols``
-    with pyarrow and hands the batches to
-    ``builder(batches, num_partitions=...)``, which yields partial rows in
-    the ``by..., PARTIAL_COLS`` schema (``by`` types from the parquet
-    footer).
+    or a checkpoint bucket's subset. Each task reads its splits' ``by`` and
+    ``extractor.input_cols`` columns with pyarrow and feeds the batches to
+    the one stage-A builder, ``agg._build_partials_batches``, which yields
+    partial rows in the ``by..., PARTIAL_COLS`` schema (``by`` types from
+    the parquet footer).
 
     Task count is SCALE-ADAPTIVE (guide §2/§6): enough tasks that each
     reads ~256 MB of parquet (finer granularity as the table grows — at
@@ -90,8 +88,10 @@ def scan_partials(
     import pandas as pd
     import pyarrow.parquet as pq
 
-    from .agg import _by_schema_from_fields
+    from .agg import _build_partials_batches, _by_schema_from_fields
 
+    by = list(by)
+    cols = list(dict.fromkeys(by + list(extractor.input_cols)))
     if splits is None:
         splits = list_row_group_splits(path)
     if not splits:
@@ -116,7 +116,6 @@ def scan_partials(
         pd.DataFrame(splits, columns=["path", "row_group"]),
         "path string, row_group int",
     ).repartition(num_p)
-    cols = list(cols)
 
     def run(batches):
         # gather this task's splits (tiny), then stream its row groups
@@ -127,20 +126,12 @@ def scan_partials(
                 b.column("path").to_pylist(), b.column("row_group").to_pylist()
             )
         ]
-        yield from builder(
-            batch_iterator(split_rows, cols, batch_rows), num_partitions=num_p
+        yield from _build_partials_batches(
+            batch_iterator(split_rows, cols), spec, extractor, by,
+            num_partitions=num_p,
         )
 
     return sdf.mapInArrow(run, schema=schema), num_p
-
-
-def sketch_builder(spec, extractor, by: Sequence[str]):
-    """The single-sketch stage-A builder for :func:`scan_partials`."""
-    from .agg import _build_partials_batches
-
-    return functools.partial(
-        _build_partials_batches, spec=spec, extractor=extractor, by=list(by)
-    )
 
 
 def scan_sketch_agg(
@@ -150,7 +141,6 @@ def scan_sketch_agg(
     extractor,
     by: Sequence[str] = (),
     fanin: int = 64,
-    batch_rows: int = 65536,
 ) -> DataFrame:
     """sketch_agg over a parquet table using the pyarrow-native scan.
 
@@ -160,12 +150,7 @@ def scan_sketch_agg(
     """
     from .agg import tree_merge
 
-    by = list(by)
-    cols = list(dict.fromkeys(by + list(extractor.input_cols)))
-    partials, num_p = scan_partials(
-        spark, path, by, cols, sketch_builder(spec, extractor, by),
-        batch_rows=batch_rows,
-    )
+    partials, num_p = scan_partials(spark, path, spec, extractor, by)
     # Grouped aggregations keep the distributed tree unconditionally: a
     # grouped driver-fold fast path measured no faster (OPTIMIZATION_r06.md).
     return tree_merge(partials, spec, by=by, num_partials=num_p, fanin=fanin)

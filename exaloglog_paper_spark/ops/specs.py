@@ -20,7 +20,7 @@ from ..sketchlib.prioritysample import PrioritySample, PrioritySampleConfig
 from ..sketchlib.tailquantile import TailQuantile, TailQuantileConfig
 from ..sketchlib.tdigest import TDigest, TDigestConfig
 from ..sketchlib import theta as theta_lib
-from .agg import Extractor, SketchSpec, sketch_agg
+from .agg import Extractor, SketchSpec, flat_list_values, sketch_agg
 
 
 class CountMinSpec(SketchSpec):
@@ -407,19 +407,7 @@ class token_array_ids(Extractor):
         self.input_cols = (col,)
 
     def __call__(self, batch):
-        arr = batch.column(self.col)
-        if hasattr(arr, "combine_chunks"):
-            arr = arr.combine_chunks()
-        off_arr = arr.offsets
-        try:
-            # zero-copy: offsets never null (the zero_copy_only=False form is
-            # a ~58 ms/batch pathological conversion — see agg.token_array_values)
-            offsets = off_arr.to_numpy().astype(np.int64, copy=False)
-        except Exception:
-            offsets = off_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-        flat = arr.values.to_numpy(zero_copy_only=False)
-        flat = flat[offsets[0] : offsets[-1]]
-        return flat.astype(np.int64, copy=False), np.diff(offsets)
+        return flat_list_values(batch, self.col)
 
 
 class md5_priority_values(Extractor):

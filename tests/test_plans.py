@@ -322,11 +322,15 @@ def test_bloom_probe_is_scan_side_no_shuffle(spark):
 def test_profile_scan_prunes_to_input_columns(spark):
     """The one-pass profiler must read only (source, tokens, n_tok) from
     the parquet scan — doc_id is pruned even though the profiler consumes
-    whole Arrow batches (pinned on the REAL distributed stage via
-    profile_partials_df)."""
+    whole Arrow batches (pinned on the REAL distributed stage: the
+    profile's composite spec and extractor through sketch_partials)."""
     from exaloglog_paper_spark.ops import tokens as tok
-    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
-    from exaloglog_paper_spark.ops.profile import profile_partials_df
+    from exaloglog_paper_spark.ops.agg import (
+        CompositeSpec,
+        ExaLogLogSpec,
+        sketch_partials,
+    )
+    from exaloglog_paper_spark.ops.profile import profile_values
     from exaloglog_paper_spark.ops.specs import (
         CountSketchSpec,
         KLLSpec,
@@ -335,10 +339,12 @@ def test_profile_scan_prunes_to_input_columns(spark):
 
     path = tok.materialize_token_table("sf0.001")
     df = spark.read.parquet(path)
-    partials = profile_partials_df(
+    partials = sketch_partials(
         df,
-        (ExaLogLogSpec(2, 20, 8), CountSketchSpec(512, 3),
-         MisraGriesSpec(32), KLLSpec(100)),
+        CompositeSpec((ExaLogLogSpec(2, 20, 8), CountSketchSpec(512, 3),
+                       MisraGriesSpec(32), KLLSpec(100))),
+        profile_values(),
+        by=["source"],
     )
     plan = _plan(partials)
     scan = plan[plan.index("ReadSchema") :].splitlines()[0]

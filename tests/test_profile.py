@@ -145,7 +145,8 @@ def test_profile_high_cardinality_group_key(spark):
 
 def test_profile_empty_and_all_null_group_inputs(spark, tmp_path):
     """Profiles of empty tables and tables whose group keys are all NULL
-    are {} — no crashes in the builder or the fold."""
+    are {} — no crashes in the builder or the fold — and a table with some
+    NULL keys profiles exactly its non-NULL groups on both scans."""
     from pyspark.sql import functions as F
 
     from exaloglog_paper_spark.ops import tokens as tok
@@ -166,6 +167,26 @@ def test_profile_empty_and_all_null_group_inputs(spark, tmp_path):
         "source", F.lit(None).cast("string")
     )
     assert profile_token_table(nullsrc) == {}
+    # the pyarrow scan drops the NULL group too: mixed NULL and non-NULL
+    # keys profile exactly the non-NULL groups, as the Spark-scan build
+    mixed = tok.token_table(spark, 60, num_partitions=2).withColumn(
+        "source",
+        F.when(F.expr("cast(substr(doc_id, 5) as int) % 3 = 0"), F.lit(None))
+        .otherwise(F.col("source")),
+    )
+    mixsrc = str(tmp_path / "mixed_null_tokens")
+    mixed.write.parquet(mixsrc)
+    assert spark.read.parquet(mixsrc).filter(F.col("source").isNull()).count() > 0
+    a = profile_token_table(spark.read.parquet(mixsrc))
+    b = scan_profile(spark, mixsrc)
+    assert set(a) == set(b) and a and "None" not in b
+    for g in a:
+        assert (a[g].n_docs, a[g].n_tokens) == (b[g].n_docs, b[g].n_tokens)
+        assert a[g].ell.serialize() == b[g].ell.serialize()
+        assert a[g].cs.serialize() == b[g].cs.serialize()
+    assert sum(p.n_docs for p in b.values()) == spark.read.parquet(mixsrc).filter(
+        F.col("source").isNotNull()
+    ).count()
 
 
 def test_profile_fold_is_distributed(spark):
@@ -177,9 +198,10 @@ def test_profile_fold_is_distributed(spark):
     from exaloglog_paper_spark.ops.agg import (
         CompositeSpec,
         ExaLogLogSpec,
+        sketch_partials,
         tree_merge,
     )
-    from exaloglog_paper_spark.ops.profile import profile_partials_df
+    from exaloglog_paper_spark.ops.profile import profile_values
     from exaloglog_paper_spark.ops.specs import (
         CountSketchSpec,
         KLLSpec,
@@ -194,7 +216,7 @@ def test_profile_fold_is_distributed(spark):
         KLLSpec(64),
     )
     composite = CompositeSpec(specs)
-    partials = profile_partials_df(df, specs)
+    partials = sketch_partials(df, composite, profile_values(), by=["source"])
     folded = tree_merge(partials, composite, by=["source"])
     plan = folded._jdf.queryExecution().executedPlan().toString()
     # the fold is a merge level reading the shuffle on the group key

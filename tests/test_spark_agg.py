@@ -331,6 +331,51 @@ def test_partial_flush_is_byte_identical(spark, tdf):
 
     assert run(2) == run(65536)
 
+    # phase 3: the profile composite (row-level KLL part beside token-level
+    # parts) through forced flushes; its derived default bound is in bytes
+    from exaloglog_paper_spark.ops.agg import _flush_bound
+    from exaloglog_paper_spark.ops.profile import _profile_spec, profile_values
+
+    composite = _profile_spec()
+    batches = tdf.select("source", "tokens", "n_tok").toArrow().to_batches(
+        max_chunksize=40
+    )
+    assert len(batches) >= 4
+
+    def build(flush):
+        rows = []
+        for rb in _build_partials_batches(
+            iter(batches), composite, profile_values(), ["source"],
+            flush_groups=flush,
+        ):
+            rows += zip(rb.column("source").to_pylist(),
+                        rb.column("sketch").to_pylist(),
+                        rb.column("n_values").to_pylist())
+        out = {}
+        for g in {r[0] for r in rows}:
+            blobs = sorted(bytes(r[1]) for r in rows if r[0] == g)
+            st = composite.merge_many(composite.deserialize(x) for x in blobs)
+            out[g] = (composite.serialize(st), sum(r[2] for r in rows if r[0] == g))
+        return out, len(rows)
+
+    flushed, n_flushed = build(1)
+    single, n_single = build(10**9)
+    assert n_flushed > n_single
+    # ELL/CS are byte-identical; MG/KLL summarize a stream cut at other
+    # points (their merge is not a replay of adds), so they keep their
+    # stream weights, and n_values stays exact
+    for g, (blob, n) in single.items():
+        a, b = composite.deserialize(blob), composite.deserialize(flushed[g][0])
+        assert n == flushed[g][1]  # n_values counts rows for parts
+        assert composite.specs[0].serialize(a[0]) == composite.specs[0].serialize(b[0])
+        assert composite.specs[1].serialize(a[1]) == composite.specs[1].serialize(b[1])
+        assert a[2].n == b[2].n and a[3].n == b[3].n
+    # the by=() arm counts rows for parts too (len of the parts tuple is 4)
+    (rb,) = _build_partials_batches(iter(batches), composite, profile_values(), [])
+    assert rb.column("n_values").to_pylist() == [sum(b.num_rows for b in batches)]
+    assert _flush_bound(composite) <= 256
+    assert _flush_bound(ExaLogLogSpec(2, 20, 10)) == 16384
+
 
 def test_merge_state_tables_beyond_fanin_byte_identical(spark, tdf):
     """Folding MORE state tables than the tree fanin (the multi-day
