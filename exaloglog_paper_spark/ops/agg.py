@@ -83,6 +83,12 @@ class SketchSpec(abc.ABC):
         with a batched pack — identity pinned by test)."""
         return [self.serialize(s) for s in states]
 
+    def finalize_batch(self, states) -> list:
+        """Results of many serialized states; must equal the per-state
+        ``finalize(deserialize(s))`` (specs with a batched estimate
+        override it)."""
+        return [self.finalize(self.deserialize(bytes(s))) for s in states]
+
     def merge_many(self, states):
         """Fold many states into one; must equal the sequential pairwise
         fold exactly (specs whose merge is associative+commutative may
@@ -140,7 +146,7 @@ class ExaLogLogSpec(SketchSpec):
         """Batched bit-pack of homogeneous register states (one numpy pass
         for the whole flush instead of ~16.5 µs of dispatch per state);
         falls back to the per-state loop for mixed/foreign states."""
-        from ..sketchlib.bitops import pack_registers_batch
+        from ..sketchlib.bitops import pack_registers
 
         states = list(states)
         cfg = self.cfg
@@ -148,9 +154,7 @@ class ExaLogLogSpec(SketchSpec):
             isinstance(s, ExaLogLog) and s.cfg == cfg for s in states
         ):
             return [self.serialize(s) for s in states]
-        packed = pack_registers_batch(
-            np.stack([s.regs for s in states]), cfg.register_bits
-        )
+        packed = pack_registers(np.stack([s.regs for s in states]), cfg.register_bits)
         return [row.tobytes() for row in packed]
 
     def deserialize(self, data: bytes) -> ExaLogLog:
@@ -160,17 +164,17 @@ class ExaLogLogSpec(SketchSpec):
         return state.estimate()
 
     def finalize_batch(self, states) -> np.ndarray:
-        """Batched estimates straight from serialized states: one
-        unpackbits + one contribute + one vectorized ML solve for the whole
-        batch instead of a per-row deserialize + estimate — the estimate
-        stage of many-group rollups/cubes (10^6+ groups at 100 TB)."""
-        from ..sketchlib.bitops import unpack_registers_batch
+        """Batched estimates straight from serialized states: one unpack +
+        one contribute + one vectorized ML solve for the whole batch instead
+        of a per-row deserialize + estimate — the estimate stage of
+        many-group rollups/cubes (10^6+ groups at 100 TB)."""
+        from ..sketchlib.bitops import unpack_registers
         from ..sketchlib.exaloglog import estimate_batch
 
         cfg = self.cfg
         arr = np.frombuffer(b"".join(bytes(s) for s in states), dtype=np.uint8)
-        regs2d = unpack_registers_batch(
-            arr.reshape(len(states), -1), cfg.register_bits, cfg.m
+        regs2d = unpack_registers(
+            arr.reshape(len(states), cfg.state_num_bytes), cfg.register_bits, cfg.m
         )
         return estimate_batch(regs2d, cfg.t, cfg.d, cfg.p)
 
@@ -648,6 +652,12 @@ def sketch_partials(
     build_secs double`` — the metrics columns double as per-partition lineage
     (see ops/checkpoints.py).
     """
+    return _planned_partials(df, spec, extractor, by)[0]
+
+
+def _planned_partials(df, spec, extractor, by):
+    """:func:`sketch_partials` and its planned input partition count —
+    planning the scan once, for both the flush stamps and the tree."""
     by = list(by)
     cols = list(dict.fromkeys(by + list(extractor.input_cols)))
     df = df.select(*cols)  # column pruning reaches the scan
@@ -660,7 +670,7 @@ def sketch_partials(
             batches, spec, extractor, by, num_partitions=num_p
         )
 
-    return df.mapInArrow(build, schema=schema)
+    return df.mapInArrow(build, schema=schema), num_p
 
 
 def _merge_sorted(spec: SketchSpec, blobs):
@@ -820,8 +830,7 @@ def sketch_agg(
 ) -> DataFrame:
     """Full pipeline: partials -> tree merge. Returns one row per group with
     columns ``by..., sketch, n_values, build_secs``."""
-    num_p = df.rdd.getNumPartitions()
-    partials = sketch_partials(df, spec, extractor, by=by)
+    partials, num_p = _planned_partials(df, spec, extractor, by)
     return tree_merge(partials, spec, by=by, num_partials=num_p, fanin=fanin)
 
 
@@ -862,29 +871,20 @@ def sketch_agg_salted(
 def with_estimate(
     df: DataFrame, spec: SketchSpec, sketch_col: str = "sketch", out: str = "estimate"
 ) -> DataFrame:
-    """Attach the sketch's scalar result as a double column (Arrow UDF).
-
-    Specs exposing ``finalize_batch`` (dense ExaLogLog) estimate the whole
-    Arrow batch in one vectorized shot; others fall back to per-row
-    deserialize + finalize.
-    """
-    batch_fn = getattr(spec, "finalize_batch", None)
-
+    """Attach the sketch's scalar result as a double column: one
+    ``spec.finalize_batch`` call per Arrow batch (dense ExaLogLog estimates
+    the batch in one vectorized shot)."""
     if df.isLocal():
         # LocalRelation input (e.g. tree_merge's driver-fold row): collect
         # is driver-local and free, so estimate here and return another
         # LocalRelation instead of paying a one-row Python-UDF job
         # (~0.45 s of worker dispatch per execution). Identical values —
-        # same finalize/finalize_batch code either way.
+        # same finalize_batch code either way.
         rows = df.collect()
-        sketches = [bytes(r[sketch_col]) for r in rows]
-        if batch_fn is not None and rows:
-            ests = [float(v) for v in np.asarray(batch_fn(sketches))]
-        else:
-            ests = [float(spec.finalize(spec.deserialize(s))) for s in sketches]
+        ests = spec.finalize_batch([bytes(r[sketch_col]) for r in rows])
         return local_df(
             df.sparkSession,
-            [tuple(r) + (e,) for r, e in zip(rows, ests)],
+            [tuple(r) + (float(e),) for r, e in zip(rows, ests)],
             ", ".join(
                 f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
             )
@@ -893,9 +893,8 @@ def with_estimate(
 
     @F.pandas_udf(DoubleType())
     def est(s: pd.Series) -> pd.Series:
-        if batch_fn is not None and len(s):
-            return pd.Series(np.asarray(batch_fn(list(s))), index=s.index)
-        return s.map(lambda data: float(spec.finalize(spec.deserialize(bytes(data)))))
+        ests = spec.finalize_batch(list(s))
+        return pd.Series(np.asarray(ests, dtype=np.float64), index=s.index)
 
     return df.withColumn(out, est(F.col(sketch_col)))
 

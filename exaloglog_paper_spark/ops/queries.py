@@ -16,6 +16,7 @@ Two families:
 
 from __future__ import annotations
 
+import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -42,13 +43,19 @@ def _read_pq(spark: SparkSession, path: str) -> DataFrame:
     constructors here re-read the same tables several times per
     execution. Caching the inferred StructType (metadata, not data — the
     scan itself is unchanged) skips those jobs; a real deployment gets
-    the same effect from a catalog."""
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    the same effect from a catalog. The memo holds while the path's
+    ``st_mtime_ns`` is unchanged, so a table rewritten in place (a new
+    file, or a directory whose entries changed) is inferred afresh."""
+    try:
+        stamp = os.stat(path).st_mtime_ns
+    except OSError:  # not a local path: no stamp to validate a memo by
+        return spark.read.parquet(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = (stamp, df.schema)
+    return df
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

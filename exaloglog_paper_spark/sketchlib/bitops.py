@@ -13,15 +13,9 @@ math) use plain Python ints, which are arbitrary-precision and safe.
 
 from __future__ import annotations
 
-import sys
+import functools
 
 import numpy as np
-
-# The windowed-gather register unpack fast paths reinterpret byte windows
-# via .view(np.uint64), which is only correct little-endian; on a
-# (hypothetical) big-endian host they transparently fall back to the
-# unpackbits path instead of silently decoding garbage.
-_LITTLE_ENDIAN = sys.byteorder == "little"
 
 U64 = np.uint64
 MASK64 = U64(0xFFFFFFFFFFFFFFFF)
@@ -132,108 +126,75 @@ def pow2(x: int) -> float:
     return math.ldexp(1.0, x)
 
 
-def pack_registers(regs: np.ndarray, width: int) -> bytes:
-    """Bit-pack *regs* (uint64, little-endian bit order) at `width` bits each.
-
-    Produces exactly ``((width << p) + 7) >> 3`` bytes for ``m = 2^p``
-    registers — the same state size as the reference's PackedArray-backed
-    ``getState()`` (``ExaLogLog.java:93,182-185``), preserving its at-rest /
-    on-shuffle space advantage.
-    """
-    m = len(regs)
-    shifts = np.arange(width, dtype=np.uint64)
-    bits = ((regs[:, None] >> shifts) & ONE).astype(np.uint8)
-    packed = np.packbits(bits.ravel(), bitorder="little")
-    want = ((width * m) + 7) >> 3
-    return packed[:want].tobytes()
-
-
-def pack_registers_batch(regs2d: np.ndarray, width: int) -> np.ndarray:
-    """Batched :func:`pack_registers`: (B, m) uint64 -> (B, nbytes) uint8.
-
-    Word-level pack, no per-bit expansion: register i's bits live at
-    bit-position i*width, i.e. OR ``reg << rem`` into output word
-    ``(i*width) >> 6`` and the spill ``reg >> (64-rem)`` into the next —
-    m in-cache vector ops over the batch instead of m*width expanded bit
-    bytes. Little-endian hosts only (enforced below): viewing the uint64
-    word array as bytes yields exactly the scalar pack's
-    ``packbits(bitorder="little")`` layout — byte-identical rows, pinned
-    by test. This is the serialization stage of a high-group-cardinality
-    partial flush (16k+ states per emit); ~5x the scalar pack per state.
-    Memory-bounded via ~64 MB sub-batches.
-    """
-    B, m = regs2d.shape
-    nbits = m * width
-    nwords = (nbits + 63) >> 6
-    want = (nbits + 7) >> 3
-    if not _LITTLE_ENDIAN:
-        return np.stack(
-            [np.frombuffer(pack_registers(r, width), np.uint8) for r in regs2d]
-        )
-    out = np.empty((B, want), np.uint8)
-    step = max(1, (1 << 26) // max(1, m * 8))
-    for s in range(0, B, step):
-        chunk = regs2d[s : s + step]
-        R = np.ascontiguousarray(chunk.T)  # (m, b): contiguous per-register rows
-        W = np.zeros((nwords + 1, len(chunk)), np.uint64)
-        for i in range(m):
-            bitpos = i * width
-            w = bitpos >> 6
-            rem = bitpos & 63
-            reg = R[i]
-            W[w] |= reg << U64(rem)
-            if rem + width > 64:
-                W[w + 1] |= reg >> U64(64 - rem)
-        packed = np.ascontiguousarray(W[:nwords].T).view(np.uint8)
-        out[s : s + step] = packed.reshape(len(chunk), nwords * 8)[:, :want]
-    return out
-
-
-def unpack_registers(data: bytes, width: int, m: int) -> np.ndarray:
-    """Inverse of :func:`pack_registers`.
-
-    width <= 57 takes the windowed-gather fast path (8-byte little-endian
-    window per register, shift + mask) — ``wrap`` sits on the merge hot path
-    of every distributed aggregation, so no per-bit expansion here. The
-    fast path requires a little-endian host (enforced, see
-    ``_LITTLE_ENDIAN``); otherwise the unpackbits path below is used."""
-    raw = np.frombuffer(data, dtype=np.uint8)
-    if width <= 57 and _LITTLE_ENDIAN:
-        buf = np.concatenate([raw, np.zeros(8, dtype=np.uint8)])
-        bitpos = np.arange(m, dtype=np.int64) * width
-        byte_off = bitpos >> 3
-        bit_rem = (bitpos & 7).astype(np.uint64)
-        windows = np.ascontiguousarray(buf[byte_off[:, None] + np.arange(8)])
-        w64 = windows.reshape(m * 8).view(np.uint64)  # little-endian platform
-        return (w64 >> bit_rem) & ((ONE << U64(width)) - ONE)
-    bits = np.unpackbits(raw, count=width * m, bitorder="little")
-    weights = ONE << np.arange(width, dtype=np.uint64)
-    return (bits.reshape(m, width).astype(np.uint64) * weights).sum(
-        axis=1, dtype=np.uint64
+@functools.lru_cache(maxsize=None)
+def _pack_layout(m: int, width: int):
+    """Where each of m width-bit registers lands in 64-bit words: its word,
+    shift and run start (first register of each word), plus the registers
+    that straddle into the next word, their target word and spill shift."""
+    bitpos = np.arange(m, dtype=np.int64) * width
+    word = bitpos >> 6
+    rem = (bitpos & 63).astype(np.uint64)
+    starts = np.flatnonzero(np.diff(word, prepend=-1))
+    spill = np.flatnonzero(rem + U64(width) > U64(64))
+    return (
+        rem, starts, word[starts], spill, word[spill] + 1,
+        U64(64) - rem[spill], (m * width + 63) >> 6,
     )
 
 
-def unpack_registers_batch(data2d: "np.ndarray", width: int, m: int) -> "np.ndarray":
-    """Batched :func:`unpack_registers`: (B, nbytes) uint8 -> (B, m) uint64.
+def pack_registers(regs: np.ndarray, width: int) -> np.ndarray:
+    """Bit-pack a (B, m) uint64 register matrix at `width` bits per
+    register: (B, nbytes) uint8, register i at bits [i·width, (i+1)·width)
+    of its row, little-endian bit order.
 
-    Fast path (width <= 57): gather the 8-byte little-endian window covering
-    each register and shift/mask — no per-bit expansion, ~100x faster than
-    unpackbits at ELL register widths. This is the deserialization stage of
-    batched estimation over many group states.
+    Each row is ``((width << p) + 7) >> 3`` bytes for ``m = 2^p`` — the
+    reference's PackedArray-backed ``getState()`` size
+    (``ExaLogLog.java:93,182-185``). Registers occupy disjoint bits, so OR
+    is ADD: each output word is one ``add.reduceat`` of ``reg << rem`` over
+    the registers starting in it, plus the spill of the one straddling in.
+    The words are stored ``'<u8'``, so the bytes are host-order independent.
+    Temporaries are bounded via ~64 MB row chunks.
     """
-    # width > 57: a 64-bit window can't span bit_rem + width bits;
-    # big-endian: the .view(uint64) reinterpretation would be wrong
-    if width > 57 or not _LITTLE_ENDIAN:
-        return np.stack(
-            [unpack_registers(row.tobytes(), width, m) for row in data2d]
-        )
-    B = len(data2d)
-    buf = np.concatenate([data2d, np.zeros((B, 8), dtype=np.uint8)], axis=1)
+    regs = np.asarray(regs, dtype=np.uint64)
+    B, m = regs.shape
+    rem, starts, run_words, spill, spill_words, spill_shift, nwords = _pack_layout(
+        m, width
+    )
+    words = np.zeros((B, nwords), dtype="<u8")
+    step = max(1, (1 << 23) // m)
+    for s in range(0, B, step):
+        chunk = regs[s : s + step]
+        words[s : s + step, run_words] = np.add.reduceat(chunk << rem, starts, axis=1)
+        words[s : s + step, spill_words] += chunk[:, spill] >> spill_shift
+    return words.view(np.uint8)[:, : (m * width + 7) >> 3]
+
+
+@functools.lru_cache(maxsize=None)
+def _unpack_layout(m: int, width: int):
+    """Per register: the byte its bits start in and their offset there,
+    plus the registers whose bits run past that byte's 8-byte word
+    (width >= 58) with their ninth byte and the shift it takes."""
     bitpos = np.arange(m, dtype=np.int64) * width
     byte_off = bitpos >> 3
-    bit_rem = (bitpos & 7).astype(np.uint64)
-    windows = np.ascontiguousarray(
-        buf[:, byte_off[:, None] + np.arange(8)]
-    )  # (B, m, 8) uint8
-    w64 = windows.reshape(B, m * 8).view(np.uint64)  # little-endian platform
-    return (w64 >> bit_rem) & ((ONE << U64(width)) - ONE)
+    rem = (bitpos & 7).astype(np.uint64)
+    spill = np.flatnonzero(rem + U64(width) > U64(64))
+    return byte_off, rem, spill, byte_off[spill] + 8, U64(64) - rem[spill]
+
+
+def unpack_registers(data: np.ndarray, width: int, m: int) -> np.ndarray:
+    """Inverse of :func:`pack_registers`: (B, nbytes) uint8 -> (B, m) uint64.
+
+    One unaligned little-endian 8-byte load per register, shifted and
+    masked; the registers whose ``rem + width`` exceeds 64 OR in their
+    ninth byte. No per-bit expansion — ``wrap`` sits on the merge hot path
+    of every distributed aggregation."""
+    data = np.asarray(data, dtype=np.uint8)
+    B, nbytes = data.shape
+    byte_off, rem, spill, spill_byte, spill_shift = _unpack_layout(m, width)
+    buf = np.zeros((B, nbytes + 9), dtype=np.uint8)
+    buf[:, :nbytes] = data
+    # each row's byte offsets j = 0..nbytes as the '<u8' word of bytes j..j+7
+    words = np.ndarray((B, nbytes + 1), "<u8", buf, strides=(buf.strides[0], 1))
+    regs = words[:, byte_off].astype(np.uint64, copy=False) >> rem
+    regs[:, spill] |= buf[:, spill_byte].astype(np.uint64) << spill_shift
+    return regs & (MASK64 >> U64(64 - width))

@@ -26,7 +26,7 @@ import math
 import numpy as np
 
 from .bitops import U64
-from .exaloglog import ExaLogLog, contribute_vec, estimate_from_coefficients
+from .exaloglog import ExaLogLog, contribute_vec_batch, estimate_from_coefficients
 from .simulate import generate_hash_for_update, phi
 
 MASK64 = U64(0xFFFFFFFFFFFFFFFF)
@@ -70,14 +70,10 @@ def _merged_distribution(vals_a, probs_a, vals_b, probs_b, d: int):
 
 def _contribution_tables(values: np.ndarray, t: int, d: int, p: int):
     """Per-register (a, b) ML contributions for each unique register value
-    (contribute is additive over registers — ExaLogLog.java:554-582)."""
-    a_tab = np.empty(len(values), dtype=np.uint64)
-    b_tab = np.zeros((len(values), 64), dtype=np.int32)
-    for i in range(len(values)):
-        agg, bb = contribute_vec(values[i : i + 1], t, d, p, want_b=True)
-        a_tab[i] = agg
-        b_tab[i] = bb
-    return a_tab, b_tab
+    (contribute is additive over registers — ExaLogLog.java:554-582): one
+    kernel call with each value as a one-register row."""
+    a_tab, b_tab = contribute_vec_batch(values[:, None], t, d, p)
+    return a_tab, b_tab.astype(np.int32)
 
 
 def _estimate_states(a_sum: np.ndarray, b_sum: np.ndarray, n_occupied: int, t, d, p):

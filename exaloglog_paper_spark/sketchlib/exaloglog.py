@@ -346,170 +346,91 @@ def contribute_reference(r: int, b: list, t: int, d: int, p: int) -> int:
     return a
 
 
-def contribute_vec(regs: np.ndarray, t: int, d: int, p: int, want_b: bool):
-    """Vectorized ML-coefficient computation over all registers.
+@np.errstate(over="ignore")  # deliberate mod-2^64 wraparound
+def contribute_vec_batch(regs2d: np.ndarray, t: int, d: int, p: int):
+    """ML coefficients of a (B, m) register matrix — the one Algorithm 3
+    kernel; a single sketch is the row ``regs[None, :]``.
 
     Optimized-form semantics ≙ ExaLogLog.java:554-582 (verified against
-    :func:`contribute_reference` in tests). Returns ``(agg, b)`` where
-    ``agg`` is the uint64 wraparound sum of per-register contributions
-    (deliberate mod-2^64 arithmetic — ExaLogLog.java:587,593) and ``b`` the
-    int64[64] histogram (or None).
+    :func:`contribute_reference` in tests). Returns ``(agg, b)`` with
+    ``agg`` the uint64 (B,) mod-2^64 row sums of per-register
+    contributions (deliberate wraparound — ExaLogLog.java:587,593) and
+    ``b`` the int64 (B, 64) row histograms.
     """
-    with np.errstate(over="ignore"):  # deliberate mod-2^64 wraparound
-        return _contribute_vec(regs, t, d, p, want_b)
-
-
-def _contribute_vec(regs: np.ndarray, t: int, d: int, p: int, want_b: bool):
-    q = 63 - t - p
-    b = np.zeros(64, dtype=np.int64) if want_b else None
-
-    u = regs >> U64(d)
-    zero_mask = u == ZERO
-    # u == 0 contributes 2^(64-p)  (ExaLogLog.java:556 `1L << -p`)
-    agg = U64((1 << (64 - p)) & 0xFFFFFFFFFFFFFFFF) * U64(int(zero_mask.sum()) & 0xFFFFFFFFFFFFFFFF)
-
-    nz = ~zero_mask
-    if not nz.any():
-        return agg, b
-    r = regs[nz]
-    un = u[nz]
-    j = (un - ONE) >> U64(t)
-    i0 = np.minimum(U64(q), j)
-    num_bits = (un - ONE) - (i0 << U64(t))
-    dd = U64(d)
-    L = np.where(num_bits >= dd, ZERO, dd - np.minimum(num_bits, dd))
-    mask = lshift_clamped(np.full_like(r, MASK64), L)
-    mask2 = mask & ((ONE << dd) - ONE)
-    a0 = ((((i0 + U64(2)) << U64(t)) - un) + popcount64(~r & mask2)) << (U64(q) - i0)
-    agg = agg + np.sum(a0, dtype=np.uint64)
-    if want_b:
-        np.add.at(b, i0.astype(np.int64), (ONE + popcount64(r & mask2)).astype(np.int64))
-
-    i_cur = i0.astype(np.int64)
-    if t <= 5:
-        shift = U64(1 << t)
-        lo = np.where(L >= shift, L - shift, ZERO)
-        wmask = lshift_clamped(np.full_like(r, MASK64), lo) ^ mask
-        while True:
-            active = (i_cur > 0) & (wmask != ZERO)
-            if not active.any():
-                break
-            i_cur = np.where(active, i_cur - 1, i_cur)
-            qi = (q - i_cur).astype(np.uint64)
-            contrib = np.where(active, popcount64(wmask & ~r) << qi, ZERO)
-            agg = agg + np.sum(contrib, dtype=np.uint64)
-            if want_b:
-                cnt = popcount64(wmask & r).astype(np.int64)
-                act = active & (cnt > 0)
-                np.add.at(b, i_cur[act], cnt[act])
-            wmask = np.where(active, wmask >> shift, wmask)
-    else:  # t > 5: single residual window (ExaLogLog.java:575-580)
-        active = i_cur > 0
-        if active.any():
-            i_cur = np.where(active, i_cur - 1, i_cur)
-            qi = (q - i_cur).astype(np.uint64)
-            wm = ~mask
-            contrib = np.where(active, popcount64(wm & ~r) << qi, ZERO)
-            agg = agg + np.sum(contrib, dtype=np.uint64)
-            if want_b:
-                cnt = popcount64(wm & r).astype(np.int64)
-                act = active & (cnt > 0)
-                np.add.at(b, i_cur[act], cnt[act])
-    return agg, b
-
-
-def contribute_vec_batch(regs2d: np.ndarray, t: int, d: int, p: int):
-    """Batched :func:`contribute_vec` over a (B, m) register matrix.
-
-    Returns ``(agg, b)`` with ``agg`` uint64 (B,) mod-2^64 row sums and
-    ``b`` int64 (B, 64) row histograms. Row-for-row identical to calling
-    contribute_vec per sketch (pinned in tests); the flat nonzero-register
-    layout + ``np.add.at`` row segmentation keeps every op vectorized, so a
-    batch of thousands of group states costs about as much as a handful of
-    scalar calls — the estimate stage for many-group rollups/cubes.
-    """
-    with np.errstate(over="ignore"):  # deliberate mod-2^64 wraparound
-        return _contribute_vec_batch(regs2d, t, d, p)
-
-
-def _contribute_vec_batch(regs2d: np.ndarray, t: int, d: int, p: int):
-    # Layout: one flat array of all nonzero registers plus a sorted row-id
-    # vector. Per-element work is plain vector ops; row aggregation happens
-    # ONCE at the end (uint64 add.reduceat for agg, one bincount for b) —
-    # np.add.at per loop iteration is ~50x slower and was the bottleneck.
+    # Layout: one flat array of all nonzero registers, row-major so each
+    # row's registers are contiguous. Per-element work is plain vector ops;
+    # row aggregation happens ONCE at the end (uint64 add.reduceat for agg,
+    # one bincount for b) — np.add.at per pass is ~50x slower.
     B, m = regs2d.shape
     q = 63 - t - p
-    b = np.zeros((B, 64), dtype=np.int64)
-
     u = regs2d >> U64(d)
-    zero_mask = u == ZERO
-    zero_counts = zero_mask.sum(axis=1).astype(np.uint64)
-    agg = U64((1 << (64 - p)) & 0xFFFFFFFFFFFFFFFF) * zero_counts
-
-    rows, cols = np.nonzero(~zero_mask)  # rows sorted (row-major)
-    if len(rows) == 0:
-        return agg, b
-    r = regs2d[rows, cols]
-    un = u[rows, cols]
+    nz = np.flatnonzero(u)
+    counts = np.count_nonzero(u, axis=1)
+    # u == 0 contributes 2^(64-p)  (ExaLogLog.java:556 `1L << -p`)
+    agg = U64((1 << (64 - p)) & 0xFFFFFFFFFFFFFFFF) * (m - counts).astype(np.uint64)
+    if len(nz) == 0:
+        return agg, np.zeros((B, 64), dtype=np.int64)
+    r = regs2d.reshape(-1)[nz]
+    un = u.reshape(-1)[nz]
+    row64 = (nz // m) * 64
     j = (un - ONE) >> U64(t)
     i0 = np.minimum(U64(q), j)
     num_bits = (un - ONE) - (i0 << U64(t))
     dd = U64(d)
     L = np.where(num_bits >= dd, ZERO, dd - np.minimum(num_bits, dd))
     mask = lshift_clamped(np.full_like(r, MASK64), L)
-    mask2 = mask & ((ONE << dd) - ONE)
-    a_elem = ((((i0 + U64(2)) << U64(t)) - un) + popcount64(~r & mask2)) << (U64(q) - i0)
-    b_keys = [rows * 64 + i0.astype(np.int64)]
-    b_vals = [(ONE + popcount64(r & mask2)).astype(np.int64)]
+    # level i0 reads the d - L history bits [L, d): the set ones count
+    # into b, the unset ones into a
+    cnt = popcount64(r & mask & ((ONE << dd) - ONE))
+    a_elem = ((((i0 + U64(2)) << U64(t)) - un) + (dd - L - cnt)) << (U64(q) - i0)
+    b_keys = [row64 + i0.astype(np.int64)]
+    b_vals = [(ONE + cnt).astype(np.int64)]
 
     i_cur = i0.astype(np.int64)
     if t <= 5:
         shift = U64(1 << t)
         lo = np.where(L >= shift, L - shift, ZERO)
         wmask = lshift_clamped(np.full_like(r, MASK64), lo) ^ mask
+        # pass k reads window bits [hi - shift, hi), hi = L - k·shift,
+        # clipped at 0: min(hi, shift) bits, so unset = that - set
+        hi = L.astype(np.int64)
         while True:
             active = (i_cur > 0) & (wmask != ZERO)
             if not active.any():
                 break
             i_cur = np.where(active, i_cur - 1, i_cur)
-            qi = (q - i_cur).astype(np.uint64)
-            a_elem = a_elem + np.where(active, popcount64(wmask & ~r) << qi, ZERO)
             cnt = popcount64(wmask & r).astype(np.int64)
+            unset = (np.minimum(hi, 1 << t) - cnt).astype(np.uint64)
+            a_elem = a_elem + np.where(active, unset << (q - i_cur).astype(np.uint64), ZERO)
             act = active & (cnt > 0)
-            if act.any():
-                b_keys.append(rows[act] * 64 + i_cur[act])
-                b_vals.append(cnt[act])
-            wmask = np.where(active, wmask >> shift, wmask)
-    else:  # t > 5: single residual window (ExaLogLog.java:575-580)
+            b_keys.append(row64[act] + i_cur[act])
+            b_vals.append(cnt[act])
+            # an inactive element never turns active again, so no mask here
+            wmask >>= shift
+            hi -= 1 << t
+    else:  # t > 5: single residual window [0, L) (ExaLogLog.java:575-580)
         active = i_cur > 0
         if active.any():
             i_cur = np.where(active, i_cur - 1, i_cur)
             qi = (q - i_cur).astype(np.uint64)
-            wm = ~mask
-            a_elem = a_elem + np.where(active, popcount64(wm & ~r) << qi, ZERO)
-            cnt = popcount64(wm & r).astype(np.int64)
-            act = active & (cnt > 0)
-            if act.any():
-                b_keys.append(rows[act] * 64 + i_cur[act])
-                b_vals.append(cnt[act])
+            cnt = popcount64(~mask & r)
+            a_elem = a_elem + np.where(active, (L - cnt) << qi, ZERO)
+            act = active & (cnt > ZERO)
+            b_keys.append(row64[act] + i_cur[act])
+            b_vals.append(cnt[act].astype(np.int64))
 
-    # one segmented reduction per output: rows are sorted, so agg sums are
-    # add.reduceat over row boundaries (uint64 dtype preserved -> exact
+    # one segmented reduction per output: rows are contiguous, so agg sums
+    # are add.reduceat over row boundaries (uint64 dtype preserved -> exact
     # mod-2^64 wraparound); b cells sum exactly in one float64 bincount
     # (counts are tiny integers, far below 2^53)
-    counts = (m - zero_counts).astype(np.int64)
     nonempty = counts > 0
     starts = np.zeros(int(nonempty.sum()), dtype=np.int64)
     np.cumsum(counts[nonempty][:-1], out=starts[1:])
-    agg[nonempty] = agg[nonempty] + np.add.reduceat(a_elem, starts)
-    key = np.concatenate(b_keys)
-    val = np.concatenate(b_vals)
-    b = (
-        np.bincount(key, weights=val, minlength=B * 64)
-        .astype(np.int64)
-        .reshape(B, 64)
+    agg[nonempty] += np.add.reduceat(a_elem, starts)
+    b = np.bincount(
+        np.concatenate(b_keys), weights=np.concatenate(b_vals), minlength=B * 64
     )
-    return agg, b
+    return agg, b.astype(np.int64).reshape(B, 64)
 
 
 def estimate_from_coefficients(
@@ -678,20 +599,22 @@ class ExaLogLog:
         error CSVs (ExaLogLogEstimationErrorSimulation.java:153-159).
         """
         t, d, p = self.cfg.t, self.cfg.d, self.cfg.p
-        agg, b = contribute_vec(self.regs, t, d, p, want_b=True)
-        if int(agg) == 0:
+        agg, b = contribute_vec_batch(self.regs[None, :], t, d, p)
+        agg, b = int(agg[0]), b[0].tolist()
+        if agg == 0:
             return 0.0 if b[63 - t - p] == 0 else float("inf")
         factor = float(self.cfg.m << (t + 1))
-        a = unsigned_to_double(int(agg)) * pow2(-64) * factor
-        x = solve_maximum_likelihood_equation(a, b.tolist(), 63 - p - t, 0.0, stats=stats)
+        a = unsigned_to_double(agg) * pow2(-64) * factor
+        x = solve_maximum_likelihood_equation(a, b, 63 - p - t, 0.0, stats=stats)
         return factor * x / (1.0 + ml_bias_correction(t, d) / self.cfg.m)
 
     def state_change_probability(self) -> float:
         """≙ ExaLogLog.java:524-544 (incl. the all-zero 2^64 overflow case)."""
-        agg, _ = contribute_vec(self.regs, self.cfg.t, self.cfg.d, self.cfg.p, want_b=False)
-        first, _ = contribute_vec(self.regs[:1], self.cfg.t, self.cfg.d, self.cfg.p, want_b=False)
-        if int(agg) != 0 or int(first) == 0:
-            return unsigned_to_double(int(agg)) * pow2(-64)
+        t, d, p = self.cfg.t, self.cfg.d, self.cfg.p
+        agg = int(contribute_vec_batch(self.regs[None, :], t, d, p)[0][0])
+        first = int(contribute_vec_batch(self.regs[None, :1], t, d, p)[0][0])
+        if agg != 0 or first == 0:
+            return unsigned_to_double(agg) * pow2(-64)
         return 1.0
 
     # ----- serialization -----
@@ -699,7 +622,7 @@ class ExaLogLog:
     def serialize(self) -> bytes:
         """Bit-packed register state; same byte length as the reference's
         getState() (e.g. ELL(2,20,8) -> 896 bytes, BASELINE.md)."""
-        return pack_registers(self.regs, self.cfg.register_bits)
+        return pack_registers(self.regs[None, :], self.cfg.register_bits)[0].tobytes()
 
     @classmethod
     def wrap(cls, t: int, d: int, state: bytes) -> "ExaLogLog":
@@ -712,7 +635,8 @@ class ExaLogLog:
         if p < MIN_P or p > max_p(t) or (((reg_bits << p) + 7) >> 3) != len(state):
             raise ValueError("unexpected state length!")
         cfg = ExaLogLogConfig(t, d, p)
-        return cls(cfg, unpack_registers(state, reg_bits, cfg.m))
+        data = np.frombuffer(state, dtype=np.uint8)[None, :]
+        return cls(cfg, unpack_registers(data, reg_bits, cfg.m)[0])
 
 
 # ---------------------------------------------------------------------------

@@ -95,8 +95,8 @@ def add_hashes_martingale(
 
 
 def _register_change_probability_scaled(r: int, t: int, d: int, p: int) -> int:
-    # scalar path: the literal Algorithm 3 (pure-int) beats a 1-element
-    # numpy contribute_vec call by ~10x here
+    # scalar path: the literal Algorithm 3 (pure-int) beats a one-row
+    # numpy contribute_vec_batch call by ~10x here
     from .exaloglog import contribute_reference
 
     return contribute_reference(r, [0] * 64, t, d, p)

@@ -19,7 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np  # noqa: E402
 
 from exaloglog_paper_spark.ops.agg import ExaLogLogSpec  # noqa: E402
-from exaloglog_paper_spark.sketchlib.bitops import splitmix64_stream  # noqa: E402
+from exaloglog_paper_spark.sketchlib.bitops import (  # noqa: E402
+    splitmix64_stream,
+    unpack_registers,
+)
 from exaloglog_paper_spark.sketchlib.exaloglog import ExaLogLog  # noqa: E402
 
 
@@ -87,13 +90,23 @@ def main() -> None:
 
     # batched estimation over many serialized states (finalize_batch path)
     spec = ExaLogLogSpec(t, d, p)
-    states = []
-    for i in range(512):
-        sk = ExaLogLog.create(t, d, p)
-        sk.add_hashes(splitmix64_stream(i + 10, 3000))
-        states.append(sk.serialize())
+    sketches = [
+        ExaLogLog.create(t, d, p).add_hashes(splitmix64_stream(i + 10, 3000))
+        for i in range(512)
+    ]
+    states = [sk.serialize() for sk in sketches]
     out["estimate_batched_us_per_state"] = round(
         best_of(lambda: spec.finalize_batch(states), reps=5) / len(states) * 1e6, 1
+    )
+    # the codec at B = 512: one pack of the flush, one unpack of the batch
+    out["serialize_batched_us_per_state"] = round(
+        best_of(lambda: spec.serialize_batch(sketches), reps=20) / len(states) * 1e6, 1
+    )
+    cfg = spec.cfg
+    packed = np.frombuffer(b"".join(states), np.uint8).reshape(len(states), -1)
+    out["deserialize_batched_us_per_state"] = round(
+        best_of(lambda: unpack_registers(packed, cfg.register_bits, cfg.m), reps=20)
+        / len(states) * 1e6, 1,
     )
 
     # sequential martingale over a full stream: per-element loop (the

@@ -78,7 +78,7 @@ def test_batch_solver_matches_scalar():
     from exaloglog_paper_spark.sketchlib.bitops import pow2, splitmix64_stream
     from exaloglog_paper_spark.sketchlib.exaloglog import (
         ExaLogLog,
-        contribute_vec,
+        contribute_vec_batch,
         unsigned_to_double,
     )
     from exaloglog_paper_spark.sketchlib.mlsolver import (
@@ -89,17 +89,20 @@ def test_batch_solver_matches_scalar():
     t, d, p = 2, 20, 8
     n = 63 - p - t
     rng = np.random.default_rng(3)
-    a_list, b_list, want = [], [], []
-    for i in range(100):
-        sk = ExaLogLog.create(t, d, p)
-        sk.add_hashes(splitmix64_stream(i + 1, int(rng.integers(1, 5000))))
-        agg, b = contribute_vec(sk.regs, t, d, p, want_b=True)
-        factor = float(sk.cfg.m << (t + 1))
-        a = unsigned_to_double(int(agg)) * pow2(-64) * factor
-        a_list.append(a)
-        b_list.append(b)
-        want.append(solve_maximum_likelihood_equation(a, b.tolist(), n, 0.0))
-    got = solve_ml_equation_batch(np.array(a_list), np.stack(b_list), n)
+    regs = np.stack([
+        ExaLogLog.create(t, d, p)
+        .add_hashes(splitmix64_stream(i + 1, int(rng.integers(1, 5000))))
+        .regs
+        for i in range(100)
+    ])
+    aggs, bs = contribute_vec_batch(regs, t, d, p)
+    factor = float((1 << p) << (t + 1))
+    a_list = [unsigned_to_double(int(agg)) * pow2(-64) * factor for agg in aggs]
+    want = [
+        solve_maximum_likelihood_equation(a, b.tolist(), n, 0.0)
+        for a, b in zip(a_list, bs)
+    ]
+    got = solve_ml_equation_batch(np.array(a_list), bs, n)
     np.testing.assert_allclose(got, np.array(want), rtol=1e-14)
     # edge rows: all-zero histogram -> 0; a == 0 -> +inf
     z = np.zeros((2, 64), dtype=np.int64)

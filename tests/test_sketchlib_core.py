@@ -24,7 +24,7 @@ from exaloglog_paper_spark.sketchlib.exaloglog import (
     ExaLogLogConfig,
     compute_token,
     contribute_reference,
-    contribute_vec,
+    contribute_vec_batch,
     estimate_distinct_from_tokens,
     is_valid_token,
     reconstruct_hash,
@@ -65,32 +65,6 @@ def test_add_hashes_chunked_path_byte_identical():
     for part in np.array_split(h, 7):
         acc.merge_(ExaLogLog.create(t, d, p).add_hashes(part))
     assert acc.serialize() == chunked.serialize()
-
-
-def test_unpack_registers_endian_fallback_matches_fast_path(monkeypatch):
-    """The big-endian fallback (unpackbits path) must decode identically to
-    the windowed-gather fast path — exercised by forcing the gate off, so
-    the fallback isn't dead untested code."""
-    import numpy as _np
-
-    rng = np.random.default_rng(5)
-    for width in [6, 13, 28, 33, 57]:
-        regs = rng.integers(0, 2 ** min(width, 63), size=256, dtype=np.uint64)
-        data = bitops.pack_registers(regs, width)
-        fast = bitops.unpack_registers(data, width, 256)
-        arr = _np.frombuffer(data, dtype=_np.uint8)
-        fast_b = bitops.unpack_registers_batch(
-            _np.repeat(arr[None, :], 3, axis=0), width, 256
-        )
-        monkeypatch.setattr(bitops, "_LITTLE_ENDIAN", False)
-        slow = bitops.unpack_registers(data, width, 256)
-        slow_b = bitops.unpack_registers_batch(
-            _np.repeat(arr[None, :], 3, axis=0), width, 256
-        )
-        monkeypatch.setattr(bitops, "_LITTLE_ENDIAN", True)
-        assert (fast == slow).all(), width
-        assert (fast_b == slow_b).all(), width
-        assert (fast == regs).all(), width
 
 
 def test_build_registers_dense_vs_sort_byte_identical():
@@ -154,13 +128,17 @@ def test_hash_to_idx_k_small_shift_fast_path_exact():
 
 
 def test_pack_unpack_roundtrip():
+    """unpack inverts pack for every width, the 58-64 bit widths whose
+    registers spill past an 8-byte window included, one row or many."""
     rng = np.random.default_rng(1)
-    for width in [6, 7, 13, 28, 33, 64]:
-        regs = rng.integers(0, 2**min(width, 63), size=256, dtype=np.uint64)
-        data = bitops.pack_registers(regs, width)
-        assert len(data) == ((width * 256) + 7) >> 3
-        back = bitops.unpack_registers(data, width, 256)
-        assert np.array_equal(regs, back)
+    for width in [6, 7, 13, 28, 33, 57, 58, 59, 60, 61, 62, 63, 64]:
+        for B in (1, 5):
+            regs = rng.integers(0, 1 << width, size=(B, 256), dtype=np.uint64)
+            regs[-1, :3] = np.uint64((1 << width) - 1)
+            data = bitops.pack_registers(regs, width)
+            assert data.shape == (B, ((width * 256) + 7) >> 3)
+            back = bitops.unpack_registers(data, width, 256)
+            assert np.array_equal(regs, back), (width, B)
 
 
 def test_state_size_matches_reference_published_sizes():
@@ -196,14 +174,19 @@ def test_contribute_optimized_vs_literal_algorithm3(t, d, p):
         hist = int(rng.integers(0, 2**d)) if d > 0 else 0
         regs.append((u << d) | hist)
     regs = np.array(regs, dtype=np.uint64)
+    # several rows of one matrix: the pool, a shuffle and a resample of
+    # it, and a row of empty registers
+    rows = np.stack([regs, rng.permutation(regs), rng.choice(regs, len(regs)),
+                     np.zeros_like(regs)])
 
-    agg, b = contribute_vec(regs, t, d, p, want_b=True)
-    a_ref = 0
-    b_ref = [0] * 64
-    for r in regs.tolist():
-        a_ref = (a_ref + contribute_reference(r, b_ref, t, d, p)) & 0xFFFFFFFFFFFFFFFF
-    assert int(agg) == a_ref
-    assert b.tolist() == b_ref
+    agg, b = contribute_vec_batch(rows, t, d, p)
+    for i, row in enumerate(rows.tolist()):
+        a_ref = 0
+        b_ref = [0] * 64
+        for r in row:
+            a_ref = (a_ref + contribute_reference(r, b_ref, t, d, p)) & 0xFFFFFFFFFFFFFFFF
+        assert int(agg[i]) == a_ref, i
+        assert b[i].tolist() == b_ref, i
 
 
 @pytest.mark.parametrize("t,d,p", [(2, 20, 8), (2, 16, 6), (1, 9, 8), (0, 0, 10)])
@@ -434,27 +417,30 @@ def test_martingale_estimator_sequential():
     assert est2.distinct_count_estimate > 0
 
 
-def test_pack_registers_batch_matches_scalar():
-    """pack_registers_batch rows must be byte-identical to the scalar pack
-    for every width the specs use (serialize_batch's contract), including
-    non-multiple-of-8 widths and registers with all bits set."""
-    import numpy as np
+def test_pack_registers_matches_bit_expansion_oracle():
+    """pack_registers rows must equal a per-bit expansion of the registers
+    packed little-endian (the state layout) for every width, the 58-64 bit
+    spill widths included, at 0, 1 and many rows, with all-ones and zero
+    rows."""
 
-    from exaloglog_paper_spark.sketchlib import bitops
+    def oracle(row, width):
+        shifts = np.arange(width, dtype=np.uint64)
+        bits = ((row[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
+        packed = np.packbits(bits.ravel(), bitorder="little")
+        return packed[: (len(row) * width + 7) >> 3].tobytes()
 
     rng = np.random.default_rng(7)
-    for width in (6, 11, 26, 28, 32, 57, 63):
-        for m in (64, 256, 1024):
-            regs2d = rng.integers(
-                0, 1 << width, size=(9, m), dtype=np.uint64
-            )
-            regs2d[0] = (1 << width) - 1  # saturated row
-            regs2d[1] = 0
-            batch = bitops.pack_registers_batch(regs2d, width)
-            for i in range(len(regs2d)):
-                assert batch[i].tobytes() == bitops.pack_registers(
-                    regs2d[i], width
-                ), (width, m, i)
+    for width in (6, 11, 26, 28, 32, 57, 58, 63, 64):
+        for m in (4, 64, 256, 1024, 4096):
+            for B in (0, 1, 9):
+                regs2d = rng.integers(0, 1 << width, size=(B, m), dtype=np.uint64)
+                if B > 1:
+                    regs2d[0] = np.uint64((1 << width) - 1)  # saturated row
+                    regs2d[1] = 0
+                packed = bitops.pack_registers(regs2d, width)
+                assert packed.shape == (B, (m * width + 7) >> 3)
+                for i in range(B):
+                    assert packed[i].tobytes() == oracle(regs2d[i], width), (width, m, i)
 
 
 def test_exaloglog_spec_serialize_batch_matches_per_state():

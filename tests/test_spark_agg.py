@@ -186,7 +186,7 @@ def test_null_group_keys_form_their_own_group(spark):
 
 
 def test_finalize_batch_matches_per_row(spark, tdf):
-    """ExaLogLogSpec.finalize_batch (unpackbits + batched contribute +
+    """ExaLogLogSpec.finalize_batch (one unpack + batched contribute +
     vectorized ML solve) must match per-row deserialize+estimate exactly."""
     spec = ExaLogLogSpec(2, 20, 8)
     rows = sketch_agg(tdf, spec, token_array_values("tokens"), by=["source"]).collect()
@@ -200,6 +200,28 @@ def test_finalize_batch_matches_per_row(spark, tdf):
     want = {r.source: spec.finalize(spec.deserialize(bytes(r.sketch))) for r in rows}
     for k in want:
         assert abs(got[k] - want[k]) <= 1e-9 * max(1.0, abs(want[k]))
+
+
+@pytest.mark.parametrize("distributed", [False, True], ids=["local", "distributed"])
+def test_with_estimate_default_finalize_batch(spark, distributed):
+    """A spec without its own batched estimate (KLL) goes through
+    SketchSpec.finalize_batch on both with_estimate arms: the driver-local
+    one and the per-Arrow-batch UDF."""
+    from exaloglog_paper_spark.ops.agg import local_df
+    from exaloglog_paper_spark.ops.specs import KLLSpec
+
+    spec = KLLSpec(16)
+    rng = np.random.default_rng(11)
+    rows = [
+        (g, spec.serialize(spec.add(spec.empty(), rng.normal(g, 1.0, size=300))))
+        for g in range(5)
+    ]
+    df = local_df(spark, rows, "g long, sketch binary")
+    if distributed:
+        df = df.repartition(2)
+    assert df.isLocal() is not distributed
+    got = {r.g: r.estimate for r in with_estimate(df, spec).collect()}
+    assert got == {g: spec.finalize(spec.deserialize(s)) for g, s in rows}
 
 
 def test_read_tokens_parquet_and_iceberg_gating(spark):
