@@ -655,15 +655,18 @@ def sketch_partials(
     return _planned_partials(df, spec, extractor, by)[0]
 
 
-def _planned_partials(df, spec, extractor, by):
-    """:func:`sketch_partials` and its planned input partition count —
-    planning the scan once, for both the flush stamps and the tree."""
+def _planned_partials(df, spec, extractor, by, num_p=None):
+    """:func:`sketch_partials` and its input partition count — planning
+    the scan once, for both the flush stamps and the tree, and not at all
+    when the caller passes a count it already knows (planning a shuffle
+    under AQE runs it)."""
     by = list(by)
     cols = list(dict.fromkeys(by + list(extractor.input_cols)))
     df = df.select(*cols)  # column pruning reaches the scan
 
     schema = _by_schema(df, by) + PARTIAL_COLS
-    num_p = df.rdd.getNumPartitions()
+    if num_p is None:
+        num_p = df.rdd.getNumPartitions()
 
     def build(batches):
         yield from _build_partials_batches(
@@ -864,7 +867,7 @@ def sketch_agg_salted(
         .repartition(n_part, *(by + ["__salt"]))
         .drop("__salt")
     )
-    partials = sketch_partials(work, spec, extractor, by=by)
+    partials, _ = _planned_partials(work, spec, extractor, by, n_part)
     return tree_merge(partials, spec, by=by, num_partials=n_part)
 
 

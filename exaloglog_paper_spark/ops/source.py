@@ -11,8 +11,11 @@ column pruning (explicit ``columns=``) and row-group pruning (optional
 pyarrow ``filter``).
 
 This is the standard DataSourceV2-python-reader pattern expressed with the
-DataFrame API; the row-DataFrame path in ops/agg.py remains for inputs that
-are outputs of arbitrary Spark plans (joins, filters).
+DataFrame API: a JVM ``Range`` with one row per task drives a map-only
+stage (no shuffle), each task's id selects its splits from the driver's
+split table, and PySpark's UDF broadcast threshold ships a large split
+table as a broadcast. The row-DataFrame path in ops/agg.py remains for
+inputs that are outputs of arbitrary Spark plans (joins, filters).
 """
 
 from __future__ import annotations
@@ -73,8 +76,10 @@ def scan_partials(
     ``ops.checkpoints``). Returns ``(partials, num_partitions)``.
 
     ``splits`` is the full split list of ``path`` (listed here when None)
-    or a checkpoint bucket's subset. Each task reads its splits' ``by`` and
-    ``extractor.input_cols`` columns with pyarrow and feeds the batches to
+    or a checkpoint bucket's subset. A JVM ``Range`` of ``num_partitions``
+    ids, one per partition, drives a map-only stage: task ``i`` reads the
+    ``by`` and ``extractor.input_cols`` columns of the splits assigned to
+    it (round-robin by split index) with pyarrow and feeds the batches to
     the one stage-A builder, ``agg._build_partials_batches``, which yields
     partial rows in the ``by..., PARTIAL_COLS`` schema (``by`` types from
     the parquet footer).
@@ -85,7 +90,6 @@ def scan_partials(
     balance), floored at one wave over the cluster's cores so small
     inputs still use every core without extra waves of sub-second tasks.
     """
-    import pandas as pd
     import pyarrow.parquet as pq
 
     from .agg import _build_partials_batches, _by_schema_from_fields
@@ -106,32 +110,23 @@ def scan_partials(
             -(-total_bytes // _TARGET_SPLIT_BYTES),
         ),
     )
-    # The split list ships as an Arrow-backed LocalRelation (KB, JVM-side
-    # once) with a round-robin repartition: a Python-RDD source would
-    # chain a pickled-row deserialization step in front of every
-    # mapInArrow task. Round-robin assignment is deterministic
-    # (sortBeforeRepartition); split->task placement is free to differ,
-    # as every consumer is partitioning-invariant by the merge algebra.
-    sdf = spark.createDataFrame(
-        pd.DataFrame(splits, columns=["path", "row_group"]),
-        "path string, row_group int",
-    ).repartition(num_p)
+    # Task i reads tasks[i]: a deterministic round-robin over the split
+    # list. A JVM Range with one id per partition drives the tasks, so the
+    # build is the first and only stage (no Exchange, no LocalTableScan).
+    # The split table rides in the task closure; above
+    # spark.broadcast.UDFCompressionThreshold (1 MB, ~10^5 splits) PySpark
+    # ships that closure as a broadcast rather than inline with each task.
+    tasks = [[(p, [g]) for p, g in splits[i::num_p]] for i in range(num_p)]
 
     def run(batches):
-        # gather this task's splits (tiny), then stream its row groups
-        split_rows = [
-            (p, [g])
-            for b in batches
-            for p, g in zip(
-                b.column("path").to_pylist(), b.column("row_group").to_pylist()
-            )
-        ]
-        yield from _build_partials_batches(
-            batch_iterator(split_rows, cols), spec, extractor, by,
-            num_partitions=num_p,
-        )
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                yield from _build_partials_batches(
+                    batch_iterator(tasks[i], cols), spec, extractor, by,
+                    num_partitions=num_p,
+                )
 
-    return sdf.mapInArrow(run, schema=schema), num_p
+    return spark.range(0, num_p, 1, num_p).mapInArrow(run, schema=schema), num_p
 
 
 def scan_sketch_agg(

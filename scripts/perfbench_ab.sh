@@ -4,7 +4,9 @@
 #   scripts/perfbench_ab.sh <workload> <git-ref> <seed>...
 #   scripts/perfbench_ab.sh shard_append HEAD~ 1 2 3
 #
-# Exports <git-ref> with `git archive` into a temp dir and runs
+# Exports <git-ref> and the working tree (tracked and untracked files that
+# .gitignore does not exclude, committed or not) with `git archive` into a
+# temp dir, so both arms start from the same kind of fresh checkout, and runs
 # `perfbench/run.py --workload <workload> --seed <seed> --seconds 10 --trace 0`
 # once on each tree per seed. The arm that runs first alternates from one
 # pair to the next: on a shared box the second run of a pair reads slower,
@@ -23,8 +25,13 @@ shift 2
 root=$(git rev-parse --show-toplevel)
 tmp=$(mktemp -d "${TMPDIR:-/tmp}/perfbench_ab.XXXXXX")
 trap 'rm -rf "$tmp"' EXIT
-mkdir "$tmp/ref"
+mkdir "$tmp/ref" "$tmp/tree"
 git -C "$root" archive "$ref" | tar -x -C "$tmp/ref"
+# the working tree as a tree object, staged through a scratch index so the
+# repository's own index is left as it is
+cp "$(git -C "$root" rev-parse --path-format=absolute --git-path index)" "$tmp/index"
+GIT_INDEX_FILE="$tmp/index" git -C "$root" add -A
+git -C "$root" archive "$(GIT_INDEX_FILE="$tmp/index" git -C "$root" write-tree)" | tar -x -C "$tmp/tree"
 echo "ref=$ref ($(git -C "$root" rev-parse --short "$ref"))  tree=$root" >&2
 metrics=$(python3 -c 'import json, sys
 print(" ".join(m["name"] for m in json.load(open(sys.argv[1]))["end_to_end"]))' "$root/BENCHMARK.json")
@@ -53,8 +60,7 @@ pair=0
 for seed in "$@"; do
   if [ $((pair % 2)) -eq 0 ]; then order="ref tree"; else order="tree ref"; fi
   for arm in $order; do
-    if [ "$arm" = ref ]; then dir="$tmp/ref"; else dir="$root"; fi
-    run_arm "$arm" "$dir" "$pair" "$seed" | tee -a "$tmp/runs.tsv"
+    run_arm "$arm" "$tmp/$arm" "$pair" "$seed" | tee -a "$tmp/runs.tsv"
   done
   pair=$((pair + 1))
 done

@@ -408,3 +408,117 @@ def test_read_pq_schema_memo_sees_a_rewritten_table(spark, tmp_path):
     df = Q._read_pq(spark, path)
     assert df.columns == ["a", "b"]
     assert sorted(tuple(r) for r in df.collect()) == [(3, "x"), (4, "y")]
+
+
+def test_sketch_agg_salted_runs_no_job_while_building(spark):
+    """Building the salted aggregation's DataFrame runs no Spark job: its
+    shuffle partition count is known, so the repartition is not planned
+    (under AQE, planning it would run the shuffle)."""
+    from exaloglog_paper_spark.ops import tokens as tok
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, sketch_agg_salted, token_array_values
+
+    sc = spark.sparkContext
+    df = tok.token_table(spark, 200, num_partitions=2)
+    sc.setJobGroup("salted_build", "sketch_agg_salted construction")
+    try:
+        out = sketch_agg_salted(
+            df, ExaLogLogSpec(2, 20, 8), token_array_values("tokens"),
+            by=["source"], salt_col="doc_id", n_salts=4,
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("salted_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert {r.source for r in out.collect()} <= set(tok.SOURCES)
+
+
+@pytest.fixture(scope="module")
+def shard_table(tmp_path_factory):
+    """Four parquet files, one row group each, with a ``shard`` column."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from exaloglog_paper_spark.ops import tokens as tok
+
+    d = tmp_path_factory.mktemp("shard_table")
+    for f in range(4):
+        pdf = tok.generate_rows(np.arange(f * 50, f * 50 + 50, dtype=np.uint64))
+        pdf["shard"] = np.arange(len(pdf), dtype=np.int64) % 8
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), str(d / f"part-{f}.parquet"))
+    return str(d)
+
+
+def _assert_build_over_range(df, num_p):
+    """The stage-A build is the plan's first stage: MapInArrow directly over
+    a Range of one id per task, with no Exchange or LocalTableScan."""
+    lines = _plan(df, mode="simple").splitlines()
+    plan = "\n".join(lines)
+    i = next(i for i, ln in enumerate(lines) if "MapInArrow run(id" in ln)
+    assert f"Range (0, {num_p}, step=1, splits={num_p})" in lines[i + 1], plan
+    assert "Exchange" not in plan and "LocalTableScan" not in plan, plan
+
+
+def test_parquet_scan_build_has_no_shuffle(spark, shard_table, tmp_path, monkeypatch):
+    """Every parquet build's stage A — scan_partials by () and by shard,
+    over 4 splits and over 1, the profile's partials and a checkpoint
+    bucket — is MapInArrow over a JVM Range: no shuffle spreads the
+    split list in front of it."""
+    from exaloglog_paper_spark.ops import checkpoints
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, token_array_values
+    from exaloglog_paper_spark.ops.profile import _profile_spec, profile_values
+    from exaloglog_paper_spark.ops.source import list_row_group_splits, scan_partials
+
+    spec, ex = ExaLogLogSpec(2, 20, 8), token_array_values("tokens")
+    splits = list_row_group_splits(shard_table)
+    assert len(splits) == 4
+    for by in ([], ["shard"]):
+        for subset in (None, splits[:1]):
+            partials, num_p = scan_partials(spark, shard_table, spec, ex, by, splits=subset)
+            assert num_p == (1 if subset else min(4, spark.sparkContext.defaultParallelism))
+            _assert_build_over_range(partials, num_p)
+    partials, num_p = scan_partials(spark, shard_table, _profile_spec(), profile_values(), ["source"])
+    _assert_build_over_range(partials, num_p)
+
+    built = []
+    real = checkpoints.scan_partials
+
+    def spy(*args, **kwargs):
+        built.append(real(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(checkpoints, "scan_partials", spy)
+    checkpoints.checkpointed_partials(
+        spark, shard_table, str(tmp_path / "ck"), spec, ex, ["shard"], num_buckets=2
+    )
+    assert len(built) == 2
+    _assert_build_over_range(*built[0])
+
+
+def test_large_split_table_ships_as_broadcast(spark, shard_table, monkeypatch):
+    """A split table whose task closure passes PySpark's UDF broadcast
+    threshold (spark.broadcast.UDFCompressionThreshold, 1 MB) ships as one
+    broadcast rather than inline with every task; a small one stays inline.
+    Nothing here runs a job: the command is pickled when the DataFrame is
+    built."""
+    from pyspark import SparkContext
+
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, token_array_values
+    from exaloglog_paper_spark.ops.source import list_row_group_splits, scan_partials
+
+    sc = spark.sparkContext
+    threshold = sc._jvm.PythonUtils.getBroadcastThreshold(sc._jsc)
+    shipped = []
+    real = SparkContext.broadcast
+
+    def spy(self, value):
+        shipped.append(len(value))
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    spec, ex = ExaLogLogSpec(2, 20, 8), token_array_values("tokens")
+    path, _ = list_row_group_splits(shard_table)[0]
+    scan_partials(spark, shard_table, spec, ex, ["shard"], splits=[(path, 0)] * 4)
+    assert shipped == []
+    scan_partials(spark, shard_table, spec, ex, ["shard"], splits=[(path, 0)] * 200_000)
+    assert len(shipped) == 1 and shipped[0] > threshold, (shipped, threshold)

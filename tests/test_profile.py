@@ -57,23 +57,46 @@ def test_profile_matches_independent_builds(spark):
 
 
 def test_checkpointed_profile_resumes_byte_identically(spark, tmp_path):
-    """checkpointed_profile: uninterrupted vs crash-and-resume (one bucket
-    dir deleted) produce byte-identical states for ALL four sketches —
+    """On a table with more splits than scan tasks (each task reads several,
+    so split placement fixes the stream every MG/KLL state sees):
+    checkpointed_profile uninterrupted vs crash-and-resume (one bucket dir
+    deleted) produce byte-identical states for ALL four sketches —
     including the merge-order-dependent MG/KLL, thanks to tree_merge's
-    byte-order merge rule — and the register/linear states match the
-    direct one-pass build exactly."""
+    byte-order merge rule — scan_profile gives the same bytes on every
+    run, and the register/linear states match the direct one-pass build
+    exactly."""
     import shutil
 
-    from exaloglog_paper_spark.ops import tokens as tok
-    from exaloglog_paper_spark.ops.checkpoints import lineage_metrics
-    from exaloglog_paper_spark.ops.profile import checkpointed_profile
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    src = str(tmp_path / "cp_tokens")
-    tok.token_table(spark, 300, num_partitions=6).write.parquet(src)
+    from exaloglog_paper_spark.ops.checkpoints import lineage_metrics
+    from exaloglog_paper_spark.ops.profile import (
+        _profile_spec,
+        checkpointed_profile,
+        profile_values,
+        scan_profile,
+    )
+    from exaloglog_paper_spark.ops.source import list_row_group_splits, scan_partials
+
+    src = tmp_path / "cp_tokens"
+    src.mkdir()
+    n_splits = 3 * spark.sparkContext.defaultParallelism + 2
+    for f in range(2):
+        pdf = tok.generate_rows(np.arange(f * 200, f * 200 + 200, dtype=np.uint64))
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False),
+            str(src / f"part-{f}.parquet"),
+            row_group_size=-(-400 // n_splits),
+        )
+    src = str(src)
+    _, num_p = scan_partials(spark, src, _profile_spec(), profile_values(), ["source"])
+    # more splits than tasks, in each of two buckets too
+    assert num_p < len(list_row_group_splits(src)) // 2
     ck1 = str(tmp_path / "ck1")
     ck2 = str(tmp_path / "ck2")
 
-    full = checkpointed_profile(spark, src, ck1, num_buckets=4)
+    full = checkpointed_profile(spark, src, ck1, num_buckets=2)
     # lineage/metrics table is readable and carries one digest per
     # composite partial row
     from pyspark.sql import functions as F
@@ -83,26 +106,27 @@ def test_checkpointed_profile_resumes_byte_identically(spark, tmp_path):
     assert lm.filter(F.length("state_sha256") != 64).count() == 0
 
     # crash simulation: run, destroy one bucket, resume
-    checkpointed_profile(spark, src, ck2, num_buckets=4)
-    shutil.rmtree(str(tmp_path / "ck2" / "bucket=2"))
-    resumed = checkpointed_profile(spark, src, ck2, num_buckets=4)
+    checkpointed_profile(spark, src, ck2, num_buckets=2)
+    shutil.rmtree(str(tmp_path / "ck2" / "bucket=1"))
+    resumed = checkpointed_profile(spark, src, ck2, num_buckets=2)
 
-    ell_spec = ExaLogLogSpec(2, 20, 10)
-    cs_spec = CountSketchSpec(8192, 5)
-    profs_direct = profile_token_table(spark.read.parquet(src))
-    assert set(full) == set(resumed) == set(profs_direct)
-    for g in full:
-        a, b = full[g], resumed[g]
-        assert (a.n_docs, a.n_tokens) == (b.n_docs, b.n_tokens)
-        assert ell_spec.serialize(a.ell) == ell_spec.serialize(b.ell)
-        assert cs_spec.serialize(a.cs) == cs_spec.serialize(b.cs)
-        assert a.mg.serialize() == b.mg.serialize()
-        assert a.kll.serialize() == b.kll.serialize()
-        # partitioning-invariant states also equal the direct Spark build
-        d = profs_direct[g]
-        assert ell_spec.serialize(a.ell) == ell_spec.serialize(d.ell)
-        assert cs_spec.serialize(a.cs) == cs_spec.serialize(d.cs)
-        assert (d.n_docs, d.n_tokens) == (a.n_docs, a.n_tokens)
+    def blobs(profs):
+        return {
+            g: (p.n_docs, p.n_tokens, p.ell.serialize(), p.cs.serialize(),
+                p.mg.serialize(), p.kll.serialize())
+            for g, p in profs.items()
+        }
+
+    assert blobs(resumed) == blobs(full)
+    scanned = blobs(scan_profile(spark, src))
+    assert blobs(scan_profile(spark, src)) == scanned
+    # partitioning-invariant states and exact counts also equal the scan
+    # and the direct Spark build
+    def order_free(b):
+        return {g: v[:4] for g, v in b.items()}
+
+    direct = blobs(profile_token_table(spark.read.parquet(src)))
+    assert order_free(blobs(full)) == order_free(scanned) == order_free(direct)
 
 
 def test_scan_profile_matches_spark_scan_build(spark, tmp_path):
