@@ -36,6 +36,7 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType
@@ -288,7 +289,7 @@ def flat_list_values(batch, col: str) -> tuple[np.ndarray, np.ndarray]:
     off_arr = arr.offsets
     try:
         offsets = off_arr.to_numpy().astype(np.int64, copy=False)
-    except Exception:
+    except pa.ArrowInvalid:
         offsets = off_arr.to_numpy(zero_copy_only=False).astype(np.int64)
     flat = arr.values.to_numpy(zero_copy_only=False)
     flat = flat[offsets[0] : offsets[-1]]  # respect any slicing
@@ -452,8 +453,6 @@ def partial_batch(key_arrays: dict, sketches, counts, pid, secs):
     """One Arrow batch of partial rows (``by..., PARTIAL_COLS``) — the
     output format of every stage-A builder and merge level. ``pid`` and
     ``secs`` are one value for all rows or one per row."""
-    import pyarrow as pa
-
     n = len(sketches)
     return pa.record_batch(
         {
@@ -487,8 +486,6 @@ def _flush_bound(spec: "SketchSpec") -> int:
 def _group_codes(batch, by):
     """(int64 group code per row, code -> key tuple) of ``batch`` on
     ``by``; null keys form a group, as in Spark/SQL ``groupBy``."""
-    import pyarrow as pa
-
     if len(by) == 1:
         col = batch.column(by[0])
         if hasattr(col, "combine_chunks"):
@@ -505,7 +502,7 @@ def _group_codes(batch, by):
             # null-free -> zero-copy; zero_copy_only=False on this child
             # array is a ~40 ms/batch pathological conversion
             codes = idx.to_numpy().astype(np.int64, copy=False)
-        except Exception:
+        except pa.ArrowInvalid:
             codes = idx.to_numpy(zero_copy_only=False).astype(np.int64)
         return codes, lambda c: (uniques[c],)
     pdf = pa.Table.from_batches([batch]).select(by).to_pandas()
@@ -556,8 +553,6 @@ def _build_partials_batches(
     instead of funnelling them all into one (the fanin bound would
     otherwise break for groups present in every flush window).
     """
-    import pyarrow as pa
-
     by = list(by)
     if flush_groups is None and by:
         flush_groups = _flush_bound(spec)
@@ -697,8 +692,6 @@ def _merge_runs(batches, spec: SketchSpec, by, flush_groups: int | None = None):
     ``partition_id = __bucket``. Emitting every ``flush_groups`` groups
     (default :func:`_flush_bound`, as in stage A) bounds memory to one
     run's blobs plus one output chunk."""
-    import pyarrow as pa
-
     if flush_groups is None:
         flush_groups = _flush_bound(spec)
 
@@ -832,7 +825,9 @@ def sketch_agg(
     fanin: int = 64,
 ) -> DataFrame:
     """Full pipeline: partials -> tree merge. Returns one row per group with
-    columns ``by..., sketch, n_values, build_secs``."""
+    columns ``by..., sketch, n_values, build_secs``. With no ``by``,
+    ``tree_merge``'s driver fold runs the partials job while this
+    DataFrame is built, and the result is a one-row LocalRelation."""
     partials, num_p = _planned_partials(df, spec, extractor, by)
     return tree_merge(partials, spec, by=by, num_partials=num_p, fanin=fanin)
 

@@ -25,6 +25,13 @@ staying runnable on a plain filesystem:
 - **No jobs beyond the write**: each snapshot records its files' schema
   (as a parquet read infers it, every field nullable), so reads skip
   inference; older snapshots without one still read through inference.
+- **Small tables stay on the driver**: a snapshot of at most
+  ``_DRIVER_READ_BYTES`` (uncompressed) is read eagerly with pyarrow at
+  call time into a LocalRelation — estimating or collecting it runs no
+  Spark job, and a later ``expire_snapshots`` cannot break it. A larger
+  one is read lazily by a parquet scan, which fails if its files are
+  expired before an action runs. A commit merges through the parquet
+  scan either way.
 
 The sketch-state table is KB-per-group (MBs total even when the SOURCE
 data is 10^12 rows), so copy-on-write per commit — rewrite the merged
@@ -43,6 +50,7 @@ repo's distributed-deployment surface built on the same merge algebra
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -58,6 +66,15 @@ from pyspark.sql.types import StructField, StructType
 from .agg import tree_merge
 
 _STATE_COLS = ["sketch", "n_values", "build_secs"]
+
+# uncompressed snapshot bytes up to which read_snapshot_table reads on the
+# driver. Measured on local[4], read + with_estimate + collect: 512
+# ELL(2,20,10) states (1.8 MB) took 0.16 s on the driver vs 0.22 s by a
+# scan job, 1024 (3.7 MB) tied at 0.26 s, and 13000 (47 MB) took 3.4 vs
+# 1.1 s — the driver estimates on one thread what the scan's tasks
+# estimate in parallel. 32 profile composites (11 MB) still took 0.14 vs
+# 0.21 s. More cores move the tie lower.
+_DRIVER_READ_BYTES = 2 << 20
 
 
 def _meta_dir(table_dir: str) -> str:
@@ -105,20 +122,47 @@ def _resolve_snapshot(meta: dict, snapshot_id: int | None) -> dict:
     )
 
 
+def _scan(spark: SparkSession, table_dir: str, snap: dict) -> DataFrame:
+    """Lazy parquet scan of ``snap``'s files."""
+    reader = spark.read
+    if "schema" in snap:  # recorded at commit: no schema-inference job
+        reader = reader.schema(StructType.fromJson(snap["schema"]))
+    return reader.parquet(*[os.path.join(table_dir, rel) for rel in snap["manifest"]])
+
+
 def read_snapshot_table(
     spark: SparkSession, table_dir: str, snapshot_id: int | None = None
 ) -> DataFrame:
     """Current table state, or — time travel — the state as of
     ``snapshot_id``. The manifest names immutable dirs, so the read is
-    reproducible for as long as the snapshot isn't expired."""
+    reproducible for as long as the snapshot isn't expired.
+
+    Two arms, chosen by the row-group bytes the files' parquet footers
+    record before compression (no Spark job): at most
+    ``_DRIVER_READ_BYTES``, the files are read now by pyarrow into a
+    LocalRelation, so ``with_estimate`` and ``collect`` on it run no
+    Spark job; above it, a lazy parquet scan."""
     meta = current_metadata(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no committed snapshot under {table_dir}")
     snap = _resolve_snapshot(meta, snapshot_id)
-    reader = spark.read
-    if "schema" in snap:  # recorded at commit: no schema-inference job
-        reader = reader.schema(StructType.fromJson(snap["schema"]))
-    return reader.parquet(*[os.path.join(table_dir, rel) for rel in snap["manifest"]])
+    files = sorted(
+        f
+        for rel in snap["manifest"]
+        for f in glob.glob(os.path.join(table_dir, rel, "*.parquet"))
+    )
+    size = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        size += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    if not files or size > _DRIVER_READ_BYTES:
+        return _scan(spark, table_dir, snap)
+    # no partitioning: a `k=v` dir above the table is no column here, as
+    # it is none in the scan; with no recorded schema the Arrow files'
+    # own is the one a scan infers
+    table = pq.read_table(files, partitioning=None)
+    schema = StructType.fromJson(snap["schema"]) if "schema" in snap else None
+    return spark.createDataFrame(table, schema=schema)
 
 
 def merge_state_tables(
@@ -155,6 +199,10 @@ def update_snapshot_table(
     and writes the merged table as a fresh immutable data dir. Commit
     order: data dir → metadata json → atomic hint swap; a crash at any
     point leaves the previous snapshot intact and current.
+
+    Returns ``read_snapshot_table`` of the new snapshot: for a small table
+    that read runs on the driver before returning, also when the caller
+    drops the result.
     """
     by = list(by)
     t0 = time.monotonic()
@@ -166,9 +214,10 @@ def update_snapshot_table(
         next_v = 1
         operation = "append"
     else:
-        merged = merge_state_tables(
-            [read_snapshot_table(spark, table_dir), inc], spec, by=by
-        )
+        # the lazy scan: merging a LocalRelation runs one map task per
+        # core even for a few state rows, and was no faster
+        current = _scan(spark, table_dir, meta["snapshots"][-1])
+        merged = merge_state_tables([current, inc], spec, by=by)
         snaps = list(meta["snapshots"])
         next_v = meta["version"] + 1
         operation = "overwrite"  # COW: the new snapshot replaces all state rows
@@ -208,7 +257,7 @@ def update_snapshot_table(
     with open(tmp, "w") as f:
         f.write(str(next_v))
     os.replace(tmp, _hint_path(table_dir))  # THE commit point (atomic)
-    return spark.read.schema(schema).parquet(data_dir)
+    return read_snapshot_table(spark, table_dir, snap_id)
 
 
 def expire_snapshots(table_dir: str, keep: int = 2) -> list[int]:

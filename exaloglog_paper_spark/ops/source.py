@@ -141,7 +141,9 @@ def scan_sketch_agg(
 
     Equivalent result (byte-identical states) to
     ``sketch_agg(spark.read.parquet(path), ...)`` — asserted in tests — at a
-    fraction of the transfer cost for array columns.
+    fraction of the transfer cost for array columns. With no ``by``,
+    ``tree_merge``'s driver fold runs the scan job while this DataFrame is
+    built, and the result is a one-row LocalRelation.
     """
     from .agg import tree_merge
 

@@ -31,6 +31,11 @@ def norm(v):
 
 def main():
     only = sys.argv[1:] or None
+    # session.py's local[32] and 48g heap suit the benchmark host; on a
+    # small box they let the JVM outgrow its RAM mid-run, so cap both
+    # unless the caller set them (as tests/conftest.py does)
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark(app_name="oracle-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:

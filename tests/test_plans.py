@@ -111,15 +111,27 @@ def test_jaccard_wordset_agg_is_candidate_pruned(spark):
     full-corpus word table is never shuffled or cached for verification.
     r6: the verification stage eagerly checkpoints its intermediates (plan
     truncation), which hides this subplan from the final explain — so the
-    pin targets the named helper jaccard_verified_pairs routes through."""
+    pin targets the named helper jaccard_verified_pairs routes through.
+    Its candidate ids are built as jaccard_verified_pairs builds them (the
+    union+distinct of both pair columns over checkpointed LSH candidates):
+    Catalyst over-estimates that side, so without the explicit broadcast
+    hint this plans a SortMergeJoin and the pin fails."""
+    from pyspark.sql import functions as F
+
     from exaloglog_paper_spark.ops import dedup
 
     words = Q._words(spark, SF_DIR)
-    cand_ids = words.sparkSession.range(50).selectExpr("id AS doc_id")
+    cands = dedup.lsh_candidate_pairs(dedup.minhash_signatures(words))
+    cands = cands.localCheckpoint(eager=True)
+    cand_ids = (
+        cands.select(F.col("id_a").alias("doc_id"))
+        .unionByName(cands.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
     plan = _plan(dedup._candidate_word_sets(words, cand_ids, "doc_id", "word"))
     assert "LeftSemi" in plan, plan
     # and the prune is a broadcast, not a full shuffle of the word table
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
     # the wiring pin: jaccard_verified_pairs' ws really is this helper's
     # output (source-level, cheap, survives the checkpoint boundary)
     import inspect

@@ -2,17 +2,20 @@
 COW merges, time travel against immutable manifests, atomic-commit crash
 safety (only the version hint is trusted), lineage metrics, and expiry."""
 
+import contextlib
+import io
 import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from exaloglog_paper_spark.ops import tokens as tok
+from exaloglog_paper_spark.ops import snapshot_table, tokens as tok
 from exaloglog_paper_spark.ops.agg import (
     ExaLogLogSpec,
     sketch_agg,
     token_array_values,
+    with_estimate,
 )
 from exaloglog_paper_spark.ops.snapshot_table import (
     current_metadata,
@@ -246,6 +249,13 @@ def test_empty_table_reads_raise(spark, tmp_path):
     assert snapshot_history(str(tmp_path / "nope")) == []
 
 
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
 def _jobs_in(spark, fn):
     """(fn(), number of Spark jobs it ran), counted in a fresh job group."""
     sc = spark.sparkContext
@@ -280,9 +290,86 @@ def test_commit_records_schema_and_exact_summary(spark, tdf, tmp_path):
     assert _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))[1] == 0
 
 
-def test_snapshot_without_recorded_schema_still_reads(spark, tdf, tmp_path):
-    """Metadata written before schemas were recorded reads through
-    inference (which runs a job) to the same rows and schema."""
+def _rows(df):
+    """Every row, sketches as bytes, in a stable order."""
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_small_snapshot_reads_and_estimates_on_the_driver(spark, tdf, tmp_path):
+    """A table under the byte bound is a LocalRelation: read + estimate +
+    collect runs no Spark job, and the estimates are the scan's."""
+    tdir = str(tmp_path / "snap")
+    for p in _thirds(tdf):
+        _commit(spark, tdir, p)
+
+    rows, jobs = _jobs_in(
+        spark, lambda: with_estimate(read_snapshot_table(spark, tdir), SPEC).collect()
+    )
+    assert jobs == 0
+    scanned = spark.read.parquet(
+        os.path.join(tdir, *snapshot_history(tdir)[-1]["manifest"])
+    )
+    assert {r.source: r.estimate for r in rows} == {
+        r.source: r.estimate for r in with_estimate(scanned, SPEC).collect()
+    }
+
+
+def test_snapshot_above_byte_bound_plans_parquet_scan(spark, tdf, tmp_path, monkeypatch):
+    """Above the bound the read stays a lazy parquet scan; both arms give
+    the same schema and byte-identical rows, also under a ``k=v`` dir that
+    neither arm reads as a partition column."""
+    tdir = str(tmp_path / "day=1" / "snap")
+    for p in _thirds(tdf):
+        _commit(spark, tdir, p)
+
+    small = read_snapshot_table(spark, tdir)
+    monkeypatch.setattr(snapshot_table, "_DRIVER_READ_BYTES", 0)
+    large = read_snapshot_table(spark, tdir)
+    assert small.isLocal() and "FileScan parquet" not in _plan(small)
+    assert not large.isLocal() and "FileScan parquet" in _plan(large)
+    assert small.schema == large.schema
+    assert _rows(small) == _rows(large)
+
+
+def test_byte_bound_counts_uncompressed_bytes(spark, tdf, tmp_path, monkeypatch):
+    """The bound is on the bytes a driver read holds, not on file sizes:
+    per-document states are mostly empty registers that parquet
+    compresses many-fold, so a bound their files fit in still reads
+    them by a scan."""
+    tdir = str(tmp_path / "snap")
+    _commit(spark, tdir, tdf, by=("doc_id",))
+    (rel,) = snapshot_history(tdir)[-1]["manifest"]
+    data = os.path.join(tdir, rel)
+    disk = sum(
+        os.path.getsize(os.path.join(data, f))
+        for f in os.listdir(data)
+        if f.endswith(".parquet")
+    )
+
+    monkeypatch.setattr(snapshot_table, "_DRIVER_READ_BYTES", 2 * disk)
+    assert not read_snapshot_table(spark, tdir).isLocal()
+    monkeypatch.setattr(snapshot_table, "_DRIVER_READ_BYTES", 100 * disk)
+    assert read_snapshot_table(spark, tdir).isLocal()
+
+
+def test_commit_returns_the_snapshot_read(spark, tdf, tmp_path):
+    """``update_snapshot_table`` returns what ``read_snapshot_table``
+    reads for the snapshot it committed."""
+    tdir = str(tmp_path / "snap")
+    for p in _thirds(tdf):
+        out = _commit(spark, tdir, p)
+        snap = read_snapshot_table(spark, tdir)
+        assert out.schema == snap.schema
+        assert _rows(out) == _rows(snap)
+
+
+def test_snapshot_without_recorded_schema_still_reads(spark, tdf, tmp_path, monkeypatch):
+    """Metadata written before schemas were recorded reads to the same rows
+    and schema on both arms: the driver arm takes the Arrow files' own
+    schema, and the parquet scan infers it (which runs a job)."""
     tdir = str(tmp_path / "snap")
     _commit(spark, tdir, tdf)
     recorded = read_snapshot_table(spark, tdir)
@@ -293,7 +380,12 @@ def test_snapshot_without_recorded_schema_still_reads(spark, tdf, tmp_path):
     with open(path, "w") as f:
         json.dump(meta, f)
 
-    table, jobs = _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))
+    small, jobs = _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))
+    assert jobs == 0
+    with monkeypatch.context() as m:
+        m.setattr(snapshot_table, "_DRIVER_READ_BYTES", 0)
+        large, jobs = _jobs_in(spark, lambda: read_snapshot_table(spark, tdir))
     assert jobs >= 1
-    assert table.schema == recorded.schema
-    assert _states(table) == _states(recorded)
+    for table in (small, large):
+        assert table.schema == recorded.schema
+        assert _rows(table) == _rows(recorded)
