@@ -1,30 +1,15 @@
-"""Monte-Carlo estimation-error simulation as a Spark pipeline.
+"""Token-stream estimator error simulation as a Spark pipeline.
 
-Two generations live here and in ``replay.py``:
-
-- ``replay.simulate_errors_full`` (experiments/replay.py) is the
-  REFERENCE-FIDELITY pipeline — full 961-rung ladder to 1e21, exact
-  inserts to 1e6, ML + martingale columns, 10-column CSV parity. It is
-  what regenerates ``artifacts/estimation-error-*.csv``.
-- the functions below are the lighter general-purpose harness (arbitrary
-  ladders, ML-only summaries) kept for quick statistical acceptance tests,
-  plus the TOKEN-stream error simulation at reference fidelity.
-
-The Spark-native equivalent of the reference's headline experiment
-(``ExaLogLogEstimationErrorSimulation.java:84-233``): fan out seeded cycles
-(there: ForkJoinPool + ThreadLocal; here: ``spark.range(cycles)`` +
-``mapInPandas``), per cycle walk a geometric cardinality ladder recording
-the ML estimate at each rung, then aggregate per-rung moments with plain
-Spark SQL (bias = mean(err), rmse = sqrt(mean(err²)), both relative —
-≙ TestUtils.calculateBias/calculateRmse) and compare with the theoretical
-RSE ``C_ml[t][d]/√2^p``.
-
-Rungs up to ``exact_limit`` are built by exact incremental inserts from a
-per-cycle splitmix64 stream; larger rungs use transition replay
-(sketchlib/simulate.generate_transitions ≙ TestUtils.java:134-153): one
-sampled first-hit cardinality per (update value, register) reconstructs the
-state at any rung with exact within-cycle continuity — the same technique
-the reference uses to reach 1e21 without 1e21 inserts.
+The sketch error simulation (the reference's headline experiment,
+``ExaLogLogEstimationErrorSimulation.java:84-233``) lives in
+``replay.simulate_errors_full`` (experiments/replay.py); it regenerates
+``artifacts/estimation-error-*.csv``. This module holds its token-stream
+counterpart (``TokenEstimationErrorSimulation.java:71-233``): cycles fan
+out as ``spark.range(cycles)`` + ``mapInPandas`` (there: ForkJoinPool +
+ThreadLocal), each cycle records the estimator's relative error at every
+ladder rung, and per-rung moments are plain Spark SQL aggregates
+(bias = mean(err), rmse = sqrt(mean(err²)) ≙ TestUtils.calculateBias/
+calculateRmse).
 """
 
 from __future__ import annotations
@@ -34,79 +19,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sketchlib.bitops import splitmix64_stream
-from ..sketchlib.constants import theoretical_rse_ml
-from ..sketchlib.exaloglog import ExaLogLog
-from ..sketchlib.simulate import generate_transitions, state_at_cardinality
-
-
-def geometric_ladder(max_n: float, ratio: float = 1.6, min_n: int = 1) -> list[float]:
-    """Geometric grid of target cardinalities (≙ TestUtils.java:54-77)."""
-    rungs = [float(max_n)]
-    while rungs[-1] / ratio >= min_n:
-        rungs.append(rungs[-1] / ratio)
-    out = sorted(set(round(r) if r < 1e15 else r for r in rungs))
-    return [float(r) for r in out if r >= min_n]
-
-
-def simulate_errors(
-    spark: SparkSession,
-    t: int = 2,
-    d: int = 20,
-    p: int = 8,
-    num_cycles: int = 1000,
-    ladder: list[float] | None = None,
-    seed: int = 42,
-    exact_limit: float = 100_000.0,
-) -> DataFrame:
-    """Returns (rung double, err double) — one row per cycle x rung."""
-    if ladder is None:
-        ladder = geometric_ladder(100_000)
-    ladder = sorted(ladder)
-
-    def run(iterator):
-        for pdf in iterator:
-            rows_rung, rows_err, rows_iters = [], [], []
-            for cycle in pdf["id"].tolist():
-                rng = np.random.default_rng((seed << 20) ^ cycle)
-                # per-cycle hash seed must be decorrelated: consecutive-int
-                # seeds would make cycles' hash sets near-identical shifted
-                # copies of one stream (correlated errors across cycles)
-                cycle_seed = int(
-                    splitmix64_stream((seed << 32) | 0x5EED, 1, offset=cycle)[0]
-                )
-                sk = ExaLogLog.create(t, d, p)
-                inserted = 0
-                transitions = None
-                for n in ladder:
-                    st = {}
-                    if n <= exact_limit and float(n).is_integer():
-                        todo = int(n) - inserted
-                        if todo > 0:
-                            h = splitmix64_stream(cycle_seed, todo, offset=inserted)
-                            sk.add_hashes(h)
-                            inserted = int(n)
-                        est = sk.estimate(stats=st)
-                    else:
-                        if transitions is None:
-                            transitions = generate_transitions(t, d, p, rng)
-                        est = state_at_cardinality(transitions, n, t, d, p).estimate(stats=st)
-                    rows_rung.append(float(n))
-                    rows_err.append(est / n - 1.0)
-                    rows_iters.append(st.get("iterations", 0))
-            yield pd.DataFrame(
-                {"rung": rows_rung, "err": rows_err, "iters": rows_iters}
-            )
-
-    par = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, num_cycles, 1, par).mapInPandas(
-        run, "rung double, err double, iters long"
-    )
 
 
 def _moment_summary(errors: DataFrame) -> DataFrame:
-    """Shared per-rung moments + solver stats (reference CSV cols 8-10,
-    ExaLogLogEstimationErrorSimulation.java:153-159,187-197) — ONE
-    definition for both the sketch and the token error CSVs."""
+    """Per-rung moments + solver stats of (rung, err, iters) rows
+    (reference CSV cols 8-10, ExaLogLogEstimationErrorSimulation.java:
+    153-159,187-197)."""
     return (
         errors.groupBy("rung")
         .agg(
@@ -119,48 +37,6 @@ def _moment_summary(errors: DataFrame) -> DataFrame:
         )
         .orderBy("rung")
     )
-
-
-def error_summary(errors: DataFrame, t: int, d: int, p: int) -> DataFrame:
-    """Per-rung moments vs the published bound (plain Spark aggregates)."""
-    rse = theoretical_rse_ml(t, d, p)
-    return (
-        _moment_summary(errors)
-        .withColumn("rse_theory", F.lit(rse))
-        .withColumn("rmse_over_rse", F.col("rmse") / F.lit(rse))
-        .orderBy("rung")
-    )
-
-
-def write_reference_style_csv(summary_pdf: pd.DataFrame, path: str, t: int, d: int, p: int) -> None:
-    """Semicolon-CSV with a key=value metadata header line — the reference's
-    result-table contract (≙ ExaLogLogEstimationErrorSimulation.java:172-233)."""
-    with open(path, "w") as f:
-        f.write(
-            f"sketch_name=ExaLogLog; t={t}; d={d}; p={p}; "
-            f"theoretical_rse={theoretical_rse_ml(t, d, p)}\n"
-        )
-        cols = [
-            "rung",
-            "cycles",
-            "bias",
-            "rmse",
-            "rse_theory",
-            "rmse_over_rse",
-            "min_iterations",
-            "mean_iterations",
-            "max_iterations",
-        ]
-        f.write(";".join(cols) + "\n")
-        for _, r in summary_pdf.iterrows():
-            f.write(";".join(repr(float(r[c])) for c in cols) + "\n")
-
-
-# ---------------------------------------------------------------------------
-# token-stream estimator error simulation
-# (≙ TokenEstimationErrorSimulation.java:71-233; CSV format of
-#  results/error/token-estimation-error-{v}.csv)
-# ---------------------------------------------------------------------------
 
 
 def reference_token_ladder(max_n: int = 100_000, rel: float = 0.05) -> list[float]:

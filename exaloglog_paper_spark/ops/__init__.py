@@ -22,7 +22,7 @@ def approx_distinct_tokens(
 
     spec = ExaLogLogSpec(t, d, p)
     out = sketch_agg(df, spec, token_array_values(token_col), by=by)
-    return with_estimate(out, spec).drop("sketch", "build_secs")
+    return with_estimate(out, spec).drop("sketch")
 
 
 def approx_distinct(
@@ -37,7 +37,7 @@ def approx_distinct(
     spec = ExaLogLogSpec(t, d, p)
     work = df.select(*by, F.xxhash64(col).alias("__h"))
     out = sketch_agg(work, spec, hash64_values("__h"), by=list(by))
-    return with_estimate(out, spec).drop("sketch", "build_secs")
+    return with_estimate(out, spec).drop("sketch")
 
 
 def approx_quantiles(df, col: str, quantiles: Sequence[float], k: int = 200):

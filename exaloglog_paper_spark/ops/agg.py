@@ -31,7 +31,6 @@ from __future__ import annotations
 import abc
 import itertools
 import struct
-import time
 from typing import Sequence
 
 import numpy as np
@@ -396,7 +395,7 @@ class float_values(Extractor):
 # ---------------------------------------------------------------------------
 
 
-PARTIAL_COLS = "sketch binary, n_values long, partition_id long, build_secs double"
+PARTIAL_COLS = "sketch binary, n_values long, partition_id long"
 
 
 def local_df(spark, rows, schema: str) -> DataFrame:
@@ -449,10 +448,10 @@ def _by_schema_from_fields(fields) -> str:
     return "".join(parts) + PARTIAL_COLS
 
 
-def partial_batch(key_arrays: dict, sketches, counts, pid, secs):
+def partial_batch(key_arrays: dict, sketches, counts, pid):
     """One Arrow batch of partial rows (``by..., PARTIAL_COLS``) — the
-    output format of every stage-A builder and merge level. ``pid`` and
-    ``secs`` are one value for all rows or one per row."""
+    output format of every stage-A builder and merge level. ``pid`` is one
+    value for all rows or one per row."""
     n = len(sketches)
     return pa.record_batch(
         {
@@ -460,7 +459,6 @@ def partial_batch(key_arrays: dict, sketches, counts, pid, secs):
             "sketch": pa.array(sketches, pa.binary()),
             "n_values": pa.array(counts, pa.int64()),
             "partition_id": pa.array(np.broadcast_to(pid, n), pa.int64()),
-            "build_secs": pa.array(np.broadcast_to(secs, n), pa.float64()),
         }
     )
 
@@ -559,17 +557,15 @@ def _build_partials_batches(
     states: dict = {}
     counts: dict = {}
     key_fields = None
-    t0 = time.monotonic()
     n_emits = 0
     stride = num_partitions or 65536
 
     def emit():
-        nonlocal states, counts, t0, n_emits
+        nonlocal states, counts, n_emits
         tc = TaskContext.get()
         base_pid = tc.partitionId() if tc is not None else 0
         pid = base_pid + stride * n_emits
         n_emits += 1
-        secs = time.monotonic() - t0
         keys = list(states)
         out = partial_batch(
             {
@@ -579,10 +575,8 @@ def _build_partials_batches(
             spec.serialize_batch([states[k] for k in keys]),
             [counts[k] for k in keys],
             pid,
-            secs,
         )
         states, counts = {}, {}
-        t0 = time.monotonic()
         return out
 
     for batch in batches:
@@ -643,9 +637,9 @@ def sketch_partials(
     the key column and one stable row sort (all vectorized; see
     :func:`_build_partials_batches`).
 
-    Output schema: ``by..., sketch binary, n_values long, partition_id long,
-    build_secs double`` — the metrics columns double as per-partition lineage
-    (see ops/checkpoints.py).
+    Output schema: ``by..., sketch binary, n_values long, partition_id
+    long`` — the metrics columns double as per-partition lineage (see
+    ops/checkpoints.py).
     """
     return _planned_partials(df, spec, extractor, by)[0]
 
@@ -688,7 +682,7 @@ _NAN = float("nan")
 def _merge_runs(batches, spec: SketchSpec, by, flush_groups: int | None = None):
     """Merge-level task body: ``batches`` arrive sorted on (by, __bucket)
     and each run of equal keys (runs may span batches) becomes one partial
-    row — states merged in byte order, ``n_values``/``build_secs`` summed,
+    row — states merged in byte order, ``n_values`` summed,
     ``partition_id = __bucket``. Emitting every ``flush_groups`` groups
     (default :func:`_flush_bound`, as in stage A) bounds memory to one
     run's blobs plus one output chunk."""
@@ -696,27 +690,27 @@ def _merge_runs(batches, spec: SketchSpec, by, flush_groups: int | None = None):
         flush_groups = _flush_bound(spec)
 
     gcols = [*by, "__bucket"]
-    names = (*gcols, "sketch", "n_values", "build_secs")
+    names = (*gcols, "sketch", "n_values")
     types, out = [], []
 
     def rows():
         for batch in batches:
             types[:] = [batch.schema.field(c).type for c in gcols]
-            for *key, blob, n, secs in zip(*(batch.column(c).to_pylist() for c in names)):
-                yield tuple(_NAN if k != k else k for k in key), blob, n, secs
+            for *key, blob, n in zip(*(batch.column(c).to_pylist() for c in names)):
+                yield tuple(_NAN if k != k else k for k in key), blob, n
 
     def emit():
-        keys, states, counts, secs = zip(*out)
+        keys, states, counts = zip(*out)
         out.clear()
         return partial_batch(
             {c: pa.array([k[i] for k in keys], types[i]) for i, c in enumerate(by)},
-            spec.serialize_batch(states), counts, [k[-1] for k in keys], secs,
+            spec.serialize_batch(states), counts, [k[-1] for k in keys],
         )
 
     for key, run in itertools.groupby(rows(), key=lambda r: r[0]):
         run = list(run)
         st = _merge_sorted(spec, [r[1] for r in run])
-        out.append((key, st, sum(r[2] for r in run), sum(r[3] for r in run)))
+        out.append((key, st, sum(r[2] for r in run)))
         if len(out) >= flush_groups:
             yield emit()
     if out:
@@ -730,9 +724,7 @@ def _merge_level(
     coalesces the task count — then sort and ``_merge_runs`` each task."""
     by = list(by)
     gcols = by + ["__bucket"]
-    lvl = partials.select(
-        *by, "sketch", "n_values", "build_secs", bucket_expr.alias("__bucket")
-    )
+    lvl = partials.select(*by, "sketch", "n_values", bucket_expr.alias("__bucket"))
 
     def merge_runs(batches):
         return _merge_runs(batches, spec, by)
@@ -786,23 +778,25 @@ def tree_merge(
     byte-identity test).
     """
     by = list(by)
+    # partials written before build_secs was dropped (checkpoint buckets)
+    # still carry it; projecting here keeps the seed union below valid
+    partials = partials.select(*by, "sketch", "n_values", "partition_id")
     if not by:
         if num_partials is not None and num_partials <= _DRIVER_FOLD_MAX_PARTIALS:
             rows = partials.collect()
             st = _merge_sorted(spec, (r.sketch for r in rows))
             n = sum(int(r.n_values) for r in rows)
-            secs = float(sum(float(r.build_secs) for r in rows))
             return local_df(
                 partials.sparkSession,
-                [(spec.serialize(st), n, secs)],
-                "sketch binary, n_values long, build_secs double",
+                [(spec.serialize(st), n)],
+                "sketch binary, n_values long",
             )
         # guarantee one output row even when the input plan is empty
         # (Catalyst may prune the scan to an empty relation, so stage A
         # never runs); merging the seed empty state is an identity
         seed = local_df(
             partials.sparkSession,
-            [(spec.serialize(spec.empty()), 0, 0, 0.0)],
+            [(spec.serialize(spec.empty()), 0, 0)],
             PARTIAL_COLS,
         )
         partials = partials.unionByName(seed)
@@ -825,7 +819,7 @@ def sketch_agg(
     fanin: int = 64,
 ) -> DataFrame:
     """Full pipeline: partials -> tree merge. Returns one row per group with
-    columns ``by..., sketch, n_values, build_secs``. With no ``by``,
+    columns ``by..., sketch, n_values``. With no ``by``,
     ``tree_merge``'s driver fold runs the partials job while this
     DataFrame is built, and the result is a one-row LocalRelation."""
     partials, num_p = _planned_partials(df, spec, extractor, by)

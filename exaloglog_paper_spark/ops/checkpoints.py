@@ -8,7 +8,7 @@ resumable with per-partition lineage + metrics. Design:
   minutes of work on the target cluster.
 - Each completed bucket writes its partial-sketch rows to
   ``<ckpt_dir>/bucket=<i>/`` (parquet, with Spark's ``_SUCCESS`` marker) —
-  the rows carry (group keys, sketch, n_values, partition_id, build_secs)
+  the rows carry (group keys, sketch, n_values, partition_id)
   plus a sha256 state digest: that parquet IS the lineage/metrics table.
 - On rerun, completed buckets are detected by their ``_SUCCESS`` marker and
   skipped; only missing buckets are recomputed. The final tree merge reads
@@ -141,5 +141,5 @@ def checkpointed_sketch_agg(
 
 def lineage_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     """The lineage/metrics table: one row per (bucket partition × group) with
-    n_values, build_secs, and the sha256 state digest."""
+    n_values and the sha256 state digest."""
     return spark.read.option("basePath", ckpt_dir).parquet(ckpt_dir + "/bucket=*")

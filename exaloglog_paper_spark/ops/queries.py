@@ -27,6 +27,7 @@ from .agg import (
     hash64_values,
     sketch_agg,
     token_array_values,
+    tree_merge,
     with_estimate,
 )
 from . import tokens as tok
@@ -343,6 +344,23 @@ def hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sliding_window_states(hour_states: DataFrame, spec) -> DataFrame:
+    """One merged state per 24-hour sliding window (1-hour step): each
+    hour state fans out to the 24 windows that cover it, stamped with its
+    offset ``k`` as the partial's partition id, and ``tree_merge`` folds
+    each window's states in byte order."""
+    fanned = hour_states.select(
+        "hour", "sketch", "n_values",
+        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"),
+    ).select(
+        F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"),
+        "sketch",
+        "n_values",
+        F.col("k").cast("long").alias("partition_id"),
+    )
+    return tree_merge(fanned, spec, by=["window_start"], num_partials=24)
+
+
 def sliding_window_distinct_users_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24-hour sliding windows (1-hour step) of distinct users over the
     events table, estimated by MERGING per-hour ExaLogLog states instead of
@@ -360,8 +378,6 @@ def sliding_window_distinct_users_bound(spark: SparkSession, sf_dir: str) -> Dat
     oracle) computes the row-explode form for verification; the oracle
     asserts the estimate is within 5·RSE of the exact count per window.
     """
-    from .agg import tree_merge
-
     spec = ExaLogLogSpec(2, 20, 10)
     bound = 5 * spec.theoretical_rse()
     ev = (
@@ -377,22 +393,7 @@ def sliding_window_distinct_users_bound(spark: SparkSession, sf_dir: str) -> Dat
         .withColumn("h", F.xxhash64("user_id"))
     )
     hour_states = sketch_agg(ev, spec, hash64_values("h"), by=["hour"])
-    fanned = (
-        hour_states.select(
-            "hour", "sketch", "n_values", "build_secs",
-            F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"),
-        )
-        .select(
-            F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"),
-            "sketch",
-            "n_values",
-            F.col("k").cast("long").alias("partition_id"),
-            "build_secs",
-        )
-    )
-    est = with_estimate(
-        tree_merge(fanned, spec, by=["window_start"], num_partials=24), spec
-    )
+    est = with_estimate(_sliding_window_states(hour_states, spec), spec)
     exact = (
         ev.select("hour", "user_id", F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"))
         .select(F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"), "user_id")
@@ -2459,7 +2460,7 @@ def sliding_window_heavy_users_bound(spark: SparkSession, sf_dir: str) -> DataFr
     24x overlap factor; the state-fanout path shuffles 24 KB-rows per
     hour regardless of event volume (exact side = verification only).
     """
-    from .agg import id64_values, tree_merge
+    from .agg import id64_values
     from .specs import MisraGriesSpec
 
     spec = MisraGriesSpec(k=64)
@@ -2478,24 +2479,9 @@ def sliding_window_heavy_users_bound(spark: SparkSession, sf_dir: str) -> DataFr
         .persist()
     )
     hour_states = sketch_agg(ev, spec, id64_values("uid"), by=["hour"])
-    fanned = (
-        hour_states.select(
-            "hour", "sketch", "n_values", "build_secs",
-            F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"),
-        )
-        .select(
-            F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"),
-            "sketch",
-            "n_values",
-            F.col("k").cast("long").alias("partition_id"),
-            "build_secs",
-        )
-    )
     window_states = {
         r.window_start: spec.deserialize(bytes(r.sketch))
-        for r in tree_merge(
-            fanned, spec, by=["window_start"], num_partials=24
-        ).collect()
+        for r in _sliding_window_states(hour_states, spec).collect()
     }
 
     from pyspark.sql.window import Window

@@ -32,9 +32,8 @@ def rollup_level(
     partials = fine.select(
         *keep, "sketch", "n_values",
         F.lit(0).cast("long").alias("partition_id"),
-        F.lit(0.0).alias("build_secs"),
     )
-    return tree_merge(partials, spec, by=keep).drop("build_secs")
+    return tree_merge(partials, spec, by=keep)
 
 
 def _pad_union(fine: DataFrame, all_keys: Sequence[str], levels, tag: str) -> DataFrame:

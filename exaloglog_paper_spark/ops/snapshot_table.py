@@ -50,6 +50,7 @@ repo's distributed-deployment surface built on the same merge algebra
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -65,7 +66,7 @@ from pyspark.sql.types import StructField, StructType
 
 from .agg import tree_merge
 
-_STATE_COLS = ["sketch", "n_values", "build_secs"]
+_STATE_COLS = ["sketch", "n_values"]
 
 # uncompressed snapshot bytes up to which read_snapshot_table reads on the
 # driver. Measured on local[4], read + with_estimate + collect: 512
@@ -168,19 +169,24 @@ def read_snapshot_table(
 def merge_state_tables(
     states: Sequence[DataFrame], spec, by: Sequence[str] = (), fanin: int = 64
 ) -> DataFrame:
-    """Merge several (by..., sketch, n_values, build_secs) state tables into
-    one row per group. Inputs are state rows (KB each), so this is a
-    shuffle of sketch states on the group key — never of raw data."""
+    """Merge several (by..., sketch, n_values) state tables into one row
+    per group. Inputs are state rows (KB each), so this is a shuffle of
+    sketch states on the group key — never of raw data. Each input is
+    projected to those columns, so snapshots committed with the former
+    ``build_secs`` column merge with newer ones."""
     by = list(by)
     # tree_merge wants a DISTINCT partition stamp per planned partial: stamp
     # each input table with its ordinal so the pmod bucketing spreads states
     # across first-level reducers even for > fanin input tables (multi-day
     # backfills) — a constant stamp would funnel every state into one bucket
-    cols = states[0].columns
-    stamped = states[0].withColumn("partition_id", F.lit(0))
-    for i, s in enumerate(states[1:], start=1):
-        stamped = stamped.unionByName(s.select(cols).withColumn("partition_id", F.lit(i)))
-    return tree_merge(stamped, spec, by=by, num_partials=len(states), fanin=fanin)
+    stamped = [
+        s.select(*by, *_STATE_COLS, F.lit(i).alias("partition_id"))
+        for i, s in enumerate(states)
+    ]
+    return tree_merge(
+        functools.reduce(DataFrame.unionByName, stamped),
+        spec, by=by, num_partials=len(states), fanin=fanin,
+    )
 
 
 def update_snapshot_table(

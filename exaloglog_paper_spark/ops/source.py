@@ -24,6 +24,8 @@ import glob
 import os
 from typing import Sequence
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -197,7 +199,8 @@ def read_tokens(spark: SparkSession, source: str, fmt: str = "auto") -> DataFram
     if fmt == "iceberg":
         try:
             return spark.read.format("iceberg").load(source)
-        except Exception as e:  # jars absent or table missing: actionable error
+        except (AnalysisException, Py4JJavaError) as e:
+            # jars absent (a JVM ClassNotFound) or table missing: actionable error
             raise RuntimeError(
                 f"cannot read Iceberg table {source!r}: is "
                 "iceberg-spark-runtime on the classpath and the catalog "
@@ -206,7 +209,7 @@ def read_tokens(spark: SparkSession, source: str, fmt: str = "auto") -> DataFram
             ) from e
     try:
         return spark.read.parquet(source)
-    except Exception as e:
+    except AnalysisException as e:
         # 'auto' resolves single-dot names (`db.table`) to parquet; if the
         # path doesn't exist the caller may have meant a 2-part Iceberg
         # identifier against the session default catalog — say so

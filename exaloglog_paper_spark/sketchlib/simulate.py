@@ -33,43 +33,6 @@ def generate_hash_for_update(update_value: int, register_index: int, p: int, t: 
     return (z | (register_index << t)) & 0xFFFFFFFFFFFFFFFF
 
 
-def generate_transitions(
-    t: int, d: int, p: int, rng: np.random.Generator
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-(update value, register) first-hit cardinalities.
-
-    ≙ TestUtils.generateTransitions (``:134-153``): the cardinality at which
-    register ``idx`` first receives update value ``k`` is geometric with
-    success probability ``2^-φ(k)/m``; sampled as ``1 + floor(Exp()·m/p_k)``.
-    Returns (counts, idx, k) flat arrays (unsorted — state reconstruction
-    uses a mask, not a replay loop).
-    """
-    m = 1 << p
-    k_max = (65 - p - t) << t
-    ks = np.arange(1, k_max + 1)
-    probs = np.ldexp(1.0, -phi(ks, p, t))  # P(one element hits (k, fixed idx)) * m
-    factor = m / probs  # ≙ (1 << p) / generator probability
-    counts = np.floor(rng.exponential(size=(k_max, m)) * factor[:, None]) + 1.0
-    idx = np.broadcast_to(np.arange(m, dtype=np.uint64)[None, :], counts.shape)
-    kk = np.broadcast_to(ks.astype(np.uint64)[:, None], counts.shape)
-    return counts.ravel(), idx.ravel().copy(), kk.ravel().copy()
-
-
-def state_at_cardinality(
-    transitions: tuple[np.ndarray, np.ndarray, np.ndarray], n: float, t: int, d: int, p: int
-) -> ExaLogLog:
-    """Sketch state after ``n`` distinct insertions under one transition
-    sample (exact within-cycle continuity across rungs — the reference's
-    large-scale simulation mode, ExaLogLogEstimationErrorSimulation.java:140-151)."""
-    from .exaloglog import build_registers
-
-    counts, idx, kk = transitions
-    mask = counts <= n
-    sk = ExaLogLog.from_config(ExaLogLogConfig(t, d, p))
-    sk.regs = build_registers(idx[mask], kk[mask], 1 << p, d)
-    return sk
-
-
 def generate_exaloglog_poisson(
     n: float, t: int, d: int, p: int, rng: np.random.Generator
 ) -> ExaLogLog:

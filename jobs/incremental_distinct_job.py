@@ -103,7 +103,7 @@ def main() -> None:
             if expired:
                 print(f"expired snapshots: {expired}")
     # group columns come from the table itself, so --estimate-only needs no --by
-    out_cols = [c for c in table.columns if c not in ("sketch", "build_secs")]
+    out_cols = [c for c in table.columns if c != "sketch"]
     with_estimate(table, spec).select(*out_cols, "estimate").show(50, truncate=False)
     spark.stop()
 

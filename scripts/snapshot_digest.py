@@ -3,11 +3,9 @@
 Commits perfbench's seed-1 base file plus 5 ``shard_append`` increments
 (trigram states by ``shard``) into a fresh snapshot table, then prints one
 line per committed snapshot: id, groups, total ``n_values``, its parquet
-bytes on disk per group (``state_bytes_per_group``, rounded to the byte:
-the raw total wobbles by a few bytes between runs of one tree, because
-the ``build_secs`` column holds wall-clock seconds), and the sha256 of its
-sorted (shard, n_values, sketch) states. Two trees commit byte-identical
-states when their outputs ``cmp`` equal:
+bytes on disk, and the sha256 of its sorted (shard, n_values, sketch)
+states. Two trees commit byte-identical states and equal-sized files when
+their outputs ``cmp`` equal:
 
     python scripts/snapshot_digest.py <tree> <work dir> > a.txt
     python scripts/snapshot_digest.py <other tree> <work dir 2> > b.txt
@@ -26,6 +24,10 @@ import sys
 
 root, work = sys.argv[1], sys.argv[2]
 sys.path.insert(0, os.path.abspath(root))
+# Python workers import the package too; they inherit the JVM's environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [os.path.abspath(root), os.environ.get("PYTHONPATH")])
+)
 os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 shutil.rmtree(work, ignore_errors=True)
@@ -75,5 +77,5 @@ for snap in snapshot_history(tdir):
         if f.endswith(".parquet")
     )
     n_values = sum(n for _, n, _ in rows)
-    print(snap["id"], len(rows), n_values, round(size / len(rows)), digest.hexdigest())
+    print(snap["id"], len(rows), n_values, size, digest.hexdigest())
 spark.stop()

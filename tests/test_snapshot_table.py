@@ -7,6 +7,7 @@ import io
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -389,3 +390,47 @@ def test_snapshot_without_recorded_schema_still_reads(spark, tdf, tmp_path, monk
     for table in (small, large):
         assert table.schema == recorded.schema
         assert _rows(table) == _rows(recorded)
+
+
+def _parquet_files(tdir, snap):
+    data = os.path.join(tdir, *snap["manifest"])
+    return sorted(
+        os.path.join(data, f) for f in os.listdir(data) if f.endswith(".parquet")
+    )
+
+
+def test_commit_files_are_reproducible(spark, tdf, tmp_path):
+    """The same increment committed into two fresh tables gives the same
+    parquet byte total and equal file contents: the data holds states and
+    counts only, no wall-clock column. (Files are compared by content, not
+    byte for byte: parquet-mr writes a column chunk's encodings list in no
+    fixed order.)"""
+    totals, tables = [], []
+    for name in ("a", "b"):
+        tdir = str(tmp_path / name)
+        _commit(spark, tdir, tdf)
+        files = _parquet_files(tdir, snapshot_history(tdir)[-1])
+        totals.append(sum(os.path.getsize(f) for f in files))
+        tables.append(pq.read_table(files, partitioning=None).sort_by("source"))
+    assert totals[0] == totals[1]
+    assert tables[0].equals(tables[1])
+
+
+def test_snapshot_with_build_secs_takes_a_new_commit(spark, tdf, tmp_path, monkeypatch):
+    """A snapshot committed while state rows still carried the
+    ``build_secs`` timing column merges with a new increment, and time
+    travel reads both snapshots: the old one with its column, the new one
+    without, each byte-identical to a one-shot build."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    with monkeypatch.context() as m:
+        m.setattr(snapshot_table, "_STATE_COLS", ["sketch", "n_values", "build_secs"])
+        old = _build(parts[0]).withColumn("build_secs", F.lit(0.25))
+        update_snapshot_table(spark, tdir, old, SPEC, by=["source"])
+    _commit(spark, tdir, parts[1])
+
+    first = read_snapshot_table(spark, tdir, snapshot_id=1)
+    second = read_snapshot_table(spark, tdir, snapshot_id=2)
+    assert "build_secs" in first.columns and "build_secs" not in second.columns
+    assert _states(first) == _states(_build(parts[0]))
+    assert _states(second) == _states(_build(parts[0].unionByName(parts[1])))

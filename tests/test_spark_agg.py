@@ -239,6 +239,8 @@ def test_read_tokens_parquet_and_iceberg_gating(spark):
     assert df.count() > 0
     with _pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
         read_tokens(spark, "catalog.db.tokens", fmt="iceberg")
+    with _pytest.raises(RuntimeError, match="Iceberg identifier"):
+        read_tokens(spark, "tokens.not_yet_written")
     # 'auto' rule: only the catalog.db.table two-dot shape means Iceberg —
     # a single-dot relative name that doesn't exist yet is a parquet path
     # (so its error talks about the path, not a phantom catalog)
@@ -346,7 +348,7 @@ def test_partial_flush_is_byte_identical(spark, tdf):
 
         partials = tdf.mapInArrow(
             fn,
-            schema="source string, sketch binary, n_values long, partition_id long, build_secs double",
+            schema="source string, sketch binary, n_values long, partition_id long",
         )
         out = tree_merge(partials, spec, by=["source"], num_partials=8)
         return {r.source: (bytes(r.sketch), r.n_values) for r in out.collect()}
@@ -453,13 +455,13 @@ def test_sliding_window_state_fanout_equals_direct_window_build(spark):
     hour_states = sketch_agg(ev, spec, hash64_values("h"), by=["hour"])
     fanned = (
         hour_states.select(
-            "hour", "sketch", "n_values", "build_secs",
+            "hour", "sketch", "n_values",
             F.explode(F.sequence(F.lit(0), F.lit(5))).alias("k"),
         )
         .select(
             F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"),
             "sketch", "n_values",
-            F.col("k").cast("long").alias("partition_id"), "build_secs",
+            F.col("k").cast("long").alias("partition_id"),
         )
     )
     merged = {
@@ -550,11 +552,17 @@ def test_property_trigram_extractor_matches_reference():
     run()
 
 
-@pytest.mark.parametrize("by", [[], ["g"]], ids=["driver_fold", "tree"])
-def test_tree_merge_is_independent_of_row_order(spark, by):
+@pytest.mark.parametrize(
+    "by, num_partials",
+    [([], 12), ([], None), (["g"], 12)],
+    ids=["driver_fold", "seed_union", "tree"],
+)
+def test_tree_merge_is_independent_of_row_order(spark, by, num_partials):
     """KLL merges depend on input order; tree_merge merges every level's
     inputs in state byte order, so feeding the same partial rows reversed
-    gives the same bytes on both arms (driver fold and grouped tree)."""
+    gives the same bytes on every arm (driver fold, ungrouped tree with its
+    seed row, grouped tree). The partials carry the former ``build_secs``
+    column, as checkpoint buckets written before it was dropped do."""
     from exaloglog_paper_spark.ops.agg import local_df, tree_merge
     from exaloglog_paper_spark.ops.specs import KLLSpec
 
@@ -570,7 +578,7 @@ def test_tree_merge_is_independent_of_row_order(spark, by):
 
     def merged(rs):
         partials = local_df(spark, rs, schema).select(*cols)
-        out = tree_merge(partials, spec, by=by, num_partials=len(rs)).collect()
+        out = tree_merge(partials, spec, by=by, num_partials=num_partials).collect()
         assert len(out) == 1
         return bytes(out[0].sketch), out[0].n_values
 
@@ -621,11 +629,11 @@ def test_merge_level_runs_span_arrow_batches(spark, two_row_batches):
     spec = KLLSpec(16)
     rng = np.random.default_rng(11)
     rows = [
-        (g, spec.serialize(spec.add(spec.empty(), rng.normal(size=40 + i))), 40 + i, i, 0.0)
+        (g, spec.serialize(spec.add(spec.empty(), rng.normal(size=40 + i))), 40 + i, i)
         for i in range(9)
         for g in ("a", "b", "c")
     ]
-    schema = "g string, sketch binary, n_values long, partition_id long, build_secs double"
+    schema = "g string, sketch binary, n_values long, partition_id long"
     out = tree_merge(local_df(spark, rows, schema), spec, by=["g"], num_partials=9).collect()
     assert sorted(r.g for r in out) == ["a", "b", "c"]
     for r in out:
@@ -668,7 +676,6 @@ def test_merge_runs_emits_bounded_chunks():
         "g": [k[0] for k in keys],
         "sketch": pa.array(sketches, pa.binary()),
         "n_values": pa.array([30] * len(keys), pa.int64()),
-        "build_secs": [0.5] * len(keys),
         "__bucket": pa.array([k[1] for k in keys], pa.int32()),
     })
     batches = table.to_batches(max_chunksize=2)
