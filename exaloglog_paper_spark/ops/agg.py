@@ -38,7 +38,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, _parse_datatype_string
 
 from ..sketchlib.bitops import splitmix64
 from ..sketchlib.exaloglog import ExaLogLog, ExaLogLogConfig
@@ -407,19 +407,16 @@ def local_df(spark, rows, schema: str) -> DataFrame:
     and seed rows this engine assembles. Routing the same rows through a
     pandas DataFrame (Arrow conversion path) materializes them into the
     JVM once, so downstream executions scan a LocalTableScan (~25 ms).
-    Falls back to the classic path if the Arrow conversion rejects a
-    type; results are identical either way."""
+    A type the Arrow conversion rejects needs no handling here: PySpark
+    itself retries without Arrow
+    (``spark.sql.execution.arrow.pyspark.fallback.enabled``, default on),
+    and a value neither path accepts raises the same error on both."""
     rows = list(rows)
     if not rows:
         return spark.createDataFrame(rows, schema)
-    try:
-        from pyspark.sql.types import _parse_datatype_string
-
-        names = [f.name for f in _parse_datatype_string(schema).fields]
-        pdf = pd.DataFrame.from_records([tuple(r) for r in rows], columns=names)
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+    names = [f.name for f in _parse_datatype_string(schema).fields]
+    pdf = pd.DataFrame.from_records([tuple(r) for r in rows], columns=names)
+    return spark.createDataFrame(pdf, schema)
 
 
 def _by_schema(df: DataFrame, by: Sequence[str]) -> str:

@@ -260,6 +260,9 @@ def lsh_candidate_pairs(
     hub-star edges instead (see _cap_bucket_size) — the |B|² output of one
     degenerate bucket is the one quadratic failure mode of banded LSH at
     10^12 docs, while the star keeps its connected component intact.
+    Unless ``max_bucket_size`` is None, building this DataFrame runs one
+    Spark job: ``_cap_bucket_size``'s ``take()`` probe of the bucket-size
+    aggregate, which also materializes the lazily checkpointed band table.
     """
     # LAZY localCheckpoint the band table: the self-join would otherwise
     # recompute the full word-explode + md5 signature build for BOTH sides
@@ -338,7 +341,9 @@ def jaccard_verified_pairs(
     candidate set that is typically orders of magnitude smaller — the
     candidate-id list is small enough to broadcast, so the prune reaches
     the word scan as a broadcast semi-join, and only candidate docs are
-    aggregated or cached.
+    aggregated or cached. Building this DataFrame runs Spark jobs: the
+    eager ``localCheckpoint`` of ``candidates`` (which executes the whole
+    candidate pipeline) and then that of the candidate word sets.
     """
     # candidates feed both the id-prune and the verification joins. An EAGER
     # localCheckpoint (not persist) materializes the same rows the lazy
@@ -461,7 +466,10 @@ def simhash_near_pairs(
     """Hamming-near pairs via 4x16-bit band blocking (any pair within
     hamming distance <= 3 shares at least one exact 16-bit band). Oversized
     band buckets bypass the all-pairs self-join and emit hub-star edges
-    instead (see _cap_bucket_size); the hamming filter applies to both."""
+    instead (see _cap_bucket_size); the hamming filter applies to both.
+    Unless ``max_bucket_size`` is None, building this DataFrame runs one
+    Spark job: ``_cap_bucket_size``'s ``take()`` probe, which also
+    materializes the lazily checkpointed band table."""
     band_arr = ", ".join(f"struct({i} AS band, chunk_{i} AS chunk)" for i in range(4))
     chunk_cols = [f"chunk_{i}" for i in range(4)]
     # lazy localCheckpoint: the a/b self-join would recompute the

@@ -17,20 +17,49 @@ Two families:
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
+from itertools import combinations
 from typing import Sequence
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.window import Window
 
+from ..sketchlib.bitops import splitmix64
+from ..sketchlib.constants import theoretical_rse_martingale
+from ..sketchlib.countsketch import CountSketchConfig, join_size_error_bound
+from ..sketchlib.exaloglog import compute_token
+from ..sketchlib.replay import (
+    StreamingFirstHits,
+    _event_luts,
+    martingale_estimate_stream,
+)
+from ..streaming.stateful import streaming_distinct_sketch
+from . import dedup, multimodal, similarity, specs, textstats, tokens as tok
 from .agg import (
     ExaLogLogSpec,
     HyperLogLogSpec,
+    float_values,
     hash64_values,
+    id64_values,
     sketch_agg,
+    sketch_agg_salted,
     token_array_values,
+    token_trigram_values,
     tree_merge,
     with_estimate,
 )
-from . import tokens as tok
+from .checkpoints import checkpointed_sketch_agg
+from .functions import token_stream_estimate
+from .joins import bloom_anti_join, bloom_semi_join
+from .profile import profile_token_table
+from .rollup import estimate_intersection, sketch_cube, sketch_rollup
+from .snapshot_table import read_snapshot_table, snapshot_history, update_snapshot_table
 
 WORD_SPLIT_RE = "[^a-z0-9]+"
 
@@ -92,6 +121,88 @@ def _words(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("word") != "")
     )
+
+
+def _hashed_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_words`` plus its xxhash64 ``h``, persisted: the sketch side and
+    the exact side of a distinct-word check share one corpus explode."""
+    return _words(spark, sf_dir).withColumn("h", F.xxhash64("word")).persist()
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding array<double>) spread for the per-row cosine work."""
+    return _spread(_read_pq(spark, f"{sf_dir}/embeddings.parquet")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+def _sf_name(sf_dir: str) -> str:
+    return sf_dir.rstrip("/").rsplit("/", 1)[-1]
+
+
+def _token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The token table for ``sf_dir``. Rows come from the Spark generator
+    (its partitioning fixes the Misra-Gries and KLL state bytes); the
+    parquet twin the DuckDB oracle reads is materialized first."""
+    tok.materialize_token_table(_sf_name(sf_dir))
+    return tok.token_table_for_sf_dir(spark, sf_dir)
+
+
+# ---------------------------------------------------------------------------
+# verification kit: the 5·RSE flag, state collection, shared exact sides
+# ---------------------------------------------------------------------------
+
+
+def _within_rel(est_col: str, exact_col: str, bound: float, name: str = "within_bound"):
+    """The acceptance flag |est/exact - 1| <= bound as a boolean column
+    (bound = 5·RSE, AbstractSpecificExaLogLogTest.java:350-447)."""
+    return (F.abs(F.col(est_col) / F.col(exact_col) - 1) <= F.lit(bound)).alias(name)
+
+
+def _states(df: DataFrame, key: str | None = None, spec=None):
+    """Collect a sketch table as ``{key: (state, n_values)}``, the state
+    as raw bytes or, given ``spec``, deserialized. With no ``key``: the one
+    ``(state, n_values)`` of an ungrouped aggregation."""
+    out = {
+        (r[key] if key else None): (
+            spec.deserialize(bytes(r.sketch)) if spec else bytes(r.sketch),
+            int(r.n_values),
+        )
+        for r in df.collect()
+    }
+    return out if key else out[None]
+
+
+def _exact_top_tokens(df: DataFrame, n: int = 10) -> list:
+    """Exact top-``n`` (token, cnt) rows of a token table (ties by token)."""
+    return (
+        df.select(F.explode("tokens").alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy(F.desc("cnt"), F.asc("token"))
+        .limit(n)
+    ).collect()
+
+
+def _token_freq(df: DataFrame) -> DataFrame:
+    """Exact (source, token, cnt) counts of a token table, persisted: it
+    feeds more than one exact branch, and no ReusedExchange fires across
+    aliases (CLAUDE.md)."""
+    return (
+        df.select("source", F.explode("tokens").alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
+    )
+
+
+def _fan_out_windows(df: DataFrame, *cols: str) -> DataFrame:
+    """Each row once per 24-hour sliding window (1-hour step) covering its
+    ``hour``: columns ``window_start``, ``cols`` and the offset ``k``
+    (window_start = hour - k hours)."""
+    return df.select(
+        "hour", *cols, F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k")
+    ).select(F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"), *cols, "k")
 
 
 # ---------------------------------------------------------------------------
@@ -179,9 +290,6 @@ def sketch_cube_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(source, lang) sketches (ops/rollup.sketch_cube) — the raw corpus is
     never rescanned. Exact counts ride along; the oracle (DuckDB GROUP BY
     CUBE) recomputes them and asserts every estimate is within 5·RSE."""
-    from .agg import hash64_values
-    from .rollup import sketch_cube
-
     spec = ExaLogLogSpec(2, 20, 10)
     words = (
         _spread(_docs(spark, sf_dir))
@@ -211,7 +319,6 @@ def sketch_cube_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_distinct_words",
         )
     )
-    bound = 5 * spec.theoretical_rse()
     return cube.join(
         exact,
         cube["source"].eqNullSafe(exact["e_source"])
@@ -223,9 +330,7 @@ def sketch_cube_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gid",
         "total_words",
         "exact_distinct_words",
-        (
-            F.abs(F.col("estimate") / F.col("exact_distinct_words") - 1) <= F.lit(bound)
-        ).alias("within_bound"),
+        _within_rel("estimate", "exact_distinct_words", 5 * spec.theoretical_rse()),
     )
 
 
@@ -244,41 +349,28 @@ def ell_distinct_words_per_source_bound(spark: SparkSession, sf_dir: str) -> Dat
     """ExaLogLog(2,20,10) estimate vs exact per source; oracle asserts the
     estimate satisfies 5·RSE (RSE = 0.0113 at p=10, BASELINE.md)."""
     spec = ExaLogLogSpec(2, 20, 10)
-    # sketch and exact sides share one corpus explode
-    words = _words(spark, sf_dir).withColumn("h", F.xxhash64("word")).persist()
-    sk = with_estimate(
-        sketch_agg(words, spec, hash64_values("h"), by=["source"]),
-        spec,
-    )
+    words = _hashed_words(spark, sf_dir)
+    sk = with_estimate(sketch_agg(words, spec, hash64_values("h"), by=["source"]), spec)
     exact = words.groupBy("source").agg(
         F.count_distinct("word").alias("distinct_words"),
         F.count("word").alias("total_words"),
     )
-    bound = 5 * spec.theoretical_rse()
-    return (
-        exact.join(F.broadcast(sk.select("source", "estimate")), "source")
-        .select(
-            "source",
-            "distinct_words",
-            (
-                F.abs(F.col("estimate") / F.col("distinct_words") - 1) <= F.lit(bound)
-            ).alias("within_bound"),
-        )
+    return exact.join(F.broadcast(sk.select("source", "estimate")), "source").select(
+        "source",
+        "distinct_words",
+        _within_rel("estimate", "distinct_words", 5 * spec.theoretical_rse()),
     )
 
 
 def hll_distinct_words_global_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog(p=12) global distinct-word estimate vs exact + bound."""
     spec = HyperLogLogSpec(p=12)
-    words = _words(spark, sf_dir).withColumn("h", F.xxhash64("word")).persist()
+    words = _hashed_words(spark, sf_dir)
     sk = with_estimate(sketch_agg(words, spec, hash64_values("h")), spec)
-    bound = 5 * spec.theoretical_rse()
     exact = words.agg(F.count_distinct("word").alias("distinct_words"))
     return exact.crossJoin(F.broadcast(sk.select("estimate"))).select(
         "distinct_words",
-        (F.abs(F.col("estimate") / F.col("distinct_words") - 1) <= F.lit(bound)).alias(
-            "within_bound"
-        ),
+        _within_rel("estimate", "distinct_words", 5 * spec.theoretical_rse()),
     )
 
 
@@ -286,8 +378,6 @@ def top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast join orders x customer + window rank: top-10 customers by
     total order value per market segment (relational breadth: join, window,
     exact agg; the dimension side is explicitly broadcast)."""
-    from pyspark.sql.window import Window
-
     orders = _read_pq(spark, f"{sf_dir}/orders.parquet")
     cust = _read_pq(spark, f"{sf_dir}/customer.parquet")
     rev = (
@@ -306,8 +396,6 @@ def user_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-function sessionization over the events stream table: sessions
     split on >30-minute gaps per user; per-user session count + avg session
     event count."""
-    from pyspark.sql.window import Window
-
     ev = _read_pq(spark, f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ; session tz is UTC so the epoch matches DuckDB's
@@ -344,19 +432,29 @@ def hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(hour, user_id, h = xxhash64(user_id)) per event. NULL user_ids
+    would hash to NULL, so they are dropped: the sketches then match
+    count_distinct's NULL-ignoring semantics (the synthetic table has
+    none — this is the generic-operator contract)."""
+    return (
+        _read_pq(spark, f"{sf_dir}/events.parquet")
+        .filter(F.col("user_id").isNotNull())
+        .select(
+            F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("hour"),
+            "user_id",
+            F.xxhash64("user_id").alias("h"),
+        )
+    )
+
+
 def _sliding_window_states(hour_states: DataFrame, spec) -> DataFrame:
     """One merged state per 24-hour sliding window (1-hour step): each
     hour state fans out to the 24 windows that cover it, stamped with its
     offset ``k`` as the partial's partition id, and ``tree_merge`` folds
     each window's states in byte order."""
-    fanned = hour_states.select(
-        "hour", "sketch", "n_values",
-        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"),
-    ).select(
-        F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"),
-        "sketch",
-        "n_values",
-        F.col("k").cast("long").alias("partition_id"),
+    fanned = _fan_out_windows(hour_states, "sketch", "n_values").withColumn(
+        "partition_id", F.col("k").cast("long")
     )
     return tree_merge(fanned, spec, by=["window_start"], num_partials=24)
 
@@ -379,24 +477,11 @@ def sliding_window_distinct_users_bound(spark: SparkSession, sf_dir: str) -> Dat
     asserts the estimate is within 5·RSE of the exact count per window.
     """
     spec = ExaLogLogSpec(2, 20, 10)
-    bound = 5 * spec.theoretical_rse()
-    ev = (
-        _read_pq(spark, f"{sf_dir}/events.parquet")
-        .select(
-            F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("hour"),
-            "user_id",
-        )
-        # NULL user_ids carry through xxhash64 as NULL; drop them so the
-        # sketch matches count_distinct's NULL-ignoring semantics (the
-        # synthetic table has none — this is the generic-operator contract)
-        .filter(F.col("user_id").isNotNull())
-        .withColumn("h", F.xxhash64("user_id"))
-    )
+    ev = _user_hours(spark, sf_dir)
     hour_states = sketch_agg(ev, spec, hash64_values("h"), by=["hour"])
     est = with_estimate(_sliding_window_states(hour_states, spec), spec)
     exact = (
-        ev.select("hour", "user_id", F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"))
-        .select(F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"), "user_id")
+        _fan_out_windows(ev, "user_id")
         .groupBy("window_start")
         .agg(F.count_distinct("user_id").alias("exact_users"))
     )
@@ -405,39 +490,40 @@ def sliding_window_distinct_users_bound(spark: SparkSession, sf_dir: str) -> Dat
     ).select(
         "window_start",
         "exact_users",
-        (F.abs(F.col("estimate") / F.col("exact_users") - 1) <= F.lit(bound)).alias(
-            "within_bound"
-        ),
+        _within_rel("estimate", "exact_users", 5 * spec.theoretical_rse()),
     )
+
+
+def _pair_intersections(words: DataFrame, spec) -> list:
+    """(s1, s2, est, tol) per source pair s1 < s2 of ``_hashed_words`` rows:
+    the inclusion-exclusion estimate of their common distinct words from
+    per-source states and its tolerance 5·RSE·(est_1 + est_2)."""
+    states = _states(sketch_agg(words, spec, hash64_values("h"), by=["source"]), "source")
+    ests = {s: spec.finalize(spec.deserialize(st)) for s, (st, _) in states.items()}
+    return [
+        (
+            a,
+            b,
+            float(estimate_intersection(spec, states[a][0], states[b][0])),
+            float(5 * spec.theoretical_rse() * (ests[a] + ests[b])),
+        )
+        for a, b in combinations(sorted(states), 2)
+    ]
 
 
 def intersection_distinct_words_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct words common to src0 and src1 via sketch inclusion-exclusion
     vs the exact INTERSECT count; the oracle asserts the derived bound
     |est − exact| ≤ 5·RSE·(est_A + est_B) (variance of the I-E sum)."""
-    from .agg import ExaLogLogSpec, hash64_values, sketch_agg
-    from .rollup import estimate_intersection
-
-    spec = ExaLogLogSpec(2, 20, 10)
-    words = _words(spark, sf_dir).withColumn("h", F.xxhash64("word")).persist()
-    states = {
-        r.source: bytes(r.sketch)
-        for r in sketch_agg(
-            words.filter(F.col("source").isin("src0", "src1")),
-            spec,
-            hash64_values("h"),
-            by=["source"],
-        ).collect()
-    }
-    est = estimate_intersection(spec, states["src0"], states["src1"])
-    est_a = spec.finalize(spec.deserialize(states["src0"]))
-    est_b = spec.finalize(spec.deserialize(states["src1"]))
+    words = _hashed_words(spark, sf_dir)
+    [(_, _, est, tol)] = _pair_intersections(
+        words.filter(F.col("source").isin("src0", "src1")), ExaLogLogSpec(2, 20, 10)
+    )
     exact = (
         words.filter(F.col("source") == "src0").select("word").distinct()
         .intersect(words.filter(F.col("source") == "src1").select("word").distinct())
         .count()
     )
-    tol = 5 * spec.theoretical_rse() * (est_a + est_b)
     return spark.createDataFrame(
         [(int(exact), bool(abs(est - exact) <= tol))],
         "exact_common_words long, within_bound boolean",
@@ -477,60 +563,39 @@ def _quantile_bound_rows(docs, ests, qs=_QUANTILE_GRID, tol=0.05):
     ]
 
 
+def _nchars_quantiles_bound(spark: SparkSession, sf_dir: str, spec) -> DataFrame:
+    """documents.n_chars quantiles of the quantile sketch ``spec``, checked
+    by ``_quantile_bound_rows``."""
+    docs = _docs(spark, sf_dir).select(F.col("n_chars").cast("double").alias("v"))
+    sk, _ = _states(sketch_agg(docs, spec, float_values("v")), spec=spec)
+    data = _quantile_bound_rows(docs, sk.quantile(np.array(_QUANTILE_GRID)))
+    return spark.createDataFrame(data, "q double, exact_quantile double, within_rank_tol boolean")
+
+
 def kll_nchars_quantiles_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL(k=200) quantiles of documents.n_chars: output carries the exact
     type-7 quantiles (oracle-computable) and a flag that every KLL estimate
     lands within 0.05 normalized rank of its target (the published KLL
     rank-error bound at k=200 is ~1.33·a/k << 0.05)."""
-    import numpy as np
-
-    from .agg import float_values, sketch_agg
-    from .specs import KLLSpec
-
-    docs = _docs(spark, sf_dir).select(F.col("n_chars").cast("double").alias("v"))
-    spec = KLLSpec(k=200)
-    row = sketch_agg(docs, spec, float_values("v")).collect()[0]
-    sk = spec.deserialize(bytes(row.sketch))
-    ests = sk.quantile(np.array(_QUANTILE_GRID))
-    data = _quantile_bound_rows(docs, ests)
-    return spark.createDataFrame(data, "q double, exact_quantile double, within_rank_tol boolean")
+    return _nchars_quantiles_bound(spark, sf_dir, specs.KLLSpec(k=200))
 
 
 def tdigest_nchars_quantiles_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-digest(δ=200) version of the quantile bound check."""
-    import numpy as np
-
-    from .agg import float_values, sketch_agg
-    from .specs import TDigestSpec
-
-    docs = _docs(spark, sf_dir).select(F.col("n_chars").cast("double").alias("v"))
-    spec = TDigestSpec(delta=200)
-    row = sketch_agg(docs, spec, float_values("v")).collect()[0]
-    td = spec.deserialize(bytes(row.sketch))
-    ests = td.quantile(np.array(_QUANTILE_GRID))
-    data = _quantile_bound_rows(docs, ests)
-    return spark.createDataFrame(data, "q double, exact_quantile double, within_rank_tol boolean")
+    return _nchars_quantiles_bound(spark, sf_dir, specs.TDigestSpec(delta=200))
 
 
 def cms_heavy_hitters_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min top words: output = exact top-10 (word, cnt) + flag that the
     CMS estimate covers it within the eps*N overcount bound. Item ids are
     JVM-side xxhash64(word) (codegen; no per-row Python anywhere)."""
-    import numpy as np
-
-    from ..sketchlib.bitops import splitmix64
-    from .agg import hash64_values, sketch_agg
-    from .specs import CountMinSpec
-
     words = _words(spark, sf_dir).withColumn("h", F.xxhash64("word"))
     exact_top = (
         words.groupBy("word", "h").agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("word")).limit(10)
     ).collect()
-    spec = CountMinSpec(width=8192, depth=5, track=256)
-    row = sketch_agg(words, spec, hash64_values("h")).collect()[0]
-    cm, _cand = spec.deserialize(bytes(row.sketch))
-    n_total = int(row.n_values)
+    spec = specs.CountMinSpec(width=8192, depth=5, track=256)
+    (cm, _cand), n_total = _states(sketch_agg(words, spec, hash64_values("h")), spec=spec)
     eps = float(np.e / 8192)
     data = []
     for r in exact_top:
@@ -551,16 +616,12 @@ def bloom_membership_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples (members, false_negs, fps) that a single ``agg`` sums — no data
     column ever reaches the driver, so this runs unchanged at 10^12 docs.
     """
-    from .agg import hash64_values, sketch_agg
-    from .specs import BloomSpec
-
     docs = _docs(spark, sf_dir)
     members = docs.filter(F.col("source") == "src0").select(
         F.xxhash64("text").alias("h")
     )
-    spec = BloomSpec(num_bits=1 << 18, num_hashes=7)
-    row = sketch_agg(members, spec, hash64_values("h")).collect()[0]
-    filter_bytes = bytes(row.sketch)
+    spec = specs.BloomSpec(num_bits=1 << 18, num_hashes=7)
+    filter_bytes, _ = _states(sketch_agg(members, spec, hash64_values("h")))
     bc = spark.sparkContext.broadcast(filter_bytes)
 
     all_h = docs.select(
@@ -569,9 +630,6 @@ def bloom_membership_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def check(batches):
-        import numpy as np
-        import pyarrow as pa
-
         bf = spec.deserialize(bc.value)
         for b in batches:
             h = b.column("h").to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
@@ -613,9 +671,7 @@ def bloom_membership_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact (md5) dedup accounting per source: docs, unique contents,
     duplicate docs that keep-first dedup would remove."""
-    from .dedup import with_content_digest
-
-    d = with_content_digest(_docs(spark, sf_dir))
+    d = dedup.with_content_digest(_docs(spark, sf_dir))
     return d.groupBy("source").agg(
         F.count(F.lit(1)).alias("docs"),
         F.count_distinct("content_digest").alias("unique_contents"),
@@ -626,21 +682,15 @@ def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8)/LSH(4 bands x 2) near-duplicate candidate pairs over the
     word sets (hex-string minhashes — bit-identical to the SQL oracle)."""
-    from .dedup import lsh_candidate_pairs, minhash_signatures
-
-    words = _words(spark, sf_dir)
-    sigs = minhash_signatures(words)
-    return lsh_candidate_pairs(sigs)
+    return dedup.lsh_candidate_pairs(dedup.minhash_signatures(_words(spark, sf_dir)))
 
 
 def jaccard_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-set Jaccard >= 0.8 pairs among MinHash-LSH candidates (exact
     verification stage of the near-dup pipeline; oracle-checked)."""
-    from .dedup import jaccard_verified_pairs, lsh_candidate_pairs, minhash_signatures
-
     words = _words(spark, sf_dir)
-    cands = lsh_candidate_pairs(minhash_signatures(words))
-    return jaccard_verified_pairs(words, cands, threshold=0.8)
+    cands = dedup.lsh_candidate_pairs(dedup.minhash_signatures(words))
+    return dedup.jaccard_verified_pairs(words, cands, threshold=0.8)
 
 
 def near_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,10 +700,7 @@ def near_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     members). Spark side is iterative min-label propagation
     (dedup.connected_components); the DuckDB oracle computes the same
     components with a recursive transitive-closure CTE."""
-    from .dedup import connected_components
-
-    pairs = jaccard_near_duplicates(spark, sf_dir)
-    comp = connected_components(pairs)
+    comp = dedup.connected_components(jaccard_near_duplicates(spark, sf_dir))
     return comp.groupBy("component").agg(F.count(F.lit(1)).alias("members"))
 
 
@@ -665,12 +712,9 @@ def near_duplicate_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join of the loser list against the corpus; one scan, no shuffle).
     Oracle recomputes the components with a recursive transitive-closure
     CTE and the same keep-first rule."""
-    from .dedup import connected_components, drop_near_duplicates
-
     docs = _docs(spark, sf_dir).select("doc_id", "source")
-    pairs = jaccard_near_duplicates(spark, sf_dir)
-    comp = connected_components(pairs)
-    kept = drop_near_duplicates(docs, comp).groupBy("source").agg(
+    comp = dedup.connected_components(jaccard_near_duplicates(spark, sf_dir))
+    kept = dedup.drop_near_duplicates(docs, comp).groupBy("source").agg(
         F.count(F.lit(1)).alias("kept_docs")
     )
     return (
@@ -694,8 +738,6 @@ def ngram_jaccard_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame
     unit the brief calls for. One parameter swap — the pipeline machinery
     is shared, so every scale property (bucket cap, persisted band table,
     array_intersect verification) carries over."""
-    from .dedup import jaccard_verified_pairs, lsh_candidate_pairs, minhash_signatures
-
     # the shingle explosion is the expensive per-row stage and feeds BOTH
     # branches (signature build + word-set verification) — materialize it
     # once. Lazy localCheckpoint instead of persist (r6): same one-pass
@@ -706,8 +748,8 @@ def ngram_jaccard_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame
     # sf0.1, rows identical (same fault-tolerance trade as the band
     # tables, ops/dedup.py).
     shingles = _shingles(spark, sf_dir, n=3).localCheckpoint(eager=False)
-    cands = lsh_candidate_pairs(minhash_signatures(shingles))
-    return jaccard_verified_pairs(shingles, cands, threshold=0.8)
+    cands = dedup.lsh_candidate_pairs(dedup.minhash_signatures(shingles))
+    return dedup.jaccard_verified_pairs(shingles, cands, threshold=0.8)
 
 
 def mass_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,11 +759,9 @@ def mass_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket) with its hub (min doc_id) and member count — the dedup-pipeline
     observability surface for 'how much did the cap reroute'. Cap is set
     low here so sf0.01 exercises the path; production uses 2000."""
-    from .dedup import band_table, minhash_signatures
-
     cap = 200
-    sigs = minhash_signatures(_words(spark, sf_dir))
-    exploded = band_table(sigs)  # THE banding convention (shared helper)
+    sigs = dedup.minhash_signatures(_words(spark, sf_dir))
+    exploded = dedup.band_table(sigs)  # THE banding convention (shared helper)
     return (
         exploded.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("members"), F.min("doc_id").alias("hub"))
@@ -738,8 +778,6 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < 1000)  # bounded sample for the exact pass
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    from .similarity import _norm_expr
-
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("e").alias("ea"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("e").alias("eb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
@@ -747,7 +785,7 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    ) / (_norm_expr("ea") * _norm_expr("eb"))
+    ) / (similarity._norm_expr("ea") * similarity._norm_expr("eb"))
     return (
         pairs.withColumn("cosine", F.round(cos, 6))
         .filter(F.col("cosine") >= 0.4)
@@ -759,20 +797,13 @@ def simhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs (hamming <= 3 via 16-bit banding); bits
     derived from md5 nibbles so the DuckDB oracle reproduces the pipeline
     exactly (see dedup._simhash_chunk_cols for the shared bit convention)."""
-    from .dedup import simhash_near_pairs, simhash_signatures
-
-    return simhash_near_pairs(simhash_signatures(_words(spark, sf_dir)))
+    return dedup.simhash_near_pairs(dedup.simhash_signatures(_words(spark, sf_dir)))
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 neighbors for query vectors vec_id<3."""
-    from .similarity import cosine_topk
-
-    emb = _spread(_read_pq(spark, f"{sf_dir}/embeddings.parquet")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = emb.filter(F.col("vec_id") < 3)
-    return cosine_topk(emb, queries, k=5)
+    emb = _embeddings(spark, sf_dir)
+    return similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 3), k=5)
 
 
 def checkpoint_resume_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,40 +812,28 @@ def checkpoint_resume_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     reruns (only the missing bucket recomputes), and compares final states
     byte-for-byte. The oracle recomputes per-source token volumes from the
     parquet twin and asserts the resume flag."""
-    import os
-    import shutil
-    import tempfile
-
-    from .agg import token_array_values
-    from .checkpoints import checkpointed_sketch_agg
-
     spec = ExaLogLogSpec(2, 20, 8)
     path = tok.materialize_token_table(_sf_name(sf_dir))
     ck = tempfile.mkdtemp(prefix="ellck_")
+
+    def build():
+        return _states(
+            checkpointed_sketch_agg(
+                spark, path, spec, token_array_values("tokens"), ck,
+                by=["source"], num_buckets=4,
+            ),
+            "source",
+        )
+
     try:
-        first = {
-            r.source: (bytes(r.sketch), int(r.n_values))
-            for r in checkpointed_sketch_agg(
-                spark, path, spec, token_array_values("tokens"), ck,
-                by=["source"], num_buckets=4,
-            ).collect()
-        }
+        first = build()
         shutil.rmtree(os.path.join(ck, "bucket=2"))
-        second = {
-            r.source: (bytes(r.sketch), int(r.n_values))
-            for r in checkpointed_sketch_agg(
-                spark, path, spec, token_array_values("tokens"), ck,
-                by=["source"], num_buckets=4,
-            ).collect()
-        }
+        second = build()
     finally:
         shutil.rmtree(ck, ignore_errors=True)
-    rows = [
-        (src, n, bool(second.get(src) == (state, n)))
-        for src, (state, n) in sorted(first.items())
-    ]
     return spark.createDataFrame(
-        rows, "source string, total_tokens long, resume_byte_identical boolean"
+        _identity_rows(first, second),
+        "source string, total_tokens long, resume_byte_identical boolean",
     )
 
 
@@ -825,12 +844,6 @@ def streaming_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact token volume plus a flag that the streamed final estimate equals
     the batch pipeline's bit-for-bit (same kernel, same states); the oracle
     recomputes the volumes from the same parquet and asserts the parity."""
-    import uuid
-
-    from ..streaming.stateful import streaming_distinct_sketch
-
-    import os
-
     spec = ExaLogLogSpec(2, 20, 8)
     path = tok.materialize_token_table(_sf_name(sf_dir))
     # the file streaming source requires a directory; hard-link the twin in
@@ -882,16 +895,9 @@ def multimodal_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle, which recomputes counts/bytes/frame-cardinality from
     the same parquet (frame count follows the byte-window formula of
     ops/multimodal.sample_frames)."""
-    from .multimodal import (
-        decode_and_featurize,
-        materialize_media_table,
-        sample_frames,
-        synth_media_table,
-    )
-
-    materialize_media_table()
-    media = synth_media_table(spark, 2_000).cache()
-    feats = decode_and_featurize(media, dim=64, fake_codec=True)
+    multimodal.materialize_media_table()
+    media = multimodal.synth_media_table(spark, 2_000).cache()
+    feats = multimodal.decode_and_featurize(media, dim=64, fake_codec=True)
     sq_norm = F.aggregate(
         "features", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
@@ -899,7 +905,7 @@ def multimodal_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min((F.abs(sq_norm - 1.0) < 1e-3).cast("int")).alias("norm_ok_int")
     )
     frames = (
-        sample_frames(media)
+        multimodal.sample_frames(media)
         .groupBy()
         .agg(F.count(F.lit(1)).alias("video_frames"))
         .withColumn("kind", F.lit("video"))
@@ -921,23 +927,13 @@ def multimodal_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (16-cell deterministic k-means coarse quantizer, nprobe=12)
-    recall@10 vs exact brute force, per query vector; the oracle asserts
-    recall >= 0.5 for every query (measured min 0.6 on the unit-noise
-    synthetic embeddings — weak cluster structure is the hard case for IVF).
-    This is the 100TB-scale ANN path: the table is partitioned by ivf_cell
-    so probing prunes whole files."""
-    from .similarity import cosine_topk, ivf_cosine_topk, train_ivf_centroids
-
-    emb = _spread(_read_pq(spark, f"{sf_dir}/embeddings.parquet")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    emb = emb.cache()
+def _ann_recall_bound(spark: SparkSession, sf_dir: str, approx_topk) -> DataFrame:
+    """Per query vector (vec_id < 5): recall@10 of ``approx_topk(emb,
+    queries)`` against exact brute-force cosine top-10 is at least 0.5."""
+    emb = _embeddings(spark, sf_dir).cache()
     queries = emb.filter(F.col("vec_id") < 5)
-    cent = train_ivf_centroids(emb, n_centroids=16)
-    exact = cosine_topk(emb, queries, k=10).select("query_id", "neighbor_id")
-    approx = ivf_cosine_topk(emb, queries, k=10, centroids=cent, nprobe=12).select(
+    exact = similarity.cosine_topk(emb, queries, k=10).select("query_id", "neighbor_id")
+    approx = approx_topk(emb, queries).select(
         F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
     hit = exact.join(
@@ -953,6 +949,21 @@ def ivf_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ivf_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN (16-cell deterministic k-means coarse quantizer, nprobe=12)
+    recall@10 vs exact brute force, per query vector; the oracle asserts
+    recall >= 0.5 for every query (measured min 0.6 on the unit-noise
+    synthetic embeddings — weak cluster structure is the hard case for IVF).
+    This is the 100TB-scale ANN path: the table is partitioned by ivf_cell
+    so probing prunes whole files."""
+
+    def approx(emb, queries):
+        cent = similarity.train_ivf_centroids(emb, n_centroids=16)
+        return similarity.ivf_cosine_topk(emb, queries, k=10, centroids=cent, nprobe=12)
+
+    return _ann_recall_bound(spark, sf_dir, approx)
+
+
 def lsh_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH ANN (8 deterministic hyperplanes, probe buckets
     within hamming<=4) recall@10 vs exact brute force, per query vector;
@@ -963,28 +974,46 @@ def lsh_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-pruned scan path for spaces where IVF's coarse quantizer fits
     poorly; `dim` is passed explicitly so bucketing adds zero driver
     jobs."""
-    from .similarity import cosine_topk, lsh_cosine_topk
+    return _ann_recall_bound(
+        spark,
+        sf_dir,
+        lambda emb, queries: similarity.lsh_cosine_topk(
+            emb, queries, k=10, nbits=8, probe_hamming=4, dim=64
+        ),
+    )
 
-    emb = _spread(_read_pq(spark, f"{sf_dir}/embeddings.parquet")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    emb = emb.cache()
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, queries, k=10).select("query_id", "neighbor_id")
-    approx = lsh_cosine_topk(
-        emb, queries, k=10, nbits=8, probe_hamming=4, dim=64
-    ).select(F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid"))
-    hit = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"]) & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return hit.groupBy("query_id").agg(
-        (
-            F.sum(F.when(F.col("a_nid").isNotNull(), 1).otherwise(0)) / F.count(F.lit(1))
-            >= 0.5
-        ).alias("recall_ok")
-    )
+
+def _identity_rows(ref: dict, got: dict) -> list:
+    """(source, n_values, got[source] == ref[source]) per source of ``ref``,
+    both ``{source: (state bytes, n_values)}``."""
+    return [(src, n, bool(got.get(src) == (st, n))) for src, (st, n) in sorted(ref.items())]
+
+
+def _by_source(df: DataFrame, spec) -> dict:
+    """One-shot per-source token-state build, collected by ``_states``."""
+    return _states(sketch_agg(df, spec, token_array_values("tokens"), by=["source"]), "source")
+
+
+def _committed_halves(spark: SparkSession, sf_dir: str, spec, prefix: str, read):
+    """Commit the token twin's two xxhash64(doc_id) halves as two snapshots
+    of a fresh per-source snapshot sketch table and return ``(read(table
+    dir), twin, halves)``; the table is deleted after ``read``."""
+    tdf = spark.read.parquet(tok.materialize_token_table(_sf_name(sf_dir)))
+    halves = [tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == i) for i in (0, 1)]
+    tdir = tempfile.mkdtemp(prefix=prefix)
+    try:
+        for i, h in enumerate(halves):
+            update_snapshot_table(
+                spark,
+                tdir,
+                sketch_agg(h, spec, token_array_values("tokens"), by=["source"]),
+                spec,
+                by=["source"],
+                lineage={"increment": f"half-{i}"},
+            )
+        return read(tdir), tdf, halves
+    finally:
+        shutil.rmtree(tdir, ignore_errors=True)
 
 
 def incremental_update_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -995,46 +1024,14 @@ def incremental_update_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily-pipeline pattern where history is never rescanned. The oracle
     recomputes per-source token volumes from the parquet twin and asserts
     the flag."""
-    import shutil
-    import tempfile
-
-    from .agg import sketch_agg, token_array_values
-    from .snapshot_table import read_snapshot_table, update_snapshot_table
-
     spec = ExaLogLogSpec(2, 20, 8)
-    path = tok.materialize_token_table(_sf_name(sf_dir))
-    tdf = spark.read.parquet(path)
-    halves = [
-        tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == i) for i in (0, 1)
-    ]
-    tdir = tempfile.mkdtemp(prefix="ellinc_")
-    try:
-        for h in halves:
-            update_snapshot_table(
-                spark,
-                tdir,
-                sketch_agg(h, spec, token_array_values("tokens"), by=["source"]),
-                spec,
-                by=["source"],
-            )
-        incr = {
-            r.source: (bytes(r.sketch), int(r.n_values))
-            for r in read_snapshot_table(spark, tdir).collect()
-        }
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-    full = {
-        r.source: (bytes(r.sketch), int(r.n_values))
-        for r in sketch_agg(
-            tdf, spec, token_array_values("tokens"), by=["source"]
-        ).collect()
-    }
-    rows = [
-        (src, n, bool(incr.get(src) == (state, n)))
-        for src, (state, n) in sorted(full.items())
-    ]
+    incr, tdf, _ = _committed_halves(
+        spark, sf_dir, spec, "ellinc_",
+        lambda tdir: _states(read_snapshot_table(spark, tdir), "source"),
+    )
     return spark.createDataFrame(
-        rows, "source string, total_tokens long, incremental_byte_identical boolean"
+        _identity_rows(_by_source(tdf, spec), incr),
+        "source string, total_tokens long, incremental_byte_identical boolean",
     )
 
 
@@ -1048,73 +1045,27 @@ def snapshot_time_travel_invariant(spark: SparkSession, sf_dir: str) -> DataFram
     recorded total_values equals the table's exact token volume. The
     oracle recomputes per-source volumes from the parquet twin and
     asserts all three flags."""
-    import shutil
-    import tempfile
-
-    from .agg import sketch_agg, token_array_values
-    from .snapshot_table import (
-        read_snapshot_table,
-        snapshot_history,
-        update_snapshot_table,
-    )
-
     spec = ExaLogLogSpec(2, 20, 8)
-    path = tok.materialize_token_table(_sf_name(sf_dir))
-    tdf = spark.read.parquet(path)
-    halves = [
-        tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == i) for i in (0, 1)
-    ]
-    tdir = tempfile.mkdtemp(prefix="ellsnap_")
-    try:
-        for i, h in enumerate(halves):
-            update_snapshot_table(
-                spark,
-                tdir,
-                sketch_agg(h, spec, token_array_values("tokens"), by=["source"]),
-                spec,
-                by=["source"],
-                lineage={"increment": f"half-{i}"},
-            )
-        final = {
-            r.source: (bytes(r.sketch), int(r.n_values))
-            for r in read_snapshot_table(spark, tdir).collect()
-        }
-        snap1 = {
-            r.source: (bytes(r.sketch), int(r.n_values))
-            for r in read_snapshot_table(spark, tdir, snapshot_id=1).collect()
-        }
-        hist = snapshot_history(tdir)
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-    full = {
-        r.source: (bytes(r.sketch), int(r.n_values))
-        for r in sketch_agg(
-            tdf, spec, token_array_values("tokens"), by=["source"]
-        ).collect()
-    }
-    half0 = {
-        r.source: (bytes(r.sketch), int(r.n_values))
-        for r in sketch_agg(
-            halves[0], spec, token_array_values("tokens"), by=["source"]
-        ).collect()
-    }
+    (final, snap1, hist), tdf, halves = _committed_halves(
+        spark, sf_dir, spec, "ellsnap_",
+        lambda tdir: (
+            _states(read_snapshot_table(spark, tdir), "source"),
+            _states(read_snapshot_table(spark, tdir, snapshot_id=1), "source"),
+            snapshot_history(tdir),
+        ),
+    )
+    full = _by_source(tdf, spec)
+    half0 = _by_source(halves[0], spec)
     lineage_ok = bool(
         hist[-1]["summary"]["total_values"] == sum(n for _, n in full.values())
         and hist[0]["summary"]["total_values"] == sum(n for _, n in half0.values())
         and [s["lineage"]["increment"] for s in hist] == ["half-0", "half-1"]
     )
-    rows = [
-        (
-            src,
-            n,
-            bool(final.get(src) == (state, n)),
-            bool(snap1.get(src) == half0.get(src)),
-            lineage_ok,
-        )
-        for src, (state, n) in sorted(full.items())
-    ]
     return spark.createDataFrame(
-        rows,
+        [
+            (src, n, ok, bool(snap1.get(src) == half0.get(src)), lineage_ok)
+            for src, n, ok in _identity_rows(full, final)
+        ],
         "source string, total_tokens long, final_byte_identical boolean, "
         "time_travel_byte_identical boolean, lineage_totals_ok boolean",
     )
@@ -1128,9 +1079,7 @@ def text_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg() over per-doc doubles, whose partial-aggregation order is
     partition-nondeterministic in the last ulp.
     """
-    from .textstats import with_text_features
-
-    feats = with_text_features(_docs(spark, sf_dir))
+    feats = textstats.with_text_features(_docs(spark, sf_dir))
     tw = F.sum("n_words").cast("long")
     return feats.groupBy("source").agg(
         F.count(F.lit(1)).alias("docs"),
@@ -1149,9 +1098,7 @@ def token_count_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish approximate token counts per source (words + punctuation
     runs; pure JVM expressions). Hash-stable: one division of exact integer
     sums, rounded once (same rule as text_quality_by_source)."""
-    from .textstats import bpe_ish_token_count
-
-    d = bpe_ish_token_count(_docs(spark, sf_dir))
+    d = textstats.bpe_ish_token_count(_docs(spark, sf_dir))
     tot = F.sum("approx_tokens").cast("long")
     return d.groupBy("source").agg(
         F.count(F.lit(1)).alias("docs"),
@@ -1162,10 +1109,8 @@ def token_count_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language-ID vs the metadata lang column (counts)."""
-    from .textstats import predicted_lang
-
     return (
-        predicted_lang(_docs(spark, sf_dir))
+        textstats.predicted_lang(_docs(spark, sf_dir))
         .groupBy("lang", "predicted_lang")
         .agg(F.count(F.lit(1)).alias("docs"))
     )
@@ -1174,9 +1119,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order/duplication-robust content fingerprints: distinct-word-set md5
     groups with >1 doc (near-exact dedup beyond byte identity)."""
-    from .textstats import doc_fingerprint
-
-    fp = doc_fingerprint(_docs(spark, sf_dir))
+    fp = textstats.doc_fingerprint(_docs(spark, sf_dir))
     return (
         fp.groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("dup_count"), F.min("doc_id").alias("keeper"))
@@ -1189,10 +1132,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sf_name(sf_dir: str) -> str:
-    return sf_dir.rstrip("/").rsplit("/", 1)[-1]
-
-
 def ell_distinct_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: per-source approximate distinct-token counts over the
     (doc_id, tokens, n_tok, source) table with ExaLogLog(2,20,10).
@@ -1201,8 +1140,7 @@ def ell_distinct_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFram
     parquet for DuckDB, which recomputes total/exact-distinct tokens per
     source; ``within_bound`` asserts |est/exact - 1| <= 5*RSE."""
     spec = ExaLogLogSpec(2, 20, 10)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
+    df = _token_table(spark, sf_dir)
     out = sketch_agg(df, spec, token_array_values("tokens"), by=["source"])
     est = with_estimate(out, spec).select(
         "source", F.col("n_values").alias("total_tokens"), "estimate"
@@ -1212,14 +1150,11 @@ def ell_distinct_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy("source")
         .agg(F.count_distinct("t").alias("exact_distinct_tokens"))
     )
-    bound = 5 * spec.theoretical_rse()
     return est.join(exact, "source").select(
         "source",
         "total_tokens",
         "exact_distinct_tokens",
-        (
-            F.abs(F.col("estimate") / F.col("exact_distinct_tokens") - 1) <= F.lit(bound)
-        ).alias("within_bound"),
+        _within_rel("estimate", "exact_distinct_tokens", 5 * spec.theoretical_rse()),
     )
 
 
@@ -1228,22 +1163,16 @@ def salted_vs_mapside_consistency(spark: SparkSession, sf_dir: str) -> DataFrame
     byte-identical per-source states to the map-side partial path (explicit
     skew-mitigation correctness; the oracle independently recounts the
     source groups from the materialized parquet twin)."""
-    from .agg import ExaLogLogSpec, sketch_agg, sketch_agg_salted, token_array_values
-
     spec = ExaLogLogSpec(2, 20, 8)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
-    a = {
-        r.source: bytes(r.sketch)
-        for r in sketch_agg(df, spec, token_array_values("tokens"), by=["source"]).collect()
-    }
-    b = {
-        r.source: bytes(r.sketch)
-        for r in sketch_agg_salted(
+    df = _token_table(spark, sf_dir)
+    a = _by_source(df, spec)
+    b = _states(
+        sketch_agg_salted(
             df, spec, token_array_values("tokens"), by=["source"],
             salt_col="doc_id", n_salts=8,
-        ).collect()
-    }
+        ),
+        "source",
+    )
     return spark.createDataFrame(
         [(len(a), a == b)], "sources long, states_identical boolean"
     )
@@ -1253,12 +1182,8 @@ def sketch_rollup_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-native rollup: per-source + grand-total distinct-token
     estimates derived from ONE pass (coarser level re-merged from finer
     sketch rows, no rescan)."""
-    from .agg import ExaLogLogSpec, sketch_agg, token_array_values, with_estimate
-    from .rollup import sketch_rollup
-
     spec = ExaLogLogSpec(2, 20, 10)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
+    df = _token_table(spark, sf_dir)
     fine = sketch_agg(df, spec, token_array_values("tokens"), by=["source"])
     levels = sketch_rollup(fine, spec, [("source",), ()])
     est = with_estimate(levels, spec).select(
@@ -1273,7 +1198,6 @@ def sketch_rollup_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("source").alias("e_source"), "e_level", "exact_distinct_tokens")
     )
-    bound = 5 * spec.theoretical_rse()
     return est.join(
         exact,
         est["source"].eqNullSafe(exact["e_source"]) & (est["level"] == exact["e_level"]),
@@ -1282,22 +1206,15 @@ def sketch_rollup_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level",
         "total_tokens",
         "exact_distinct_tokens",
-        (
-            F.abs(F.col("estimate") / F.col("exact_distinct_tokens") - 1) <= F.lit(bound)
-        ).alias("within_bound"),
+        _within_rel("estimate", "exact_distinct_tokens", 5 * spec.theoretical_rse()),
     )
 
 
 def sparse_distinct_tokens_per_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse mode on a small sample: per-row sketch-free token-stream
     estimates vs exact per-row distinct counts (all within 2%)."""
-    from .functions import token_stream_estimate
-
-    tok.materialize_token_table(_sf_name(sf_dir))
     # deterministic sample: zero-padded doc_ids make this a stable prefix cut
-    df = tok.token_table_for_sf_dir(spark, sf_dir).filter(
-        F.col("doc_id") < "doc-0000000200"
-    )
+    df = _token_table(spark, sf_dir).filter(F.col("doc_id") < "doc-0000000200")
     # per-row: tokens -> element hashes -> ExaLogLog tokens -> estimate
     hashed = df.select(
         "doc_id",
@@ -1321,11 +1238,6 @@ def sparse_distinct_tokens_per_doc_sample(spark: SparkSession, sf_dir: str) -> D
 
 def _tokens_of_hashes_col(col):
     """array<long> of hashes -> array<int> of ExaLogLog tokens (Arrow UDF)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    from ..sketchlib.exaloglog import compute_token
 
     def f(s):
         def conv(arr):
@@ -1345,9 +1257,8 @@ def token_passthrough_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     the materialized parquet copy (the same file the DuckDB oracle reads), so
     ``bad_tokens`` counts any array<int32> that survives Spark scan/shuffle
     non-identically. All violation counts must be zero."""
-    path = tok.materialize_token_table(_sf_name(sf_dir))
-    gen = tok.token_table_for_sf_dir(spark, sf_dir)
-    ref = spark.read.parquet(path).select(
+    gen = _token_table(spark, sf_dir)
+    ref = spark.read.parquet(tok.materialize_token_table(_sf_name(sf_dir))).select(
         "doc_id",
         F.col("tokens").alias("ref_tokens"),
         F.col("n_tok").alias("ref_n_tok"),
@@ -1384,17 +1295,9 @@ def martingale_distinct_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFr
     ``martingale_within_bound`` asserts |est/exact - 1| <= 5*RSE_mart with
     RSE_mart = 0.019858·sqrt(256/2^p) (≙ the published martingale RSE
     constant, martingale_theoretical_relative_standard_error_constants)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..sketchlib.bitops import splitmix64
-    from ..sketchlib.constants import theoretical_rse_martingale
-    from ..sketchlib.replay import martingale_estimate_stream
-
     t_, d_, p_ = 2, 20, 8
     bound = 5 * theoretical_rse_martingale(t_, d_, p_)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
+    df = _token_table(spark, sf_dir)
 
     def est_group(pdf: pd.DataFrame) -> pd.DataFrame:
         # Group-concatenation form: holds ONE group's token arrays in
@@ -1460,18 +1363,10 @@ def martingale_partition_stream_bound(spark: SparkSession, sf_dir: str) -> DataF
 
     ``martingale_within_bound`` asserts |est/exact - 1| <= 5*RSE_mart, the
     published martingale RSE for (2,20,8)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..sketchlib.constants import theoretical_rse_martingale
-    from ..sketchlib.replay import StreamingFirstHits, _event_luts
-    from .agg import token_array_values
-
     t_, d_, p_ = 2, 20, 8
     n_buckets = 8
     bound = 5 * theoretical_rse_martingale(t_, d_, p_)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
+    df = _token_table(spark, sf_dir)
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id")), 1, 1), 16, 10).cast("int"),
         F.lit(n_buckets),
@@ -1531,13 +1426,10 @@ def martingale_partition_stream_bound(spark: SparkSession, sf_dir: str) -> DataF
             "bucket",
             "total_tokens",
             "exact_distinct_tokens",
-            (
-                F.abs(
-                    F.col("martingale_estimate") / F.col("exact_distinct_tokens")
-                    - 1.0
-                )
-                <= bound
-            ).alias("martingale_within_bound"),
+            _within_rel(
+                "martingale_estimate", "exact_distinct_tokens", bound,
+                "martingale_within_bound",
+            ),
         )
         .orderBy("bucket")
     )
@@ -1570,26 +1462,11 @@ def source_overlap_matrix_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservative envelope — the same bound the single-pair
     intersection_distinct_words_bound query has pinned since round 2).
     """
-    from itertools import combinations
-
-    from .rollup import estimate_intersection
-
-    spec = ExaLogLogSpec(2, 20, 10)
-    words = _words(spark, sf_dir).withColumn("h", F.xxhash64("word")).persist()
-    state_rows = sketch_agg(words, spec, hash64_values("h"), by=["source"]).collect()
-    states = {r.source: bytes(r.sketch) for r in state_rows}
-    ests = {s: spec.finalize(spec.deserialize(b)) for s, b in states.items()}
-    rse = spec.theoretical_rse()
-    pairs = [
-        (
-            a,
-            b,
-            float(estimate_intersection(spec, states[a], states[b])),
-            float(5.0 * rse * (ests[a] + ests[b])),
-        )
-        for a, b in combinations(sorted(states), 2)
-    ]
-    estdf = spark.createDataFrame(pairs, "s1 string, s2 string, est double, tol double")
+    words = _hashed_words(spark, sf_dir)
+    estdf = spark.createDataFrame(
+        _pair_intersections(words, ExaLogLogSpec(2, 20, 10)),
+        "s1 string, s2 string, est double, tol double",
+    )
     dw = words.select("source", "word").distinct()
     exact = (
         dw.alias("a")
@@ -1734,9 +1611,7 @@ def theta_set_ops_words_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold over two <=32 KB states; the exact INTERSECT/EXCEPT pass is the
     verification harness only.
     """
-    from .specs import ThetaSpec
-
-    spec = ThetaSpec(k=4096)
+    spec = specs.ThetaSpec(k=4096)
     # 3-gram shingle sets of the even- vs odd-doc_id halves of the corpus:
     # ~10k distinct shingles per side at sf0.01, so both KMV states
     # SATURATE (theta ~ 0.4) and the query exercises the sampling
@@ -1747,11 +1622,8 @@ def theta_set_ops_words_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("h", F.xxhash64("word"))
         .persist()
     )
-    states = {
-        r.par: bytes(r.sketch)
-        for r in sketch_agg(sh, spec, hash64_values("h"), by=["par"]).collect()
-    }
-    ops = spec.set_ops(states[0], states[1])
+    states = _states(sketch_agg(sh, spec, hash64_values("h"), by=["par"]), "par")
+    ops = spec.set_ops(states[0][0], states[1][0])
     dw0 = sh.filter(F.col("par") == 0).select("word").distinct()
     dw1 = sh.filter(F.col("par") == 1).select("word").distinct()
     exact_common = dw0.intersect(dw1).count()
@@ -1793,22 +1665,10 @@ def mg_heavy_hitter_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic bound survives ANY merge schedule, so 10^5
     partitions on 10^12 rows need no coordination.
     """
-    import numpy as np
-
-    from .specs import MisraGriesSpec, token_array_ids
-
-    spec = MisraGriesSpec(k=256)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
-    row = sketch_agg(df, spec, token_array_ids("tokens")).collect()[0]
-    mg = spec.deserialize(bytes(row.sketch))
-    exact_top = (
-        df.select(F.explode("tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("token"))
-        .limit(10)
-    ).collect()
+    spec = specs.MisraGriesSpec(k=256)
+    df = _token_table(spark, sf_dir)
+    mg, _ = _states(sketch_agg(df, spec, specs.token_array_ids("tokens")), spec=spec)
+    exact_top = _exact_top_tokens(df)
     ids = np.array([r.token for r in exact_top], dtype=np.int64)
     est = mg.estimate(ids)
     err = mg.err_bound
@@ -1817,6 +1677,17 @@ def mg_heavy_hitter_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r, e in zip(exact_top, est)
     ]
     return spark.createDataFrame(data, "token int, cnt long, within_bound boolean")
+
+
+def _md5_keyed(df: DataFrame, key, *cols: str) -> DataFrame:
+    """``cols`` plus the sample priority, the first 16 hex chars of
+    md5(``key``), as two 32-bit halves ``prio_hi``, ``prio_lo`` (JVM-side)."""
+    dig = F.md5(key)
+    return df.select(
+        *cols,
+        F.conv(F.substring(dig, 1, 8), 16, 10).cast("long").alias("prio_hi"),
+        F.conv(F.substring(dig, 9, 8), 16, 10).cast("long").alias("prio_lo"),
+    )
 
 
 def bottomk_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1840,23 +1711,16 @@ def bottomk_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan — no extra shuffle of the data, no driver-side data rows.
     """
     K = 8
-    docs = _docs(spark, sf_dir)
-    dig = F.md5(F.col("doc_id").cast("string"))
-    keyed = docs.select(
-        "source",
-        "doc_id",
-        F.conv(F.substring(dig, 1, 8), 16, 10).cast("long").alias("prio_hi"),
-        F.conv(F.substring(dig, 9, 8), 16, 10).cast("long").alias("prio_lo"),
+    keyed = _md5_keyed(_docs(spark, sf_dir), F.col("doc_id").cast("string"), "source", "doc_id")
+    spec = specs.BottomKSampleSpec(k=K)
+    states = _states(
+        sketch_agg(keyed, spec, specs.md5_priority_values(), by=["source"]), "source", spec
     )
-    from .specs import BottomKSampleSpec, md5_priority_values
-
-    spec = BottomKSampleSpec(k=K)
-    states = sketch_agg(keyed, spec, md5_priority_values(), by=["source"]).collect()
-    rows = []
-    for r in states:
-        for p in spec.deserialize(bytes(r.sketch)):
-            v = int(p)
-            rows.append((r.source, v >> 32, v & 0xFFFFFFFF))
+    rows = [
+        (src, int(p) >> 32, int(p) & 0xFFFFFFFF)
+        for src, (prios, _) in states.items()
+        for p in prios
+    ]
     winners = spark.createDataFrame(rows, "source string, prio_hi long, prio_lo long")
     return (
         keyed.join(F.broadcast(winners), ["source", "prio_hi", "prio_lo"], "inner")
@@ -1897,20 +1761,9 @@ def priority_sample_docs_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side data.
     """
     K = 16
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
-    dig = F.md5(F.col("doc_id"))
-    keyed = df.select(
-        "doc_id",
-        "n_tok",
-        F.conv(F.substring(dig, 1, 8), 16, 10).cast("long").alias("prio_hi"),
-        F.conv(F.substring(dig, 9, 8), 16, 10).cast("long").alias("prio_lo"),
-    )
-    from .specs import PrioritySampleSpec, keyed_weight_values
-
-    spec = PrioritySampleSpec(k=K)
-    row = sketch_agg(keyed, spec, keyed_weight_values("n_tok")).collect()[0]
-    ps = spec.deserialize(bytes(row.sketch))
+    keyed = _md5_keyed(_token_table(spark, sf_dir), F.col("doc_id"), "doc_id", "n_tok")
+    spec = specs.PrioritySampleSpec(k=K)
+    ps, _ = _states(sketch_agg(keyed, spec, specs.keyed_weight_values("n_tok")), spec=spec)
     skeys, _, w_hat = ps.sample()
     est = ps.estimate_total()
     within = bool(abs(est - ps.sum_w) <= 5.0 * ps.sigma_bound())
@@ -1947,22 +1800,13 @@ def kll_ntok_quantiles_by_source_bound(spark: SparkSession, sf_dir: str) -> Data
     verification computes every exact percentile AND every rank
     |rank(est)/n - q| in ONE grouped agg over 5x5 conditional sums (a
     single extra data pass, driver sees only 5 rows + 25 counters)."""
-    import numpy as np
-
-    from .agg import float_values, sketch_agg
-    from .specs import KLLSpec
-
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir).select(
+    df = _token_table(spark, sf_dir).select(
         "source", F.col("n_tok").cast("double").alias("v")
     )
-    spec = KLLSpec(k=200)
-    states = {
-        r.source: spec.deserialize(bytes(r.sketch))
-        for r in sketch_agg(df, spec, float_values("v"), by=["source"]).collect()
-    }
+    spec = specs.KLLSpec(k=200)
+    states = _states(sketch_agg(df, spec, float_values("v"), by=["source"]), "source", spec)
     qs = _QUANTILE_GRID
-    ests = {s: sk.quantile(np.array(qs)) for s, sk in states.items()}
+    ests = {s: sk.quantile(np.array(qs)) for s, (sk, _) in states.items()}
     agg_cols = [
         F.count(F.lit(1)).alias("n"),
         F.expr(f"percentile(v, array({','.join(str(q) for q in qs)}))").alias("exacts"),
@@ -2010,8 +1854,6 @@ def bloom_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys). At 10^12 probe rows the shuffle carries ~(match + fpr)
     fraction instead of everything.
     """
-    from .joins import bloom_anti_join, bloom_semi_join
-
     cust = _read_pq(spark, f"{sf_dir}/customer.parquet").select("c_custkey")
     urgent = _read_pq(spark, f"{sf_dir}/orders.parquet").filter(
         F.col("o_orderpriority") == "1-URGENT"
@@ -2056,16 +1898,9 @@ def tail_exact_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     2*m-value state; at 10^12 rows with m=4096 the tails cover
     q <= 4.1e-9 / q >= 1 - 4.1e-9 exactly with 64 KB states.
     """
-    from .agg import float_values, sketch_agg
-    from .specs import TailQuantileSpec
-
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir).select(
-        F.col("n_tok").cast("double").alias("v")
-    )
-    spec = TailQuantileSpec(m=1024)
-    row = sketch_agg(df, spec, float_values("v")).collect()[0]
-    tq = spec.deserialize(bytes(row.sketch))
+    df = _token_table(spark, sf_dir).select(F.col("n_tok").cast("double").alias("v"))
+    spec = specs.TailQuantileSpec(m=1024)
+    tq, _ = _states(sketch_agg(df, spec, float_values("v")), spec=spec)
     qs = [0.0001, 0.001, 0.999, 0.9999, 1.0]
     data = [(q, float(tq.quantile_disc(q))) for q in qs]
     return spark.createDataFrame(data, "q double, ntok_exact double")
@@ -2087,24 +1922,10 @@ def countsketch_hh_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition — byte-identical under any partitioning, structurally), and
     driver-side point queries on the single merged KB-scale state.
     """
-    import numpy as np
-
-    from ..sketchlib.bitops import splitmix64
-    from .agg import sketch_agg, token_array_values
-    from .specs import CountSketchSpec
-
-    spec = CountSketchSpec(width=8192, depth=5)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
-    row = sketch_agg(df, spec, token_array_values("tokens")).collect()[0]
-    cs = spec.deserialize(bytes(row.sketch))
-    exact_top = (
-        df.select(F.explode("tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("token"))
-        .limit(10)
-    ).collect()
+    spec = specs.CountSketchSpec(width=8192, depth=5)
+    df = _token_table(spark, sf_dir)
+    cs, _ = _states(sketch_agg(df, spec, token_array_values("tokens")), spec=spec)
+    exact_top = _exact_top_tokens(df)
     ids = np.array([r.token for r in exact_top], dtype=np.int64)
     est = cs.query(splitmix64(ids.view(np.uint64)))
     f2_ub = cs.f2() * (1.0 + spec.cfg.rel_f2_error_bound)
@@ -2130,14 +1951,9 @@ def countsketch_f2_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle recomputes it in DuckDB); the estimator itself never
     shuffles a data-sized relation.
     """
-    from .agg import sketch_agg, token_array_values
-    from .specs import CountSketchSpec
-
-    spec = CountSketchSpec(width=8192, depth=5)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
-    row = sketch_agg(df, spec, token_array_values("tokens")).collect()[0]
-    cs = spec.deserialize(bytes(row.sketch))
+    spec = specs.CountSketchSpec(width=8192, depth=5)
+    df = _token_table(spark, sf_dir)
+    cs, _ = _states(sketch_agg(df, spec, token_array_values("tokens")), spec=spec)
     est = cs.f2()
     f2_exact = (
         df.select(F.explode("tokens").alias("token"))
@@ -2168,23 +1984,16 @@ def join_size_estimate_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     product. At 10^12 x 10^9 rows this estimates the join size with two
     map-only passes and zero shuffle — the join itself would shuffle TBs.
     """
-    import numpy as np
-
-    from .agg import hash64_values, sketch_agg
-    from .specs import CountSketchSpec
-    from ..sketchlib.countsketch import join_size_error_bound
-
-    spec = CountSketchSpec(width=16384, depth=5)
+    spec = specs.CountSketchSpec(width=16384, depth=5)
     orders = _read_pq(spark, f"{sf_dir}/orders.parquet").select(
         F.xxhash64(F.col("o_custkey").cast("long")).alias("h")
     )
     cust = _read_pq(spark, f"{sf_dir}/customer.parquet").select(
         F.xxhash64(F.col("c_custkey").cast("long")).alias("h")
     )
-    row_o = sketch_agg(orders, spec, hash64_values("h")).collect()[0]
-    row_c = sketch_agg(cust, spec, hash64_values("h")).collect()[0]
-    cs_o = spec.deserialize(bytes(row_o.sketch))
-    cs_c = spec.deserialize(bytes(row_c.sketch))
+    (cs_o, _), (cs_c, _) = (
+        _states(sketch_agg(t, spec, hash64_values("h")), spec=spec) for t in (orders, cust)
+    )
     est = cs_o.inner_product(cs_c)
     infl = 1.0 + spec.cfg.rel_f2_error_bound
     bound = join_size_error_bound(spec.cfg, cs_o.f2() * infl, cs_c.f2() * infl)
@@ -2223,30 +2032,15 @@ def token_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity here is verification-only — the profile itself never
     shuffles a data-sized relation.
     """
-    import numpy as np
-
-    from ..sketchlib.bitops import splitmix64
-    from ..sketchlib.countsketch import CountSketchConfig
-    from .agg import ExaLogLogSpec
-    from .profile import profile_token_table
-
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
+    df = _token_table(spark, sf_dir)
     profs = profile_token_table(df)
 
     ell_bound = 5 * ExaLogLogSpec(2, 20, 10).theoretical_rse()
     cs_cfg = CountSketchConfig(8192, 5)
 
     # exact verification stats in two grouped passes (driver sees 5 rows);
-    # freq feeds both the distinct/F2 agg and the top-1 rank branch —
-    # persist the small (source, token, cnt) intermediate (CLAUDE.md: no
-    # ReusedExchange across aliases)
-    exploded = df.select("source", F.explode("tokens").alias("token"))
-    freq = exploded.groupBy("source", "token").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).persist()
-    from pyspark.sql.window import Window
-
+    # freq feeds both the distinct/F2 agg and the top-1 rank branch
+    freq = _token_freq(df)
     w_top = Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("token"))
     exact = (
         freq.groupBy("source")
@@ -2346,14 +2140,10 @@ def trigram_novelty_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     KB states to the driver. The exact distinct count here feeds the
     verification flag only; the oracle recomputes it in DuckDB.
     """
-    from .agg import ExaLogLogSpec, sketch_agg, token_trigram_values
-
     spec = ExaLogLogSpec(2, 20, 10)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
-    row = sketch_agg(df, spec, token_trigram_values("tokens")).collect()[0]
-    est = spec.finalize(spec.deserialize(bytes(row.sketch)))
-    total = int(row.n_values)
+    df = _token_table(spark, sf_dir)
+    sk, total = _states(sketch_agg(df, spec, token_trigram_values("tokens")), spec=spec)
+    est = spec.finalize(sk)
 
     exact = (
         df.filter(F.size("tokens") >= 3)
@@ -2395,24 +2185,14 @@ def f2_rollup_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch_agg, KB states re-merged per level; every exact F2 below is
     verification-only (oracle recomputes in DuckDB GROUP BY).
     """
-    from .agg import sketch_agg, token_array_values
-    from .rollup import sketch_rollup
-    from .specs import CountSketchSpec
-
-    spec = CountSketchSpec(width=8192, depth=5)
-    tok.materialize_token_table(_sf_name(sf_dir))
-    df = tok.token_table_for_sf_dir(spark, sf_dir)
+    spec = specs.CountSketchSpec(width=8192, depth=5)
+    df = _token_table(spark, sf_dir)
     fine = sketch_agg(df, spec, token_array_values("tokens"), by=["source"])
     levels = sketch_rollup(fine, spec, [("source",), ()]).collect()
 
     # freq feeds BOTH exact branches (per-source F2 and the overlap-aware
-    # total) — persist the small (source, token, cnt) intermediate
-    # (CLAUDE.md: no ReusedExchange across aliases)
-    freq = (
-        df.select("source", F.explode("tokens").alias("t"))
-        .groupBy("source", "t")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    ).persist()
+    # total)
+    freq = _token_freq(df)
     per_src = {
         r.source: int(r.f2)
         for r in freq.groupBy("source")
@@ -2420,7 +2200,7 @@ def f2_rollup_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
     total_f2 = int(
-        freq.groupBy("t")
+        freq.groupBy("token")
         .agg(F.sum("cnt").alias("c"))
         .agg(F.sum(F.col("c") * F.col("c")).alias("f2"))
         .collect()[0]
@@ -2460,59 +2240,29 @@ def sliding_window_heavy_users_bound(spark: SparkSession, sf_dir: str) -> DataFr
     24x overlap factor; the state-fanout path shuffles 24 KB-rows per
     hour regardless of event volume (exact side = verification only).
     """
-    from .agg import id64_values
-    from .specs import MisraGriesSpec
-
-    spec = MisraGriesSpec(k=64)
+    spec = specs.MisraGriesSpec(k=64)
     # ev feeds BOTH the hour-state build and the exact-top verification
     # branch — persist the small projected intermediate so the events scan
     # and xxhash64 don't recompute per branch (no ReusedExchange across
     # aliases; same convention as token_profile_by_source's freq)
-    ev = (
-        _read_pq(spark, f"{sf_dir}/events.parquet")
-        .filter(F.col("user_id").isNotNull())
-        .select(
-            F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("hour"),
-            "user_id",
-            F.xxhash64("user_id").alias("uid"),
-        )
-        .persist()
-    )
-    hour_states = sketch_agg(ev, spec, id64_values("uid"), by=["hour"])
-    window_states = {
-        r.window_start: spec.deserialize(bytes(r.sketch))
-        for r in _sliding_window_states(hour_states, spec).collect()
-    }
-
-    from pyspark.sql.window import Window
-
+    ev = _user_hours(spark, sf_dir).persist()
+    hour_states = sketch_agg(ev, spec, id64_values("h"), by=["hour"])
+    window_states = _states(_sliding_window_states(hour_states, spec), "window_start", spec)
     w_rank = Window.partitionBy("window_start").orderBy(
         F.desc("cnt"), F.asc("user_id")
     )
     exact_top = (
-        ev.select(
-            "user_id", "uid",
-            F.explode(F.sequence(F.lit(0), F.lit(23))).alias("k"),
-            "hour",
-        )
-        .select(
-            F.expr("timestampadd(HOUR, -k, hour)").alias("window_start"),
-            "user_id",
-            "uid",
-        )
-        .groupBy("window_start", "user_id", "uid")
+        _fan_out_windows(ev, "user_id", "h")
+        .groupBy("window_start", "user_id", "h")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("rank", F.row_number().over(w_rank))
         .filter(F.col("rank") <= 3)
     ).collect()
     ev.unpersist()
-
-    import numpy as np
-
     data = []
     for r in exact_top:
-        mg = window_states[r.window_start]
-        est = int(mg.estimate(np.array([r.uid], dtype=np.int64))[0])
+        mg, _ = window_states[r.window_start]
+        est = int(mg.estimate(np.array([r.h], dtype=np.int64))[0])
         ok = est <= r.cnt <= est + mg.err_bound + 1e-9
         data.append(
             (r.window_start, int(r.rank), int(r.user_id), int(r.cnt), bool(ok))

@@ -1,9 +1,13 @@
 """Local mimic of the driver's correctness gate: run each __spark_entry__
 query on Spark and its oracle on DuckDB at sf0.01, compare row count, column
-names, and order-insensitive values (columns sorted by name)."""
+names, and order-insensitive values (columns sorted by name).
+
+Each result line ends with ``sha256=`` of the query's normalized sorted
+rows, so two trees' runs can be compared with ``diff``."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -52,8 +56,9 @@ def main():
         rows = sdf.collect()
         cols = sorted(sdf.columns)
         svals = sorted(tuple(norm(r[c]) for c in cols) for r in rows)
+        digest = hashlib.sha256(repr((cols, svals)).encode()).hexdigest()
         if name not in oracles:
-            print(f"{name}: rows-only, {len(rows)} rows  cols={cols}")
+            print(f"{name}: rows-only, {len(rows)} rows  cols={cols}  sha256={digest}")
             if len(rows) == 0 and name != "dedup":
                 print("  WARNING: zero rows")
             continue
@@ -63,7 +68,10 @@ def main():
             tuple(norm(v) for v in row) for row in od[ocols].itertuples(index=False)
         )
         ok = cols == ocols and len(svals) == len(ovals) and svals == ovals
-        print(f"{name}: {'OK' if ok else 'MISMATCH'} ({len(svals)} spark rows, {len(ovals)} oracle rows)")
+        print(
+            f"{name}: {'OK' if ok else 'MISMATCH'} ({len(svals)} spark rows, "
+            f"{len(ovals)} oracle rows)  sha256={digest}"
+        )
         if not ok:
             failures += 1
             if cols != ocols:

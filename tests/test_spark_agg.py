@@ -224,6 +224,34 @@ def test_with_estimate_default_finalize_batch(spark, distributed):
     assert got == {g: spec.finalize(spec.deserialize(s)) for g, s in rows}
 
 
+def test_local_df_types_round_trip_as_local_relation(spark):
+    """local_df has one path: the column types its callers pass (group
+    keys, band ids and buckets, binary states, counts, estimates, window
+    starts; nulls included) convert through Arrow into a LocalRelation
+    row-exactly, and a value no path accepts raises instead of being
+    retried."""
+    import datetime
+
+    from pyspark.errors import PySparkTypeError
+
+    from exaloglog_paper_spark.ops.agg import local_df
+
+    rows = [
+        (1, 0, "ab", b"\x00\xff", 1.5, True, datetime.datetime(2024, 1, 1, 3)),
+        (None, 3, None, b"", None, False, None),
+    ]
+    df = local_df(
+        spark,
+        rows,
+        "g long, band int, bucket string, sketch binary, estimate double, "
+        "ok boolean, window_start timestamp",
+    )
+    assert df.isLocal()
+    assert [tuple(r) for r in df.collect()] == rows
+    with pytest.raises(PySparkTypeError):
+        local_df(spark, [("not a long",)], "x long")
+
+
 def test_read_tokens_parquet_and_iceberg_gating(spark):
     """read_tokens: parquet path works and auto-detects; the Iceberg path
     (no jars in this sandbox) raises an actionable error, not a bare
