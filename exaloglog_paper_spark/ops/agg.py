@@ -49,29 +49,33 @@ from ..sketchlib.exaloglog import ExaLogLog, ExaLogLogConfig
 
 
 class SketchSpec(abc.ABC):
-    """Picklable description of a mergeable sketch (the 5-op protocol)."""
+    """Picklable description of a mergeable sketch (the 5-op protocol).
+
+    A spec over a sketchlib class declares it as ``state_cls`` and sets
+    ``self.cfg``: the class's own ``cls(cfg)``, ``merge_``, ``serialize``
+    and ``cls.deserialize(cfg, data)`` are then the spec's ``empty``,
+    ``merge``, ``serialize`` and ``deserialize``. A spec writes ``add``
+    and ``finalize``, and overrides the rest only where its state differs.
+    """
 
     name: str = "sketch"
+    state_cls: type
 
-    @abc.abstractmethod
     def empty(self):
-        ...
+        return self.state_cls(self.cfg)
 
     @abc.abstractmethod
     def add(self, state, values: np.ndarray):
         """Fold a batch of values into state; returns the (new) state."""
 
-    @abc.abstractmethod
     def merge(self, a, b):
-        ...
+        return a.merge_(b)
 
-    @abc.abstractmethod
     def serialize(self, state) -> bytes:
-        ...
+        return state.serialize()
 
-    @abc.abstractmethod
     def deserialize(self, data: bytes):
-        ...
+        return self.state_cls.deserialize(self.cfg, data)
 
     @abc.abstractmethod
     def finalize(self, state) -> float:
@@ -106,18 +110,19 @@ class SketchSpec(abc.ABC):
 class ExaLogLogSpec(SketchSpec):
     """ExaLogLog over pre-hashed 64-bit values (uint64 numpy arrays)."""
 
+    state_cls = ExaLogLog
+
     def __init__(self, t: int = 2, d: int = 20, p: int = 10):
         self.cfg = ExaLogLogConfig(t, d, p)
         self.name = f"exaloglog_t{t}_d{d}_p{p}"
 
+    # ExaLogLog is built from registers: from_config and wrap stand in for
+    # the protocol's cls(cfg) and cls.deserialize(cfg, data)
     def empty(self) -> ExaLogLog:
         return ExaLogLog.from_config(self.cfg)
 
     def add(self, state: ExaLogLog, values: np.ndarray) -> ExaLogLog:
         return state.add_hashes(values)
-
-    def merge(self, a: ExaLogLog, b: ExaLogLog) -> ExaLogLog:
-        return a.merge_(b)
 
     def merge_many(self, states):
         """Batched k-way merge: stack the (same-config) register arrays and
@@ -138,9 +143,6 @@ class ExaLogLogSpec(SketchSpec):
             np.stack([s.regs for s in states]), c0.d
         )
         return out
-
-    def serialize(self, state: ExaLogLog) -> bytes:
-        return state.serialize()
 
     def serialize_batch(self, states) -> list:
         """Batched bit-pack of homogeneous register states (one numpy pass
@@ -268,6 +270,12 @@ class Extractor:
 
     input_cols: tuple[str, ...] = ()
 
+    def __init__(self, col: str):
+        """The single-column form; multi-column extractors define their
+        own ``input_cols``."""
+        self.col = col
+        self.input_cols = (col,)
+
     def __call__(self, batch) -> tuple:
         raise NotImplementedError
 
@@ -299,10 +307,6 @@ class token_array_values(Extractor):
     """Flatten an ``array<int32>`` column zero-copy and hash every token to
     64 bits with splitmix64 (the primary tokens:array<int32> path)."""
 
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
-
     def __call__(self, batch):
         flat, lengths = flat_list_values(batch, self.col)
         return splitmix64(flat.view(np.uint64)), lengths
@@ -315,10 +319,6 @@ class token_trigram_values(Extractor):
     below the document level. Windows never cross row boundaries; rows
     shorter than 3 tokens contribute nothing. All work is one flat pass
     over the batch (no per-row Python)."""
-
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
 
     def __call__(self, batch):
         flat, lengths = flat_list_values(batch, self.col)
@@ -341,10 +341,6 @@ class hash64_values(Extractor):
     """Column already holds 64-bit hashes (e.g. from JVM-side F.xxhash64 —
     keeps the hashing inside whole-stage codegen)."""
 
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
-
     def __call__(self, batch):
         vals = batch.column(self.col).to_numpy(zero_copy_only=False)
         return vals.astype(np.int64, copy=False).view(np.uint64), None
@@ -358,10 +354,6 @@ class id64_values(Extractor):
     int64: mixing uint64 views into MG's int64 id arrays would silently
     promote to float64 (see CLAUDE.md numpy notes)."""
 
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
-
     def __call__(self, batch):
         vals = batch.column(self.col).to_numpy(zero_copy_only=False)
         return vals.astype(np.int64, copy=False), None
@@ -370,10 +362,6 @@ class id64_values(Extractor):
 class int_values(Extractor):
     """Integer column hashed with splitmix64."""
 
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
-
     def __call__(self, batch):
         vals = batch.column(self.col).to_numpy(zero_copy_only=False)
         return splitmix64(vals.astype(np.int64, copy=False).view(np.uint64)), None
@@ -381,10 +369,6 @@ class int_values(Extractor):
 
 class float_values(Extractor):
     """Raw float values (for quantile sketches — no hashing)."""
-
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
 
     def __call__(self, batch):
         return batch.column(self.col).to_numpy(zero_copy_only=False).astype(np.float64), None
@@ -887,7 +871,3 @@ def with_estimate(
 
     return df.withColumn(out, est(F.col(sketch_col)))
 
-
-def merge_two(spec: SketchSpec, a: bytes, b: bytes) -> bytes:
-    """Driver-side convenience: merge two serialized states."""
-    return spec.serialize(spec.merge(spec.deserialize(a), spec.deserialize(b)))

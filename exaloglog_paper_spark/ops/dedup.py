@@ -106,6 +106,16 @@ def _cap_bucket_size(
     head = big.take(probe_limit + 1)
     if not head:
         return exploded, None
+
+    def star_edges(members: DataFrame) -> DataFrame:
+        """Members of oversized buckets -> hub-star edges."""
+        return members.selectExpr(
+            "__hub AS id_a",  # hub = bucket min id
+            f"{id_col} AS id_b",
+            *[f"__hub_{c} AS a_{c}" for c in payload_cols],
+            *[f"{c} AS b_{c}" for c in payload_cols],
+        ).filter(F.col("id_a") != F.col("id_b"))
+
     if len(head) <= probe_limit:
         from .agg import local_df
 
@@ -117,34 +127,14 @@ def _cap_bucket_size(
         kept = exploded.join(big_local, keys, "left_anti").select(
             *exploded.columns
         )
-        star = (
-            exploded.join(big_local, keys, "inner")
-            .selectExpr(
-                f"__hub AS id_a",  # hub = bucket min id
-                f"{id_col} AS id_b",
-                *[f"__hub_{c} AS a_{c}" for c in payload_cols],
-                *[f"{c} AS b_{c}" for c in payload_cols],
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-        return kept, star
+        return kept, star_edges(exploded.join(big_local, keys, "inner"))
     # ONE left broadcast join serves both branches (kept = no oversized
     # match, star = matched members), so the two branches share a single
     # BroadcastExchange via ReuseExchange instead of building two
     # different broadcasts from the same aggregate.
     j = exploded.join(F.broadcast(big), keys, "left")
     kept = j.filter(F.col("__bsz").isNull()).select(*exploded.columns)
-    star = (
-        j.filter(F.col("__bsz").isNotNull())
-        .selectExpr(
-            f"__hub AS id_a",  # hub = bucket min id
-            f"{id_col} AS id_b",
-            *[f"__hub_{c} AS a_{c}" for c in payload_cols],
-            *[f"{c} AS b_{c}" for c in payload_cols],
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-    )
-    return kept, star
+    return kept, star_edges(j.filter(F.col("__bsz").isNotNull()))
 
 
 def with_content_digest(df: DataFrame, text_col: str = "text") -> DataFrame:

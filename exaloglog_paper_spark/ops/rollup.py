@@ -111,7 +111,7 @@ def estimate_intersection(spec: SketchSpec, state_a: bytes, state_b: bytes) -> f
     """Inclusion-exclusion distinct-count intersection estimate."""
     a = spec.deserialize(state_a)
     b = spec.deserialize(state_b)
-    est_a = spec.finalize(spec.deserialize(state_a))
-    est_b = spec.finalize(spec.deserialize(state_b))
+    est_a = spec.finalize(a)  # before the merge, which folds b into a
+    est_b = spec.finalize(b)
     est_union = spec.finalize(spec.merge(a, b))
     return max(est_a + est_b - est_union, 0.0)

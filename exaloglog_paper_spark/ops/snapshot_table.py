@@ -86,6 +86,18 @@ def _hint_path(table_dir: str) -> str:
     return os.path.join(_meta_dir(table_dir), "version-hint.text")
 
 
+def _commit_metadata(table_dir: str, version: int, by: list, snapshots: list) -> None:
+    """Write ``v{version}.metadata.json``, then make it current by the
+    atomic version-hint swap: THE commit point."""
+    os.makedirs(_meta_dir(table_dir), exist_ok=True)
+    with open(os.path.join(_meta_dir(table_dir), f"v{version}.metadata.json"), "w") as f:
+        json.dump({"format_version": 1, "by": by, "snapshots": snapshots}, f, indent=1)
+    tmp = _hint_path(table_dir) + f".tmp{version}"
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, _hint_path(table_dir))
+
+
 def current_metadata(table_dir: str) -> dict | None:
     """Metadata the version hint points at, or None for an empty table.
 
@@ -136,7 +148,9 @@ def read_snapshot_table(
 ) -> DataFrame:
     """Current table state, or — time travel — the state as of
     ``snapshot_id``. The manifest names immutable dirs, so the read is
-    reproducible for as long as the snapshot isn't expired.
+    reproducible for as long as the snapshot isn't expired. Both arms
+    return the group keys and state columns only (``by`` + sketch,
+    n_values), whatever else an older snapshot's files hold.
 
     Two arms, chosen by the row-group bytes the files' parquet footers
     record before compression (no Spark job): at most
@@ -156,13 +170,17 @@ def read_snapshot_table(
     for f in files:
         md = pq.read_metadata(f)
         size += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    cols = meta["by"] + _STATE_COLS
     if not files or size > _DRIVER_READ_BYTES:
-        return _scan(spark, table_dir, snap)
+        return _scan(spark, table_dir, snap).select(*cols)
     # no partitioning: a `k=v` dir above the table is no column here, as
     # it is none in the scan; with no recorded schema the Arrow files'
     # own is the one a scan infers
-    table = pq.read_table(files, partitioning=None)
-    schema = StructType.fromJson(snap["schema"]) if "schema" in snap else None
+    table = pq.read_table(files, columns=cols, partitioning=None)
+    schema = None
+    if "schema" in snap:
+        fields = {f.name: f for f in StructType.fromJson(snap["schema"]).fields}
+        schema = StructType([fields[c] for c in cols])
     return spark.createDataFrame(table, schema=schema)
 
 
@@ -255,14 +273,7 @@ def update_snapshot_table(
         }
     )
 
-    os.makedirs(_meta_dir(table_dir), exist_ok=True)
-    meta_path = os.path.join(_meta_dir(table_dir), f"v{next_v}.metadata.json")
-    with open(meta_path, "w") as f:
-        json.dump({"format_version": 1, "by": by, "snapshots": snaps}, f, indent=1)
-    tmp = _hint_path(table_dir) + f".tmp{next_v}"
-    with open(tmp, "w") as f:
-        f.write(str(next_v))
-    os.replace(tmp, _hint_path(table_dir))  # THE commit point (atomic)
+    _commit_metadata(table_dir, next_v, by, snaps)
     return read_snapshot_table(spark, table_dir, snap_id)
 
 
@@ -281,15 +292,7 @@ def expire_snapshots(table_dir: str, keep: int = 2) -> list[int]:
     keep = max(keep, 1)  # the current snapshot is never expirable
     kept, doomed = snaps[-keep:], snaps[:-keep]
     if doomed:
-        next_v = meta["version"] + 1
-        with open(os.path.join(_meta_dir(table_dir), f"v{next_v}.metadata.json"), "w") as f:
-            json.dump(
-                {"format_version": 1, "by": meta["by"], "snapshots": kept}, f, indent=1
-            )
-        tmp = _hint_path(table_dir) + f".tmp{next_v}"
-        with open(tmp, "w") as f:
-            f.write(str(next_v))
-        os.replace(tmp, _hint_path(table_dir))
+        _commit_metadata(table_dir, meta["version"] + 1, meta["by"], kept)
     live = {rel for s in kept for rel in s["manifest"]}
     data_dir = os.path.join(table_dir, "data")
     if os.path.isdir(data_dir):

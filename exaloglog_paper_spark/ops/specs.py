@@ -1,6 +1,7 @@
 """SketchSpec adapters for the companion sketches (count-min, KLL,
-t-digest, Bloom, theta/KMV) so they run through the same sketch_agg
+t-digest, Bloom, theta/KMV, ...) so they run through the same sketch_agg
 partial/tree-merge pipeline as ExaLogLog, plus result-extraction helpers.
+An adapter over a sketchlib class declares it as ``state_cls`` (``SketchSpec``).
 """
 
 from __future__ import annotations
@@ -95,18 +96,14 @@ class CountSketchSpec(SketchSpec):
     queries and cross-sketch ``inner_product`` (equi-join size) ride the
     same state via ``deserialize``."""
 
+    state_cls = CountSketch
+
     def __init__(self, width: int = 8192, depth: int = 5):
         self.cfg = CountSketchConfig(width, depth)
         self.name = f"countsketch_w{width}_d{depth}"
 
-    def empty(self) -> CountSketch:
-        return CountSketch(self.cfg)
-
     def add(self, state: CountSketch, values: np.ndarray) -> CountSketch:
         return state.add_hashes(values)
-
-    def merge(self, a: CountSketch, b: CountSketch) -> CountSketch:
-        return a.merge_(b)
 
     def merge_many(self, states):
         states = list(states)
@@ -118,59 +115,33 @@ class CountSketchSpec(SketchSpec):
             out.table += np.sum([s.table for s in states[1:]], axis=0)
         return out
 
-    def serialize(self, state: CountSketch) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> CountSketch:
-        return CountSketch.deserialize(self.cfg, data)
-
     def finalize(self, state: CountSketch) -> float:
         return state.f2()
 
 
 class KLLSpec(SketchSpec):
+    state_cls = KLL
+
     def __init__(self, k: int = 200):
         self.cfg = KLLConfig(k)
         self.name = f"kll_k{k}"
 
-    def empty(self):
-        return KLL(self.cfg)
-
     def add(self, state: KLL, values: np.ndarray) -> KLL:
         return state.add_values(values)
-
-    def merge(self, a: KLL, b: KLL) -> KLL:
-        return a.merge_(b)
-
-    def serialize(self, state: KLL) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> KLL:
-        return KLL.deserialize(self.cfg, data)
 
     def finalize(self, state: KLL) -> float:
         return float(state.quantile(0.5))
 
 
 class TDigestSpec(SketchSpec):
+    state_cls = TDigest
+
     def __init__(self, delta: float = 200.0):
         self.cfg = TDigestConfig(delta)
         self.name = f"tdigest_d{int(delta)}"
 
-    def empty(self):
-        return TDigest(self.cfg)
-
     def add(self, state: TDigest, values: np.ndarray) -> TDigest:
         return state.add_values(values)
-
-    def merge(self, a: TDigest, b: TDigest) -> TDigest:
-        return a.merge_(b)
-
-    def serialize(self, state: TDigest) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> TDigest:
-        return TDigest.deserialize(self.cfg, data)
 
     def finalize(self, state: TDigest) -> float:
         return float(state.quantile(0.5))
@@ -182,63 +153,41 @@ class TailQuantileSpec(SketchSpec):
     either end under byte-identical merges (sketchlib/tailquantile.py);
     pair with KLL/t-digest for the body."""
 
+    state_cls = TailQuantile
+
     def __init__(self, m: int = 4096):
         self.cfg = TailQuantileConfig(m)
         self.name = f"tailq_m{m}"
 
-    def empty(self) -> TailQuantile:
-        return TailQuantile(self.cfg)
-
     def add(self, state: TailQuantile, values: np.ndarray) -> TailQuantile:
         return state.add_values(values)
-
-    def merge(self, a: TailQuantile, b: TailQuantile) -> TailQuantile:
-        return a.merge_(b)
-
-    def serialize(self, state: TailQuantile) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> TailQuantile:
-        return TailQuantile.deserialize(self.cfg, data)
 
     def finalize(self, state: TailQuantile) -> float:
         return state.max
 
 
 class BloomSpec(SketchSpec):
+    state_cls = BloomFilter
+
     def __init__(self, num_bits: int = 1 << 22, num_hashes: int = 7):
         self.cfg = BloomConfig(num_bits, num_hashes)
         self.name = f"bloom_m{num_bits}_k{num_hashes}"
 
-    def empty(self):
-        return BloomFilter(self.cfg)
-
     def add(self, state: BloomFilter, values: np.ndarray) -> BloomFilter:
         return state.add_hashes(values)
-
-    def merge(self, a: BloomFilter, b: BloomFilter) -> BloomFilter:
-        return a.merge_(b)
-
-    def serialize(self, state: BloomFilter) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> BloomFilter:
-        return BloomFilter.deserialize(self.cfg, data)
 
     def finalize(self, state: BloomFilter) -> float:
         return float(state.n_added)
 
 
-class ThetaSpec(SketchSpec):
-    """Theta/KMV sketch: state = the k smallest distinct 64-bit hashes
-    (sorted unique ``<u8``; variable length, <= 8k bytes). Native set
-    algebra — intersection/difference via sketchlib.theta.estimate_set_ops
-    — with merge byte-identity under any partitioning (the k smallest of a
-    union are each among their side's k smallest)."""
+class _KMinSpec(SketchSpec):
+    """State = the k smallest distinct 64-bit values seen (sorted unique
+    ``<u8``; variable length, <= 8k bytes). The k smallest of a union are
+    each among their side's k smallest, so merges are byte-identical under
+    any partitioning. Subclasses set ``k`` and ``name`` and write
+    ``finalize``."""
 
-    def __init__(self, k: int = 4096):
-        self.k = k
-        self.name = f"theta_k{k}"
+    k: int
 
     def empty(self) -> np.ndarray:
         return np.empty(0, dtype=np.uint64)
@@ -257,6 +206,15 @@ class ThetaSpec(SketchSpec):
 
     def deserialize(self, data: bytes) -> np.ndarray:
         return np.frombuffer(data, dtype="<u8").copy()
+
+
+class ThetaSpec(_KMinSpec):
+    """Theta/KMV sketch over 64-bit hashes. Native set algebra —
+    intersection/difference via sketchlib.theta.estimate_set_ops."""
+
+    def __init__(self, k: int = 4096):
+        self.k = k
+        self.name = f"theta_k{k}"
 
     def finalize(self, state: np.ndarray) -> float:
         return theta_lib.estimate_distinct(state, self.k)
@@ -280,18 +238,14 @@ class MisraGriesSpec(SketchSpec):
     ``err_bound <= n/(k+1)`` is partitioning-invariant and is what the
     tests pin (sketchlib/freqitems.py module docstring)."""
 
+    state_cls = MisraGries
+
     def __init__(self, k: int = 256):
         self.cfg = FreqItemsConfig(k)
         self.name = f"misragries_k{k}"
 
-    def empty(self) -> MisraGries:
-        return MisraGries(self.cfg)
-
     def add(self, state: MisraGries, values: np.ndarray) -> MisraGries:
         return state.add_ids(values)
-
-    def merge(self, a: MisraGries, b: MisraGries) -> MisraGries:
-        return a.merge_(b)
 
     def merge_many(self, states):
         states = list(states)
@@ -299,21 +253,14 @@ class MisraGriesSpec(SketchSpec):
             return self.empty()
         return states[0].merge_many_(states[1:])
 
-    def serialize(self, state: MisraGries) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> MisraGries:
-        return MisraGries.deserialize(self.cfg, data)
-
     def finalize(self, state: MisraGries) -> float:
         return float(state.err_bound)
 
 
-class BottomKSampleSpec(SketchSpec):
+class BottomKSampleSpec(_KMinSpec):
     """Bottom-k priority sample: state = the k smallest 64-bit priorities
-    seen (sorted unique ``<u8`` — structurally a KMV state, reusing the
-    theta kernel, so the EXACT merge algebra holds byte-for-byte under any
-    partitioning).
+    seen — the KMV state of ``ThetaSpec``, so the EXACT merge algebra
+    holds byte-for-byte under any partitioning.
 
     With a key-pure priority (md5 of the row key, computed JVM-side), the
     retained set is a uniform fixed-size sample of distinct keys that ANY
@@ -325,24 +272,6 @@ class BottomKSampleSpec(SketchSpec):
     def __init__(self, k: int = 64):
         self.k = k
         self.name = f"bottomk_k{k}"
-
-    def empty(self) -> np.ndarray:
-        return np.empty(0, dtype=np.uint64)
-
-    def add(self, state: np.ndarray, values: np.ndarray) -> np.ndarray:
-        return theta_lib.kmin_update(state, values, self.k)
-
-    def merge(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        return theta_lib.kmin_merge(a, b, self.k)
-
-    def merge_many(self, states):
-        return theta_lib.kmin_merge_many(list(states), self.k)
-
-    def serialize(self, state: np.ndarray) -> bytes:
-        return state.astype("<u8").tobytes()
-
-    def deserialize(self, data: bytes) -> np.ndarray:
-        return np.frombuffer(data, dtype="<u8").copy()
 
     def finalize(self, state: np.ndarray) -> float:
         return float(len(state))
@@ -356,24 +285,14 @@ class PrioritySampleSpec(SketchSpec):
     ``add`` consumes the structured (key, w) array from
     ``keyed_weight_values``."""
 
+    state_cls = PrioritySample
+
     def __init__(self, k: int = 64):
         self.cfg = PrioritySampleConfig(k)
         self.name = f"prioritysample_k{k}"
 
-    def empty(self) -> PrioritySample:
-        return PrioritySample(self.cfg)
-
     def add(self, state: PrioritySample, values: np.ndarray) -> PrioritySample:
         return state.add_pairs(values["key"], values["w"])
-
-    def merge(self, a: PrioritySample, b: PrioritySample) -> PrioritySample:
-        return a.merge_(b)
-
-    def serialize(self, state: PrioritySample) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes) -> PrioritySample:
-        return PrioritySample.deserialize(self.cfg, data)
 
     def finalize(self, state: PrioritySample) -> float:
         return state.estimate_total()
@@ -401,10 +320,6 @@ class keyed_weight_values(Extractor):
 class token_array_ids(Extractor):
     """Flatten array<int32> to raw int64 ids (no hashing — for count-min
     candidate tracking)."""
-
-    def __init__(self, col: str):
-        self.col = col
-        self.input_cols = (col,)
 
     def __call__(self, batch):
         return flat_list_values(batch, self.col)

@@ -19,11 +19,30 @@ import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sketchlib.bitops import splitmix64
-from ..sketchlib.exaloglog import ExaLogLog
 from ..ops.agg import ExaLogLogSpec
 
 OUTPUT_SCHEMA = "key string, estimate double, n_values long"
 STATE_SCHEMA = "sketch binary, n_values long"
+
+
+def _fold(spec, state: GroupState, pdfs, token_col: str, hashed: bool):
+    """One key's micro-batch: fold every row's token ids (splitmix64-hashed
+    if ``hashed``, else raw int64) into the stored state or
+    ``spec.empty()``, store it back and return ``(state, n_values)``."""
+    if state.exists:
+        sketch_bytes, n = state.get
+        sk = spec.deserialize(bytes(sketch_bytes))
+    else:
+        sk, n = spec.empty(), 0
+    for pdf in pdfs:
+        lists = pdf[token_col].to_numpy()
+        if len(lists) == 0:
+            continue
+        flat = np.concatenate(lists).astype(np.int64, copy=False)
+        sk = spec.add(sk, splitmix64(flat.view(np.uint64)) if hashed else flat)
+        n += len(flat)
+    state.update((spec.serialize(sk), n))
+    return sk, n
 
 
 def streaming_distinct_sketch(grouped, spec: ExaLogLogSpec, token_col: str = "tokens"):
@@ -32,19 +51,7 @@ def streaming_distinct_sketch(grouped, spec: ExaLogLogSpec, token_col: str = "to
     updates per micro-batch."""
 
     def update(key, pdfs, state: GroupState):
-        if state.exists:
-            sketch_bytes, n = state.get
-            sk = spec.deserialize(bytes(sketch_bytes))
-        else:
-            sk, n = spec.empty(), 0
-        for pdf in pdfs:
-            lists = pdf[token_col].to_numpy()
-            if len(lists) == 0:
-                continue
-            flat = np.concatenate(lists).astype(np.int64, copy=False)
-            sk = spec.add(sk, splitmix64(flat.view(np.uint64)))
-            n += len(flat)
-        state.update((spec.serialize(sk), n))
+        sk, n = _fold(spec, state, pdfs, token_col, hashed=True)
         yield pd.DataFrame(
             {"key": [key[0]], "estimate": [spec.finalize(sk)], "n_values": [n]}
         )
@@ -78,19 +85,7 @@ def streaming_heavy_hitters(grouped, spec, token_col: str = "tokens", topn: int 
     """
 
     def update(key, pdfs, state: GroupState):
-        if state.exists:
-            sketch_bytes, n = state.get
-            mg = spec.deserialize(bytes(sketch_bytes))
-        else:
-            mg, n = spec.empty(), 0
-        for pdf in pdfs:
-            lists = pdf[token_col].to_numpy()
-            if len(lists) == 0:
-                continue
-            flat = np.concatenate(lists).astype(np.int64, copy=False)
-            mg = spec.add(mg, flat)
-            n += len(flat)
-        state.update((spec.serialize(mg), n))
+        mg, n = _fold(spec, state, pdfs, token_col, hashed=False)
         top = mg.top_items(topn)
         yield pd.DataFrame(
             {
