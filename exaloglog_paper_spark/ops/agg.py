@@ -359,14 +359,6 @@ class id64_values(Extractor):
         return vals.astype(np.int64, copy=False), None
 
 
-class int_values(Extractor):
-    """Integer column hashed with splitmix64."""
-
-    def __call__(self, batch):
-        vals = batch.column(self.col).to_numpy(zero_copy_only=False)
-        return splitmix64(vals.astype(np.int64, copy=False).view(np.uint64)), None
-
-
 class float_values(Extractor):
     """Raw float values (for quantile sketches — no hashing)."""
 

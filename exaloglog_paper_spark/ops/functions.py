@@ -10,16 +10,22 @@ Surfaces the reference's scalar API as Spark column functions:
 - token_stream_estimate — the sketch-free estimator over token arrays
   (≙ DistinctCountUtil.estimateDistinctCountFromTokens), usable per row or
   per group.
+- martingale_partition_estimates — the per-stream martingale (HIP)
+  operator (≙ add(long, MartingaleEstimator)), a ``mapInArrow`` body.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, LongType, BinaryType
 
 from ..sketchlib import exaloglog as ell
+from ..sketchlib.replay import StreamingFirstHits, _event_luts
+from .agg import _by_schema, _group_codes
 
 
 # One pandas UDF factory per function: the column functions below and
@@ -141,46 +147,74 @@ def register_sql_functions(spark, t: int = 2, d: int = 20, v: int = ell.V_MAX) -
         spark.udf.register(name, udf)
 
 
-def martingale_partition_estimates(df, extractor, t: int = 2, d: int = 20, p: int = 10):
-    """Per-partition martingale (HIP) estimates.
+def martingale_partition_estimates(
+    df, extractor, t: int = 2, d: int = 20, p: int = 10, *, by=(), order_by=()
+):
+    """Martingale (HIP) estimates per sequential stream: THE per-stream
+    operator. The estimator is order-dependent and NOT mergeable
+    (MartingaleEstimator.java:32-35), so it is scoped to one stream:
 
-    The martingale estimator is order-dependent and NOT mergeable
-    (MartingaleEstimator.java:32-35), so the correctly-scoped distributed
-    surface is *per input partition*: each task feeds its own stream's
-    Arrow batches through the bounded-memory first-hit accumulator
-    (sketchlib.replay.StreamingFirstHits — O(m·K) state per task,
-    independent of stream length, replay-speed instead of the per-element
-    HIP loop) and emits (partition_id, martingale_estimate, ml_estimate,
-    n_values). Useful to compare the two estimators on real partition
-    streams; global counts still come from the mergeable ML path.
+    - no ``by``: each input partition is a stream (no shuffle); rows are
+      ``partition_id, martingale_estimate, ml_estimate, n_values``;
+    - ``by``: each key is a stream. Rows are hash-partitioned on ``by`` and
+      sorted on ``(*by, *order_by)``, so a key's values arrive in
+      ``order_by`` order as one run of sorted rows (a run may span Arrow
+      batches); rows are ``by..., martingale_estimate, ml_estimate,
+      n_values``.
+
+    A stream feeds its cuts of ``extractor(batch)`` through one
+    bounded-memory accumulator (sketchlib.replay.StreamingFirstHits, O(m·K)
+    state), and a task holds one live accumulator. Chunking is invisible
+    by construction: a stream's estimates equal
+    ``martingale_estimate_stream`` of its concatenated values.
     """
-    import pyarrow as pa
-    from pyspark import TaskContext
-
-    from ..sketchlib.replay import StreamingFirstHits
-
-    cols = list(extractor.input_cols)
+    by, order_by = list(by), list(order_by)
+    names = [*(by or ["partition_id"]), "martingale_estimate", "ml_estimate", "n_values"]
 
     def run(batches):
-        acc = StreamingFirstHits(t, d, p)
+        luts = _event_luts(t, d, p)
+        out, types = [], [pa.int64()]  # out: (*key, martingale, ml, n) per stream
+        key = acc = None
+        if not by:
+            tc = TaskContext.get()
+            key = (tc.partitionId() if tc is not None else 0,)
+            acc = StreamingFirstHits(t, d, p, luts)
         for batch in batches:
-            values, _ = extractor(batch)
-            acc.update(values)
-        mart_est, ml_est = acc.estimates()
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "partition_id": pa.array([pid], type=pa.int64()),
-                "martingale_estimate": pa.array([mart_est], type=pa.float64()),
-                "ml_estimate": pa.array([ml_est], type=pa.float64()),
-                "n_values": pa.array([acc.n], type=pa.int64()),
-            }
-        )
+            if batch.num_rows == 0:
+                continue
+            values, lengths = extractor(batch)
+            if lengths is None:  # one value per row
+                lengths = np.ones(batch.num_rows, np.int64)
+            off = np.r_[0, np.cumsum(lengths)]
+            runs = [(key, 0, batch.num_rows)]
+            if by:
+                types = [batch.schema.field(c).type for c in by]
+                codes, key_of = _group_codes(batch, by)
+                cuts = np.r_[0, np.flatnonzero(np.diff(codes)) + 1, len(codes)]
+                runs = [(key_of(codes[s]), s, e) for s, e in zip(cuts[:-1], cuts[1:])]
+            for k, s, e in runs:
+                if k != key:
+                    if acc is not None:
+                        out.append((*key, *acc.estimates(), acc.n))
+                    key, acc = k, StreamingFirstHits(t, d, p, luts)
+                acc.update(values[off[s] : off[e]])
+        if acc is not None:
+            out.append((*key, *acc.estimates(), acc.n))
+        if out:
+            types += [pa.float64(), pa.float64(), pa.int64()]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, typ) for col, typ in zip(zip(*out), types)], names=names
+            )
 
-    return df.select(*cols).mapInArrow(
+    src = df.select(*dict.fromkeys([*by, *order_by, *extractor.input_cols]))
+    if by:
+        src = src.repartition(*by)
+    if by or order_by:
+        src = src.sortWithinPartitions(*by, *order_by)
+    return src.mapInArrow(
         run,
-        "partition_id long, martingale_estimate double, ml_estimate double, n_values long",
+        (_by_schema(df, by) or "partition_id long, ")
+        + "martingale_estimate double, ml_estimate double, n_values long",
     )
 
 

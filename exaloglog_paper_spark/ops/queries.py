@@ -24,7 +24,6 @@ from itertools import combinations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, IntegerType
@@ -34,11 +33,6 @@ from ..sketchlib.bitops import splitmix64
 from ..sketchlib.constants import theoretical_rse_martingale
 from ..sketchlib.countsketch import CountSketchConfig, join_size_error_bound
 from ..sketchlib.exaloglog import compute_token
-from ..sketchlib.replay import (
-    StreamingFirstHits,
-    _event_luts,
-    martingale_estimate_stream,
-)
 from ..streaming.stateful import streaming_distinct_sketch
 from . import dedup, multimodal, similarity, specs, textstats, tokens as tok
 from .agg import (
@@ -47,6 +41,7 @@ from .agg import (
     float_values,
     hash64_values,
     id64_values,
+    local_df,
     sketch_agg,
     sketch_agg_salted,
     token_array_values,
@@ -55,7 +50,7 @@ from .agg import (
     with_estimate,
 )
 from .checkpoints import checkpointed_sketch_agg
-from .functions import token_stream_estimate
+from .functions import martingale_partition_estimates, token_stream_estimate
 from .joins import bloom_anti_join, bloom_semi_join
 from .profile import profile_token_table
 from .rollup import estimate_intersection, sketch_cube, sketch_rollup
@@ -524,7 +519,8 @@ def intersection_distinct_words_bound(spark: SparkSession, sf_dir: str) -> DataF
         .intersect(words.filter(F.col("source") == "src1").select("word").distinct())
         .count()
     )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(exact), bool(abs(est - exact) <= tol))],
         "exact_common_words long, within_bound boolean",
     )
@@ -569,7 +565,7 @@ def _nchars_quantiles_bound(spark: SparkSession, sf_dir: str, spec) -> DataFrame
     docs = _docs(spark, sf_dir).select(F.col("n_chars").cast("double").alias("v"))
     sk, _ = _states(sketch_agg(docs, spec, float_values("v")), spec=spec)
     data = _quantile_bound_rows(docs, sk.quantile(np.array(_QUANTILE_GRID)))
-    return spark.createDataFrame(data, "q double, exact_quantile double, within_rank_tol boolean")
+    return local_df(spark, data, "q double, exact_quantile double, within_rank_tol boolean")
 
 
 def kll_nchars_quantiles_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -603,7 +599,7 @@ def cms_heavy_hitters_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         est = int(cm.query(splitmix64(wid.view(np.uint64)))[0])
         ok = est >= r.cnt and (est - r.cnt) <= 2 * eps * n_total
         data.append((r.word, int(r.cnt), bool(ok)))
-    return spark.createDataFrame(data, "word string, cnt long, within_bound boolean")
+    return local_df(spark, data, "word string, cnt long, within_bound boolean")
 
 
 def bloom_membership_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,7 +653,8 @@ def bloom_membership_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     no_false_neg = int(counts.fn or 0) == 0
     fpr = (int(counts.fp or 0) / counts.nm) if counts.nm else 0.0
     fpr_ok = fpr <= 3 * spec.cfg.expected_fpr(max(n_members, 1)) + 0.001
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(n_members, bool(no_false_neg), bool(fpr_ok))],
         "members long, no_false_negatives boolean, fpr_within_bound boolean",
     )
@@ -831,7 +828,8 @@ def checkpoint_resume_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
         second = build()
     finally:
         shutil.rmtree(ck, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         _identity_rows(first, second),
         "source string, total_tokens long, resume_byte_identical boolean",
     )
@@ -883,8 +881,8 @@ def streaming_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r.source, int(r.n_values), bool(got.get(r.source) == (r.estimate, r.n_values)))
         for r in batch
     ]
-    return spark.createDataFrame(
-        rows, "source string, total_tokens long, stream_equals_batch boolean"
+    return local_df(
+        spark, rows, "source string, total_tokens long, stream_equals_batch boolean"
     )
 
 
@@ -1029,7 +1027,8 @@ def incremental_update_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, spec, "ellinc_",
         lambda tdir: _states(read_snapshot_table(spark, tdir), "source"),
     )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         _identity_rows(_by_source(tdf, spec), incr),
         "source string, total_tokens long, incremental_byte_identical boolean",
     )
@@ -1061,7 +1060,8 @@ def snapshot_time_travel_invariant(spark: SparkSession, sf_dir: str) -> DataFram
         and hist[0]["summary"]["total_values"] == sum(n for _, n in half0.values())
         and [s["lineage"]["increment"] for s in hist] == ["half-0", "half-1"]
     )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (src, n, ok, bool(snap1.get(src) == half0.get(src)), lineage_ok)
             for src, n, ok in _identity_rows(full, final)
@@ -1173,9 +1173,7 @@ def salted_vs_mapside_consistency(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         "source",
     )
-    return spark.createDataFrame(
-        [(len(a), a == b)], "sources long, states_identical boolean"
-    )
+    return local_df(spark, [(len(a), a == b)], "sources long, states_identical boolean")
 
 
 def sketch_rollup_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1279,159 +1277,61 @@ def token_passthrough_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def martingale_distinct_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source martingale (HIP) distinct-token estimate within its
-    published error bound — the reference's SECOND estimator exercised as a
-    query operator, not only in unit tests.
-
-    The martingale is order-dependent and explicitly per-stream
-    (MartingaleEstimator.java javadoc: not for distributed merging), so the
-    operator scope is one sequential stream per group: ``applyInPandas``
-    over sources, each group's token arrays concatenated in doc_id order
-    and fed through the vectorized first-hit replay
-    (sketchlib.replay.martingale_estimate_stream — batch-speed, pinned to
-    the per-element add(long, MartingaleEstimator) semantics). The oracle
-    recomputes exact per-source distinct tokens from the parquet twin;
-    ``martingale_within_bound`` asserts |est/exact - 1| <= 5*RSE_mart with
-    RSE_mart = 0.019858·sqrt(256/2^p) (≙ the published martingale RSE
-    constant, martingale_theoretical_relative_standard_error_constants)."""
+def _martingale_bound(df: DataFrame, key: str) -> DataFrame:
+    """Per-``key`` martingale (HIP) distinct-token estimate within its
+    published error bound: the reference's SECOND estimator run as a query
+    operator. Each key's token arrays form one sequential stream in
+    ``doc_id`` order through the per-stream operator
+    (ops.functions.martingale_partition_estimates: sorted runs, one
+    bounded-memory accumulator per task, never a key's tokens in memory),
+    exactly as the reference prescribes (MartingaleEstimator.java:32-35:
+    not for distributed merging). ``total_tokens`` is the stream's length;
+    ``martingale_within_bound`` asserts |est/exact - 1| <= 5·RSE_mart with
+    RSE_mart = 0.019858·sqrt(256/2^p), the published martingale RSE
+    constant for (2,20,8). A key with no tokens has no exact row and,
+    as in the oracle's inner join, no result row."""
     t_, d_, p_ = 2, 20, 8
-    bound = 5 * theoretical_rse_martingale(t_, d_, p_)
-    df = _token_table(spark, sf_dir)
-
-    def est_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Group-concatenation form: holds ONE group's token arrays in
-        # memory — small-group-only by contract. For unbounded streams use
-        # ops.functions.martingale_partition_estimates (bounded-memory
-        # per-partition StreamingFirstHits).
-        pdf = pdf.sort_values("doc_id")  # deterministic stream order
-        arrays = [np.asarray(a) for a in pdf["tokens"]]
-        flat = (
-            np.concatenate(arrays) if arrays else np.empty(0, np.int64)
-        )
-        if flat.size == 0:
-            # all-empty group: estimator and exact count agree at 0
-            return pd.DataFrame(
-                {
-                    "source": [pdf["source"].iloc[0]],
-                    "total_tokens": [0],
-                    "exact_distinct_tokens": [0],
-                    "martingale_within_bound": [True],
-                }
-            )
-        # same value->hash mapping as the sketch pipeline (ops/agg.py)
-        h = splitmix64(flat.astype(np.int64, copy=False).view(np.uint64))
-        est = martingale_estimate_stream(h, t_, d_, p_)
-        exact = int(pd.unique(flat).size)
-        return pd.DataFrame(
-            {
-                "source": [pdf["source"].iloc[0]],
-                "total_tokens": [int(pdf["n_tok"].sum())],
-                "exact_distinct_tokens": [exact],
-                "martingale_within_bound": [abs(est / exact - 1.0) <= bound],
-            }
-        )
-
-    return (
-        df.groupBy("source")
-        .applyInPandas(
-            est_group,
-            "source string, total_tokens long, exact_distinct_tokens long, "
-            "martingale_within_bound boolean",
-        )
-        .orderBy("source")
-    )
-
-
-def martingale_partition_stream_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bucket martingale (HIP) estimates through the BOUNDED-MEMORY
-    per-partition path — the scale form of
-    :func:`martingale_distinct_tokens_bound`'s group concatenation.
-
-    The token table is repartitioned on an md5-derived bucket (first hex
-    nibble of md5(doc_id) mod 8 — engine-portable, the DuckDB oracle
-    recomputes the identical split), sorted (bucket, doc_id) within
-    partitions for a deterministic stream order, and each task feeds its
-    Arrow batches chunk-by-chunk through one
-    sketchlib.replay.StreamingFirstHits accumulator per bucket: task state
-    is O(buckets_in_task · m·K), NEVER the partition's tokens, so the
-    operator survives arbitrarily long streams. Hash partitioning sends
-    every bucket to exactly one task, so the per-bucket estimates are
-    partition-layout independent. The martingale stays strictly sequential
-    per stream, exactly as the reference prescribes
-    (MartingaleEstimator.java:32-35: not for distributed merging).
-
-    ``martingale_within_bound`` asserts |est/exact - 1| <= 5*RSE_mart, the
-    published martingale RSE for (2,20,8)."""
-    t_, d_, p_ = 2, 20, 8
-    n_buckets = 8
-    bound = 5 * theoretical_rse_martingale(t_, d_, p_)
-    df = _token_table(spark, sf_dir)
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id")), 1, 1), 16, 10).cast("int"),
-        F.lit(n_buckets),
-    ).cast("int")
-    tb = df.withColumn("bucket", bucket)
-    extractor = token_array_values("tokens")
-
-    def run(batches):
-        luts = _event_luts(t_, d_, p_)
-        accs: dict[int, StreamingFirstHits] = {}
-        for batch in batches:
-            values, lengths = extractor(batch)
-            buckets = batch.column("bucket").to_numpy(zero_copy_only=False)
-            if len(buckets) == 0:
-                continue
-            tok_off = np.r_[0, np.cumsum(lengths)]
-            change = np.flatnonzero(np.diff(buckets)) + 1
-            starts = np.r_[0, change]
-            ends = np.r_[change, len(buckets)]
-            for s, e in zip(starts, ends):
-                b = int(buckets[s])
-                acc = accs.get(b)
-                if acc is None:
-                    acc = accs[b] = StreamingFirstHits(t_, d_, p_, luts)
-                acc.update(values[tok_off[s] : tok_off[e]])
-        if accs:
-            bs = sorted(accs)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "bucket": pa.array(bs, type=pa.int32()),
-                    "total_tokens": pa.array(
-                        [accs[b].n for b in bs], type=pa.int64()
-                    ),
-                    "martingale_estimate": pa.array(
-                        [accs[b].martingale_estimate() for b in bs],
-                        type=pa.float64(),
-                    ),
-                }
-            )
-
-    est = (
-        tb.select("bucket", "doc_id", "tokens")
-        .repartition(n_buckets, "bucket")
-        .sortWithinPartitions("bucket", "doc_id")
-        .mapInArrow(
-            run, "bucket int, total_tokens long, martingale_estimate double"
-        )
+    est = martingale_partition_estimates(
+        df, token_array_values("tokens"), t_, d_, p_, by=[key], order_by=["doc_id"]
     )
     exact = (
-        tb.select("bucket", F.explode("tokens").alias("t"))
-        .groupBy("bucket")
+        df.select(key, F.explode("tokens").alias("t"))
+        .groupBy(key)
         .agg(F.count_distinct("t").alias("exact_distinct_tokens"))
     )
     return (
-        est.join(exact, "bucket")
+        est.join(exact, key)
         .select(
-            "bucket",
-            "total_tokens",
+            key,
+            F.col("n_values").alias("total_tokens"),
             "exact_distinct_tokens",
             _within_rel(
-                "martingale_estimate", "exact_distinct_tokens", bound,
-                "martingale_within_bound",
+                "martingale_estimate", "exact_distinct_tokens",
+                5 * theoretical_rse_martingale(t_, d_, p_), "martingale_within_bound",
             ),
         )
-        .orderBy("bucket")
+        .orderBy(key)
+    )
+
+
+def martingale_distinct_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source martingale estimate within its published bound
+    (:func:`_martingale_bound`); the oracle recomputes exact per-source
+    distinct tokens from the parquet twin."""
+    return _martingale_bound(_token_table(spark, sf_dir), "source")
+
+
+def martingale_partition_stream_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-bucket martingale estimate within its published bound
+    (:func:`_martingale_bound`). The bucket is the first hex nibble of
+    md5(doc_id) mod 8: engine-portable, so the DuckDB oracle recomputes
+    the identical split. Hash partitioning sends every bucket to one task,
+    so the estimates do not depend on the input's partition layout."""
+    bucket = F.pmod(
+        F.conv(F.substring(F.md5(F.col("doc_id")), 1, 1), 16, 10).cast("int"), F.lit(8)
+    ).cast("int")
+    return _martingale_bound(
+        _token_table(spark, sf_dir).withColumn("bucket", bucket), "bucket"
     )
 
 
@@ -1463,7 +1363,8 @@ def source_overlap_matrix_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection_distinct_words_bound query has pinned since round 2).
     """
     words = _hashed_words(spark, sf_dir)
-    estdf = spark.createDataFrame(
+    estdf = local_df(
+        spark,
         _pair_intersections(words, ExaLogLogSpec(2, 20, 10)),
         "s1 string, s2 string, est double, tol double",
     )
@@ -1628,7 +1529,8 @@ def theta_set_ops_words_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw1 = sh.filter(F.col("par") == 1).select("word").distinct()
     exact_common = dw0.intersect(dw1).count()
     exact_only0 = dw0.subtract(dw1).count()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (
                 int(exact_common),
@@ -1676,7 +1578,7 @@ def mg_heavy_hitter_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r.token), int(r.cnt), bool(int(e) <= r.cnt and (r.cnt - int(e)) <= err))
         for r, e in zip(exact_top, est)
     ]
-    return spark.createDataFrame(data, "token int, cnt long, within_bound boolean")
+    return local_df(spark, data, "token int, cnt long, within_bound boolean")
 
 
 def _md5_keyed(df: DataFrame, key, *cols: str) -> DataFrame:
@@ -1721,7 +1623,7 @@ def bottomk_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         for src, (prios, _) in states.items()
         for p in prios
     ]
-    winners = spark.createDataFrame(rows, "source string, prio_hi long, prio_lo long")
+    winners = local_df(spark, rows, "source string, prio_hi long, prio_lo long")
     return (
         keyed.join(F.broadcast(winners), ["source", "prio_hi", "prio_lo"], "inner")
         .select(
@@ -1767,7 +1669,8 @@ def priority_sample_docs_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     skeys, _, w_hat = ps.sample()
     est = ps.estimate_total()
     within = bool(abs(est - ps.sum_w) <= 5.0 * ps.sigma_bound())
-    winners = spark.createDataFrame(
+    winners = local_df(
+        spark,
         [
             (i + 1, int(k) >> 32, int(k) & 0xFFFFFFFF, float(wh))
             for i, (k, wh) in enumerate(zip(skeys, w_hat))
@@ -1832,7 +1735,8 @@ def kll_ntok_quantiles_by_source_bound(spark: SparkSession, sf_dir: str) -> Data
                     bool(abs(int(r[f"le_{s}_{i}"]) / n - q) <= 0.05),
                 )
             )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         data, "source string, q double, exact_quantile double, within_rank_tol boolean"
     )
 
@@ -1869,7 +1773,8 @@ def bloom_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("c_custkey"), F.lit(0)).alias("anti_key_sum"),
     ).collect()[0]
     total = cust.count()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (
                 int(s.semi_customers),
@@ -1903,7 +1808,7 @@ def tail_exact_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tq, _ = _states(sketch_agg(df, spec, float_values("v")), spec=spec)
     qs = [0.0001, 0.001, 0.999, 0.9999, 1.0]
     data = [(q, float(tq.quantile_disc(q))) for q in qs]
-    return spark.createDataFrame(data, "q double, ntok_exact double")
+    return local_df(spark, data, "q double, ntok_exact double")
 
 
 def countsketch_hh_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1934,7 +1839,7 @@ def countsketch_hh_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r.token), int(r.cnt), bool(abs(float(e) - r.cnt) <= bound))
         for r, e in zip(exact_top, est)
     ]
-    return spark.createDataFrame(data, "token int, cnt long, within_bound boolean")
+    return local_df(spark, data, "token int, cnt long, within_bound boolean")
 
 
 def countsketch_f2_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1962,7 +1867,8 @@ def countsketch_f2_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("cnt") * F.col("cnt")).alias("f2"))
     ).collect()[0].f2
     ok = abs(est / float(f2_exact) - 1.0) <= spec.cfg.rel_f2_error_bound
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(f2_exact), bool(ok))], "f2_exact long, within_bound boolean"
     )
 
@@ -2006,7 +1912,8 @@ def join_size_estimate_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     ok = abs(est - float(join_exact)) <= bound
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(join_exact), bool(ok))], "join_size_exact long, within_bound boolean"
     )
 
@@ -2115,7 +2022,8 @@ def token_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(med_ok),
             )
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         data,
         "source string, n_docs long, n_tokens long, distinct_exact long, "
         "distinct_within_bound boolean, f2_exact long, f2_within_bound boolean, "
@@ -2165,7 +2073,8 @@ def trigram_novelty_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         ok = abs(est / float(exact) - 1.0) <= bound
         out = (int(total), int(exact), round(float(exact) / total, 6), bool(ok))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [out],
         "total_trigrams long, distinct_trigrams_exact long, "
         "novelty_ratio double, within_bound boolean",
@@ -2218,7 +2127,8 @@ def f2_rollup_tokens_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the linearity dividend, asserted: total >= sum of parts requires
     # cross-source overlap to be counted — pin it as a verified column
     cross_terms_positive = total_f2 > sum(per_src.values())
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [d + (bool(cross_terms_positive),) for d in data],
         "source string, level int, f2_exact long, within_bound boolean, "
         "total_exceeds_sum_of_parts boolean",
@@ -2267,6 +2177,8 @@ def sliding_window_heavy_users_bound(spark: SparkSession, sf_dir: str) -> DataFr
         data.append(
             (r.window_start, int(r.rank), int(r.user_id), int(r.cnt), bool(ok))
         )
+    # not local_df: its pandas path reads naive datetimes in the session
+    # time zone, collect() wrote them in the Python process's
     return spark.createDataFrame(
         data,
         "window_start timestamp, rank int, user_id long, cnt long, "

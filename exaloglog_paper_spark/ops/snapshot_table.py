@@ -214,7 +214,7 @@ def update_snapshot_table(
     spec,
     by: Sequence[str] = (),
     lineage: Mapping[str, str] | None = None,
-) -> DataFrame:
+) -> dict:
     """Commit one increment as a new snapshot.
 
     ``increment_states`` is ``sketch_agg``/``scan_sketch_agg`` output over
@@ -224,9 +224,8 @@ def update_snapshot_table(
     order: data dir → metadata json → atomic hint swap; a crash at any
     point leaves the previous snapshot intact and current.
 
-    Returns ``read_snapshot_table`` of the new snapshot: for a small table
-    that read runs on the driver before returning, also when the caller
-    drops the result.
+    Returns the committed snapshot's record, ``snapshot_history(table_dir)[-1]``;
+    a caller that wants the table reads it with ``read_snapshot_table``.
     """
     by = list(by)
     t0 = time.monotonic()
@@ -274,7 +273,7 @@ def update_snapshot_table(
     )
 
     _commit_metadata(table_dir, next_v, by, snaps)
-    return read_snapshot_table(spark, table_dir, snap_id)
+    return snaps[-1]
 
 
 def expire_snapshots(table_dir: str, keep: int = 2) -> list[int]:

@@ -73,7 +73,6 @@ def main() -> None:
     from exaloglog_paper_spark.ops.snapshot_table import (
         expire_snapshots,
         read_snapshot_table,
-        snapshot_history,
         update_snapshot_table,
     )
     from exaloglog_paper_spark.ops.source import read_tokens
@@ -92,8 +91,7 @@ def main() -> None:
             by=by,
         )
         lineage = {"increment": args.lineage or args.add}
-        table = update_snapshot_table(spark, args.table, inc, spec, by=by, lineage=lineage)
-        s = snapshot_history(args.table)[-1]
+        s = update_snapshot_table(spark, args.table, inc, spec, by=by, lineage=lineage)
         print(
             f"committed snapshot {s['id']} (parent {s['parent_id']}): "
             f"{s['summary']} lineage={s['lineage']}"
@@ -102,6 +100,7 @@ def main() -> None:
             expired = expire_snapshots(args.table, keep=args.prune_keep)
             if expired:
                 print(f"expired snapshots: {expired}")
+        table = read_snapshot_table(spark, args.table)
     # group columns come from the table itself, so --estimate-only needs no --by
     out_cols = [c for c in table.columns if c != "sketch"]
     with_estimate(table, spec).select(*out_cols, "estimate").show(50, truncate=False)

@@ -13,7 +13,9 @@
 # so a fixed order would bias every pair the same way. Prints one line per
 # run (final_check, steal_frac, ops_failed_frac and every end-to-end metric
 # BENCHMARK.json names: op_s_p50, peak_rss_mb, ...), then each arm's median
-# and quartiles per metric and the pairs the working tree won on op_s_p50.
+# and quartiles per metric, each arm's median steal_frac, and the pairs the
+# working tree won on op_s_p50: over all pairs, and over the pairs where both
+# runs read steal_frac <= 0.05 (host steal slows a run without the code).
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -75,7 +77,13 @@ for name in sys.argv[2:]:
         q = statistics.quantiles(v, n=4) if len(v) > 1 else v * 3
         print(f"{name:22s} {arm:4s} median {statistics.median(v):.4g} "
               f"(quartiles {q[0]:.4g}-{q[2]:.4g}, {len(v)} runs)")
-p50 = {arm: {r["pair"]: float(r["op_s_p50"]) for r in rows if r["arm"] == arm} for arm in ("ref", "tree")}
-won = sum(p50["tree"][k] < p50["ref"][k] for k in p50["ref"])
-print(f"op_s_p50: tree faster in {won} of {len(p50['ref'])} pairs")
+for arm in ("ref", "tree"):
+    v = [float(r["steal_frac"]) for r in rows if r["arm"] == arm]
+    print(f"{'steal_frac':22s} {arm:4s} median {statistics.median(v):.3f}")
+run = {arm: {r["pair"]: r for r in rows if r["arm"] == arm} for arm in ("ref", "tree")}
+# a pair counts as quiet when neither run lost more than 5% of its CPU to steal
+quiet = [k for k in run["ref"] if max(float(run[a][k]["steal_frac"]) for a in run) <= 0.05]
+for label, pairs in (("", list(run["ref"])), (" (steal_frac <= 0.05 in both runs)", quiet)):
+    won = sum(float(run["tree"][k]["op_s_p50"]) < float(run["ref"][k]["op_s_p50"]) for k in pairs)
+    print(f"op_s_p50: tree faster in {won} of {len(pairs)} pairs{label}")
 EOF

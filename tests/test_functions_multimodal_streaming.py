@@ -135,6 +135,43 @@ def test_martingale_partition_estimates(spark):
         assert abs(r.martingale_estimate / r.ml_estimate - 1) < 8 * rse
 
 
+@pytest.mark.parametrize("n_part", [1, 5])
+def test_keyed_martingale_equals_each_keys_stream(spark, n_part):
+    """With ``by``, each key's estimates equal the whole-stream replay of
+    its tokens concatenated in ``order_by`` order, bit for bit. Arrow
+    batches of 5 rows make every source (~24 docs) a run that spans
+    batches; the input's partition count does not change the result."""
+    from exaloglog_paper_spark.ops.functions import martingale_partition_estimates
+    from exaloglog_paper_spark.sketchlib.replay import (
+        StreamingFirstHits,
+        martingale_estimate_stream,
+    )
+
+    tdf = tok.token_table(spark, 120, num_partitions=n_part)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        rows = martingale_partition_estimates(
+            tdf, token_array_values("tokens"), 2, 20, 8,
+            by=["source"], order_by=["doc_id"],
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    streams = {}
+    for r in sorted(tdf.collect(), key=lambda r: r.doc_id):
+        streams.setdefault(r.source, []).extend(r.tokens)
+    assert sorted(r.source for r in rows) == sorted(streams)
+    for r in rows:
+        flat = np.array(streams[r.source], dtype=np.int64)
+        h = splitmix64(flat.view(np.uint64))
+        acc = StreamingFirstHits(2, 20, 8)
+        acc.update(h)
+        assert r.martingale_estimate == martingale_estimate_stream(h, 2, 20, 8)
+        assert r.ml_estimate == acc.estimates()[1]
+        assert r.n_values == len(flat)
+
+
 def test_martingale_partition_stream_bound_query(spark):
     """The bounded-memory per-bucket martingale query: every md5 bucket
     present, within the published bound, and invariant to the input's

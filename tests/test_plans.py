@@ -388,6 +388,19 @@ def test_trigram_estimate_plan_has_no_explode(spark):
     assert "Generate" not in plan and "explode" not in plan.lower()
 
 
+@pytest.mark.parametrize(
+    "query",
+    [Q.martingale_distinct_tokens_bound, Q.martingale_partition_stream_bound],
+)
+def test_martingale_queries_run_the_sorted_run_operator(spark, query):
+    """Both martingale queries stream each key through the sorted-run
+    ``mapInArrow`` operator; a grouped ``applyInPandas`` (which converts
+    ``array<int32>`` to pandas and holds a whole group) must not return."""
+    plan = _plan(query(spark, SF_DIR))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInArrow" in plan
+
+
 def test_sketch_agg_plans_its_input_partitions_once(spark, monkeypatch):
     """Counting the input partitions plans the scan (17-57 ms warm, ~0.4 s
     cold): one sketch_agg pays it once, for the flush stamps and the tree."""

@@ -356,15 +356,19 @@ def test_byte_bound_counts_uncompressed_bytes(spark, tdf, tmp_path, monkeypatch)
     assert read_snapshot_table(spark, tdir).isLocal()
 
 
-def test_commit_returns_the_snapshot_read(spark, tdf, tmp_path):
-    """``update_snapshot_table`` returns what ``read_snapshot_table``
-    reads for the snapshot it committed."""
+def test_commit_returns_the_snapshot_record(spark, tdf, tmp_path, monkeypatch):
+    """``update_snapshot_table`` returns the record of the snapshot it
+    committed and reads no table back to do so."""
     tdir = str(tmp_path / "snap")
-    for p in _thirds(tdf):
+    reads = []
+    monkeypatch.setattr(
+        snapshot_table, "read_snapshot_table", lambda *a, **k: reads.append(a)
+    )
+    for i, p in enumerate(_thirds(tdf), 1):
         out = _commit(spark, tdir, p)
-        snap = read_snapshot_table(spark, tdir)
-        assert out.schema == snap.schema
-        assert _rows(out) == _rows(snap)
+        assert out == snapshot_history(tdir)[-1]
+        assert out["id"] == i
+    assert reads == []
 
 
 def test_snapshot_without_recorded_schema_still_reads(spark, tdf, tmp_path, monkeypatch):
