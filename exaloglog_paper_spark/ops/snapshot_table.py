@@ -30,8 +30,10 @@ staying runnable on a plain filesystem:
   call time into a LocalRelation — estimating or collecting it runs no
   Spark job, and a later ``expire_snapshots`` cannot break it. A larger
   one is read lazily by a parquet scan, which fails if its files are
-  expired before an action runs. A commit merges through the parquet
-  scan either way.
+  expired before an action runs. A commit on top of a small snapshot
+  merges and writes on the driver too, and runs no Spark job beyond
+  collecting the increment; the first commit and larger tables merge and
+  write by a Spark job.
 
 The sketch-state table is KB-per-group (MBs total even when the SOURCE
 data is 10^12 rows), so copy-on-write per commit — rewrite the merged
@@ -59,22 +61,30 @@ import shutil
 import time
 from typing import Mapping, Sequence
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
-from .agg import tree_merge
+from .agg import _merge_runs, tree_merge
 
 _STATE_COLS = ["sketch", "n_values"]
 
-# uncompressed snapshot bytes up to which read_snapshot_table reads on the
-# driver. Measured on local[4], read + with_estimate + collect: 512
-# ELL(2,20,10) states (1.8 MB) took 0.16 s on the driver vs 0.22 s by a
-# scan job, 1024 (3.7 MB) tied at 0.26 s, and 13000 (47 MB) took 3.4 vs
-# 1.1 s — the driver estimates on one thread what the scan's tasks
-# estimate in parallel. 32 profile composites (11 MB) still took 0.14 vs
-# 0.21 s. More cores move the tie lower.
+# uncompressed snapshot bytes up to which read_snapshot_table reads, and
+# update_snapshot_table merges and writes, on the driver. Measured on
+# local[4], read + with_estimate + collect: 512 ELL(2,20,10) states
+# (1.8 MB) took 0.16 s on the driver vs 0.22 s by a scan job, 1024
+# (3.7 MB) tied at 0.26 s, and 13000 (47 MB) took 3.4 vs 1.1 s — the
+# driver estimates on one thread what the scan's tasks estimate in
+# parallel. 32 profile composites (11 MB) still took 0.14 vs 0.21 s.
+# More cores move the tie lower. The commit (increment of 4 docs per
+# group, median of 8 interleaved commits) is faster on the driver at
+# every size measured, so the read's tie is the binding one:
+#   groups       64     256    512    1024   2048 (7.3 MB)
+#   driver  s   0.74   0.94   1.19   1.62   2.45
+#   Spark   s   1.34   1.36   1.66   1.93   3.16
 _DRIVER_READ_BYTES = 2 << 20
 
 
@@ -143,6 +153,23 @@ def _scan(spark: SparkSession, table_dir: str, snap: dict) -> DataFrame:
     return reader.parquet(*[os.path.join(table_dir, rel) for rel in snap["manifest"]])
 
 
+def _driver_files(table_dir: str, snap: dict) -> list[str] | None:
+    """``snap``'s parquet files if the driver arms of both the read and
+    the commit take it, else None: there is at least one file, and the
+    row-group bytes their footers record before compression (what a
+    driver read holds; no Spark job) are at most ``_DRIVER_READ_BYTES``."""
+    files = sorted(
+        f
+        for rel in snap["manifest"]
+        for f in glob.glob(os.path.join(table_dir, rel, "*.parquet"))
+    )
+    size = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        size += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return files if files and size <= _DRIVER_READ_BYTES else None
+
+
 def read_snapshot_table(
     spark: SparkSession, table_dir: str, snapshot_id: int | None = None
 ) -> DataFrame:
@@ -161,17 +188,9 @@ def read_snapshot_table(
     if meta is None:
         raise FileNotFoundError(f"no committed snapshot under {table_dir}")
     snap = _resolve_snapshot(meta, snapshot_id)
-    files = sorted(
-        f
-        for rel in snap["manifest"]
-        for f in glob.glob(os.path.join(table_dir, rel, "*.parquet"))
-    )
-    size = 0
-    for f in files:
-        md = pq.read_metadata(f)
-        size += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    files = _driver_files(table_dir, snap)
     cols = meta["by"] + _STATE_COLS
-    if not files or size > _DRIVER_READ_BYTES:
+    if files is None:
         return _scan(spark, table_dir, snap).select(*cols)
     # no partitioning: a `k=v` dir above the table is no column here, as
     # it is none in the scan; with no recorded schema the Arrow files'
@@ -207,6 +226,22 @@ def merge_state_tables(
     )
 
 
+def _merge_on_driver(inc: DataFrame, files: list[str], spec, by: list) -> pa.Table:
+    """The driver arm's merge: collect the increment (the one Spark job),
+    read the current snapshot's ``files`` with pyarrow, sort both on
+    ``by`` and run the merge level's own task body, ``agg._merge_runs``,
+    over them — byte-order merges, null/NaN key groups and ``n_values``
+    sums as in the Spark arm."""
+    increment = inc.toArrow()
+    current = pq.read_table(files, columns=by + _STATE_COLS, partitioning=None)
+    both = pa.concat_tables([current.cast(increment.schema), increment])
+    if by:
+        both = both.sort_by([(c, "ascending") for c in by])
+    both = both.append_column("__bucket", pa.repeat(0, len(both)))
+    out = list(_merge_runs(both.to_batches(), spec, by))
+    return (pa.Table.from_batches(out) if out else both).select(by + _STATE_COLS)
+
+
 def update_snapshot_table(
     spark: SparkSession,
     table_dir: str,
@@ -219,10 +254,21 @@ def update_snapshot_table(
 
     ``increment_states`` is ``sketch_agg``/``scan_sketch_agg`` output over
     the NEW data only; history is never rescanned — the commit folds the
-    increment into the current state rows (KB each) with ``tree_merge``
-    and writes the merged table as a fresh immutable data dir. Commit
-    order: data dir → metadata json → atomic hint swap; a crash at any
-    point leaves the previous snapshot intact and current.
+    increment into the current state rows (KB each) and writes the merged
+    table as a fresh immutable data dir. Two arms, chosen by the bound
+    and footer measure the read uses (``summary["arm"]`` records which):
+
+    - ``"driver"``, when a current snapshot exists within
+      ``_DRIVER_READ_BYTES``: collecting the increment is the only Spark
+      job; the snapshot is read, merged and written as one
+      ``part-00000.parquet`` by pyarrow on the driver;
+    - ``"spark"``, for the first commit and larger tables: the write's
+      Spark jobs (three in a traced perfbench ``shard_append`` commit)
+      run the increment's merge level, merge its states with a scan of
+      the snapshot (``merge_state_tables``) and write the parquet files.
+
+    Commit order: data dir → metadata json → atomic hint swap; a crash at
+    any point leaves the previous snapshot intact and current.
 
     Returns the committed snapshot's record, ``snapshot_history(table_dir)[-1]``;
     a caller that wants the table reads it with ``read_snapshot_table``.
@@ -231,48 +277,61 @@ def update_snapshot_table(
     t0 = time.monotonic()
     meta = current_metadata(table_dir)
     inc = increment_states.select(*by, *_STATE_COLS)
-    if meta is None:
-        merged = inc
-        snaps: list[dict] = []
-        next_v = 1
-        operation = "append"
-    else:
-        # the lazy scan: merging a LocalRelation runs one map task per
-        # core even for a few state rows, and was no faster
-        current = _scan(spark, table_dir, meta["snapshots"][-1])
-        merged = merge_state_tables([current, inc], spec, by=by)
-        snaps = list(meta["snapshots"])
-        next_v = meta["version"] + 1
-        operation = "overwrite"  # COW: the new snapshot replaces all state rows
-
+    snaps = list(meta["snapshots"]) if meta else []
     snap_id = snaps[-1]["id"] + 1 if snaps else 1
     rel_data = os.path.join("data", f"snap-{snap_id:06d}")
     data_dir = os.path.join(table_dir, rel_data)
-    merged.write.mode("overwrite").parquet(data_dir)
+    files = _driver_files(table_dir, snaps[-1]) if snaps else None
 
-    # recorded schema and driver-side summary: no Spark job after the write
-    schema = StructType(
-        [StructField(f.name, f.dataType, True, f.metadata) for f in merged.schema]
-    )
-    n_values = pq.read_table(data_dir, columns=["n_values"]).column("n_values")
+    if files is not None:
+        merged = _merge_on_driver(inc, files, spec, by)
+        # a retry reuses this snap-N: clear what a crashed attempt left
+        shutil.rmtree(data_dir, ignore_errors=True)
+        os.makedirs(data_dir)
+        pq.write_table(
+            merged,
+            os.path.join(data_dir, "part-00000.parquet"),
+            use_dictionary=False,
+            write_statistics=False,
+        )
+        fields = from_arrow_schema(merged.schema)
+        n_values = merged.column("n_values")
+        arm = "driver"
+    else:
+        merged = inc
+        if snaps:
+            # the lazy scan: merging a LocalRelation runs one map task per
+            # core even for a few state rows, and was no faster
+            current = _scan(spark, table_dir, snaps[-1])
+            merged = merge_state_tables([current, inc], spec, by=by)
+        merged.write.mode("overwrite").parquet(data_dir)
+        fields = merged.schema
+        # driver-side summary: no Spark job after the write
+        n_values = pq.read_table(data_dir, columns=["n_values"]).column("n_values")
+        arm = "spark"
+
+    # recorded as a parquet read infers it: every field nullable
+    schema = StructType([StructField(f.name, f.dataType, True, f.metadata) for f in fields])
     snaps.append(
         {
             "id": snap_id,
             "parent_id": snaps[-1]["id"] if snaps else None,
             "timestamp_ms": int(time.time() * 1000),
-            "operation": operation,
+            # COW: an overwrite replaces all state rows
+            "operation": "overwrite" if snaps else "append",
             "manifest": [rel_data],
             "summary": {
                 "n_groups": len(n_values),
                 "total_values": int(pc.sum(n_values).as_py() or 0),
                 "commit_secs": round(time.monotonic() - t0, 3),
+                "arm": arm,
             },
             "lineage": dict(lineage or {}),
             "schema": schema.jsonValue(),
         }
     )
 
-    _commit_metadata(table_dir, next_v, by, snaps)
+    _commit_metadata(table_dir, meta["version"] + 1 if meta else 1, by, snaps)
     return snaps[-1]
 
 

@@ -19,7 +19,10 @@ Usage (daily pipeline shape):
     # next day:
     spark-submit ... --add /data/tokens_2026_08_17.parquet --by source
 
-Each run prints the post-update per-group estimates. ``--estimate-only``
+Each run prints the committed snapshot's summary (groups, values folded,
+commit seconds, and the commit ``arm``: ``driver`` when the merge and
+write ran on the driver, ``spark`` when a Spark job ran them) and the
+post-update per-group estimates. ``--estimate-only``
 reads the latest snapshot without updating; add ``--snapshot-id K`` to
 time-travel to snapshot K. ``--prune-keep N`` expires all but the newest
 N snapshots after an update.

@@ -88,6 +88,8 @@ def test_snapshot_commits_equal_full_rebuild_and_time_travel(spark, tdf, tmp_pat
     ]
     assert [s["summary"]["total_values"] for s in hist] == vols
     assert all(s["summary"]["n_groups"] >= 1 for s in hist)
+    # the first commit has no snapshot to merge on the driver
+    assert [s["summary"]["arm"] for s in hist] == ["spark", "driver", "driver"]
 
 
 def test_crashed_commit_is_invisible_until_hint_swap(spark, tdf, tmp_path):
@@ -403,16 +405,21 @@ def _parquet_files(tdir, snap):
     )
 
 
-def test_commit_files_are_reproducible(spark, tdf, tmp_path):
-    """The same increment committed into two fresh tables gives the same
-    parquet byte total and equal file contents: the data holds states and
-    counts only, no wall-clock column. (Files are compared by content, not
-    byte for byte: parquet-mr writes a column chunk's encodings list in no
-    fixed order.)"""
+@pytest.mark.parametrize("arm", ["driver", "spark"])
+def test_commit_files_are_reproducible(spark, tdf, tmp_path, monkeypatch, arm):
+    """The same increments committed into two fresh tables give the same
+    parquet byte total and equal file contents on either commit arm: the
+    data holds states and counts only, no wall-clock column. (Files are
+    compared by content, not byte for byte: parquet-mr writes a column
+    chunk's encodings list in no fixed order.)"""
+    if arm == "spark":
+        monkeypatch.setattr(snapshot_table, "_DRIVER_READ_BYTES", 0)
+    parts = _thirds(tdf)
     totals, tables = [], []
     for name in ("a", "b"):
         tdir = str(tmp_path / name)
-        _commit(spark, tdir, tdf)
+        _commit(spark, tdir, parts[0])
+        assert _commit(spark, tdir, parts[1])["summary"]["arm"] == arm
         files = _parquet_files(tdir, snapshot_history(tdir)[-1])
         totals.append(sum(os.path.getsize(f) for f in files))
         tables.append(pq.read_table(files, partitioning=None).sort_by("source"))
@@ -442,3 +449,109 @@ def test_snapshot_with_build_secs_takes_a_new_commit(spark, tdf, tmp_path, monke
     # the scan arm projects the same way
     monkeypatch.setattr(snapshot_table, "_DRIVER_READ_BYTES", 0)
     assert read_snapshot_table(spark, tdir, snapshot_id=1).columns == first.columns
+
+
+def _keyed(tdf):
+    """``tdf`` with a null ``source`` on a quarter of the documents, plus
+    an int and a date key."""
+    h = F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
+    day = F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(3)).cast("int")
+    return tdf.select(
+        "doc_id",
+        "tokens",
+        F.when(h == 0, F.lit(None)).otherwise(F.col("source")).alias("source"),
+        h.alias("bucket"),
+        F.date_add(F.to_date(F.lit("2024-01-01")), day).alias("day"),
+    )
+
+
+@pytest.mark.parametrize(
+    "by", [(), ("source",), ("source", "bucket", "day")],
+    ids=["global", "by_source", "null_int_date_keys"],
+)
+def test_commit_arms_agree(spark, tdf, tmp_path, monkeypatch, by):
+    """The driver and Spark commit arms commit equal states, recorded
+    schemas and summaries, each equal to a one-shot build, and each
+    recorded schema is the one a parquet read of the files infers."""
+    df = _keyed(tdf)
+    bounds = {"driver": snapshot_table._DRIVER_READ_BYTES, "spark": 0}
+    got = {}
+    for arm, bound in bounds.items():
+        monkeypatch.setattr(snapshot_table, "_DRIVER_READ_BYTES", bound)
+        tdir = str(tmp_path / arm)
+        for p in _thirds(df):
+            rec = _commit(spark, tdir, p, by=by)
+        assert rec["summary"]["arm"] == arm
+        table = read_snapshot_table(spark, tdir)
+        assert table.schema == spark.read.parquet(os.path.join(tdir, *rec["manifest"])).schema
+        summary = {k: rec["summary"][k] for k in ("n_groups", "total_values")}
+        got[arm] = (_states(table, by), rec["schema"], summary)
+    assert got["driver"] == got["spark"]
+    states = got["driver"][0]
+    assert states == _states(_build(df, by), by)
+    if by:
+        assert any(k[0] is None for k in states)
+
+
+def test_driver_commit_runs_only_the_increments_job(spark, tdf, tmp_path):
+    """Collecting the increment is the driver arm's only Spark work: the
+    commit runs no more jobs than ``toArrow`` of the increment alone."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    _commit(spark, tdir, parts[0])
+    _, alone = _jobs_in(
+        spark, lambda: _build(parts[1]).select("source", "sketch", "n_values").toArrow()
+    )
+    rec, jobs = _jobs_in(
+        spark, lambda: update_snapshot_table(spark, tdir, _build(parts[1]), SPEC, by=["source"])
+    )
+    assert rec["summary"]["arm"] == "driver"
+    assert 1 <= jobs <= alone
+
+
+def test_driver_commit_clears_a_crashed_attempts_files(spark, tdf, tmp_path):
+    """A retry reuses the pending ``snap-N`` dir: part files a crashed
+    Spark-arm attempt left there are removed, not read beside the new
+    file."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    _commit(spark, tdir, parts[0])
+    pending = os.path.join(tdir, "data", "snap-000002")
+    os.makedirs(pending)
+    junk = _build(parts[2]).toArrow()
+    pq.write_table(junk, os.path.join(pending, "part-00000-0a1b-c000.snappy.parquet"))
+
+    assert _commit(spark, tdir, parts[1])["summary"]["arm"] == "driver"
+    assert _states(read_snapshot_table(spark, tdir)) == _states(
+        _build(parts[0].unionByName(parts[1]))
+    )
+    assert [f for f in os.listdir(pending) if f.endswith(".parquet")] == [
+        "part-00000.parquet"
+    ]
+
+
+def test_driver_commit_crash_before_hint_swap_keeps_previous(
+    spark, tdf, tmp_path, monkeypatch
+):
+    """A driver-arm commit that dies after its data dir, in the metadata
+    commit, leaves the previous snapshot current and readable; a retry
+    then commits normally."""
+    tdir = str(tmp_path / "snap")
+    parts = _thirds(tdf)
+    for p in parts[:2]:
+        _commit(spark, tdir, p)
+    before = _states(read_snapshot_table(spark, tdir))
+
+    def crash(*args):
+        raise OSError("crashed before the hint swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(snapshot_table, "_commit_metadata", crash)
+        with pytest.raises(OSError):
+            _commit(spark, tdir, parts[2])
+    assert os.listdir(os.path.join(tdir, "data", "snap-000003"))
+    assert [s["id"] for s in snapshot_history(tdir)] == [1, 2]
+    assert _states(read_snapshot_table(spark, tdir)) == before
+
+    assert _commit(spark, tdir, parts[2])["summary"]["arm"] == "driver"
+    assert _states(read_snapshot_table(spark, tdir)) == _states(_build(tdf))
