@@ -30,10 +30,10 @@ staying runnable on a plain filesystem:
   call time into a LocalRelation — estimating or collecting it runs no
   Spark job, and a later ``expire_snapshots`` cannot break it. A larger
   one is read lazily by a parquet scan, which fails if its files are
-  expired before an action runs. A commit on top of a small snapshot
-  merges and writes on the driver too, and runs no Spark job beyond
-  collecting the increment; the first commit and larger tables merge and
-  write by a Spark job.
+  expired before an action runs. A commit whose increment and current
+  snapshot together hold at most that bound streams the increment to the
+  driver and merges and writes there too; a larger one merges and writes
+  by a Spark job.
 
 The sketch-state table is KB-per-group (MBs total even when the SOURCE
 data is 10^12 rows), so copy-on-write per commit — rewrite the merged
@@ -52,6 +52,7 @@ repo's distributed-deployment surface built on the same merge algebra
 
 from __future__ import annotations
 
+import datetime
 import functools
 import glob
 import json
@@ -65,26 +66,36 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 from .agg import _merge_runs, tree_merge
 
 _STATE_COLS = ["sketch", "n_values"]
 
-# uncompressed snapshot bytes up to which read_snapshot_table reads, and
-# update_snapshot_table merges and writes, on the driver. Measured on
-# local[4], read + with_estimate + collect: 512 ELL(2,20,10) states
-# (1.8 MB) took 0.16 s on the driver vs 0.22 s by a scan job, 1024
-# (3.7 MB) tied at 0.26 s, and 13000 (47 MB) took 3.4 vs 1.1 s — the
-# driver estimates on one thread what the scan's tasks estimate in
-# parallel. 32 profile composites (11 MB) still took 0.14 vs 0.21 s.
-# More cores move the tie lower. The commit (increment of 4 docs per
-# group, median of 8 interleaved commits) is faster on the driver at
-# every size measured, so the read's tie is the binding one:
-#   groups       64     256    512    1024   2048 (7.3 MB)
-#   driver  s   0.74   0.94   1.19   1.62   2.45
-#   Spark   s   1.34   1.36   1.66   1.93   3.16
+# uncompressed bytes of state rows up to which the driver handles them:
+# read_snapshot_table reads a snapshot of at most this on the driver, and
+# update_snapshot_table merges and writes there while the current
+# snapshot plus the streamed increment stay within it. Measured on
+# local[4] with ELL(2,20,10) states (3.6 KB each):
+# - read + with_estimate + collect: 512 states (1.8 MB) took 0.16 s on
+#   the driver vs 0.22 s by a scan job, 1024 (3.7 MB) tied at 0.26 s, and
+#   13000 (47 MB) took 3.4 vs 1.1 s — the driver estimates on one thread
+#   what the scan's tasks estimate in parallel. 32 profile composites
+#   (11 MB) still took 0.14 vs 0.21 s.
+# - commit of an increment of I groups (4 docs each, I - S of them new)
+#   on a table of S groups, the increment's scan included, median of 4
+#   interleaved commits:
+#     S, I        0,64  0,512  0,1024  64,512  64,1024  512,512  512,1024
+#     driver s    0.57   0.91   1.67    1.29    1.95     1.04     1.75
+#     Spark  s    0.81   0.98   1.17    1.64    1.89     1.51     1.83
+#   The stream runs the increment's merge level one partition at a time,
+#   and AQE splits an increment of ~1000 states into several, so the
+#   commit ties at ~3.7 MB of increment too (~5 MB with the snapshot).
+#   Collected by one parallel job instead, 2048 + 2048 states (15 MB)
+#   still merged faster on the driver (2.5 vs 2.7 s): the driver's merge
+#   is not what binds.
+# More cores move both ties lower.
 _DRIVER_READ_BYTES = 2 << 20
 
 
@@ -153,21 +164,22 @@ def _scan(spark: SparkSession, table_dir: str, snap: dict) -> DataFrame:
     return reader.parquet(*[os.path.join(table_dir, rel) for rel in snap["manifest"]])
 
 
-def _driver_files(table_dir: str, snap: dict) -> list[str] | None:
-    """``snap``'s parquet files if the driver arms of both the read and
-    the commit take it, else None: there is at least one file, and the
-    row-group bytes their footers record before compression (what a
-    driver read holds; no Spark job) are at most ``_DRIVER_READ_BYTES``."""
-    files = sorted(
+def _snapshot_files(table_dir: str, snap: dict) -> list[str]:
+    return sorted(
         f
         for rel in snap["manifest"]
         for f in glob.glob(os.path.join(table_dir, rel, "*.parquet"))
     )
+
+
+def _state_bytes(files: Sequence[str]) -> int:
+    """The row-group bytes ``files``' parquet footers record before
+    compression: what a driver read of them holds (no Spark job)."""
     size = 0
     for f in files:
         md = pq.read_metadata(f)
         size += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
-    return files if files and size <= _DRIVER_READ_BYTES else None
+    return size
 
 
 def read_snapshot_table(
@@ -179,18 +191,17 @@ def read_snapshot_table(
     return the group keys and state columns only (``by`` + sketch,
     n_values), whatever else an older snapshot's files hold.
 
-    Two arms, chosen by the row-group bytes the files' parquet footers
-    record before compression (no Spark job): at most
-    ``_DRIVER_READ_BYTES``, the files are read now by pyarrow into a
+    Two arms, chosen by the files' ``_state_bytes`` (no Spark job): at
+    most ``_DRIVER_READ_BYTES``, the files are read now by pyarrow into a
     LocalRelation, so ``with_estimate`` and ``collect`` on it run no
     Spark job; above it, a lazy parquet scan."""
     meta = current_metadata(table_dir)
     if meta is None:
         raise FileNotFoundError(f"no committed snapshot under {table_dir}")
     snap = _resolve_snapshot(meta, snapshot_id)
-    files = _driver_files(table_dir, snap)
+    files = _snapshot_files(table_dir, snap)
     cols = meta["by"] + _STATE_COLS
-    if files is None:
+    if not files or _state_bytes(files) > _DRIVER_READ_BYTES:
         return _scan(spark, table_dir, snap).select(*cols)
     # no partitioning: a `k=v` dir above the table is no column here, as
     # it is none in the scan; with no recorded schema the Arrow files'
@@ -226,20 +237,43 @@ def merge_state_tables(
     )
 
 
-def _merge_on_driver(inc: DataFrame, files: list[str], spec, by: list) -> pa.Table:
-    """The driver arm's merge: collect the increment (the one Spark job),
-    read the current snapshot's ``files`` with pyarrow, sort both on
-    ``by`` and run the merge level's own task body, ``agg._merge_runs``,
-    over them — byte-order merges, null/NaN key groups and ``n_values``
-    sums as in the Spark arm."""
-    increment = inc.toArrow()
-    current = pq.read_table(files, columns=by + _STATE_COLS, partitioning=None)
-    both = pa.concat_tables([current.cast(increment.schema), increment])
+def _collect_within(inc: DataFrame, schema: StructType, budget: int) -> pa.Table | None:
+    """``inc``'s rows as an Arrow table of ``schema``'s types, streamed to
+    the driver a partition at a time, or None as soon as their states
+    pass ``budget`` bytes: an increment's size is unknown until it is
+    computed, and one above the bound is never held here."""
+    rows, size = [], 0
+    for row in inc.toLocalIterator():
+        size += len(row.sketch)
+        if size > budget:
+            return None
+        rows.append(row)
+    arrow = to_arrow_schema(schema)
+    cols = []
+    for f, values in zip(arrow, zip(*rows) if rows else [()] * len(arrow)):
+        if pa.types.is_timestamp(f.type) and f.type.tz:
+            # a TimestampType row holds a naive time in the local zone
+            values = [v and v.astimezone(datetime.timezone.utc) for v in values]
+        cols.append(pa.array(values, f.type))
+    return pa.Table.from_arrays(cols, schema=arrow)
+
+
+def _merge_on_driver(increment: pa.Table, files: list[str], spec, by: list) -> pa.Table:
+    """The driver arm's merge: read the current snapshot's ``files`` with
+    pyarrow as the ``increment``'s types, sort both on ``by`` and run the
+    merge level's own task body, ``agg._merge_runs``, over them —
+    byte-order merges, null/NaN key groups and ``n_values`` sums as in
+    the Spark arm."""
+    both = [increment]
+    if files:
+        current = pq.read_table(files, columns=increment.column_names, partitioning=None)
+        both.insert(0, current.cast(increment.schema))
+    both = pa.concat_tables(both)
     if by:
         both = both.sort_by([(c, "ascending") for c in by])
     both = both.append_column("__bucket", pa.repeat(0, len(both)))
     out = list(_merge_runs(both.to_batches(), spec, by))
-    return (pa.Table.from_batches(out) if out else both).select(by + _STATE_COLS)
+    return (pa.Table.from_batches(out) if out else both).select(increment.column_names)
 
 
 def update_snapshot_table(
@@ -255,17 +289,20 @@ def update_snapshot_table(
     ``increment_states`` is ``sketch_agg``/``scan_sketch_agg`` output over
     the NEW data only; history is never rescanned — the commit folds the
     increment into the current state rows (KB each) and writes the merged
-    table as a fresh immutable data dir. Two arms, chosen by the bound
-    and footer measure the read uses (``summary["arm"]`` records which):
+    table as a fresh immutable data dir. Two arms (``summary["arm"]``
+    records which), chosen by the current snapshot's ``_state_bytes``
+    plus the increment's state bytes against ``_DRIVER_READ_BYTES``:
 
-    - ``"driver"``, when a current snapshot exists within
-      ``_DRIVER_READ_BYTES``: collecting the increment is the only Spark
-      job; the snapshot is read, merged and written as one
-      ``part-00000.parquet`` by pyarrow on the driver;
-    - ``"spark"``, for the first commit and larger tables: the write's
-      Spark jobs (three in a traced perfbench ``shard_append`` commit)
-      run the increment's merge level, merge its states with a scan of
-      the snapshot (``merge_state_tables``) and write the parquet files.
+    - ``"driver"``, within the bound: the increment streams to the driver
+      (its Spark jobs: the increment's map stages and one result job per
+      partition AQE leaves it), and pyarrow reads the snapshot, merges
+      both and writes one ``part-00000.parquet``;
+    - ``"spark"``, above it — when the snapshot alone passes the bound, or
+      as soon as the streamed increment does: a Spark job merges the
+      increment with a lazy scan of the snapshot (``merge_state_tables``)
+      and writes the parquet files, so large states stay distributed.
+      After a stream stopped early, the increment's rows come from the
+      stream's computed result, so its scan and shuffle do not rerun.
 
     Commit order: data dir → metadata json → atomic hint swap; a crash at
     any point leaves the previous snapshot intact and current.
@@ -277,14 +314,18 @@ def update_snapshot_table(
     t0 = time.monotonic()
     meta = current_metadata(table_dir)
     inc = increment_states.select(*by, *_STATE_COLS)
+    # recorded as a parquet read infers it: every field nullable
+    schema = StructType([StructField(f.name, f.dataType, True, f.metadata) for f in inc.schema])
     snaps = list(meta["snapshots"]) if meta else []
     snap_id = snaps[-1]["id"] + 1 if snaps else 1
     rel_data = os.path.join("data", f"snap-{snap_id:06d}")
     data_dir = os.path.join(table_dir, rel_data)
-    files = _driver_files(table_dir, snaps[-1]) if snaps else None
+    files = _snapshot_files(table_dir, snaps[-1]) if snaps else []
+    budget = _DRIVER_READ_BYTES - _state_bytes(files)
+    increment = _collect_within(inc, schema, budget) if budget >= 0 else None
 
-    if files is not None:
-        merged = _merge_on_driver(inc, files, spec, by)
+    if increment is not None:
+        merged = _merge_on_driver(increment, files, spec, by)
         # a retry reuses this snap-N: clear what a crashed attempt left
         shutil.rmtree(data_dir, ignore_errors=True)
         os.makedirs(data_dir)
@@ -294,24 +335,23 @@ def update_snapshot_table(
             use_dictionary=False,
             write_statistics=False,
         )
-        fields = from_arrow_schema(merged.schema)
         n_values = merged.column("n_values")
         arm = "driver"
     else:
-        merged = inc
+        if budget >= 0:
+            # the stream's computed result (the same queryExecution.toRdd),
+            # not a new plan of the increment
+            inc = spark.createDataFrame(inc.rdd, schema, verifySchema=False)
         if snaps:
             # the lazy scan: merging a LocalRelation runs one map task per
             # core even for a few state rows, and was no faster
             current = _scan(spark, table_dir, snaps[-1])
-            merged = merge_state_tables([current, inc], spec, by=by)
-        merged.write.mode("overwrite").parquet(data_dir)
-        fields = merged.schema
+            inc = merge_state_tables([current, inc], spec, by=by)
+        inc.write.mode("overwrite").parquet(data_dir)
         # driver-side summary: no Spark job after the write
         n_values = pq.read_table(data_dir, columns=["n_values"]).column("n_values")
         arm = "spark"
 
-    # recorded as a parquet read infers it: every field nullable
-    schema = StructType([StructField(f.name, f.dataType, True, f.metadata) for f in fields])
     snaps.append(
         {
             "id": snap_id,

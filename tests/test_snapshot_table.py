@@ -6,6 +6,7 @@ import contextlib
 import io
 import json
 import os
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -88,8 +89,7 @@ def test_snapshot_commits_equal_full_rebuild_and_time_travel(spark, tdf, tmp_pat
     ]
     assert [s["summary"]["total_values"] for s in hist] == vols
     assert all(s["summary"]["n_groups"] >= 1 for s in hist)
-    # the first commit has no snapshot to merge on the driver
-    assert [s["summary"]["arm"] for s in hist] == ["spark", "driver", "driver"]
+    assert [s["summary"]["arm"] for s in hist] == ["driver"] * 3
 
 
 def test_crashed_commit_is_invisible_until_hint_swap(spark, tdf, tmp_path):
@@ -436,6 +436,8 @@ def test_snapshot_with_build_secs_takes_a_new_commit(spark, tdf, tmp_path, monke
     tdir = str(tmp_path / "snap")
     parts = _thirds(tdf)
     with monkeypatch.context() as m:
+        # written as the Spark commit wrote state rows then
+        m.setattr(snapshot_table, "_DRIVER_READ_BYTES", 0)
         m.setattr(snapshot_table, "_STATE_COLS", ["sketch", "n_values", "build_secs"])
         old = _build(parts[0]).withColumn("build_secs", F.lit(0.25))
         update_snapshot_table(spark, tdir, old, SPEC, by=["source"])
@@ -453,7 +455,7 @@ def test_snapshot_with_build_secs_takes_a_new_commit(spark, tdf, tmp_path, monke
 
 def _keyed(tdf):
     """``tdf`` with a null ``source`` on a quarter of the documents, plus
-    an int and a date key."""
+    an int, a date and a timestamp key."""
     h = F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
     day = F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(3)).cast("int")
     return tdf.select(
@@ -462,14 +464,26 @@ def _keyed(tdf):
         F.when(h == 0, F.lit(None)).otherwise(F.col("source")).alias("source"),
         h.alias("bucket"),
         F.date_add(F.to_date(F.lit("2024-01-01")), day).alias("day"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + day * 3600).alias("ts"),
     )
 
 
+@pytest.fixture
+def new_york_driver(monkeypatch):
+    """The driver process's local zone is not the session's (UTC): rows
+    collected to the driver then hold naive New York times."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
 @pytest.mark.parametrize(
-    "by", [(), ("source",), ("source", "bucket", "day")],
-    ids=["global", "by_source", "null_int_date_keys"],
+    "by", [(), ("source",), ("source", "bucket", "day", "ts")],
+    ids=["global", "by_source", "null_int_date_timestamp_keys"],
 )
-def test_commit_arms_agree(spark, tdf, tmp_path, monkeypatch, by):
+def test_commit_arms_agree(spark, tdf, tmp_path, monkeypatch, new_york_driver, by):
     """The driver and Spark commit arms commit equal states, recorded
     schemas and summaries, each equal to a one-shot build, and each
     recorded schema is the one a parquet read of the files infers."""
@@ -494,7 +508,7 @@ def test_commit_arms_agree(spark, tdf, tmp_path, monkeypatch, by):
 
 
 def test_driver_commit_runs_only_the_increments_job(spark, tdf, tmp_path):
-    """Collecting the increment is the driver arm's only Spark work: the
+    """Streaming the increment is the driver arm's only Spark work: the
     commit runs no more jobs than ``toArrow`` of the increment alone."""
     tdir = str(tmp_path / "snap")
     parts = _thirds(tdf)
@@ -507,6 +521,39 @@ def test_driver_commit_runs_only_the_increments_job(spark, tdf, tmp_path):
     )
     assert rec["summary"]["arm"] == "driver"
     assert 1 <= jobs <= alone
+
+
+def test_commit_arm_bounds_snapshot_plus_increment(spark, tdf, tmp_path, monkeypatch):
+    """The commit bound is on the current snapshot and the increment
+    together: an increment of many new groups on a small snapshot takes
+    the Spark arm, where a small one takes the driver arm; both commit a
+    one-shot build's states, and the stream that stopped early is not
+    computed again: the increment's scan runs once."""
+    tdir = str(tmp_path / "snap")
+    small = tdf.filter(F.pmod(F.xxhash64("doc_id"), F.lit(100)) == 0)
+    _commit(spark, tdir, small, by=("doc_id",))
+    files = snapshot_table._snapshot_files(tdir, snapshot_history(tdir)[-1])
+    monkeypatch.setattr(
+        snapshot_table, "_DRIVER_READ_BYTES", 3 * snapshot_table._state_bytes(files)
+    )
+    rec = _commit(spark, tdir, small, by=("doc_id",))
+    assert rec["summary"]["arm"] == "driver"
+    assert rec["summary"]["n_groups"] == small.count()
+
+    scanned = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for b in batches:
+            scanned.add(b.num_rows)
+            yield b
+
+    counted = tdf.mapInArrow(count, tdf.schema)
+    rec = _commit(spark, tdir, counted, by=("doc_id",))
+    assert rec["summary"]["arm"] == "spark"
+    assert rec["summary"]["n_groups"] == tdf.count()
+    assert scanned.value == tdf.count()
+    want = _states(_build(tdf.unionByName(small).unionByName(small), ("doc_id",)), ("doc_id",))
+    assert _states(read_snapshot_table(spark, tdir), ("doc_id",)) == want
 
 
 def test_driver_commit_clears_a_crashed_attempts_files(spark, tdf, tmp_path):
